@@ -63,15 +63,10 @@ object SparkEntry {
     * re-measure a flagged x_* line with FIRST-BUILD semantics (VERDICT
     * r13 item 1: the gate used to exempt artifacts — "memoized, can't
     * re-measure" — so a contaminated 8× artifact flag could never
-    * self-silence the way query flags do). Trained models evict alone
-    * (their input spools are separate x_* lines built earlier), so the
-    * rebuild measures exactly the work the original line charged. */
+    * self-silence the way query flags do). Each artifact is memoized under
+    * its own x_* name, so a trained model evicts alone (its input spool is
+    * a separate x_* line built earlier) and the rebuild measures exactly
+    * the work the original line charged. */
   def evictArtifact(name: String, dir: String): Unit =
-    if (name.startsWith("x_spool_"))
-      operators.StreamingOps.evictSpoolArtifact(name, dir)
-    else if (name == "x_compaction_spool")
-      operators.Warehouse.evictCompactionSpools(dir)
-    else if (name.startsWith("x_ann_"))
-      operators.Similarity.evictArtifact(name, dir)
-    else operators.Dedup.evictArtifact(name, dir)
+    operators.evict(name, dir)
 }

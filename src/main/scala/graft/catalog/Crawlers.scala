@@ -1,7 +1,7 @@
 package graft.catalog
 
 import java.util.concurrent.atomic.AtomicReference
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.util.{Failure, Success}
 import org.apache.spark.sql.SparkSession

@@ -140,13 +140,12 @@ object Dedup {
     * served to BOTH d2's recall gate and the d2x oracle entry. */
   private[graft] def d2TruthPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val spool = spoolDir(s"d2truth_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(spool, "_SUCCESS"))) {
+    val spool = spooled("x_d2_truth_spool", dir) { p =>
       val (raw, sh) = ppJoinPairStage(s, dir, 3000, 50)
       raw.withColumn("un", col("n1") + col("n2") - col("inter"))
         .filter(col("inter") * 2 >= col("un"))
         .select(col("doc1"), col("doc2"), col("inter"), col("un"))
-        .coalesce(1).write.mode("overwrite").parquet(spool)
+        .coalesce(1).write.mode("overwrite").parquet(p)
       sh.unpersist()
     }
     s.read.parquet(spool)
@@ -660,14 +659,13 @@ object Dedup {
     * read it instead of each re-running the whole star contraction, which
     * the bench's per-query cache clearing would otherwise force (~1 s per
     * consumer at sf0.1). Same contract as the streaming spools: content is
-    * deterministic per fixture, parquet's _SUCCESS marks completeness, the
-    * spool root dies with the JVM. d6 itself stays the fully oracle-checked
-    * builder of exactly this table. */
+    * deterministic per fixture, the build-once memo (`spooled`) keys it by
+    * sf dir, the spool root dies with the JVM. d6 itself stays the fully
+    * oracle-checked builder of exactly this table. */
   private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    val spool = spoolDir(s"d6labels_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(spool, "_SUCCESS")))
+    val spool = spooled("x_d6_labels_spool", dir)(p =>
       d6.build(s, dir).select(col("doc_id"), col("cluster_id"))
-        .coalesce(1).write.mode("overwrite").parquet(spool)
+        .coalesce(1).write.mode("overwrite").parquet(p))
     s.read.parquet(spool)
   }
 
@@ -896,8 +894,7 @@ object Dedup {
     * identical signatures under the bench's per-query cache clearing.
     * Bench charges the build as `x_minhash_sig_spool`. */
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame = {
-    val spool = spoolDir(s"mhsig_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(spool, "_SUCCESS"))) {
+    val spool = spooled("x_minhash_sig_spool", dir) { p =>
       val sh = table(s, dir, "documents")
         .filter(col("doc_id") < 2000)
         .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
@@ -921,7 +918,7 @@ object Dedup {
           posexplode(array((0 until 16).map(j => col(s"m$j")): _*)))
         .toDF("doc_id", "j", "m")
         .select(col("doc_id"), col("j").cast("long").as("j"), col("m"))
-        .coalesce(1).write.mode("overwrite").parquet(spool)
+        .coalesce(1).write.mode("overwrite").parquet(p)
     }
     s.read.parquet(spool)
   }
@@ -3199,7 +3196,6 @@ object Dedup {
 
   private[graft] def d37Lrs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val CAP = 32
     // the build is ~15 SMALL sequential jobs (5 doubling rounds + the
     // 2-join LCP + checkpoints) over ≤540k compact rows — per-job
@@ -3446,28 +3442,13 @@ object Dedup {
     out
   }
 
-  /** Spool-memo evictors for Bench's flagged-artifact re-measure
-    * (VERDICT r13 item 1): deleting the spool restores FIRST-BUILD
-    * semantics for exactly one rebuild. */
-  private[graft] def evictArtifact(name: String, dir: String): Unit = {
-    val safe = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    name match {
-      case "x_d6_labels_spool"   => evictSpool(s"d6labels_$safe")
-      case "x_d2_truth_spool"    => evictSpool(s"d2truth_$safe")
-      case "x_d37_lrs_spool"     => evictSpool(s"d37lrs_$safe")
-      case "x_minhash_sig_spool" => evictSpool(s"mhsig_$safe")
-      case _                     => ()
-    }
-  }
-
   /** [[d37Lrs]] spooled once per (sf, JVM) — the suffix array is corpus
     * state (like the ANN index or the d6 labels): built once, consumed by
     * d37 and InvariantSpec, charged as Bench's x_d37_lrs_spool line. */
   private[graft] def d37LrsSpool(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val spool = spoolDir(s"d37lrs_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(spool, "_SUCCESS")))
-      d37Lrs(s, dir).write.mode("overwrite").parquet(spool) // 8-way write
+    val spool = spooled("x_d37_lrs_spool", dir)(p =>
+      d37Lrs(s, dir).write.mode("overwrite").parquet(p)) // 8-way write
     s.read.parquet(spool)
   }
 

@@ -1083,7 +1083,6 @@ object Sampling {
         .select(
           expr("IF(moved = claimed, 1L, 0L)").as("minimal_disruption"),
           col("moved"), col("total"))
-      import s.implicits._
       occupancy.unionByName(audit.selectExpr(
         "'audit_minimal_disruption' AS k", "minimal_disruption AS v")
         .unionByName(audit.selectExpr("'audit_moved_bp' AS k",

@@ -395,9 +395,9 @@ object Similarity {
   // corpus once and TRAIN an index offline, then every query probes the
   // stored model; nobody re-runs Lloyd iterations per search. Same contract
   // as d6's cluster-label spool (Dedup.scala): content is deterministic per
-  // fixture, parquet's _SUCCESS marks completeness, the spool root dies
-  // with the JVM, and Bench charges each build as its own line
-  // (`x_ann_*`) so the cost stays attributable (VERDICT r6 item 2).
+  // fixture, the build-once memo (`spooled`/`memoized`) keys it by sf dir,
+  // the spool root dies with the JVM, and Bench charges each build as its
+  // own line (`x_ann_*`) so the cost stays attributable (VERDICT r6 item 2).
   // ---------------------------------------------------------------------
 
   /** Cosine-normalized unit vectors (vec_id, u: array<double>), spooled to
@@ -406,13 +406,12 @@ object Similarity {
     * re-scans per query); now it runs once per (sf, JVM). */
   private[graft] def unitVectors(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    val spool = spoolDir(s"ann_unit_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(spool, "_SUCCESS")))
+    val spool = spooled("x_ann_unit_spool", dir)(p =>
       table(s, dir, "embeddings")
         .withColumn("nrm", l2Norm(col("embedding")))
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double") / col("nrm")).as("u"))
-        .write.mode("overwrite").parquet(spool)
+        .write.mode("overwrite").parquet(p))
     s.read.parquet(spool)
   }
 
@@ -423,11 +422,9 @@ object Similarity {
     * broadcast-centroid argmax projection, update = one 64-column hash agg
     * per round: the exact shape MLlib's KMeans runs. Driver state is 10
     * rows of model parameters. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   private[graft] def coarseCentroids(s: org.apache.spark.sql.SparkSession, dir: String)
       : Array[Seq[Double]] =
-    modelCache.computeIfAbsent("coarse:" + dir, _ => {
+    memoized("x_ann_kmeans_train", dir) {
       val unit = unitVectors(s, dir).cache()
       var centroids: Array[Seq[Double]] = unit.orderBy("vec_id").limit(10)
         .collect().map(_.getSeq[Double](1))
@@ -452,7 +449,7 @@ object Similarity {
       } finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
       unit.unpersist()
       centroids
-    }).asInstanceOf[Array[Seq[Double]]]
+    }
 
   /** Per-centroid similarity column: one codegen'd DotProduct per centroid
     * instead of `transform(centroidArray, c => dot(u, c))` — HOF lambda
@@ -571,7 +568,7 @@ object Similarity {
     * artifact a PQ pipeline persists. Driver state = 128 8-dim rows. */
   private[graft] def s8Codebooks(s: org.apache.spark.sql.SparkSession, dir: String)
       : Array[Array[Array[Double]]] =
-    modelCache.computeIfAbsent("pq8:" + dir, _ => {
+    memoized("x_ann_pq_train", dir) {
       val M = 8; val D = 8; val K = 16
       val unit = unitVectors(s, dir)
       val sub = unit.select(col("vec_id"), posexplode(
@@ -594,7 +591,7 @@ object Similarity {
       }
       sub.unpersist()
       cb
-    }).asInstanceOf[Array[Array[Array[Double]]]]
+    }
 
   private[graft] def s8AnnTopK(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -697,7 +694,7 @@ object Similarity {
     * inline before. */
   private[graft] def s9Codebooks(s: org.apache.spark.sql.SparkSession, dir: String)
       : Array[Array[Array[Double]]] =
-    modelCache.computeIfAbsent("pq9:" + dir, _ => {
+    memoized("x_ann_ivfpq_train", dir) {
       val M = 8; val D = 8; val K = 16
       val sub = residSub(s, dir).cache() // scanned 3x: seed + 2 training rounds
       var cb: Array[Array[Array[Double]]] = {
@@ -718,7 +715,7 @@ object Similarity {
       }
       sub.unpersist()
       cb
-    }).asInstanceOf[Array[Array[Array[Double]]]]
+    }
 
   private[graft] def ivfPqParts(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
@@ -3315,26 +3312,11 @@ object Similarity {
       order.map(i => (0 until n).map(k => v(k)(i)).toArray).toArray)
   }
 
-  /** Memo evictors for Bench's flagged-artifact re-measure (VERDICT r13
-    * item 1). Evicting a trained model leaves its INPUT spool alone, so
-    * the rebuild measures the same work the original x_* line did (the
-    * unit spool is its own line, built first). */
-  private[graft] def evictArtifact(name: String, dir: String): Unit =
-    name match {
-      case "x_ann_unit_spool" =>
-        evictSpool(s"ann_unit_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-      case "x_ann_kmeans_train" => modelCache.remove("coarse:" + dir); ()
-      case "x_ann_pq_train"     => modelCache.remove("pq8:" + dir); ()
-      case "x_ann_ivfpq_train"  => modelCache.remove("pq9:" + dir); ()
-      case "x_ann_pca_train"    => modelCache.remove("pca:" + dir); ()
-      case _                    => ()
-    }
-
   /** s37's eigendecomposition — model state memoized per (sf, JVM) like
     * centroids/codebooks, charged as the x_ann_pca_train bench line. */
   private[graft] def pcaModel(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Array[Double], Array[Array[Double]]) =
-    modelCache.computeIfAbsent("pca:" + dir, _ => {
+    memoized("x_ann_pca_train", dir) {
       val n = 64
       val cov = Array.ofDim[Double](n, n)
       s35.build(s, dir).collect().foreach { r =>
@@ -3343,7 +3325,7 @@ object Similarity {
         cov(i)(j) = num; cov(j)(i) = num
       }
       jacobiEigen(cov)
-    }).asInstanceOf[(Array[Double], Array[Array[Double]])]
+    }
 
   /** PCA — the LEARNED dimensionality reduction the embedding family
     * lacked (Matryoshka s-entries truncate; PCA rotates first): exact

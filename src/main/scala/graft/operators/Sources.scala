@@ -994,7 +994,6 @@ object Sources {
     "Join-driven runtime partition pruning inside the connector: 5 committed -> 2 scanned",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      import s.implicits._
       val key = s"q217_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
       events(s, dir)
         .select(col("event_id"), col("user_id"),

@@ -991,28 +991,18 @@ object Warehouse {
       ORDER BY f.event_id"""))
 
   /** Both compaction layouts (48 small files, then the 8-file rewrite),
-    * built once per (sf, JVM). Registered as `x_compaction_spool` in
-    * SparkEntry.artifacts so Bench charges the writes explicitly —
-    * min-of-2 would otherwise discard q106's building first run and time
-    * only the read-side audit (the r6 hidden-cost pattern). */
-  /** Memo evictor for Bench's flagged-artifact re-measure (VERDICT r13
-    * item 1): both layout spools go, so the rebuild re-pays both writes
-    * exactly like the first build. */
-  private[graft] def evictCompactionSpools(dir: String): Unit = {
-    val safe = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    evictSpool(s"compact_small_$safe")
-    evictSpool(s"compact_big_$safe")
-  }
-
+    * built once per (sf, JVM) as the `small/` and `big/` halves of one
+    * spool. Registered as `x_compaction_spool` in SparkEntry.artifacts so
+    * Bench charges the writes explicitly — min-of-2 would otherwise
+    * discard q106's building first run and time only the read-side audit
+    * (the r6 hidden-cost pattern). */
   private[graft] def compactionSpools(s: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    val smallDir = spoolDir(s"compact_small_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    val bigDir = spoolDir(s"compact_big_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(smallDir, "_SUCCESS")))
-      table(s, dir, "orders").repartition(48).write.mode("overwrite").parquet(smallDir)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(bigDir, "_SUCCESS")))
-      s.read.parquet(smallDir).repartition(8).write.mode("overwrite").parquet(bigDir)
-    (smallDir, bigDir)
+    val spool = spooled("x_compaction_spool", dir) { p =>
+      table(s, dir, "orders").repartition(48).write.mode("overwrite").parquet(s"$p/small")
+      s.read.parquet(s"$p/small").repartition(8).write.mode("overwrite").parquet(s"$p/big")
+    }
+    (s"$spool/small", s"$spool/big")
   }
 
   /** Compaction EXECUTION — the action half of q93's planner: a
@@ -2808,15 +2798,12 @@ object Warehouse {
     "Optimizer substitutes the registered daily-revenue MV for the fact aggregate",
     (s, dir) => {
       import graft.plans.MaterializedViewRewrite
-      val mvPath = spoolDir(
-        s"q195_mv_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(mvPath, "_SUCCESS")))
+      val mvPath = spooled("q195_mv", dir)(p =>
         table(s, dir, "orders")
           .groupBy(to_date(col("o_orderdate")).as("d"))
           .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
             .as("cents"))
-          .coalesce(1).write.mode("overwrite").parquet(mvPath)
+          .coalesce(1).write.mode("overwrite").parquet(p))
       val s2 = s.newSession()
       s2.experimental.extraOptimizations = Seq(MaterializedViewRewrite)
       MaterializedViewRewrite.registry.put("orders.parquet",
@@ -2924,7 +2911,7 @@ object Warehouse {
     "q198_column_lineage",
     "Plan-walk column lineage of a join+rollup pipeline vs the hand-written spec",
     (s, dir) => {
-      import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId}
+      import org.apache.spark.sql.catalyst.expressions.{Alias, ExprId}
       import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
       import org.apache.spark.sql.execution.datasources.LogicalRelation
       val pipeline = table(s, dir, "orders")
@@ -4149,19 +4136,16 @@ object Warehouse {
     "q275_deletion_vectors",
     "Positional-delete merge-on-read: (file, row_index) DV anti-join, no file rewrite",
     (s, dir) => {
-      val spool = spoolDir(
-        s"q275_dv_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-      // freshness requires BOTH halves' _SUCCESS markers (ADVICE r10: a
-      // crash between the two writes must rebuild, not serve a half spool)
-      val complete = Seq("even", "odd").forall(h =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(spool, h, "_SUCCESS")))
-      if (!complete) {
+      // the memo marks the spool complete only after BOTH halves are
+      // written (ADVICE r10: a crash between the two writes must rebuild,
+      // not serve a half spool)
+      val spool = spooled("q275_dv", dir) { p =>
         val o = table(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         o.filter(col("o_orderkey") % 2 === 0).orderBy("o_orderkey")
-          .coalesce(1).write.mode("overwrite").parquet(s"$spool/even")
+          .coalesce(1).write.mode("overwrite").parquet(s"$p/even")
         o.filter(col("o_orderkey") % 2 === 1).orderBy("o_orderkey")
-          .coalesce(1).write.mode("overwrite").parquet(s"$spool/odd")
+          .coalesce(1).write.mode("overwrite").parquet(s"$p/odd")
       }
       val scan = s.read.parquet(s"$spool/even", s"$spool/odd")
         .select(col("_metadata.file_path").as("fp"),

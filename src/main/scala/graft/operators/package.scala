@@ -35,12 +35,67 @@ package object operators {
   def spoolDir(name: String): String =
     spoolRoot.resolve(name).toString
 
-  /** Delete one spool so its next builder run does the work again —
-    * Bench's flagged-artifact re-measure (VERDICT r13 item 1) needs
-    * FIRST-BUILD semantics, and a _SUCCESS-guarded memo otherwise
-    * short-circuits the re-measure into a no-op. */
-  def evictSpool(name: String): Unit =
-    deleteRecursively(spoolRoot.resolve(name))
+  // The build-once memo. Every shared artifact (`x_*` name) and every
+  // per-sf spool a query body reuses is built at most once per (name, sf
+  // dir, JVM) through `spooled` or `memoized`; `evict` restores
+  // FIRST-BUILD semantics for Bench's flagged-artifact re-measure (VERDICT
+  // r13 item 1). Builds of one key serialize on a per-key lock (JobRunner's
+  // async jobs share a session). A build may read another memo: the
+  // dependencies are acyclic (pq9 → coarse → unit spool), so the locks
+  // cannot deadlock.
+  private val memoLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private val memoValues = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def withMemoLock[T](key: String)(body: => T): T =
+    memoLocks.computeIfAbsent(key, _ => new AnyRef).synchronized(body)
+
+  /** The memo key of (name, dir), also its spool's directory name: a
+    * readable `name_<mangled dir>` plus a digest of the RAW dir, since
+    * mangling alone maps `/a/sf0.1` and `/a_sf0.1` to one name. */
+  def memoKey(name: String, dir: String): String = {
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    s"${name}_${dir.replaceAll("[^A-Za-z0-9.]", "_")}_" +
+      java.util.HexFormat.of().formatHex(digest, 0, 4)
+  }
+
+  /** The spool of (name, dir), written by `write(path)` unless its
+    * `_SUCCESS` marker exists. After `write` returns the memo creates the
+    * marker if the writer did not (multi-part or hand-staged spools), so a
+    * crash mid-build rebuilds instead of serving a partial spool. */
+  def spooled(name: String, dir: String)(write: String => Unit): String = {
+    val key = memoKey(name, dir)
+    val spool = spoolRoot.resolve(key)
+    val marker = spool.resolve("_SUCCESS")
+    withMemoLock(key) {
+      if (!java.nio.file.Files.exists(marker)) {
+        write(spool.toString)
+        if (!java.nio.file.Files.exists(marker))
+          java.nio.file.Files.createFile(
+            java.nio.file.Files.createDirectories(spool).resolve("_SUCCESS"))
+      }
+    }
+    spool.toString
+  }
+
+  /** The driver-side value of (name, dir) — a trained model — built on
+    * first use and stored only once `build` returns. */
+  def memoized[T](name: String, dir: String)(build: => T): T = {
+    val key = memoKey(name, dir)
+    withMemoLock(key) {
+      if (!memoValues.containsKey(key)) memoValues.put(key, build.asInstanceOf[AnyRef])
+      memoValues.get(key).asInstanceOf[T]
+    }
+  }
+
+  /** Drop both forms of the (name, dir) memo. */
+  def evict(name: String, dir: String): Unit = {
+    val key = memoKey(name, dir)
+    withMemoLock(key) {
+      memoValues.remove(key)
+      deleteRecursively(spoolRoot.resolve(key))
+    }
+  }
 
   private lazy val spoolRoot: java.nio.file.Path = {
     // Prefer tmpfs (/dev/shm) when present: spools and streaming

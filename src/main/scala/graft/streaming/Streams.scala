@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.operators.dec2
@@ -30,14 +30,6 @@ object Streams {
       .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).cast("double").as("total_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
-
-  /** Sliding windows (10 min / 5 min slide). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
 
   /** Session windows per user (30-minute gap) — the built-in sessionizer. */
   def sessionCounts(events: DataFrame): DataFrame =

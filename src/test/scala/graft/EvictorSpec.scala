@@ -1,18 +1,23 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Pins Bench's flagged-artifact re-measure machinery (VERDICT r13 item
-  * 1a): [[SparkEntry.evictArtifact]] must delete exactly the memo its
+  * 1a): [[SparkEntry.evictArtifact]] must drop exactly the memo its
   * builder checks, or the "min-of-3 on flags" re-measure silently times a
-  * memo hit (~0ms) and WRONGLY silences a real regression. For every
-  * filesystem-spooled artifact the test builds at sf0.001, asserts the
-  * spool exists under the name the evictor targets (name drift on either
-  * side fails here), evicts, and asserts it is gone. Model-cached
-  * artifacts (x_ann_*_train) evict a map entry; the test proves the
-  * evict-then-rebuild cycle works. */
+  * memo hit (~0ms) and WRONGLY silences a real regression. Every
+  * registered artifact is built at sf0.001 and evicted. A spooled artifact
+  * must leave its spool under the memo's own path (name drift fails here)
+  * and lose it on evict; a trained model (x_ann_*_train) must be memoized
+  * under its own name and come back as a FRESH instance after evict, so
+  * an evictor that does nothing fails. */
 class EvictorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -24,50 +29,60 @@ class EvictorSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
-  private def safe = dir.replaceAll("[^A-Za-z0-9.]", "_")
 
-  private def build(name: String): Unit =
-    SparkEntry.artifacts.find(_._1 == name)
-      .getOrElse(fail(s"artifact $name not registered"))._2(spark, dir)
+  private def spool(name: String) =
+    java.nio.file.Paths.get(operators.spoolDir(operators.memoKey(name, dir)))
 
-  private def spoolExists(spool: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(operators.spoolDir(spool)))
+  private def spoolBuilt(name: String): Boolean =
+    Files.exists(spool(name).resolve("_SUCCESS"))
 
-  private val fsArtifacts: Seq[(String, Seq[String])] = Seq(
-    "x_spool_events5" -> Seq(s"replay_events5_$safe"),
-    "x_spool_st18dlq" ->
-      Seq(s"st18_dlq_src_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"),
-    "x_spool_st37inc" ->
-      Seq(s"st37inc_${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"),
-    "x_d2_truth_spool" -> Seq(s"d2truth_$safe"),
-    "x_d6_labels_spool" -> Seq(s"d6labels_$safe"),
-    "x_d37_lrs_spool" -> Seq(s"d37lrs_$safe"),
-    "x_minhash_sig_spool" -> Seq(s"mhsig_$safe"),
-    "x_ann_unit_spool" -> Seq(s"ann_unit_$safe"),
-    "x_compaction_spool" ->
-      Seq(s"compact_small_$safe", s"compact_big_$safe"))
+  /** The model memoized under `name`; fails when there is none. */
+  private def model(name: String): AnyRef =
+    operators.memoized[AnyRef](name, dir)(fail(s"no model memoized as $name"))
 
-  for ((name, spools) <- fsArtifacts)
-    test(s"$name: build creates the spool the evictor deletes") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      build(name)
-      spools.foreach(sp =>
-        assert(spoolExists(sp), s"builder did not write $sp — name drift?"))
-      SparkEntry.evictArtifact(name, dir)
-      spools.foreach(sp =>
-        assert(!spoolExists(sp), s"evictor left $sp behind"))
-      build(name) // first-build semantics restored, rebuild succeeds
-      spools.foreach(sp => assert(spoolExists(sp)))
-    }
+  for ((name, build) <- SparkEntry.artifacts)
+    if (name.endsWith("_train"))
+      test(s"$name: evict-then-rebuild cycles cleanly") {
+        build(spark, dir)
+        val before = model(name)
+        SparkEntry.evictArtifact(name, dir)
+        assertThrows[org.scalatest.exceptions.TestFailedException](model(name))
+        build(spark, dir) // re-trains from the (separately charged) unit spool
+        assert(model(name) ne before, s"evicting $name did not force a rebuild")
+      }
+    else
+      test(s"$name: build creates the spool the evictor deletes") {
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        build(spark, dir)
+        assert(spoolBuilt(name), s"builder did not write the $name spool — name drift?")
+        SparkEntry.evictArtifact(name, dir)
+        assert(!Files.exists(spool(name)), s"evictor left the $name spool behind")
+        build(spark, dir) // first-build semantics restored, rebuild succeeds
+        assert(spoolBuilt(name))
+      }
 
-  for (name <- Seq("x_ann_kmeans_train", "x_ann_pq_train",
-      "x_ann_ivfpq_train", "x_ann_pca_train"))
-    test(s"$name: evict-then-rebuild cycles cleanly") {
-      build(name)
-      SparkEntry.evictArtifact(name, dir)
-      build(name) // re-trains from the (separately charged) unit spool
-    }
+  test("x_spool_events5dup: two concurrent cold builds write the spool once") {
+    val name = "x_spool_events5dup"
+    SparkEntry.evictArtifact(name, dir)
+    val expected = 2 * operators.events(spark, dir).count()
+    val writes = new AtomicInteger(0)
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val builders = (1 to 2).map(_ => Future {
+        go.await()
+        val path = operators.spooled(name, dir) { p =>
+          writes.incrementAndGet()
+          operators.StreamingOps.writeBatchSpool(spark, "events5dup", dir)(p)
+        }
+        spark.read.parquet(path).count()
+      })
+      go.countDown()
+      builders.foreach(b => assert(Await.result(b, 5.minutes) == expected))
+    } finally pool.shutdown()
+    assert(writes.get == 1, "both builders wrote the spool")
+  }
 
   override def afterAll(): Unit = {
     try spark.stop() finally super.afterAll()

@@ -689,7 +689,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q143 connector: column pruning reaches the MemTable reader, commits are snapshot-swaps") {
-    import org.apache.spark.sql.functions._
     // build once (writes + commits the sf snapshot), then read a projection
     operators.Sources.q143.build(spark, sfDir).collect()
     val key = s"q143_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"

@@ -16,9 +16,6 @@ class TextExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def one(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Row =
-    df.collect().head
-
   test("minhash: identical texts yield identical signatures") {
     import spark.implicits._
     val df = Seq(("a b c d e", "a b c d e"), ("a b c d e", "x y z w v")).toDF("t1", "t2")

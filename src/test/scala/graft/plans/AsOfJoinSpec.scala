@@ -78,7 +78,6 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("agrees with the window-composed reference on a dense many-key fixture") {
-    import spark.implicits._
     // ~300 lefts × 8 keys, rights at every 7th tick with colliding times
     val l = L((0 until 300).map(i => (java.lang.Long.valueOf(i % 8L),
       java.lang.Long.valueOf((i * 13 % 100).toLong), i.toLong)): _*)

@@ -52,7 +52,6 @@ class GroupedTopKSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("row set is invariant to input partitioning") {
-    import spark.implicits._
     val wide = df.repartition(7)
     val got = GroupedTopK.topKPerGroup(wide, Seq(col("g")), Seq(col("v").desc, col("id")), 2)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
