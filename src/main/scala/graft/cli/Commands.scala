@@ -83,6 +83,13 @@ object Commands {
       doc: String,
       handler: (GraftEngine, Seq[String], String => Unit) => Unit)
 
+  /** An integer option value; a malformed one is an InvalidOption naming
+    * the flag, so the command exits 1 instead of leaking a
+    * NumberFormatException past [[main]]. */
+  private def intOpt(flag: String, v: Any): Int =
+    v.toString.toIntOption.getOrElse(
+      throw InvalidOption(s"invalid value for --$flag: $v"))
+
   private def globKeep(pattern: Option[String], value: String): Boolean =
     pattern.filter(_.nonEmpty).forall(p =>
       ("^" + globToRegex(p) + "$").r.matches(value))
@@ -148,7 +155,7 @@ object Commands {
       (e, argv, out) => {
         val r = parseArgs(argv, "<crawler_name> [--async] [--timeout=seconds]",
           Map("op_async" -> false, "timeout" -> 600))
-        val timeout = r.kargs("timeout").toString.toInt
+        val timeout = intOpt("timeout", r.kargs("timeout"))
         e.crawlers.run(r.positional1.get, async = r.kargs("op_async") == true,
           timeoutSec = timeout)
       }),
@@ -158,7 +165,7 @@ object Commands {
       (e, argv, out) => {
         val r = parseArgs(argv, "[job_name] [--lines=num] [--noheaders]",
           Map("lines" -> null, "op_noheaders" -> false))
-        val lines = Option(r.kargs("lines")).map(_.toString.toInt)
+        val lines = Option(r.kargs("lines")).map(intOpt("lines", _))
         // reference row format (gluettalax.py:330):
         //   '{JobRunState:>10} {AllocatedCapacity:>4} {ExecutionTime:10}  {StartedOn:19}   {JobName} {Arguments}'
         val fmt = "%10s %4s %-10s  %-19s   %s %s"
@@ -185,7 +192,7 @@ object Commands {
         // be forwarded to the job as arguments. `delay` is the reference's
         // poll-sleep; our sync wait is event-driven (Await), so it is accepted
         // for CLI compatibility and has no further effect.
-        val timeoutSec = Option(r.kargs.getOrElse("timeout", null)).map(_.toString.toInt)
+        val timeoutSec = Option(r.kargs.getOrElse("timeout", null)).map(intOpt("timeout", _))
         val params = (r.kargs - "op_async" - "timeout" - "delay").collect {
           case (k, v) if v != null => k -> v.toString
         }

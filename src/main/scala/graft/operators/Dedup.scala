@@ -3189,10 +3189,15 @@ object Dedup {
     * knob, not a semantic one: production sets spark.graft.d37.parts (or
     * GRAFT_D37_PARTS) to its shard's core count; the local default (8)
     * keeps the build's ~30 tiny sequential jobs below the per-job
-    * planning/codegen floor that dominates at 32 shuffle partitions. */
+    * planning/codegen floor that dominates at 32 shuffle partitions. A
+    * malformed or non-positive value fails here, naming its source. */
   private[graft] def d37Parts(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("spark.graft.d37.parts")
-      .orElse(sys.env.get("GRAFT_D37_PARTS")).map(_.toInt).getOrElse(8)
+    s.conf.getOption("spark.graft.d37.parts").map("spark.graft.d37.parts" -> _)
+      .orElse(sys.env.get("GRAFT_D37_PARTS").map("GRAFT_D37_PARTS" -> _))
+      .fold(8) { case (key, v) =>
+        v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+          s"$key must be a positive integer, got '$v'"))
+      }
 
   private[graft] def d37Lrs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -3253,12 +3258,6 @@ object Dedup {
       dir: String, CAP: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts = d37Parts(s)
-    var profT0 = System.nanoTime()
-    def prof(label: String): Unit = if (sys.env.contains("GRAFT_D37_PROFILE")) {
-      val t1 = System.nanoTime()
-      System.err.println(f"# d37 $label ${(t1 - profT0) / 1e9}%.2f s")
-      profT0 = t1
-    }
     // checkpointed once: consumed 4× (vocab, initial ranks, sizes, final
     // position join) — without it each consumer re-runs scan + explode
     val toks = table(s, dir, "documents")
@@ -3268,7 +3267,6 @@ object Dedup {
         posexplode(col("ws")).as(Seq("i0", "w")))
       .select(col("d"), col("n_words"), (col("i0") + 1).as("i"), col("w"))
       .localCheckpoint(true)
-    prof("toks")
     // CONTIGUOUS order-preserving rank (0..#distinct−1): distinct → range
     // sort → zipWithIndex. Contiguity — not just the monotonicity a
     // range-sorted monotonically_increasing_id gives (8 partitions ⇒ ids
@@ -3307,7 +3305,6 @@ object Dedup {
         toks.join(broadcast(vocab), "w").select(col("d"), col("i"), col("rk"))
           .localCheckpoint(true)
       }
-    prof("vocab+rank1")
     // ADAPTIVE-WIDTH PACKING + TUPLE FINISH (r13, generalizing r11's
     // fixed 32-bit alternation): rank VALUES only ever need ORDER
     // consistency, so a round packs rank_2k = rk·(maxR+2) + rk2 + 1 —
@@ -3344,7 +3341,6 @@ object Dedup {
         }
         cur = df.localCheckpoint(true)
         k = CAP
-        prof(s"tuple_finish_x${rankCols.size}")
       } else {
         val shifted = cur.select(col("d"), (col("i") - k).as("i"),
           col("rk").as("rk2"))
@@ -3364,7 +3360,6 @@ object Dedup {
               .repartition(parts, col("d")) // restore round-join partitioning
           }).localCheckpoint(true)
         k *= 2
-        prof(s"double_to_$k")
       }
     }
     // 2. suffix-array neighbor pairs (range partition + boundary stitch)
@@ -3391,7 +3386,6 @@ object Dedup {
       .repartitionByRange(parts, saKeys: _*)
       .withColumn("pid", org.apache.spark.sql.functions.spark_partition_id())
       .localCheckpoint(true)
-    prof("sa_stitch")
     val wIn = Window.partitionBy("pid").orderBy(saKeys: _*)
     val within = sa
       .withColumn("pd", lag(col("d"), 1).over(wIn))
@@ -3411,7 +3405,7 @@ object Dedup {
       .join(edges.select(col("pid"), col("f.d").as("db"),
         col("f.i").as("ib"), col("f.suf").as("sufb")), "pid")
       .select("da", "ia", "db", "ib", "sufa", "sufb")
-    var pairs = within.unionByName(boundary)
+    val pairs = within.unionByName(boundary)
       .withColumn("lcp", expr(
         // first mismatch position − 1; no mismatch ⇒ the shorter length
         // (zip_with null-pads the shorter side, so a length difference
@@ -3422,17 +3416,15 @@ object Dedup {
                false), 0) - 1,
              least(size(sufa), size(sufb))) AS BIGINT)"""))
       .drop("sufa", "sufb")
-    if (sys.env.contains("GRAFT_D37_PROFILE")) { pairs = pairs.localCheckpoint(true); prof("lcp_pairs") }
     // 4. lrs = max lcp over the (≤2) adjacent pairs touching a position.
     // MELT via explode, not a self-union — a union would execute the
     // whole window+lcp subtree twice (r13: the single-evaluation melt is
     // what let the tail drop its checkpoint)
-    var perPos = pairs.select(explode(array(
+    val perPos = pairs.select(explode(array(
         struct(col("da").as("d"), col("ia").as("i")),
         struct(col("db").as("d"), col("ib").as("i")))).as("p"), col("lcp"))
       .select(col("p.d").as("d"), col("p.i").as("i"), col("lcp"))
       .groupBy("d", "i").agg(max(col("lcp")).as("lrs"))
-    if (sys.env.contains("GRAFT_D37_PROFILE")) { perPos = perPos.localCheckpoint(true); prof("perpos") }
     // no final checkpoint: the caller (spool write / test consumer)
     // materializes exactly once, and the plan above is shallow (toks and
     // pairs are both checkpointed)

@@ -1,9 +1,10 @@
 package graft.operators
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming queries in the graded registry: each replays the
   * events table through a real `readStream` file source and must produce
@@ -53,84 +54,97 @@ object StreamingOps {
       lit(-1L).as("user_id"), lit(t).as("event_type"),
       lit(0.0).as("value"))).reduce(_.union(_))
 
-  /** Start a parquet `readStream` over an existing spool, run `transform`
-    * to a memory sink until all input is processed, return the sink
-    * contents as a LocalRelation.
+  /** Per-query conf pairs for [[drain]].
     *
-    * `noDataBatch = false` skips the engine's trailing empty micro-batch:
-    * that batch exists only to let watermark passage evict state / emit
-    * final append-mode rows, so queries whose output is complete at the
-    * last DATA batch (complete-mode aggs, inner joins, pass-through dedup)
-    * drop ~0.5-0.9s of per-replay fixed cost by not running it. Queries
-    * that rely on watermark-driven emission (append windows/sessions,
-    * outer-join null padding, state timeouts) keep it on. */
-  private def runStream(spark: SparkSession, name: String, spool: String,
-      schema: org.apache.spark.sql.types.StructType,
-      transform: DataFrame => DataFrame, mode: OutputMode,
-      ordered: Boolean, noDataBatch: Boolean, parts: Int): DataFrame = {
-    val id = runTag()
+    * State-store partition count follows shuffle.partitions at query
+    * start; a replay's state volume doesn't need the batch-engine fan-out,
+    * and each extra partition is a per-micro-batch fixed cost (store open,
+    * snapshot, commit) MULTIPLIED by the operator's store count (a
+    * stream-stream join keeps 4 stores per partition). Per-query choice:
+    * heavy-state single-store aggs run wider, join/dedup queries narrower. */
+  private[graft] def shufflePartitions(n: Int): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
+
+  /** `false` skips the engine's trailing empty micro-batch: that batch
+    * exists only to let watermark passage evict state / emit final
+    * append-mode rows, so queries whose output is complete at the last
+    * DATA batch (complete-mode aggs, inner joins, pass-through dedup,
+    * foreachBatch merges) drop ~0.5-0.9s of per-replay fixed cost by not
+    * running it. Queries that rely on watermark-driven emission (append
+    * windows/sessions, outer-join null padding, state timeouts) keep it on. */
+  private[graft] def noDataBatches(on: Boolean): (String, String) =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> on.toString
+
+  /** The off-heap state backend you'd run at scale anyway; transformWithState
+    * requires it. */
+  private val rocksDbState =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** A fresh checkpoint dir on the spool medium (tmpfs when available): the
+    * offset/commit/state logs fsync every micro-batch, and that fsync is
+    * pure fixed cost for a same-JVM replay. */
+  private def freshCkpt(tag: String): String = spoolDir(s"ckpt_${tag}_${runTag()}")
+
+  /** The one AvailableNow drain every streaming run goes through: "start,
+    * process all available input, reach a terminal state". `start` picks
+    * the sink and starts the writer (`_.start()`, `_.toTable(t)`); the drain
+    * pre-creates `ckpt` (so the engine's resolve-and-mkdir path finds it),
+    * sets the checkpoint and the trigger, and awaits termination, rethrowing
+    * the stream's failure.
+    *
+    * `conf` applies to this query only. A stream's conf is fixed inside
+    * `start()` (StreamExecution clones the session there), so the caller's
+    * values are restored as soon as `start` returns, not after the replay:
+    * set keys go back to their old value, unset keys are unset again. A
+    * concurrent job on the same session sees the per-query conf for that
+    * one call only. */
+  private[graft] def drain(df: DataFrame, ckpt: String, conf: (String, String)*)(
+      start: DataStreamWriter[Row] => StreamingQuery): StreamingQuery = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
+    val writer = df.writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+    val rc = df.sparkSession.conf
+    val explicit = rc.getAll // set keys only, no defaults
+    val saved = conf.map { case (k, _) => k -> explicit.get(k) }
+    conf.foreach { case (k, v) => rc.set(k, v) }
+    val q = try start(writer) finally saved.foreach {
+      case (k, Some(v)) => rc.set(k, v)
+      case (k, None)    => rc.unset(k)
+    }
+    q.awaitTermination()
+    q
+  }
+
+  /** [[drain]] into a memory sink. The replay is over when it returns; the
+    * sink holds the (small, aggregated) result, which comes back as a
+    * LocalRelation next to the finished query. The memory-sink view is
+    * dropped, so runs don't accumulate cached tables. */
+  private[graft] def drainToLocal(df: DataFrame, mode: OutputMode, ckpt: String,
+      conf: (String, String)*): (StreamingQuery, DataFrame) = {
+    val s = df.sparkSession
+    val sink = s"graft_stream_sink_${runTag()}"
+    try {
+      val q = drain(df, ckpt, conf: _*)(
+        _.format("memory").queryName(sink).outputMode(mode).start())
+      val out = s.table(sink)
+      (q, s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema))
+    } finally s.catalog.dropTempView(sink)
+  }
+
+  /** Drain `transform` over a parquet `readStream` of an existing spool and
+    * return the sink contents; the spool stays for reuse (one bounded dir
+    * per content-key+sf, removed with the spool root on JVM exit). */
+  private def runStream(spark: SparkSession, spool: String, schema: StructType,
+      transform: DataFrame => DataFrame, mode: OutputMode, ordered: Boolean,
+      noDataBatch: Boolean, parts: Int, rocksDb: Boolean = false): DataFrame = {
     val reader = spark.readStream.schema(schema)
     val src = (if (ordered) reader.option("maxFilesPerTrigger", "1") else reader)
       .parquet(spool)
-    val sink = s"graft_stream_sink_$id"
-    // state-store partition count follows shuffle.partitions at query
-    // start; a replay's state volume doesn't need the batch-engine fan-out,
-    // and each extra partition is a per-micro-batch fixed cost (store open,
-    // snapshot, commit) MULTIPLIED by the operator's store count (a
-    // stream-stream join keeps 4 stores per partition). Per-query choice:
-    // heavy-state single-store aggs run wider, join/dedup queries narrower.
-    // Restored after the run.
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedNoData = spark.conf.getOption(
-      "spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_PARTS", parts.toString))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      noDataBatch.toString)
-    val debug = sys.env.contains("GRAFT_STREAM_DEBUG")
-    def now() = System.nanoTime()
-    val t0 = now()
-    try {
-      // checkpoint on the spool medium (tmpfs when available): the
-      // offset/commit/state logs fsync every micro-batch, and that fsync
-      // is pure fixed cost for a same-JVM replay. Pre-create the dir so
-      // the engine's resolve-and-mkdir path finds it.
-      val ckpt = spoolDir(s"ckpt_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val q = transform(src).writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      val tStart = now()
-      q.awaitTermination()
-      if (debug) {
-        println(f"[replay:$name] start=${(tStart - t0) / 1e9}%.3f await=${(now() - tStart) / 1e9}%.3f")
-        q.recentProgress.foreach(p => println(
-          s"[replay:$name] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"watermark=${p.eventTime.get("watermark")} durations=${p.durationMs}" +
-            p.stateOperators.map(o =>
-              s" dropped=${o.numRowsDroppedByWatermark} state=${o.numRowsTotal}").mkString))
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-    }
-    // The replay is over; the sink holds the (small, aggregated) result.
-    // Materialize it into a LocalRelation and drop the memory-sink view so
-    // runs don't accumulate cached tables; the spool stays for reuse (one
-    // bounded dir per content-key+sf, removed with the spool root on JVM
-    // exit).
-    val tc = now()
-    val out = spark.table(sink)
-    val rows = out.collect()
-    spark.catalog.dropTempView(sink)
-    val res = spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    if (debug)
-      println(f"[replay:$name] sinkCollect=${(now() - tc) / 1e9}%.3f rows=${rows.length}")
-    res
+    val conf = Seq(shufflePartitions(parts), noDataBatches(noDataBatch)) ++
+      Option.when(rocksDb)(rocksDbState)
+    drainToLocal(transform(src), mode, freshCkpt("replay"), conf: _*)._2
   }
 
   /** Single source of truth for each shared batch-spool's content — used
@@ -165,18 +179,11 @@ object StreamingOps {
     * the spool is built on first use per (key, sf, JVM). */
   private def replay(spark: SparkSession, key: String, dir: String,
       transform: DataFrame => DataFrame, mode: OutputMode,
-      noDataBatch: Boolean = true, parts: Int = 4): DataFrame =
-    runStream(spark, key, batchSpool(spark, key, dir),
-      ev5(spark, dir).schema, transform, mode, ordered = false,
-      noDataBatch = noDataBatch, parts = parts)
+      noDataBatch: Boolean = true, parts: Int = 4,
+      rocksDb: Boolean = false): DataFrame =
+    runStream(spark, batchSpool(spark, key, dir), ev5(spark, dir).schema,
+      transform, mode, ordered = false, noDataBatch, parts, rocksDb)
 
-  /** Like replay(), but the input arrives as an ORDERED sequence of files —
-    * one micro-batch each (`maxFilesPerTrigger=1`, modification-time order
-    * pinned explicitly) — so a query can observe watermark state BETWEEN
-    * deliveries. This is how late-data semantics become deterministic and
-    * testable: whatever the watermark was after file N is what file N+1's
-    * rows are judged against. `mkFiles` runs only when the spool is
-    * missing — any bounds scans it needs are one-time spool-build cost. */
   /** File-sequence content per ordered spool key — single source of truth,
     * same contract as [[batchSpoolContent]]. Each inner DataFrame becomes
     * one file = one micro-batch. Bounds scans here are one-time
@@ -248,12 +255,18 @@ object StreamingOps {
       }
     }
 
+  /** Like replay(), but the input arrives as an ORDERED sequence of files —
+    * one micro-batch each (`maxFilesPerTrigger=1`, modification-time order
+    * pinned explicitly) — so a query can observe watermark state BETWEEN
+    * deliveries. This is how late-data semantics become deterministic and
+    * testable: whatever the watermark was after file N is what file N+1's
+    * rows are judged against. */
   private def replayFiles(spark: SparkSession, key: String, dir: String,
       transform: DataFrame => DataFrame, mode: OutputMode,
-      noDataBatch: Boolean = true, parts: Int = 4): DataFrame =
-    runStream(spark, key, fileSpool(spark, key, dir),
-      ev5(spark, dir).schema, transform, mode,
-      ordered = true, noDataBatch = noDataBatch, parts = parts)
+      noDataBatch: Boolean = true, parts: Int = 4,
+      rocksDb: Boolean = false): DataFrame =
+    runStream(spark, fileSpool(spark, key, dir), ev5(spark, dir).schema,
+      transform, mode, ordered = true, noDataBatch, parts, rocksDb)
 
   /** q32's tumbling-window aggregate, computed by the streaming engine:
     * identical windows, counts and DECIMAL-exact sums as the batch plan,
@@ -443,38 +456,24 @@ object StreamingOps {
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL(
           "event_type STRING, n BIGINT, total_value DECIMAL(24,2)"))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      val savedNoData = s.conf.getOption(
-        "spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       // the merge target is final after the last DATA batch; an empty
       // trailing batch would only re-run the foreachBatch merge on an
       // empty delta
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = src.writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val delta = b.groupBy("event_type")
-              .agg(count(lit(1)).as("n"),
-                sum(dec2(col("value"))).cast("decimal(24,2)").as("total_value"))
-            target = target.as("t")
-              .join(delta.as("d"), Seq("event_type"), "full_outer")
-              .select(col("event_type"),
-                (coalesce(col("t.n"), lit(0L)) + coalesce(col("d.n"), lit(0L))).as("n"),
-                (coalesce(col("t.total_value"), lit(BigDecimal(0)).cast("decimal(24,2)"))
-                  + coalesce(col("d.total_value"), lit(BigDecimal(0)).cast("decimal(24,2)")))
-                  .cast("decimal(24,2)").as("total_value"))
-              .localCheckpoint(true)
-            ()
-          }
-          .option("checkpointLocation", spoolDir(s"ckpt_st6_${runTag()}"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      }
+      drain(src, freshCkpt("st6"), shufflePartitions(8), noDataBatches(false))(
+        _.foreachBatch { (b: DataFrame, _: Long) =>
+          val delta = b.groupBy("event_type")
+            .agg(count(lit(1)).as("n"),
+              sum(dec2(col("value"))).cast("decimal(24,2)").as("total_value"))
+          target = target.as("t")
+            .join(delta.as("d"), Seq("event_type"), "full_outer")
+            .select(col("event_type"),
+              (coalesce(col("t.n"), lit(0L)) + coalesce(col("d.n"), lit(0L))).as("n"),
+              (coalesce(col("t.total_value"), lit(BigDecimal(0)).cast("decimal(24,2)"))
+                + coalesce(col("d.total_value"), lit(BigDecimal(0)).cast("decimal(24,2)")))
+                .cast("decimal(24,2)").as("total_value"))
+            .localCheckpoint(true)
+          ()
+        }.start())
       target
         .select(col("event_type"), col("n"),
           col("total_value").cast("double").as("total_value"))
@@ -765,49 +764,30 @@ object StreamingOps {
       val id = runTag()
       val spool = spoolDir(s"restart_spool_$id")
       val ckpt = spoolDir(s"restart_ckpt_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val sink = s"graft_stream_restart_$id"
-      val agg = (src: DataFrame) => src
-        .withWatermark("ts", "1 hour")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec2(col("value"))).cast("double").as("total_value"))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
-      try {
-        def runTranche(tranche: DataFrame, i: Int): Long = {
-          tranche.coalesce(2).write.mode("append").parquet(spool)
-          val src = s.readStream.schema(batch.schema).parquet(spool)
-          val q = agg(src).writeStream
-            .format("memory").queryName(s"${sink}_$i")
-            .outputMode(OutputMode.Complete())
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q.recentProgress.map(_.numInputRows).sum
-        }
-        val n1 = runTranche(batch.filter(col("event_id") % 2 === 0), 1)
-        val mid = s.table(s"${sink}_1").collect().length
-        s.catalog.dropTempView(s"${sink}_1")
-        val n2 = runTranche(batch.filter(col("event_id") % 2 === 1), 2)
-        // guards that the scenario really ran: run 1 left recoverable
-        // state, and run 2 ingested ONLY its own tranche (the even/odd
-        // split is ~50/50, so reprocessing tranche 1 too would show
-        // n2 ≈ 2×n1). A correct-but-restarted-from-scratch run would match
-        // the oracle — these asserts are what pin actual recovery.
-        require(mid > 0 && n1 > 0,
-          "st11: first tranche produced no state to recover")
-        require(n2 > 0 && n2 < n1 * 3 / 2,
-          s"st11: run 2 read $n2 rows vs run 1's $n1 — checkpoint offsets were not honored")
-        val out = s.table(s"${sink}_2")
-        val rows = out.collect()
-        s.catalog.dropTempView(s"${sink}_2")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .select(col("event_type"), col("n"), col("total_value"))
-          .orderBy("event_type")
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      def runTranche(tranche: DataFrame): (Long, DataFrame) = {
+        tranche.coalesce(2).write.mode("append").parquet(spool)
+        val (q, out) = drainToLocal(
+          s.readStream.schema(batch.schema).parquet(spool)
+            .withWatermark("ts", "1 hour")
+            .groupBy(col("event_type"))
+            .agg(count(lit(1)).as("n"),
+              sum(dec2(col("value"))).cast("double").as("total_value")),
+          OutputMode.Complete(), ckpt, shufflePartitions(4))
+        (q.recentProgress.map(_.numInputRows).sum, out)
+      }
+      val (n1, mid) = runTranche(batch.filter(col("event_id") % 2 === 0))
+      val (n2, out) = runTranche(batch.filter(col("event_id") % 2 === 1))
+      // guards that the scenario really ran: run 1 left recoverable
+      // state, and run 2 ingested ONLY its own tranche (the even/odd
+      // split is ~50/50, so reprocessing tranche 1 too would show
+      // n2 ≈ 2×n1). A correct-but-restarted-from-scratch run would match
+      // the oracle — these asserts are what pin actual recovery.
+      require(!mid.isEmpty && n1 > 0,
+        "st11: first tranche produced no state to recover")
+      require(n2 > 0 && n2 < n1 * 3 / 2,
+        s"st11: run 2 read $n2 rows vs run 1's $n1 — checkpoint offsets were not honored")
+      out.select(col("event_type"), col("n"), col("total_value"))
+        .orderBy("event_type")
     },
     Some("""
       SELECT event_type, count(*) AS n,
@@ -838,21 +818,15 @@ object StreamingOps {
       val emissions = scala.collection.mutable.ListBuffer
         .empty[(Long, org.apache.spark.sql.Row)]
       var nBatches = 0L
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      val savedNoData = s.conf.getOption(
-        "spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val agg = src
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(dec2(col("value"))).cast("double").as("total_value"))
       // update mode needs no trailing empty batch: changed keys emit with
       // their data batch; the watermark only bounds state
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = src
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 day"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(dec2(col("value"))).cast("double").as("total_value"))
-          .writeStream
-          .outputMode(OutputMode.Update())
+      drain(agg, freshCkpt("st12"), shufflePartitions(4), noDataBatches(false))(
+        _.outputMode(OutputMode.Update())
           .foreachBatch { (b: DataFrame, id: Long) =>
             val rows = b.select(col("window.start").cast("timestamp_ntz"),
               col("event_type"), col("n"), col("total_value")).collect()
@@ -860,15 +834,7 @@ object StreamingOps {
               emissions ++= rows.map(r => (id, r)); nBatches += 1
             }
             ()
-          }
-          .option("checkpointLocation", spoolDir(s"ckpt_st12_${runTag()}"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      }
+          }.start())
       // latest emission per key is the final aggregate value. Read under
       // the same lock the microbatch thread wrote under: awaitTermination
       // alone guarantees no documented happens-before edge for these
@@ -946,40 +912,27 @@ object StreamingOps {
           Iterator.single(StTallyOut(key, t.n, t.cents, t.lastUs))
         }
       }
-      val savedProvider = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      // transformWithState requires the RocksDB provider (the off-heap
-      // backend you'd run at scale anyway); restored after the replay
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        replay(s, "events5sent", dir,
-          src => {
-            import s.implicits._
-            src
-              .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-                (dec2(col("value")) * 100).cast("long").as("cents"))
-              .as[(Long, java.sql.Timestamp, Long, String, Long)]
-              .map(r => StEvent(r._1, r._2, r._3, r._4, r._5))
-              .withWatermark("ts", "30 minutes")
-              .groupByKey(_.user_id)
-              .transformWithState(new TallyProcessor,
-                TimeMode.EventTime(), OutputMode.Append(),
-                Encoders.product[StTallyOut])
-              .toDF()
-          },
-          OutputMode.Append())
-          .filter(col("user_id") =!= -1L)
-          .select(col("user_id"), col("n_events"),
-            (col("total_cents").cast("double") / 100).as("total_value"),
-            timestamp_micros(col("last_us")).cast("timestamp_ntz").as("last_ts"))
-          .orderBy("user_id")
-      } finally {
-        savedProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
+      replay(s, "events5sent", dir,
+        src => {
+          import s.implicits._
+          src
+            .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
+              (dec2(col("value")) * 100).cast("long").as("cents"))
+            .as[(Long, java.sql.Timestamp, Long, String, Long)]
+            .map(r => StEvent(r._1, r._2, r._3, r._4, r._5))
+            .withWatermark("ts", "30 minutes")
+            .groupByKey(_.user_id)
+            .transformWithState(new TallyProcessor,
+              TimeMode.EventTime(), OutputMode.Append(),
+              Encoders.product[StTallyOut])
+            .toDF()
+        },
+        OutputMode.Append(), rocksDb = true)
+        .filter(col("user_id") =!= -1L)
+        .select(col("user_id"), col("n_events"),
+          (col("total_cents").cast("double") / 100).as("total_value"),
+          timestamp_micros(col("last_us")).cast("timestamp_ntz").as("last_ts"))
+        .orderBy("user_id")
     },
     Some("""
       SELECT user_id, count(*) AS n_events,
@@ -1083,44 +1036,33 @@ object StreamingOps {
             types.map(_._2.lastUs).foldLeft(0L)(math.max)))
         }
       }
-      val savedProvider = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val out = try {
-        val snaps = replayFiles(s, "st12ts", dir,
-          src => {
-            import s.implicits._
-            src
-              // cohort bound, pushed to the spool scan: this op grades the
-              // per-key state machinery; throughput is st1-st3's business
-              .filter(col("user_id") < 50)
-              .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-                (dec2(col("value")) * 100).cast("long").as("cents"))
-              .as[(Long, java.sql.Timestamp, Long, String, Long)]
-              .map(r => StEvent(r._1, r._2, r._3, r._4, r._5))
-              .groupByKey(_.user_id)
-              .transformWithState(new FeatureProcessor,
-                TimeMode.ProcessingTime(), OutputMode.Append(),
-                Encoders.product[St15Out])
-              .toDF()
-          },
-          OutputMode.Append(), noDataBatch = false, parts = 2)
-        // final state per user = the snapshot with the highest n_events
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy(desc("n_events"))
-        snaps.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-          .select(col("user_id"), col("n_events"), col("n_types"),
-            (col("total_cents").cast("double") / 100).as("total_value"),
-            (col("top3_cents").cast("double") / 100).as("top3_value"),
-            timestamp_micros(col("last_us")).cast("timestamp_ntz").as("last_ts"))
-          .orderBy("user_id")
-      } finally {
-        savedProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
+      val snaps = replayFiles(s, "st12ts", dir,
+        src => {
+          import s.implicits._
+          src
+            // cohort bound, pushed to the spool scan: this op grades the
+            // per-key state machinery; throughput is st1-st3's business
+            .filter(col("user_id") < 50)
+            .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
+              (dec2(col("value")) * 100).cast("long").as("cents"))
+            .as[(Long, java.sql.Timestamp, Long, String, Long)]
+            .map(r => StEvent(r._1, r._2, r._3, r._4, r._5))
+            .groupByKey(_.user_id)
+            .transformWithState(new FeatureProcessor,
+              TimeMode.ProcessingTime(), OutputMode.Append(),
+              Encoders.product[St15Out])
+            .toDF()
+        },
+        OutputMode.Append(), noDataBatch = false, parts = 2, rocksDb = true)
+      // final state per user = the snapshot with the highest n_events
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(desc("n_events"))
+      val out = snaps.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+        .select(col("user_id"), col("n_events"), col("n_types"),
+          (col("total_cents").cast("double") / 100).as("total_value"),
+          (col("top3_cents").cast("double") / 100).as("top3_value"),
+          timestamp_micros(col("last_us")).cast("timestamp_ntz").as("last_ts"))
+        .orderBy("user_id")
       // TTL contract, both directions (replay-time guards)
       require(revisits.value > 0,
         "st15: no key found its 1h-TTL state alive in a later batch — state did not carry")
@@ -1201,23 +1143,11 @@ object StreamingOps {
     "Parquet file sink with _spark_metadata commit log: committed-set read-back == batch agg",
     (s, dir) => {
       val batch = ev5(s, dir)
-      val id = runTag()
-      val out = spoolDir(s"filesink_$id")
-      val ckpt = spoolDir(s"ckpt_filesink_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
+      val out = spoolDir(s"filesink_${runTag()}")
       val spool = batchSpool(s, "events5", dir)
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = s.readStream.schema(batch.schema).parquet(spool)
-          .writeStream.format("parquet")
-          .partitionBy("event_type")
-          .option("path", out)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      drain(s.readStream.schema(batch.schema).parquet(spool),
+          freshCkpt("filesink"), shufflePartitions(4))(
+        _.format("parquet").partitionBy("event_type").option("path", out).start())
       // the sink's exactly-once contract: the batch read below must be
       // governed by the _spark_metadata commit log, not a directory listing
       require(java.nio.file.Files.exists(
@@ -1334,33 +1264,19 @@ object StreamingOps {
       val badDir = spoolDir(s"st18_bad_$id")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "event_id BIGINT, user_id BIGINT, event_type STRING, value DECIMAL(14,2)")
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      val savedNoData = s.conf.getOption(
-        "spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = s.readStream.option("maxFilesPerTrigger", "1").text(spool)
-          .writeStream
-          .foreachBatch { (b: DataFrame, bid: Long) =>
-            val parsed = b.select(col("value"),
-              from_json(col("value"), schema).as("j")).localCheckpoint(true)
-            // good rows carry an event_id; malformed JSON parses to a
-            // null/empty struct
-            parsed.filter(col("j.event_id").isNotNull).select(col("j.*"))
-              .write.mode("overwrite").parquet(s"$goodDir/batch=$bid")
-            parsed.filter(col("j.event_id").isNull).select(col("value"))
-              .write.mode("overwrite").text(s"$badDir/batch=$bid")
-            ()
-          }
-          .option("checkpointLocation", spoolDir(s"ckpt_st18_$id"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      }
+      drain(s.readStream.option("maxFilesPerTrigger", "1").text(spool),
+          freshCkpt("st18"), shufflePartitions(4), noDataBatches(false))(
+        _.foreachBatch { (b: DataFrame, bid: Long) =>
+          val parsed = b.select(col("value"),
+            from_json(col("value"), schema).as("j")).localCheckpoint(true)
+          // good rows carry an event_id; malformed JSON parses to a
+          // null/empty struct
+          parsed.filter(col("j.event_id").isNotNull).select(col("j.*"))
+            .write.mode("overwrite").parquet(s"$goodDir/batch=$bid")
+          parsed.filter(col("j.event_id").isNull).select(col("value"))
+            .write.mode("overwrite").text(s"$badDir/batch=$bid")
+          ()
+        }.start())
       val good = s.read.parquet(s"$goodDir/*")
         .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
           sum(col("value")).cast("double").as("total_value"))
@@ -1622,42 +1538,31 @@ object StreamingOps {
           Iterator.single(StKVOut(key, cur.n, cur.cents, cur.event_id, cur.dead))
         }
       }
-      val savedProvider = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val snaps = replayFiles(s, "st12ts", dir,
-          src => {
-            import s.implicits._
-            src
-              .select(col("user_id"),
-                (unix_micros(col("ts"))).as("us"), col("event_id"),
-                (dec2(col("value")) * 100).cast("long").as("cents"),
-                (col("event_id") % 13 === 0).as("tomb"))
-              .as[StChange]
-              .groupByKey(_.user_id)
-              .transformWithState(new KVProcessor,
-                TimeMode.None(), OutputMode.Update(),
-                Encoders.product[StKVOut])
-              .toDF()
-          },
-          OutputMode.Update())
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy(desc("n_updates"))
-        snaps
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1 && !col("dead"))
-          .select(col("user_id"), col("n_updates"),
-            (col("cents").cast("double") / 100).as("value"),
-            col("last_event"))
-          .orderBy("user_id")
-      } finally {
-        savedProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
+      val snaps = replayFiles(s, "st12ts", dir,
+        src => {
+          import s.implicits._
+          src
+            .select(col("user_id"),
+              (unix_micros(col("ts"))).as("us"), col("event_id"),
+              (dec2(col("value")) * 100).cast("long").as("cents"),
+              (col("event_id") % 13 === 0).as("tomb"))
+            .as[StChange]
+            .groupByKey(_.user_id)
+            .transformWithState(new KVProcessor,
+              TimeMode.None(), OutputMode.Update(),
+              Encoders.product[StKVOut])
+            .toDF()
+        },
+        OutputMode.Update(), rocksDb = true)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(desc("n_updates"))
+      snaps
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1 && !col("dead"))
+        .select(col("user_id"), col("n_updates"),
+          (col("cents").cast("double") / 100).as("value"),
+          col("last_event"))
+        .orderBy("user_id")
     },
     Some("""
       WITH log AS (
@@ -1696,7 +1601,6 @@ object StreamingOps {
     "Idempotent batchId-ledger sink under full redelivery: two replays == one batch aggregate",
     (s, dir) => {
       val batch = ev5(s, dir)
-      val id = runTag()
       val spoolStr = fileSpool(s, "st24seq", dir)
       var target: DataFrame = s.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
@@ -1705,55 +1609,41 @@ object StreamingOps {
       val committed = scala.collection.mutable.Set.empty[Long]
       var applied = 0
       var skipped = 0
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      val savedNoData = s.conf.getOption(
-        "spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        def runOnce(runIdx: Int): Unit = {
-          val src = s.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", "1").parquet(spoolStr)
-          val q = src.writeStream
-            .foreachBatch { (b: DataFrame, bid: Long) =>
-              if (committed.contains(bid)) { skipped += 1 }
-              else {
-                val delta = b.groupBy("event_type")
-                  .agg(count(lit(1)).as("n"),
-                    sum(dec2(col("value"))).cast("decimal(24,2)")
-                      .as("total_value"))
-                target = target.as("t")
-                  .join(delta.as("d"), Seq("event_type"), "full_outer")
-                  .select(col("event_type"),
-                    (coalesce(col("t.n"), lit(0L)) +
-                      coalesce(col("d.n"), lit(0L))).as("n"),
-                    (coalesce(col("t.total_value"),
-                      lit(BigDecimal(0)).cast("decimal(24,2)")) +
-                      coalesce(col("d.total_value"),
-                        lit(BigDecimal(0)).cast("decimal(24,2)")))
-                      .cast("decimal(24,2)").as("total_value"))
-                  .localCheckpoint(true)
-                committed += bid
-                applied += 1
-              }
-              ()
+      def runOnce(): Unit = {
+        val src = s.readStream.schema(batch.schema)
+          .option("maxFilesPerTrigger", "1").parquet(spoolStr)
+        // fresh checkpoint per run: run 2 redelivers EVERY batch
+        drain(src, freshCkpt("st24"), shufflePartitions(8), noDataBatches(false))(
+          _.foreachBatch { (b: DataFrame, bid: Long) =>
+            if (committed.contains(bid)) { skipped += 1 }
+            else {
+              val delta = b.groupBy("event_type")
+                .agg(count(lit(1)).as("n"),
+                  sum(dec2(col("value"))).cast("decimal(24,2)")
+                    .as("total_value"))
+              target = target.as("t")
+                .join(delta.as("d"), Seq("event_type"), "full_outer")
+                .select(col("event_type"),
+                  (coalesce(col("t.n"), lit(0L)) +
+                    coalesce(col("d.n"), lit(0L))).as("n"),
+                  (coalesce(col("t.total_value"),
+                    lit(BigDecimal(0)).cast("decimal(24,2)")) +
+                    coalesce(col("d.total_value"),
+                      lit(BigDecimal(0)).cast("decimal(24,2)")))
+                    .cast("decimal(24,2)").as("total_value"))
+                .localCheckpoint(true)
+              committed += bid
+              applied += 1
             }
-            // fresh checkpoint per run: run 2 redelivers EVERY batch
-            .option("checkpointLocation", spoolDir(s"ckpt_st24_${id}_$runIdx"))
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        runOnce(1)
-        runOnce(2)
-        require(applied > 0, "st24: no batches were ever applied")
-        require(skipped == applied,
-          s"st24: run 2 redelivered $skipped batches vs run 1's $applied — " +
-            "the ledger did not see identical redelivery")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
+            ()
+          }.start())
       }
+      runOnce()
+      runOnce()
+      require(applied > 0, "st24: no batches were ever applied")
+      require(skipped == applied,
+        s"st24: run 2 redelivered $skipped batches vs run 1's $applied — " +
+          "the ledger did not see identical redelivery")
       target
         .select(col("event_type"), col("n"),
           col("total_value").cast("double").as("total_value"))
@@ -1823,33 +1713,18 @@ object StreamingOps {
     "st26_dsv2_stream_source",
     "Custom MicroBatchStream source: admission-paced offsets, AvailableNow, oracle-regenerated rows",
     (s, dir) => {
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val sink = s"graft_st26_${runTag()}"
-      try {
-        val src = s.readStream.format("graft.sources.SyntheticStream")
-          .option("rows", "20000").option("batchRows", "4096")
-          .load()
-        val q = src
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
-          .writeStream
-          .format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete())
-          .option("checkpointLocation", spoolDir(s"ckpt_st26_${runTag()}"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        require(dataBatches >= 4,
-          s"st26: $dataBatches data batches — admission control did not pace " +
-            "the stream (20000 rows / 4096 per batch should take 5)")
-        val out = s.table(sink)
-        val rows = out.collect()
-        s.catalog.dropTempView(sink)
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .orderBy("event_type")
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      val src = s.readStream.format("graft.sources.SyntheticStream")
+        .option("rows", "20000").option("batchRows", "4096")
+        .load()
+      val (q, out) = drainToLocal(
+        src.groupBy("event_type")
+          .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents")),
+        OutputMode.Complete(), freshCkpt("st26"), shufflePartitions(4))
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      require(dataBatches >= 4,
+        s"st26: $dataBatches data batches — admission control did not pace " +
+          "the stream (20000 rows / 4096 per batch should take 5)")
+      out.orderBy("event_type")
     },
     Some("""
       WITH g AS (
@@ -2148,23 +2023,13 @@ object StreamingOps {
       import graft.sources.DigestSink
       val key = runTag()
       val spool = batchSpool(s, "events5", dir)
-      val ckpt = spoolDir(s"ckpt_st30_$key")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = s.readStream.schema(ev5(s, dir).schema).parquet(spool)
+      drain(s.readStream.schema(ev5(s, dir).schema).parquet(spool)
           .select(col("event_id"),
             concat(col("event_type"), lit("#"),
-              col("user_id").cast("string")).as("tag"))
-          .writeStream.format("graft.sources.DigestSink")
-          .option("runId", key)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+              col("user_id").cast("string")).as("tag")),
+          freshCkpt("st30"), shufflePartitions(4))(
+        _.format("graft.sources.DigestSink").option("runId", key)
+          .outputMode(OutputMode.Append()).start())
       val ledger = DigestSink.epochs.getOrElse(key, Map.empty)
         .filter(_._2._1 > 0).toSeq.sortBy(_._1)
       import s.implicits._
@@ -2208,25 +2073,15 @@ object StreamingOps {
       import graft.sources.DigestSink
       val key = runTag()
       val spool = batchSpool(s, "events5dup", dir)
-      val ckpt = spoolDir(s"ckpt_st31_$key")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = s.readStream.schema(ev5(s, dir).schema).parquet(spool)
+      drain(s.readStream.schema(ev5(s, dir).schema).parquet(spool)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
           .select(col("event_id"),
             concat(col("event_type"), lit("#"),
-              col("user_id").cast("string")).as("tag"))
-          .writeStream.format("graft.sources.DigestSink")
-          .option("runId", key)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+              col("user_id").cast("string")).as("tag")),
+          freshCkpt("st31"), shufflePartitions(4))(
+        _.format("graft.sources.DigestSink").option("runId", key)
+          .outputMode(OutputMode.Append()).start())
       val ledger = DigestSink.epochs.getOrElse(key, Map.empty)
       import s.implicits._
       Seq(("chain_total",
@@ -2267,34 +2122,20 @@ object StreamingOps {
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL(
           "d DATE, cents BIGINT"))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      val savedNoData = s.conf.getOption(
-        "spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(ordSpool)
-          .writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val delta = b.groupBy(to_date(col("o_orderdate")).as("d"))
-              .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
-                .as("cents"))
-            mv = mv.as("t").join(delta.as("x"), Seq("d"), "full_outer")
-              .select(col("d"),
-                (coalesce(col("t.cents"), lit(0L))
-                  + coalesce(col("x.cents"), lit(0L))).as("cents"))
-              .localCheckpoint(true)
-            ()
-          }
-          .option("checkpointLocation", spoolDir(s"ckpt_st32_${runTag()}"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      }
+      drain(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(ordSpool),
+          freshCkpt("st32"), shufflePartitions(4), noDataBatches(false))(
+        _.foreachBatch { (b: DataFrame, _: Long) =>
+          val delta = b.groupBy(to_date(col("o_orderdate")).as("d"))
+            .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
+              .as("cents"))
+          mv = mv.as("t").join(delta.as("x"), Seq("d"), "full_outer")
+            .select(col("d"),
+              (coalesce(col("t.cents"), lit(0L))
+                + coalesce(col("x.cents"), lit(0L))).as("cents"))
+            .localCheckpoint(true)
+          ()
+        }.start())
       val mvPath = spoolDir(s"st32_mv_${runTag()}")
       mv.coalesce(1).write.mode("overwrite").parquet(mvPath)
       val s2 = s.newSession()
@@ -2335,36 +2176,17 @@ object StreamingOps {
       val schema = ev5(s, dir).schema
       val spoolA = fileSpool(s, "st33a", dir)
       val spoolB = fileSpool(s, "st33b", dir)
-      val id = runTag()
-      val sink = s"graft_stream_sink_$id"
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
-      try {
-        val ckpt = spoolDir(s"ckpt_$id")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-        val a = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(spoolA)
-        val b = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(spoolB)
-        val q = a.unionByName(b)
+      val a = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(spoolA)
+      val b = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(spoolB)
+      drainToLocal(
+        a.unionByName(b)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
           .agg(count(lit(1)).as("n"),
-            sum(dec2(col("value"))).cast("double").as("total_value"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-      }
-      val out = s.table(sink)
-      val rows = out.collect()
-      s.catalog.dropTempView(sink)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+            sum(dec2(col("value"))).cast("double").as("total_value")),
+        OutputMode.Complete(), freshCkpt("st33"), shufflePartitions(4))._2
         .select(col("window.start").cast("timestamp_ntz").as("window_start"),
           col("event_type"), col("n"), col("total_value"))
         .orderBy("window_start", "event_type")
@@ -2397,44 +2219,25 @@ object StreamingOps {
     "st34_state_store_read",
     "Offline statestore read of a streaming agg checkpoint equals the batch aggregate",
     (s, dir) => {
-      val id = runTag()
       val spool = batchSpool(s, "events5", dir)
-      val ckpt = spoolDir(s"ckpt_ssr_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val sink = s"graft_ssr_$id"
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
-      val savedNoData = s.conf.getOption(
-        "spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val src = s.readStream.schema(ev5(s, dir).schema).parquet(spool)
-        val q = src
+      val ckpt = freshCkpt("ssr")
+      // the entry's output is the state store, so the sink is noop
+      drain(s.readStream.schema(ev5(s, dir).schema).parquet(spool)
           .select(col("event_type"),
             expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
           .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.catalog.dropTempView(sink)
-        val state = s.read.format("statestore").load(ckpt)
-        // the value struct carries the agg buffer under its function
-        // names (count, sum) — the reader exposes internals, not aliases
-        val out = state.select(col("key.event_type").as("event_type"),
-            col("value.count").as("n"), col("value.sum").as("total_cents"))
-          .orderBy("event_type")
-        val rows = out.collect()
-        require(rows.nonEmpty, "st34: state store read returned no rows")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      }
+          .agg(count(lit(1)).as("n"), sum("cents").as("total_cents")),
+          ckpt, shufflePartitions(4), noDataBatches(false))(
+        _.format("noop").outputMode(OutputMode.Complete()).start())
+      val state = s.read.format("statestore").load(ckpt)
+      // the value struct carries the agg buffer under its function
+      // names (count, sum) — the reader exposes internals, not aliases
+      val out = state.select(col("key.event_type").as("event_type"),
+          col("value.count").as("n"), col("value.sum").as("total_cents"))
+        .orderBy("event_type")
+      val rows = out.collect()
+      require(rows.nonEmpty, "st34: state store read returned no rows")
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     },
     Some("""
       SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -2461,51 +2264,19 @@ object StreamingOps {
     "st35_rocksdb_state_store",
     "Same streaming agg under the RocksDB state store provider == batch aggregate",
     (s, dir) => {
-      val id = runTag()
       val spool = batchSpool(s, "events5", dir)
-      val ckpt = spoolDir(s"ckpt_rocks_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val sink = s"graft_rocks_$id"
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      val savedProv = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      val savedNoData = s.conf.getOption(
-        "spark.sql.streaming.noDataMicroBatches.enabled").getOrElse("true")
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val src = s.readStream.schema(ev5(s, dir).schema).parquet(spool)
-        val q = src
+      val (q, out) = drainToLocal(
+        s.readStream.schema(ev5(s, dir).schema).parquet(spool)
           .select(col("event_type"), expr("user_id % 2").as("upar"),
             expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
           .groupBy("event_type", "upar")
-          .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        require(q.recentProgress.exists(p => p.stateOperators.nonEmpty &&
-          p.stateOperators.exists(_.numRowsTotal > 0)),
-          "st35: no state committed under the RocksDB provider")
-        val out = s.table(sink).orderBy("event_type", "upar")
-        val rows = out.collect()
-        s.catalog.dropTempView(sink)
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-        savedProv match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-      }
+          .agg(count(lit(1)).as("n"), sum("cents").as("total_cents")),
+        OutputMode.Complete(), freshCkpt("rocks"),
+        shufflePartitions(4), rocksDbState, noDataBatches(false))
+      require(q.recentProgress.exists(p => p.stateOperators.nonEmpty &&
+        p.stateOperators.exists(_.numRowsTotal > 0)),
+        "st35: no state committed under the RocksDB provider")
+      out.orderBy("event_type", "upar")
     },
     Some("""
       SELECT event_type, user_id % 2 AS upar,
@@ -2571,74 +2342,43 @@ object StreamingOps {
       val id = runTag()
       val spool = spoolDir(s"evo_spool_$id")
       val ckpt = spoolDir(s"evo_ckpt_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
       val batch = ev5(s, dir)
         .select(col("event_type"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
           col("event_id"))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      val savedProv = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      val savedEnc = s.conf.getOption(
-        "spark.sql.streaming.stateStore.encodingFormat")
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // avro encoding is what makes the V1→V2 schema change legal
-      s.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
-      try {
-        import s.implicits._
-        def runTranche(tranche: org.apache.spark.sql.DataFrame,
-            proc: StatefulProcessor[String, (String, Long), (String, Long)],
-            i: Int): Long = {
-          tranche.coalesce(2).write.mode("append").parquet(spool)
-          val src = s.readStream.schema(batch.schema).parquet(spool)
-          // the processor emits nothing — all results are read from the
-          // STATE afterwards — so the sink is noop (memory sinks cannot
-          // recover a checkpoint outside complete mode)
-          val q = src.select(col("event_type"), col("cents"))
+      import s.implicits._
+      def runTranche(tranche: DataFrame,
+          proc: StatefulProcessor[String, (String, Long), (String, Long)]): Long = {
+        tranche.coalesce(2).write.mode("append").parquet(spool)
+        val src = s.readStream.schema(batch.schema).parquet(spool)
+        // the processor emits nothing — all results are read from the
+        // STATE afterwards — so the sink is noop (memory sinks cannot
+        // recover a checkpoint outside complete mode). Avro encoding is
+        // what makes the V1→V2 schema change legal.
+        val q = drain(src.select(col("event_type"), col("cents"))
             .as[(String, Long)]
             .groupByKey(_._1)
             .transformWithState(proc, TimeMode.None(), OutputMode.Update(),
               Encoders.product[(String, Long)])
-            .toDF("k", "v")
-            .writeStream.format("noop")
-            .outputMode(OutputMode.Update())
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q.recentProgress.map(_.numInputRows).sum
-        }
-        val n1 = runTranche(batch.filter(col("event_id") % 2 === 0), new V1, 1)
-        val n2 = runTranche(batch.filter(col("event_id") % 2 === 1), new V2, 2)
-        require(n1 > 0 && n2 > 0 && n2 < n1 * 3 / 2,
-          s"st36: run 2 read $n2 vs run 1's $n1 — checkpoint not recovered")
-        val state = s.read.format("statestore")
-          .option("stateVarName", "tally").load(ckpt)
-        val out = state.select(col("key.value").as("event_type"),
-            col("value.n").as("n"),
-            coalesce(col("value.cents"), lit(0L)).as("cents_post_evo"))
-          .orderBy("event_type")
-        val rows = out.collect()
-        require(rows.nonEmpty, "st36: no evolved state rows")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
-        savedProv match {
-          case Some(p) => s.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset(
-            "spark.sql.streaming.stateStore.providerClass")
-        }
-        savedEnc match {
-          case Some(e) => s.conf.set(
-            "spark.sql.streaming.stateStore.encodingFormat", e)
-          case None => s.conf.unset(
-            "spark.sql.streaming.stateStore.encodingFormat")
-        }
+            .toDF("k", "v"),
+            ckpt, shufflePartitions(4), rocksDbState,
+            "spark.sql.streaming.stateStore.encodingFormat" -> "avro")(
+          _.format("noop").outputMode(OutputMode.Update()).start())
+        q.recentProgress.map(_.numInputRows).sum
       }
+      val n1 = runTranche(batch.filter(col("event_id") % 2 === 0), new V1)
+      val n2 = runTranche(batch.filter(col("event_id") % 2 === 1), new V2)
+      require(n1 > 0 && n2 > 0 && n2 < n1 * 3 / 2,
+        s"st36: run 2 read $n2 vs run 1's $n1 — checkpoint not recovered")
+      val state = s.read.format("statestore")
+        .option("stateVarName", "tally").load(ckpt)
+      val out = state.select(col("key.value").as("event_type"),
+          col("value.n").as("n"),
+          coalesce(col("value.cents"), lit(0L)).as("cents_post_evo"))
+        .orderBy("event_type")
+      val rows = out.collect()
+      require(rows.nonEmpty, "st36: no evolved state rows")
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     },
     Some("""
       SELECT event_type,
@@ -2684,7 +2424,7 @@ object StreamingOps {
         .distinct()
       val spool = st37Spool(s, dir)
       val schema = s.read.parquet(spool).schema
-      runStream(s, "st37", spool, schema,
+      runStream(s, spool, schema,
         src => src
           .withColumn("k", Dedup.canonKey(col("text")))
           .join(broadcast(corpusIdx.withColumn("hit", lit(1L))), Seq("k"), "left_outer")
@@ -2737,8 +2477,6 @@ object StreamingOps {
       val id = runTag()
       val tbl = s"graft_cat.corpus.stv_$id"
       val ckpt = spoolDir(s"stv2_ckpt_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val sink = s"graft_stream_v2_$id"
       val base = table(s2, dir, "orders")
         .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -2754,43 +2492,27 @@ object StreamingOps {
       // shape): the aggregate's state store is what the checkpoint
       // recovers, so run 2 emits the FULL aggregate after reading only
       // its own increment
-      val saved = s2.conf.get("spark.sql.shuffle.partitions")
-      s2.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
-      try {
-        def drain(i: Int): Long = {
-          val q = s2.readStream.table(tbl)
+      def run(): (Long, DataFrame) = {
+        val (q, out) = drainToLocal(s2.readStream.table(tbl)
             .groupBy("status")
             .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"),
-              max(col("okey")).as("max_key"))
-            .writeStream
-            .format("memory").queryName(s"${sink}_$i")
-            .outputMode(OutputMode.Complete())
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q.recentProgress.map(_.numInputRows).sum
-        }
-        val n1 = drain(1)
-        s2.catalog.dropTempView(s"${sink}_1")
-        base.filter(col("okey") % 2 === 1)
-          .createOrReplaceTempView(s"stv_src_$id")
-        s2.sql(s"INSERT INTO $tbl SELECT okey, status, cents FROM stv_src_$id") // v2
-        val n2 = drain(2)
-        val sinkDf = s2.table(s"${sink}_2")
-        val (rows, schema) = (sinkDf.collect(), sinkDf.schema)
-        s2.catalog.dropTempView(s"${sink}_2")
-        // exact-increment guards: run 1 read tranche 1 whole; run 2 read
-        // EXACTLY tranche 2 (a restart-from-scratch would read both and
-        // still match the oracle — these pins are what prove incremental)
-        require(n1 == evenN,
-          s"st38: run 1 read $n1 rows, expected the $evenN-row create tranche")
-        require(n2 == oddN,
-          s"st38: run 2 read $n2 rows, expected ONLY the $oddN-row increment")
-        s2.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-          .orderBy("status")
-      } finally s2.conf.set("spark.sql.shuffle.partitions", saved)
+              max(col("okey")).as("max_key")),
+          OutputMode.Complete(), ckpt, shufflePartitions(4))
+        (q.recentProgress.map(_.numInputRows).sum, out)
+      }
+      val (n1, _) = run()
+      base.filter(col("okey") % 2 === 1)
+        .createOrReplaceTempView(s"stv_src_$id")
+      s2.sql(s"INSERT INTO $tbl SELECT okey, status, cents FROM stv_src_$id") // v2
+      val (n2, out) = run()
+      // exact-increment guards: run 1 read tranche 1 whole; run 2 read
+      // EXACTLY tranche 2 (a restart-from-scratch would read both and
+      // still match the oracle — these pins are what prove incremental)
+      require(n1 == evenN,
+        s"st38: run 1 read $n1 rows, expected the $evenN-row create tranche")
+      require(n2 == oddN,
+        s"st38: run 2 read $n2 rows, expected ONLY the $oddN-row increment")
+      out.orderBy("status")
     },
     Some("""
       SELECT o_orderstatus AS status, count(*) AS n,
@@ -2826,7 +2548,6 @@ object StreamingOps {
       val src = s"graft_cat.corpus.pipe_src_$id"
       val dst = s"graft_cat.corpus.pipe_dst_$id"
       val ckpt = spoolDir(s"pipe_ckpt_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
       val base = table(s2, dir, "orders")
         .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -2839,16 +2560,10 @@ object StreamingOps {
         .writeTo(src).partitionedBy(col("status")).create() // src v1
       s2.sql(s"""CREATE TABLE $dst (okey BIGINT, status STRING, cents BIGINT)
                  PARTITIONED BY (status)""")
-      def pipe(): Long = {
-        val q = s2.readStream.table(src)
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .toTable(dst)
-        q.awaitTermination()
-        q.recentProgress.map(_.numInputRows).sum
-      }
+      def pipe(): Long =
+        drain(s2.readStream.table(src), ckpt)(
+          _.outputMode(OutputMode.Append()).toTable(dst))
+          .recentProgress.map(_.numInputRows).sum
       val n1 = pipe()
       base.filter(col("okey") % 2 === 1)
         .createOrReplaceTempView(s"pipe_src_v_$id")
@@ -2894,9 +2609,6 @@ object StreamingOps {
         "graft.sources.GraftSparkCatalog")
       val id = runTag()
       val tbl = s"graft_cat.corpus.rl_$id"
-      val ckpt = spoolDir(s"rl_ckpt_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val sink = s"graft_stream_rl_$id"
       val base = table(s2, dir, "orders")
         .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -2913,35 +2625,20 @@ object StreamingOps {
       base.filter(col("okey") % 3 === 2)
         .createOrReplaceTempView(s"rl_src2_$id")
       s2.sql(s"INSERT INTO $tbl SELECT okey, status, cents FROM rl_src2_$id") // commit 3
-      val saved = s2.conf.get("spark.sql.shuffle.partitions")
-      s2.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
-      try {
-        val q = s2.readStream
+      val (q, out) = drainToLocal(s2.readStream
           .option("maxVersionsPerTrigger", "1")
           .table(tbl)
           .groupBy("status")
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"),
-            max(col("okey")).as("max_key"))
-          .writeStream
-          .format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batchRows = q.recentProgress.map(_.numInputRows)
-          .filter(_ > 0).toSeq
-        // one micro-batch per data commit, each exactly that commit's rows
-        require(batchRows == sizes,
-          s"st40: per-batch input rows $batchRows != per-commit tranches $sizes " +
-            "— the rate limit did not bound the backlog drain")
-        val sinkDf = s2.table(sink)
-        val (rows, schema) = (sinkDf.collect(), sinkDf.schema)
-        s2.catalog.dropTempView(sink)
-        s2.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-          .orderBy("status")
-      } finally s2.conf.set("spark.sql.shuffle.partitions", saved)
+            max(col("okey")).as("max_key")),
+        OutputMode.Complete(), freshCkpt("rl"), shufflePartitions(4))
+      val batchRows = q.recentProgress.map(_.numInputRows)
+        .filter(_ > 0).toSeq
+      // one micro-batch per data commit, each exactly that commit's rows
+      require(batchRows == sizes,
+        s"st40: per-batch input rows $batchRows != per-commit tranches $sizes " +
+          "— the rate limit did not bound the backlog drain")
+      out.orderBy("status")
     },
     Some("""
       SELECT o_orderstatus AS status, count(*) AS n,
@@ -2975,9 +2672,6 @@ object StreamingOps {
         "graft.sources.GraftSparkCatalog")
       val id = runTag()
       val tbl = s"graft_cat.corpus.rrl_$id"
-      val ckpt = spoolDir(s"rrl_ckpt_$id")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
-      val sink = s"graft_stream_rrl_$id"
       table(s2, dir, "orders")
         .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -2991,36 +2685,21 @@ object StreamingOps {
       s2.sql(s"""INSERT INTO $tbl
                  SELECT okey, status, cents FROM rrl_src_$id
                  ORDER BY okey LIMIT 7 OFFSET 10""")
-      val saved = s2.conf.get("spark.sql.shuffle.partitions")
-      s2.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "4"))
-      try {
-        val q = s2.readStream
+      val (q, out) = drainToLocal(s2.readStream
           .option("maxRowsPerTrigger", "6")
           .table(tbl)
           .groupBy("status")
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"),
-            max(col("okey")).as("max_key"))
-          .writeStream
-          .format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batchRows = q.recentProgress.map(_.numInputRows)
-          .filter(_ > 0).toSeq
-        // the 17-row backlog drains as 6/6/5 — the middle batch spans the
-        // commit boundary, which only a row-granular offset can express
-        require(batchRows == Seq(6L, 6L, 5L),
-          s"st41: per-batch input rows $batchRows != List(6, 6, 5) " +
-            "— row-granular admission did not split the oversized commit")
-        val sinkDf = s2.table(sink)
-        val (rows, schema) = (sinkDf.collect(), sinkDf.schema)
-        s2.catalog.dropTempView(sink)
-        s2.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-          .orderBy("status")
-      } finally s2.conf.set("spark.sql.shuffle.partitions", saved)
+            max(col("okey")).as("max_key")),
+        OutputMode.Complete(), freshCkpt("rrl"), shufflePartitions(4))
+      val batchRows = q.recentProgress.map(_.numInputRows)
+        .filter(_ > 0).toSeq
+      // the 17-row backlog drains as 6/6/5 — the middle batch spans the
+      // commit boundary, which only a row-granular offset can express
+      require(batchRows == Seq(6L, 6L, 5L),
+        s"st41: per-batch input rows $batchRows != List(6, 6, 5) " +
+          "— row-granular admission did not split the oversized commit")
+      out.orderBy("status")
     },
     Some("""
       WITH t AS (

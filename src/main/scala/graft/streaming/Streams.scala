@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.dec2
 
 /** Structured Streaming surface (SURVEY.md §2 Layer B "Streaming"): the
@@ -12,8 +12,6 @@ import graft.operators.dec2
   *
   * The transforms are DataFrame→DataFrame: they run identically on a
   * `readStream` source in production and on a MemoryStream in tests.
-  * Orchestration (start/await/stop with timeouts) goes through the M3 job
-  * runner semantics: `runToMemorySink` is the sync-run analog.
   */
 object Streams {
 
@@ -88,20 +86,5 @@ object Streams {
             else Iterator.empty
           closing ++ Iterator(SessionUpdate(userId, next.n_events, closed = false))
       }
-  }
-
-  /** Run a streaming transform on a source to a named in-memory sink until
-    * all available input is processed (the M3 "sync run" analog for
-    * streams; production would use writeStream to a real sink with the
-    * same options). */
-  def runToMemorySink(df: DataFrame, name: String,
-      outputMode: OutputMode = OutputMode.Append()): StreamingQuery = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q
   }
 }

@@ -20,6 +20,20 @@ class DedupUnitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = { spark.stop(); super.afterAll() }
 
+  test("d37Parts: a malformed or non-positive value fails at once, naming key and value") {
+    import graft.operators.Dedup.d37Parts
+    val key = "spark.graft.d37.parts"
+    try {
+      spark.conf.set(key, "6")
+      assert(d37Parts(spark) == 6)
+      for (bad <- Seq("abc", "0", "-3", "")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](d37Parts(spark))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+    } finally spark.conf.unset(key)
+  }
+
   test("denseRankBy: contiguous, order-preserving, duplicate-collapsing, count-exact") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)

@@ -513,6 +513,15 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("invalid option → exit 1") {
     assert(run("list_partitions")._1 == 1) // missing required positionals
+    // malformed numeric values name the flag instead of escaping main
+    for ((argv, flag) <- Seq(
+        Seq("run_crawler", "any_crawler", "--timeout=abc") -> "--timeout",
+        Seq("run_job", "any_job", "--timeout=abc") -> "--timeout",
+        Seq("list_runs", "--lines=abc") -> "--lines")) {
+      val (code, out) = run(argv: _*)
+      assert(code == 1, argv.mkString(" "))
+      assert(out.exists(_.contains(flag)), out.mkString("\n"))
+    }
   }
 
   test("d5 embedding near-dup: keeper precedes doc, sim within cosine bounds") {

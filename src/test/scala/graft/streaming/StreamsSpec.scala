@@ -170,6 +170,81 @@ class StreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows == Set(("view", 4L, 3L)), s"got $rows")
   }
 
+  // --- the AvailableNow drain every streaming replay goes through ---
+
+  private val partsKey = "spark.sql.shuffle.partitions"
+  private val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** A parquet stream over four fresh events plus a checkpoint path. */
+  private def fileStream(): (org.apache.spark.sql.DataFrame, String) = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-drain")
+    val src = root.resolve("src").toString
+    Seq(ev(1, 0), ev(2, 5, typ = "click"), ev(3, 12), ev(4, 20))
+      .toDF().write.parquet(src)
+    val schema = spark.read.parquet(src).schema
+    (spark.readStream.schema(schema).parquet(src), root.resolve("ckpt").toString)
+  }
+
+  test("drain: per-query conf reaches the stream, never the caller's session") {
+    import graft.operators.StreamingOps.{drain, shufflePartitions}
+    val (src, ckpt) = fileStream()
+    val seen = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    val q = drain(src.groupBy("event_type").count(), ckpt, shufflePartitions(3))(
+      _.outputMode(OutputMode.Complete())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.collect() // a stateful batch must run for its state to commit
+          seen.synchronized {
+            seen += (b.sparkSession.conf.get(partsKey) -> spark.conf.get(partsKey))
+          }
+          ()
+        }.start())
+    assert(!q.isActive && q.exception.isEmpty)
+    assert(q.lastProgress.stateOperators.head.numShufflePartitions == 3)
+    // the stream's own session runs at 3; the caller's stays at 4 while the
+    // batches run and after the drain returns
+    assert(seen.synchronized(seen.toList).nonEmpty)
+    assert(seen.synchronized(seen.toList).forall(_ == ("3" -> "4")), seen)
+    assert(spark.conf.get(partsKey) == "4")
+  }
+
+  test("drain: a failing stream surfaces its error and still restores the caller's conf") {
+    import graft.operators.StreamingOps.{drain, noDataBatches, shufflePartitions}
+    val (src, ckpt) = fileStream()
+    assert(!spark.conf.getAll.contains(noDataKey))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(src, ckpt, shufflePartitions(3), noDataBatches(false))(
+        _.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          throw new IllegalStateException("sink refused the batch")
+        }.start())
+    }
+    assert(err.getMessage.contains("sink refused the batch"), err.getMessage)
+    assert(spark.conf.get(partsKey) == "4")
+    assert(!spark.conf.getAll.contains(noDataKey), "a key unset before the drain must be unset again")
+  }
+
+  test("drainToLocal: returns the sink content and leaves no temp view behind") {
+    import graft.operators.StreamingOps.{drainToLocal, shufflePartitions}
+    import org.apache.spark.sql.functions._
+    def views() = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views()
+    val (src, ckpt) = fileStream()
+    val (q, out) = drainToLocal(src.groupBy("event_type").count(),
+      OutputMode.Complete(), ckpt, shufflePartitions(3))
+    assert(q.recentProgress.map(_.numInputRows).sum == 4)
+    assert(out.collect().map(r => r.getString(0) -> r.getLong(1)).toSet ==
+      Set("view" -> 3L, "click" -> 1L))
+    assert(views() == before)
+    // a failed drain drops its sink view too
+    val (src2, ckpt2) = fileStream()
+    val boom = udf((t: String) => { if (t == "click") sys.error("bad row"); t })
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drainToLocal(src2.select(boom(col("event_type")).as("t")),
+        OutputMode.Append(), ckpt2)
+    }
+    assert(views() == before)
+  }
+
   override def afterAll(): Unit = {
     try spark.stop() finally super.afterAll()
   }
