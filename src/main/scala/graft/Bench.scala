@@ -65,7 +65,7 @@ object Bench {
     val tables = Option(new java.io.File(sfDir).list()).getOrElse(Array.empty)
       .filter(_.endsWith(".parquet")).sorted
     tables.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t").count()
+      try operators.table(spark, sfDir, t.stripSuffix(".parquet")).count()
       catch { case _: Throwable => () }
     }
     // optional comma-separated filter for targeted perf iteration

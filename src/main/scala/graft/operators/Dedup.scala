@@ -3167,9 +3167,9 @@ object Dedup {
     *     2 re-ranks instead of 5 at any scale.
     *  2. SUFFIX-ARRAY NEIGHBORS without a global single-partition sort:
     *     range-repartition by final rank, lag() within each partition,
-    *     then stitch the partition boundaries by pairing each partition's
-    *     first row with its predecessor's last (two tiny aggregates) —
-    *     the scale-correct neighbor scan.
+    *     then stitch the partition boundaries by pairing each non-empty
+    *     partition's first row with the previous non-empty partition's
+    *     last ([[sortedNeighbors]]) — the scale-correct neighbor scan.
     *  3. LCP DIRECTLY per neighbor pair (r13 — replacing r12's 6-level
     *     binary descent, whose 12 sequential join jobs were the build's
     *     cost center): each pair joins its two CAP-word suffix slices
@@ -3256,7 +3256,6 @@ object Dedup {
 
   private def d37LrsBuild(s: org.apache.spark.sql.SparkSession,
       dir: String, CAP: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val parts = d37Parts(s)
     // checkpointed once: consumed 4× (vocab, initial ranks, sizes, final
     // position join) — without it each consumer re-runs scan + explode
@@ -3376,7 +3375,7 @@ object Dedup {
     // remaining lengths and CAP via slice truncation. Scale-sane: the
     // range shuffle carries ≤ CAP words per position (bounded width,
     // linear total — the Lee et al. adjacent-suffix comparison,
-    // sharded); boundary stitch unchanged (two tiny aggregates).
+    // sharded); the boundary stitch is one tiny aggregate.
     val docsWs = table(s, dir, "documents")
       .select(col("doc_id").as("d"), words(col("text")).as("ws"))
     val saKeys = (rankCols :+ "d" :+ "i").map(col)
@@ -3386,26 +3385,7 @@ object Dedup {
       .repartitionByRange(parts, saKeys: _*)
       .withColumn("pid", org.apache.spark.sql.functions.spark_partition_id())
       .localCheckpoint(true)
-    val wIn = Window.partitionBy("pid").orderBy(saKeys: _*)
-    val within = sa
-      .withColumn("pd", lag(col("d"), 1).over(wIn))
-      .withColumn("pi", lag(col("i"), 1).over(wIn))
-      .withColumn("psuf", lag(col("suf"), 1).over(wIn))
-      .filter(col("pd").isNotNull)
-      .select(col("pd").as("da"), col("pi").as("ia"),
-        col("d").as("db"), col("i").as("ib"),
-        col("psuf").as("sufa"), col("suf").as("sufb"))
-    // (rk…, d, i) is unique, so the trailing suf never drives the order
-    val edgeKeys = saKeys :+ col("suf")
-    val edges = sa.groupBy("pid")
-      .agg(min(struct(edgeKeys: _*)).as("f"),
-        max(struct(edgeKeys: _*)).as("l"))
-    val boundary = edges.select((col("pid") + 1).as("pid"),
-        col("l.d").as("da"), col("l.i").as("ia"), col("l.suf").as("sufa"))
-      .join(edges.select(col("pid"), col("f.d").as("db"),
-        col("f.i").as("ib"), col("f.suf").as("sufb")), "pid")
-      .select("da", "ia", "db", "ib", "sufa", "sufb")
-    val pairs = within.unionByName(boundary)
+    val pairs = sortedNeighbors(sa, saKeys)
       .withColumn("lcp", expr(
         // first mismatch position − 1; no mismatch ⇒ the shorter length
         // (zip_with null-pads the shorter side, so a length difference
@@ -3432,6 +3412,39 @@ object Dedup {
       .join(perPos, Seq("d", "i"), "left")
       .na.fill(0L, Seq("lrs"))
     out
+  }
+
+  /** The adjacent (predecessor, row) pairs, in `keys` order, of `sa`: a
+    * frame range-partitioned on `keys` (unique) whose `pid` column holds
+    * each row's partition. Within a partition the predecessor comes from
+    * a window lag(); across partitions each non-empty partition's last row
+    * is stitched to the first row of the NEXT NON-EMPTY one (not pid + 1,
+    * which would drop the pair across an empty partition), over the ≤ one
+    * row per partition `edges` frame. Returns (da, ia, db, ib, sufa, sufb). */
+  private[graft] def sortedNeighbors(sa: org.apache.spark.sql.DataFrame,
+      keys: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wIn = Window.partitionBy("pid").orderBy(keys: _*)
+    val within = sa
+      .withColumn("pd", lag(col("d"), 1).over(wIn))
+      .withColumn("pi", lag(col("i"), 1).over(wIn))
+      .withColumn("psuf", lag(col("suf"), 1).over(wIn))
+      .filter(col("pd").isNotNull)
+      .select(col("pd").as("da"), col("pi").as("ia"),
+        col("d").as("db"), col("i").as("ib"),
+        col("psuf").as("sufa"), col("suf").as("sufb"))
+    // (keys…) is unique, so the trailing suf never drives the order
+    val edgeKeys = keys :+ col("suf")
+    val edges = sa.groupBy("pid")
+      .agg(min(struct(edgeKeys: _*)).as("f"),
+        max(struct(edgeKeys: _*)).as("l"))
+    val boundary = edges
+      .select(col("l"), lead(col("f"), 1).over(Window.orderBy("pid")).as("nf"))
+      .filter(col("nf").isNotNull)
+      .select(col("l.d").as("da"), col("l.i").as("ia"),
+        col("nf.d").as("db"), col("nf.i").as("ib"),
+        col("l.suf").as("sufa"), col("nf.suf").as("sufb"))
+    within.unionByName(boundary)
   }
 
   /** [[d37Lrs]] spooled once per (sf, JVM) — the suffix array is corpus

@@ -619,7 +619,7 @@ object Similarity {
       val scored = broadcast(luts).crossJoin(coded)
         .filter(col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("vec_id"),
-          adcSum(col("codes"), col("luts"), 8).as("adc"))
+          adcSum(col("codes"), col("luts"), cb.length).as("adc"))
       // ADC SHORTLIST (top-32 of the corpus by table lookups) + exact
       // rerank of just the shortlist — the production PQ pipeline: the
       // compressed scan prunes 99.7% of the corpus, original vectors are
@@ -757,7 +757,7 @@ object Similarity {
     val scored = broadcast(luts).join(coded, "cell")
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        adcSum(col("codes"), col("luts"), 8).as("adc"))
+        adcSum(col("codes"), col("luts"), cb.length).as("adc"))
     val w = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
     val shortlist = scored.withColumn("arank", row_number().over(w))
       .filter(col("arank") <= 32)

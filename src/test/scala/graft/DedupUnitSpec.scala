@@ -34,6 +34,28 @@ class DedupUnitSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset(key)
   }
 
+  test("sortedNeighbors: an empty partition between two non-empty ones keeps the pair across it") {
+    import org.apache.spark.sql.functions._
+    // 30 positions in key order (rk, d, i); suf tags each row
+    val rows = spark.range(30).select(
+      (lit(29L) - col("id")).as("rk"), (col("id") % 3).as("d"), col("id").as("i"),
+      array(col("id").cast("string")).as("suf"))
+    val keys = Seq(col("rk"), col("d"), col("i"))
+    def pairs(pid: org.apache.spark.sql.Column) =
+      graft.operators.Dedup.sortedNeighbors(rows.withColumn("pid", pid), keys)
+        .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // parts = 1: every row in partition 0
+    val one = pairs(lit(0))
+    // four parts, rk ranges [0,10) → 0, [10,20) → 2, [20,30) → 3; 1 is empty
+    val gapped = when(col("rk") < 10, 0).when(col("rk") < 20, 2).otherwise(3)
+    val present = rows.select(gapped.as("pid")).distinct().collect().map(_.getInt(0)).sorted.toSeq
+    assert(present == Seq(0, 2, 3), "precondition: partition 1 is empty between 0 and 2")
+    // ascending rk = descending i: each row's predecessor is i + 1
+    val expected = (0L until 29L).map(i => (i + 1, i)).toSet
+    assert(one == expected)
+    assert(pairs(gapped) == one)
+  }
+
   test("denseRankBy: contiguous, order-preserving, duplicate-collapsing, count-exact") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)

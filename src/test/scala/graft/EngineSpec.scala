@@ -524,6 +524,81 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("fixture schema memo: inferred once, keyed by file status and parquet confs, fresh frames") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    import graft.operators.table
+    val sc = spark.sparkContext
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    def restoring(key: String)(body: => Unit): Unit = {
+      val prev = spark.conf.getAll.get(key)
+      try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    // (a) every fixture, both with and without events()'s nanosAsLong
+    val fixtures = new java.io.File(sfDir).list().filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted.toSeq
+    assert(fixtures.contains("events") && fixtures.size >= 10)
+    restoring(nanos) {
+      for (nanosAsLong <- Seq(false, true); t <- fixtures) {
+        if (nanosAsLong) spark.conf.set(nanos, "true") else spark.conf.unset(nanos)
+        assert(table(spark, sfDir, t).schema ==
+          spark.read.parquet(s"$sfDir/$t.parquet").schema, s"$t (nanosAsLong=$nanosAsLong)")
+      }
+    }
+    // (b) a warm read starts no Spark job; a bare read does (the listener
+    // sees this thread's jobs only: async runs from other tests may still
+    // be going). A sentinel job drains the bus: events arrive in order.
+    val tag = "graft.test.schemaMemo"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    var drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("sentinel") => drained.countDown()
+          case Some(_) => jobs.incrementAndGet()
+          case None => ()
+        }
+    }
+    def jobsStartedBy[T](body: => T): (T, Int) = {
+      jobs.set(0)
+      sc.setLocalProperty(tag, "read")
+      val out = try body finally sc.setLocalProperty(tag, null)
+      drained = new java.util.concurrent.CountDownLatch(1)
+      sc.setLocalProperty(tag, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
+      (out, jobs.get)
+    }
+    val first = table(spark, sfDir, "orders")
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsStartedBy(spark.read.parquet(s"$sfDir/orders.parquet"))._2 >= 1)
+      val (second, warmJobs) = jobsStartedBy(table(spark, sfDir, "orders"))
+      assert(warmJobs == 0)
+      // a fresh frame per call: a self-join of two reads resolves
+      assert(first.queryExecution.analyzed.output.map(_.exprId).toSet
+        .intersect(second.queryExecution.analyzed.output.map(_.exprId).toSet).isEmpty)
+      assert(first.as("a").join(second.as("b"), col("a.o_orderkey") === col("b.o_orderkey"))
+        .count() == first.count())
+    } finally sc.removeSparkListener(listener)
+    // (c) an inferTimestampNTZ flip infers afresh, and back
+    assert(table(spark, sfDir, "orders").schema("o_orderdate").dataType == TimestampNTZType)
+    restoring(ntz) {
+      spark.conf.set(ntz, "false")
+      assert(table(spark, sfDir, "orders").schema("o_orderdate").dataType == TimestampType)
+    }
+    assert(table(spark, sfDir, "orders").schema("o_orderdate").dataType == TimestampNTZType)
+    // (d) a rewritten file shows its new column on the next read
+    val dir = s"$tmp/schema_memo"
+    spark.range(3).write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(table(spark, dir, "t").columns.toSeq == Seq("id"))
+    spark.range(3).withColumn("extra", col("id") * 2)
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(table(spark, dir, "t").columns.toSeq == Seq("id", "extra"))
+    assert(table(spark, dir, "t").agg(sum("extra")).head().getLong(0) == 6L)
+  }
+
   test("d5 embedding near-dup: keeper precedes doc, sim within cosine bounds") {
     val rows = graft.operators.Dedup.d5.build(spark, sfDir)
       .select("doc_id", "keep_id", "max_sim").collect()

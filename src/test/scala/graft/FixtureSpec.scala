@@ -99,4 +99,24 @@ class FixtureSpec extends AnyFunSuite {
     // embedding is a LIST group (list<float>), not a primitive
     assertCol("embeddings", "embedding", "GROUP", Some(LogicalTypeAnnotation.listType()))
   }
+
+  test("src/main reads fixture tables only through operators.table") {
+    // a bare spark.read.parquet of a fixture infers its schema with a
+    // Spark job per call; table() infers once per file and conf set
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val fixturePath = """\$\{?(dir|sfDir)\}?/""".r
+    val hits = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("parquet") &&
+              fixturePath.findFirstIn(line).isDefined => s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+        }
+      }
+    val (reader, others) = hits.partition(_.startsWith("graft/operators/package.scala:"))
+    assert(reader.size == 1, s"table()'s own path line not found: $hits")
+    assert(others.isEmpty, "read fixtures through operators.table:\n" + others.mkString("\n"))
+  }
 }
