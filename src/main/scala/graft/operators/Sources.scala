@@ -2137,7 +2137,7 @@ object Sources {
         } catch { case _: Exception => true }
       val verAfter = graft.sources.MemTable.store(key).version
       val noStagingResidue = !graft.sources.MemTable.store.keys
-        .exists(_.startsWith(s"$key!staging!"))
+        .exists(_.startsWith(s"staging!$key!"))
       val audit = Seq(
         ("audit", "failed_replace_refused", failedCleanly.compare(false).toLong, 0L),
         ("audit", "version_still_v2", verAfter, 0L),
@@ -2241,7 +2241,7 @@ object Sources {
     * SURVEY r13 candidate (b) closed in-round) — the ANSI table-integrity
     * surface Spark 4.1 delegates to the connector: the catalog stores
     * enforced CHECK constraints
-    * ([[graft.sources.GraftSparkCatalog.checkConstraints]]), the analyzer
+    * ([[graft.sources.TableMeta.checks]]), the analyzer
     * reads them back from Table.constraints() and plans a CheckInvariant
     * guard into EVERY write (a violating row fails the write job before
     * any commit — the lakehouse write-barrier, same family as q200's

@@ -11,7 +11,10 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 /** Durable manifest for one table: the transaction-log summary a restart
   * reads first (which versions are retained, which is current, and the
-  * catalog-object state that does not live in row data). */
+  * catalog-object state that does not live in row data). The contract
+  * fields are the flattened [[TableMeta]] record; their JSON names are a
+  * format and stay fixed, so spills written by earlier builds restore
+  * (a field an older manifest lacks takes its default). */
 private[sources] case class DurableManifest(
     key: String,
     current: Long,
@@ -23,21 +26,34 @@ private[sources] case class DurableManifest(
     checkConstraints: Seq[Seq[String]] = Nil, // (name, predicate SQL) pairs
     generatedCols: Seq[Seq[String]] = Nil, // (name, expression SQL) pairs
     sortedBy: Option[String] = None,
-    // TBLPROPERTIES('extendedPushdown') must survive a restart: losing it
-    // silently turns accepted (source-enforced) filters back into engine
-    // filters — correct but a different contract than the user declared,
-    // and the file-backed stats pruning rides on acceptance
     extendedPushdown: Boolean = false,
-    // per-table spill-layout knobs (TBLPROPERTIES('spillRowGroupBytes'/
-    // 'spillPageRows')) — write-side properties, persisted so commits
-    // AFTER a restart keep the declared layout (the extendedPushdown
-    // parity discipline, applied to the write path)
     spillRowGroupBytes: Option[Long] = None,
     spillPageRows: Option[Int] = None,
-    // TBLPROPERTIES('spillBloomFilterColumns') — columns that spill with
-    // a parquet bloom filter (and WITHOUT dictionary encoding: bloom is
-    // the high-cardinality equality tier, the documented pairing)
-    spillBloomCols: Seq[String] = Nil)
+    spillBloomCols: Seq[String] = Nil,
+    writeDistribution: Option[String] = None) {
+  def meta: TableMeta = TableMeta(partCol, deltaIdCol,
+    identityCol.map(_.split(':')).collect {
+      case Array(c, s, st, ax) => IdentitySpec(c, s.toLong, st.toLong, ax.toBoolean)
+    },
+    checkConstraints.collect { case Seq(n, sql) => (n, sql) },
+    generatedCols.collect { case Seq(c, sql) => (c, sql) },
+    sortedBy, extendedPushdown, writeDistribution.contains("clustered"),
+    SpillLayout(spillRowGroupBytes, spillPageRows, spillBloomCols))
+}
+
+private[sources] object DurableManifest {
+  def of(key: String, current: Long, versions: Seq[Long],
+      declaredParts: Map[String, Map[String, String]],
+      m: TableMeta): DurableManifest =
+    DurableManifest(key, current, versions, m.partCol, m.deltaIdCol,
+      declaredParts,
+      m.identity.map(i => s"${i.col}:${i.start}:${i.step}:${i.allowExplicit}"),
+      m.checks.map { case (n, sql) => Seq(n, sql) },
+      m.generated.map { case (c, sql) => Seq(c, sql) },
+      m.sortedBy, m.extendedPushdown, m.spill.rowGroupBytes,
+      m.spill.pageRows, m.spill.bloomCols,
+      if (m.clustered) Some("clustered") else None)
+}
 
 /** Per-version sidecar: the schema AT that snapshot (schema evolution
   * means versions differ), the commit timestamp TIMESTAMP AS OF resolves
@@ -161,15 +177,6 @@ private[graft] object DurableSpill {
     * this global around a CTAS would silently resize any concurrently
     * created durable table). */
   @volatile var spillRowGroupBytes: Long = 128L << 20
-
-  /** Per-table overrides of the spill write layout, registered from
-    * TBLPROPERTIES at create/commit and persisted in the manifest:
-    * table key → row-group byte target / page row-count limit. The page
-    * row limit is what gives one row group MANY pages, the unit of the
-    * column-index (page-level) skipping tier below row groups. */
-  val spillRowGroupBytesFor = new scala.collection.concurrent.TrieMap[String, Long]
-  val spillPageRowsFor = new scala.collection.concurrent.TrieMap[String, Int]
-  val spillBloomColsFor = new scala.collection.concurrent.TrieMap[String, Seq[String]]
 
   /** LOCAL-MODE observability for the selective read path: per-table
     * tallies of row groups (decoded, skipped), keyed by the spill
@@ -334,9 +341,14 @@ private[graft] object DurableSpill {
     }
   }
 
+  /** The warehouse root owning a table key. A staging key
+    * (`staging!…`, a CTAS's hidden write target) has none: its rows
+    * reach disk once, when the commit publishes them under the real key. */
   private def rootOf(key: String): Option[String] = {
     val segs = key.split('!')
-    if (segs.length >= 2 && segs(0) == "cat") roots.get(segs(1)) else None
+    if (segs.length >= 2 && segs(0) == "cat")
+      roots.get(segs(1))
+    else None
   }
   private def safe(key: String): String =
     key.replaceAll("[^A-Za-z0-9_.-]", "_")
@@ -383,15 +395,16 @@ private[graft] object DurableSpill {
   /** DROP TABLE in a durable catalog removes the spill too — and the
     * local-mode tallies keyed by the spill dir name (ADVICE r14: a
     * long-lived JVM creating many uniquely-named tables otherwise grows
-    * the TrieMaps unboundedly), and the per-table write knobs. */
+    * the TrieMaps unboundedly). */
   def onDrop(key: String): Unit = {
     rootOf(key).foreach(root => deleteRecursively(tableDir(root, key)))
+    forgetTallies(key)
+  }
+
+  private def forgetTallies(key: String): Unit = {
     groupTallies.remove(safe(key))
     pageTallies.remove(safe(key))
     bloomTallies.remove(safe(key))
-    spillRowGroupBytesFor.remove(key)
-    spillPageRowsFor.remove(key)
-    spillBloomColsFor.remove(key)
   }
 
   /** RENAME in a durable catalog: full respill under the new key (the
@@ -400,15 +413,18 @@ private[graft] object DurableSpill {
   def onRename(from: String, to: String): Unit =
     rootOf(to).foreach { root =>
       val dir = tableDir(root, to)
-      spillRowGroupBytesFor.remove(from).foreach(spillRowGroupBytesFor.put(to, _))
-      spillPageRowsFor.remove(from).foreach(spillPageRowsFor.put(to, _))
-      spillBloomColsFor.remove(from).foreach(spillBloomColsFor.put(to, _))
-      MemTable.history.toSeq.collect { case ((k, _), snap) if k == to => snap }
-        .sortBy(_.version).foreach(writeVersion(dir, to, _))
+      val snaps = MemTable.history.toSeq.collect { case ((k, _), snap) if k == to => snap }
+      snaps.sortBy(_.version).foreach(writeVersion(dir, to, _))
+      // a restored snapshot reads its rows from the old directory's files,
+      // deleted below: re-point it at the respilled copy
+      snaps.filter(_.parts.isInstanceOf[LazyParts]).foreach { snap =>
+        val moved = restoreVersion(dir, to, snap.version)
+        MemTable.history.put((to, snap.version), moved)
+        if (MemTable.store.get(to).exists(_ eq snap)) MemTable.store.put(to, moved)
+      }
       MemTable.store.get(to).foreach(snap => writeManifest(dir, to, snap.version))
       rootOf(from).foreach(r => deleteRecursively(tableDir(r, from)))
-      groupTallies.remove(safe(from))
-      pageTallies.remove(safe(from))
+      forgetTallies(from)
     }
 
   private def writeManifest(dir: JPath, key: String, current: Long): Unit = {
@@ -417,20 +433,7 @@ private[graft] object DurableSpill {
     val declared = MemTable.declaredParts.toSeq.collect {
       case ((k, value), props) if k == key => value -> props
     }.toMap
-    val m = DurableManifest(key, current, versions,
-      GraftSparkCatalog.partCols.getOrElse(key, ""),
-      GraftSparkCatalog.deltaIdCols.getOrElse(key, ""), declared,
-      GraftSparkCatalog.identityCols.get(key)
-        .map { case (c, s, st, ax) => s"$c:$s:$st:$ax" },
-      GraftSparkCatalog.checkConstraints.getOrElse(key, Nil)
-        .map { case (n, sql) => Seq(n, sql) },
-      GraftSparkCatalog.generatedCols.getOrElse(key, Nil)
-        .map { case (c, sql) => Seq(c, sql) },
-      GraftSparkCatalog.sortCols.get(key),
-      GraftSparkCatalog.extendedPushdown.getOrElse(key, false),
-      spillRowGroupBytesFor.get(key),
-      spillPageRowsFor.get(key),
-      spillBloomColsFor.getOrElse(key, Nil))
+    val m = DurableManifest.of(key, current, versions, declared, TableMeta.of(key))
     val tmp = dir.resolve("_manifest.json.tmp")
     Files.write(tmp, org.json4s.jackson.Serialization.write(m)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -471,9 +474,10 @@ private[graft] object DurableSpill {
     val msgType = parquetType(snap.schema)
     // per-table layout knobs win over the process defaults (ADVICE r14:
     // no global mutation around a single table's CTAS)
-    val rgBytes = spillRowGroupBytesFor.getOrElse(key, spillRowGroupBytes)
-    val pageRows = spillPageRowsFor.get(key)
-    val bloomCols = spillBloomColsFor.getOrElse(key, Nil)
+    val layout = TableMeta.of(key).spill
+    val rgBytes = layout.rowGroupBytes.getOrElse(spillRowGroupBytes)
+    val pageRows = layout.pageRows
+    val bloomCols = layout.bloomCols
     val partsMeta = snap.parts.toSeq.sortBy(_._1).zipWithIndex.map {
       case ((pkey, rows), i) =>
         val fname = s"p$i.parquet"
@@ -1059,62 +1063,45 @@ private[graft] object DurableSpill {
         if (MemTable.store.contains(key)) return
         val m = org.json4s.jackson.Serialization.read[DurableManifest](
           new String(Files.readAllBytes(mf), java.nio.charset.StandardCharsets.UTF_8))
-        m.versions.foreach { v =>
-          val vdir = dir.resolve(s"v$v")
-          val meta = org.json4s.jackson.Serialization.read[DurableVersionMeta](
-            new String(Files.readAllBytes(vdir.resolve("meta.json")),
-              java.nio.charset.StandardCharsets.UTF_8))
-          val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-          // ADVICE r13: a pre-r13 spill has no `parts` list (its data is a
-          // single v<N>/rows.parquet) — json4s fills Nil and the table
-          // would silently restore EMPTY. Fail loudly instead: silent
-          // data loss is the one outcome a durability layer may never
-          // choose on behalf of the user.
-          if (meta.parts.isEmpty && Files.exists(vdir.resolve("rows.parquet")))
-            sys.error(
-              s"DurableSpill: '$key' v$v is a pre-r13 single-file spill " +
-                "(rows.parquet with no parts manifest); this build reads " +
-                "per-partition p<i>.parquet spills — recreate the table " +
-                "or migrate the spill directory")
-          val files = meta.parts.collect {
-            case Seq(pkey, fname, rows, bytes) =>
-              pkey -> PartFileInfo(vdir.resolve(fname).toAbsolutePath.toString,
-                rows.toLong, bytes.toLong)
-          }.toMap
-          MemTable.history.put((key, v),
-            MemTable.Snapshot(schema, new LazyParts(files, schema), v,
-              meta.tsMicros))
-        }
+        m.versions.foreach(v => MemTable.history.put((key, v), restoreVersion(dir, key, v)))
         m.declaredParts.foreach { case (value, props) =>
           MemTable.declaredParts.put((key, value), props)
         }
-        GraftSparkCatalog.partCols.put(key, m.partCol)
-        if (m.deltaIdCol.nonEmpty)
-          GraftSparkCatalog.deltaIdCols.put(key, m.deltaIdCol)
-        m.identityCol.map(_.split(':')).collect {
-          case Array(c, s, st, ax) =>
-            GraftSparkCatalog.identityCols.put(key,
-              (c, s.toLong, st.toLong, ax.toBoolean))
-        }
-        if (m.checkConstraints.nonEmpty)
-          GraftSparkCatalog.checkConstraints.put(key,
-            m.checkConstraints.collect { case Seq(n, sql) => (n, sql) })
-        if (m.generatedCols.nonEmpty)
-          GraftSparkCatalog.generatedCols.put(key,
-            m.generatedCols.collect { case Seq(c, sql) => (c, sql) })
-        m.sortedBy.foreach(GraftSparkCatalog.sortCols.put(key, _))
-        if (m.extendedPushdown)
-          GraftSparkCatalog.extendedPushdown.put(key, true)
-        m.spillRowGroupBytes.foreach(spillRowGroupBytesFor.put(key, _))
-        m.spillPageRows.foreach(spillPageRowsFor.put(key, _))
-        if (m.spillBloomCols.nonEmpty)
-          spillBloomColsFor.put(key, m.spillBloomCols)
+        TableMeta.put(key, m.meta)
         // current LAST: store presence is the "loaded" latch, and the
         // direct put (not publish) must not restamp ts or respill
         MemTable.history.get((key, m.current))
           .foreach(MemTable.store.put(key, _))
       }
     }
+  }
+
+  /** One spilled version as a restored snapshot: the schema and commit
+    * timestamp from its sidecar, and a [[LazyParts]] over its data files
+    * — metadata only, no data file is opened. */
+  private def restoreVersion(dir: JPath, key: String, v: Long): MemTable.Snapshot = {
+    val vdir = dir.resolve(s"v$v")
+    val meta = org.json4s.jackson.Serialization.read[DurableVersionMeta](
+      new String(Files.readAllBytes(vdir.resolve("meta.json")),
+        java.nio.charset.StandardCharsets.UTF_8))
+    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    // ADVICE r13: a pre-r13 spill has no `parts` list (its data is a
+    // single v<N>/rows.parquet) — json4s fills Nil and the table would
+    // silently restore EMPTY. Fail loudly instead: silent data loss is
+    // the one outcome a durability layer may never choose on behalf of
+    // the user.
+    if (meta.parts.isEmpty && Files.exists(vdir.resolve("rows.parquet")))
+      sys.error(
+        s"DurableSpill: '$key' v$v is a pre-r13 single-file spill " +
+          "(rows.parquet with no parts manifest); this build reads " +
+          "per-partition p<i>.parquet spills — recreate the table " +
+          "or migrate the spill directory")
+    val files = meta.parts.collect {
+      case Seq(pkey, fname, rows, bytes) =>
+        pkey -> PartFileInfo(vdir.resolve(fname).toAbsolutePath.toString,
+          rows.toLong, bytes.toLong)
+    }.toMap
+    MemTable.Snapshot(schema, new LazyParts(files, schema), v, meta.tsMicros)
   }
 
   /** Table names spilled under a durable catalog's namespace prefix —

@@ -92,13 +92,6 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
   private def key(ident: Identifier): String =
     (Seq("cat", catalogName) ++ ident.namespace().toSeq :+ ident.name())
       .mkString("!")
-  /** partition column registered at create time — process-wide alongside
-    * [[MemTable.store]], NOT instance state: Spark may instantiate the
-    * catalog more than once (new session, catalog re-resolution), and an
-    * instance-scoped map would reload existing tables with partCol "",
-    * silently losing partition pruning and KeyGroupedPartitioning for
-    * tables created by another instance. */
-  private def partCols = GraftSparkCatalog.partCols
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val prefix = (Seq("cat", catalogName) ++ namespace.toSeq).mkString("!") + "!"
@@ -114,8 +107,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     DurableSpill.ensureLoaded(k)
     MemTable.store.get(k) match {
       case Some(snap) =>
-        new MemTableImpl(snap.schema, k, partCols.getOrElse(k, ""),
-          GraftSparkCatalog.deltaIdCols.getOrElse(k, ""))
+        val meta = TableMeta.of(k)
+        new MemTableImpl(snap.schema, k, meta.partCol, meta.deltaIdCol)
       case None => throw new NoSuchTableException(ident)
     }
   }
@@ -147,7 +140,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         // routed here would mutate a phantom snapshot, not the table.
         // MemTablePinned omits SupportsWrite entirely, so Spark raises
         // its native "does not support ..." instead of silently writing.
-        new MemTablePinned(snap.schema, pinned, partCols.getOrElse(k, ""))
+        new MemTablePinned(snap.schema, pinned, TableMeta.of(k).partCol)
       case None =>
         throw new IllegalArgumentException(
           s"graft catalog: no snapshot version $v for ${ident.name()} " +
@@ -177,7 +170,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     val (v, snap) = candidates.maxBy(_._1)
     val pinned = s"$k!@v$v"
     MemTable.store.put(pinned, snap)
-    new MemTablePinned(snap.schema, pinned, partCols.getOrElse(k, ""))
+    new MemTablePinned(snap.schema, pinned, TableMeta.of(k).partCol)
   }
 
   /** TABLE CONSTRAINTS arrive only through the [[org.apache.spark.sql
@@ -193,21 +186,14 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     * refusal-over-wrong-answer posture as q295's generation expressions. */
   override def createTable(ident: Identifier,
       info: org.apache.spark.sql.connector.catalog.TableInfo): Table = {
-    val k = key(ident)
-    val checks = info.constraints().map {
+    val checks = info.constraints().toSeq.map {
       case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
         (c.name(), c.predicateSql())
       case other => throw new UnsupportedOperationException(
         s"graft catalog: only CHECK constraints are supported " +
           s"(got: ${other.toDDL})")
     }
-    val t = createTable(ident, info.columns(), info.partitions(), info.properties())
-    if (checks.nonEmpty) {
-      GraftSparkCatalog.checkConstraints.put(k, checks.toSeq)
-      DurableSpill.onMetaChange(k)
-      return loadTable(ident) // re-serve with constraints visible
-    }
-    t
+    create(ident, info.columns(), info.partitions(), info.properties(), checks)
   }
 
   /** IDENTITY COLUMNS arrive only through the Column[] variant (the
@@ -216,99 +202,50 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     * connector-side at the atomic commit ([[MemBatchWrite.commit]]) —
     * the only point where cross-task sequence allocation needs no
     * coordination. GENERATED ALWAYS AS (expr) columns ride the schema
-    * metadata into the plain variant below (r12: evaluated at commit via
-    * [[GeneratedColumnEval]] — the r11 refusal is closed). */
+    * metadata (r12: evaluated at commit via [[GeneratedColumnEval]] —
+    * the r11 refusal is closed). */
   override def createTable(ident: Identifier,
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
-      partitions: Array[Transform], properties: util.Map[String, String]): Table = {
-    val k = key(ident)
-    columns.filter(_.identityColumnSpec() != null) match {
-      case Array() => GraftSparkCatalog.identityCols.remove(k)
+      partitions: Array[Transform], properties: util.Map[String, String]): Table =
+    create(ident, columns, partitions, properties, Nil)
+
+  override def createTable(ident: Identifier, schema: StructType,
+      partitions: Array[Transform], properties: util.Map[String, String]): Table =
+    create(ident, schema, partitions, properties, None, Nil)
+
+  private def create(ident: Identifier,
+      columns: Array[org.apache.spark.sql.connector.catalog.Column],
+      partitions: Array[Transform], properties: util.Map[String, String],
+      checks: Seq[(String, String)]): Table = {
+    val identity = columns.filter(_.identityColumnSpec() != null) match {
+      case Array() => None
       case Array(c) =>
         val spec = c.identityColumnSpec()
-        val pc = partitions.headOption
-          .map(_.references().head.fieldNames().head).getOrElse("")
-        require(c.name() != pc,
-          "graft catalog: the identity column cannot be the partition column")
-        GraftSparkCatalog.identityCols.put(k,
-          (c.name(), spec.getStart, spec.getStep, spec.isAllowExplicitInsert))
+        Some(IdentitySpec(c.name(), spec.getStart, spec.getStep,
+          spec.isAllowExplicitInsert))
       case more => throw new UnsupportedOperationException(
         s"graft catalog: at most one identity column (got ${more.length})")
     }
-    createTable(ident, GraftSparkCatalog.columnsToSchema(columns),
-      partitions, properties)
+    create(ident, GraftSparkCatalog.columnsToSchema(columns), partitions,
+      properties, identity, checks)
   }
 
-  override def createTable(ident: Identifier, schema: StructType,
-      partitions: Array[Transform], properties: util.Map[String, String]): Table = {
+  /** Every CREATE lands here: one parse ([[TableMeta.parse]]) validates
+    * the whole definition BEFORE anything is registered, then the record
+    * and the empty v0 snapshot publish together. */
+  private def create(ident: Identifier, schema: StructType,
+      partitions: Array[Transform], properties: util.Map[String, String],
+      identity: Option[IdentitySpec], checks: Seq[(String, String)]): Table = {
     val k = key(ident)
     DurableSpill.ensureLoaded(k)
     if (MemTable.store.contains(k)) throw new TableAlreadyExistsException(ident)
-    val pc = partitions.headOption
-      .map(_.references().head.fieldNames().head).getOrElse("")
-    // GENERATED ALWAYS AS (expr): the analyzer validated the expression
-    // (deterministic, no subqueries, non-generated references only) and
-    // left its SQL in the column metadata; capture it and compile NOW —
-    // a CREATE with an expression this engine cannot evaluate (type
-    // mismatch, unsupported function) must fail at CREATE, not at the
-    // first insert. Values are synthesized at the atomic commit
-    // (MemTable.fillGenerated); explicit arrivals are validated there.
-    import org.apache.spark.sql.catalyst.util.GeneratedColumn
-    val gens = schema.fields.toSeq.flatMap(f =>
-      GeneratedColumn.getGenerationExpression(f).map(sql => (f.name, sql)))
-    if (gens.nonEmpty) {
-      gens.foreach { case (c, sql) =>
-        require(c != pc,
-          "graft catalog: a generated column cannot be the partition column")
-        GeneratedColumnEval.compile(schema, sql,
-          schema(schema.fieldIndex(c)).dataType, c)
-      }
-      GraftSparkCatalog.generatedCols.put(k, gens)
-    } else GraftSparkCatalog.generatedCols.remove(k)
-    partCols.put(k, pc)
-    // row-identity opt-in: TBLPROPERTIES('deltaIdCol'='…') switches the
-    // table's row-level operations to the delta (merge-on-read) path.
-    // Row-ID attributes must be NON-NULL (Spark's WriteDelta analyzer
-    // contract), so the declared column's field is stored non-nullable —
-    // which also makes INSERTs enforce it (AssertNotNull in the write).
-    val stored = Option(properties.get("deltaIdCol")).filter(_.nonEmpty) match {
-      case Some(c) =>
-        require(schema.fieldNames.contains(c),
-          s"graft catalog: deltaIdCol '$c' not in schema")
-        GraftSparkCatalog.deltaIdCols.put(k, c)
-        StructType(schema.fields.map(f =>
-          if (f.name == c) f.copy(nullable = false) else f))
-      case None => schema
+    val meta = TableMeta.parse(schema, partitions, properties, identity, checks)
+    val stored = meta.stored(schema)
+    MemTable.store.synchronized {
+      TableMeta.put(k, meta)
+      MemTable.publish(k, MemTable.Snapshot(stored, Map.empty, 0L))
     }
-    // sorted data layout opt-in: every commit keeps partitions ordered by
-    // this column (MemTable.publish), and scans report the ordering
-    Option(properties.get("sortedBy")).filter(_.nonEmpty) match {
-      case Some(c) =>
-        require(schema.fieldNames.contains(c),
-          s"graft catalog: sortedBy '$c' not in schema")
-        GraftSparkCatalog.sortCols.put(k, c)
-      case None => GraftSparkCatalog.sortCols.remove(k)
-    }
-    if (Option(properties.get("extendedPushdown")).exists(_.equalsIgnoreCase("true")))
-      GraftSparkCatalog.extendedPushdown.put(k, true)
-    else GraftSparkCatalog.extendedPushdown.remove(k)
-    // per-table spill write layout (ADVICE r14: a property, not a global)
-    val spillLayout = GraftSparkCatalog.parseSpillLayout(properties)
-    spillLayout._3.foreach(c => require(schema.fieldNames.contains(c),
-      s"graft catalog: spillBloomFilterColumns '$c' not in schema"))
-    GraftSparkCatalog.registerSpillLayout(k, spillLayout)
-    Option(properties.get("writeDistribution")) match {
-      case Some("clustered") =>
-        require(pc.nonEmpty,
-          "graft catalog: writeDistribution=clustered requires PARTITIONED BY")
-        GraftSparkCatalog.writeDistributions.put(k, true)
-      case Some(other) => throw new IllegalArgumentException(
-        s"graft catalog: unsupported writeDistribution '$other' (only: clustered)")
-      case None => GraftSparkCatalog.writeDistributions.remove(k)
-    }
-    MemTable.publish(k, MemTable.Snapshot(stored, Map.empty, 0L))
-    new MemTableImpl(stored, k, pc,
-      GraftSparkCatalog.deltaIdCols.getOrElse(k, ""))
+    new MemTableImpl(stored, k, meta.partCol, meta.deltaIdCol)
   }
 
   /** SQL `ALTER TABLE … ADD COLUMNS` — catalog-level SCHEMA EVOLUTION
@@ -350,21 +287,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           require(idx >= 0, s"graft catalog: no column $from in ${ident.name()}")
           require(!schema.fieldNames.contains(rn.newName()),
             s"graft catalog: column ${rn.newName()} already exists")
-          require(from != partCols.getOrElse(k, ""),
-            "graft catalog: cannot rename the partition column")
-          require(!GraftSparkCatalog.sortCols.get(k).contains(from) &&
-            !GraftSparkCatalog.deltaIdCols.get(k).contains(from) &&
-            !GraftSparkCatalog.identityCols.get(k).exists(_._1 == from) &&
-            !GraftSparkCatalog.generatedCols.getOrElse(k, Nil).exists(_._1 == from),
-            s"graft catalog: column $from anchors a declared table contract " +
-              "(sortedBy/deltaIdCol/identity/generated) — drop the contract first")
-          require(!GraftSparkCatalog.generatedCols.getOrElse(k, Nil)
-            .exists(g => GraftSparkCatalog.exprReferences(g._2, from)),
-            s"graft catalog: column $from is referenced by a generation expression")
-          require(!GraftSparkCatalog.checkConstraints.getOrElse(k, Nil)
-            .exists(c => GraftSparkCatalog.exprReferences(c._2, from)),
-            s"graft catalog: column $from is referenced by a CHECK constraint " +
-              "— drop the constraint first")
+          TableMeta.of(k).requireUnanchored(from, "rename")
           schema = StructType(schema.fields.updated(idx,
             schema.fields(idx).copy(name = rn.newName())))
           schemaChanged = true
@@ -380,21 +303,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
               throw new IllegalArgumentException(
                 s"graft catalog: no column $dn in ${ident.name()}")
           } else {
-            require(dn != partCols.getOrElse(k, ""),
-              "graft catalog: cannot drop the partition column")
-            require(!GraftSparkCatalog.sortCols.get(k).contains(dn) &&
-              !GraftSparkCatalog.deltaIdCols.get(k).contains(dn) &&
-              !GraftSparkCatalog.identityCols.get(k).exists(_._1 == dn) &&
-              !GraftSparkCatalog.generatedCols.getOrElse(k, Nil).exists(_._1 == dn),
-              s"graft catalog: column $dn anchors a declared table contract " +
-                "(sortedBy/deltaIdCol/identity/generated) — drop the contract first")
-            require(!GraftSparkCatalog.generatedCols.getOrElse(k, Nil)
-              .exists(g => GraftSparkCatalog.exprReferences(g._2, dn)),
-              s"graft catalog: column $dn is referenced by a generation expression")
-            require(!GraftSparkCatalog.checkConstraints.getOrElse(k, Nil)
-              .exists(c => GraftSparkCatalog.exprReferences(c._2, dn)),
-              s"graft catalog: column $dn is referenced by a CHECK constraint " +
-                "— drop the constraint first")
+            TableMeta.of(k).requireUnanchored(dn, "drop")
             schema = StructType(schema.fields.patch(idx, Nil, 1))
             parts = parts.map { case (p, rs) =>
               p -> rs.map(r => r.patch(idx, Nil, 1))
@@ -418,11 +327,11 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         case ac: TableChange.AddConstraint =>
           ac.constraint() match {
             case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
-              val curCs = GraftSparkCatalog.checkConstraints.getOrElse(k, Nil)
-              if (curCs.exists(_._1.equalsIgnoreCase(c.name())))
+              if (TableMeta.of(k).checks.exists(_._1.equalsIgnoreCase(c.name())))
                 throw new IllegalArgumentException(
                   s"graft catalog: constraint ${c.name()} already exists on ${ident.name()}")
-              GraftSparkCatalog.checkConstraints.put(k, curCs :+ ((c.name(), c.predicateSql())))
+              TableMeta.update(k)(m =>
+                m.copy(checks = m.checks :+ ((c.name(), c.predicateSql()))))
               metaChanged = true
             case other => throw new UnsupportedOperationException(
               s"graft catalog: only CHECK constraints are supported (got: ${other.toDDL})")
@@ -451,12 +360,12 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           schema = StructType(schema.fields.updated(idx, f.copy(metadata = mb.build())))
           schemaChanged = true
         case dc: TableChange.DropConstraint =>
-          val curCs = GraftSparkCatalog.checkConstraints.getOrElse(k, Nil)
-          if (!curCs.exists(_._1.equalsIgnoreCase(dc.name())) && !dc.ifExists())
+          if (!TableMeta.of(k).checks.exists(_._1.equalsIgnoreCase(dc.name())) &&
+              !dc.ifExists())
             throw new IllegalArgumentException(
               s"graft catalog: no constraint ${dc.name()} on ${ident.name()}")
-          GraftSparkCatalog.checkConstraints.put(k,
-            curCs.filterNot(_._1.equalsIgnoreCase(dc.name())))
+          TableMeta.update(k)(m =>
+            m.copy(checks = m.checks.filterNot(_._1.equalsIgnoreCase(dc.name()))))
           metaChanged = true
         case other =>
           throw new UnsupportedOperationException(
@@ -480,26 +389,16 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     * same identifier would serve the dropped incarnation's snapshots via
     * VERSION AS OF), declared partitions (else SHOW PARTITIONS reports
     * ghosts and ADD PARTITION of a previously declared value refuses),
-    * and pinned time-travel republications (`key!@v*`). */
+    * and pinned time-travel republications (`key!@v*`): the same forget
+    * as [[MemTable.evict]], plus the table's warehouse spill. */
   override def dropTable(ident: Identifier): Boolean = {
     val k = key(ident)
     DurableSpill.ensureLoaded(k)
     MemTable.store.synchronized {
-      partCols.remove(k)
-      GraftSparkCatalog.deltaIdCols.remove(k)
-      GraftSparkCatalog.identityCols.remove(k)
-      GraftSparkCatalog.checkConstraints.remove(k)
-      GraftSparkCatalog.generatedCols.remove(k)
-      GraftSparkCatalog.sortCols.remove(k)
-      GraftSparkCatalog.extendedPushdown.remove(k)
-      GraftSparkCatalog.writeDistributions.remove(k)
-      MemTable.history.keys.filter(_._1 == k).toSeq.foreach(MemTable.history.remove)
-      MemTable.declaredParts.keys.filter(_._1 == k).toSeq
-        .foreach(MemTable.declaredParts.remove)
-      MemTable.store.keys.filter(_.startsWith(s"$k!@v")).toSeq
-        .foreach(MemTable.store.remove)
+      val existed = MemTable.store.contains(k)
+      MemTable.evict(k)
       DurableSpill.onDrop(k)
-      MemTable.store.remove(k).isDefined
+      existed
     }
   }
 
@@ -514,21 +413,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
       if (!MemTable.store.contains(from)) throw new NoSuchTableException(oldIdent)
       if (MemTable.store.contains(to)) throw new TableAlreadyExistsException(newIdent)
       MemTable.store.put(to, MemTable.store.remove(from).get)
-      partCols.remove(from).foreach(partCols.put(to, _))
-      GraftSparkCatalog.deltaIdCols.remove(from)
-        .foreach(GraftSparkCatalog.deltaIdCols.put(to, _))
-      GraftSparkCatalog.identityCols.remove(from)
-        .foreach(GraftSparkCatalog.identityCols.put(to, _))
-      GraftSparkCatalog.checkConstraints.remove(from)
-        .foreach(GraftSparkCatalog.checkConstraints.put(to, _))
-      GraftSparkCatalog.generatedCols.remove(from)
-        .foreach(GraftSparkCatalog.generatedCols.put(to, _))
-      GraftSparkCatalog.sortCols.remove(from)
-        .foreach(GraftSparkCatalog.sortCols.put(to, _))
-      GraftSparkCatalog.extendedPushdown.remove(from)
-        .foreach(GraftSparkCatalog.extendedPushdown.put(to, _))
-      GraftSparkCatalog.writeDistributions.remove(from)
-        .foreach(GraftSparkCatalog.writeDistributions.put(to, _))
+      TableMeta.move(from, to)
       MemTable.history.keys.filter(_._1 == from).toSeq.foreach { case (_, v) =>
         MemTable.history.remove((from, v)).foreach(s => MemTable.history.put((to, v), s))
       }
@@ -559,34 +444,17 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
 
   /** DataFrame `writeTo(...).create()` routes through here too (Spark
     * prefers the atomic CTAS path once the catalog stages), so the staged
-    * create must honor the same properties as [[createTable]] — the
-    * deltaIdCol opt-in (registered at COMMIT, never by a stage that may
-    * abort) with its non-nullable row-id field. */
+    * create parses its definition with the same [[TableMeta.parse]] as
+    * [[createTable]]. The record is registered under the STAGING key, so
+    * the staged write already honors it (a clustered write distribution,
+    * the sort order), and reaches the real key only at COMMIT — never by
+    * a stage that may abort. */
   private def stage(k: String, schema: StructType, partitions: Array[Transform],
       properties: util.Map[String, String]): org.apache.spark.sql.connector.catalog.StagedTable = {
-    val pc = partitions.headOption
-      .map(_.references().head.fieldNames().head).getOrElse("")
-    val deltaIdCol = Option(properties.get("deltaIdCol")).filter(_.nonEmpty)
-    deltaIdCol.foreach(c => require(schema.fieldNames.contains(c),
-      s"graft catalog: deltaIdCol '$c' not in schema"))
-    val stored = deltaIdCol match {
-      case Some(c) => StructType(schema.fields.map(f =>
-        if (f.name == c) f.copy(nullable = false) else f))
-      case None => schema
-    }
-    val sortedBy = Option(properties.get("sortedBy")).filter(_.nonEmpty)
-    sortedBy.foreach(c => require(schema.fieldNames.contains(c),
-      s"graft catalog: sortedBy '$c' not in schema"))
-    // property PARITY with the non-staged path (r14): a CTAS-declared
-    // extendedPushdown was silently dropped here — the created table
-    // then rejected the very filters the user opted into pushing
-    val extPush = Option(properties.get("extendedPushdown"))
-      .exists(_.equalsIgnoreCase("true"))
-    val spillLayout = GraftSparkCatalog.parseSpillLayout(properties)
-    spillLayout._3.foreach(c => require(schema.fieldNames.contains(c),
-      s"graft catalog: spillBloomFilterColumns '$c' not in schema"))
-    new MemStagedTable(k, s"$k!staging!${System.nanoTime()}", stored, pc,
-      deltaIdCol.getOrElse(""), sortedBy.getOrElse(""), extPush, spillLayout)
+    val meta = TableMeta.parse(schema, partitions, properties)
+    val stagingKey = MemStagedTable.keyFor(k)
+    TableMeta.put(stagingKey, meta)
+    new MemStagedTable(k, stagingKey, meta.stored(schema), meta.partCol)
   }
 
   override def stageCreate(ident: Identifier, schema: StructType,
@@ -631,8 +499,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
   private def impliedNamespaces(): Set[Seq[String]] = {
     val prefix = s"cat!$catalogName!"
     MemTable.store.keys.collect {
-      case k if k.startsWith(prefix) && !k.contains("!@v") &&
-          !k.contains("!staging!") =>
+      case k if k.startsWith(prefix) && !k.contains("!@v") =>
         k.stripPrefix(prefix).split('!').toSeq.dropRight(1)
     }.filter(_.nonEmpty).toSet
   }
@@ -714,13 +581,6 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object GraftSparkCatalog {
-  /** table key → partition column, shared by every catalog instance in
-    * the process (same lifetime as the snapshot store it annotates). */
-  val partCols = new scala.collection.concurrent.TrieMap[String, String]
-
-  /** table key → declared row-identity column (delta row-level ops). */
-  val deltaIdCols = new scala.collection.concurrent.TrieMap[String, String]
-
   /** Column[] → StructType preserving what the analyzer reads back:
     * comment and the CURRENT_DEFAULT/EXISTS_DEFAULT metadata keys
     * ResolveDefaultColumns resolves defaults from (the conversion
@@ -749,113 +609,7 @@ object GraftSparkCatalog {
         c.name(), c.dataType(), c.nullable(), mb.build())
     })
 
-  /** table key → (identity column, start, step, allowExplicitInsert) —
-    * connector-assigned sequence values, filled at commit for NULL
-    * arrivals; GENERATED ALWAYS (allowExplicitInsert = false) REJECTS
-    * non-null arrivals at commit, since Spark's analyzer does not
-    * enforce it for V2 connectors. */
-  val identityCols =
-    new scala.collection.concurrent.TrieMap[String, (String, Long, Long, Boolean)]
-
-  /** table key → enforced CHECK constraints (name, predicate SQL) in
-    * declaration order — read back by [[MemTableImpl.constraints]], which
-    * is where Spark's analyzer finds them when planning write guards. */
-  val checkConstraints =
-    new scala.collection.concurrent.TrieMap[String, Seq[(String, String)]]
-
-  /** table key → `GENERATED ALWAYS AS (expr)` columns (name, expression
-    * SQL) in schema order — synthesized/validated at the atomic commit
-    * ([[MemTable.fillGenerated]] via [[GeneratedColumnEval]]). */
-  val generatedCols =
-    new scala.collection.concurrent.TrieMap[String, Seq[(String, String)]]
-
-  /** table key → extended filter pushdown opt-in
-    * (TBLPROPERTIES('extendedPushdown'='true')): the scan accepts and
-    * enforces ALL compilable v1 filters source-side (the JDBC posture),
-    * which is also the precondition for DSv2 join pushdown (equi-joins
-    * carry inferred IsNotNull filters the rule requires fully pushed). */
-  val extendedPushdown = new scala.collection.concurrent.TrieMap[String, Boolean]
-
-  /** table key → clustered-write opt-in
-    * (TBLPROPERTIES('writeDistribution'='clustered')): the table's Write
-    * declares RequiresDistributionAndOrdering, so Spark repartitions by
-    * the partition column (and sorts within tasks) BEFORE rows reach the
-    * writers — each task then writes exactly one partition group, the
-    * Iceberg write-distribution-mode contract that prevents the
-    * every-task-writes-every-partition small-file explosion. */
-  val writeDistributions = new scala.collection.concurrent.TrieMap[String, Boolean]
-
-  /** table key → declared sort column (TBLPROPERTIES('sortedBy'='…')):
-    * [[MemTable.publish]] keeps every partition's rows ordered by it on
-    * every commit path, and the scan reports the resulting (partition,
-    * sort) ordering through SupportsReportOrdering. */
-  val sortCols = new scala.collection.concurrent.TrieMap[String, String]
-
   /** (catalog, namespace path) → declared namespace properties. */
   val namespaces =
     new scala.collection.concurrent.TrieMap[(String, Seq[String]), Map[String, String]]
-
-  /** TBLPROPERTIES('spillRowGroupBytes'/'spillPageRows'/
-    * 'spillBloomFilterColumns') — the durable spill's per-table write
-    * layout (row-group byte target, page row-count limit,
-    * bloom-filtered columns). Validated at declaration: a malformed
-    * CREATE must fail at CREATE, not silently write the default
-    * layout. */
-  private[sources] def parseSpillLayout(
-      properties: java.util.Map[String, String])
-      : (Option[Long], Option[Int], Seq[String]) = {
-    def pos(name: String): Option[Long] =
-      Option(properties.get(name)).filter(_.nonEmpty).map { s =>
-        val v = try s.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft catalog: $name must be a positive integer, got '$s'")
-        }
-        require(v > 0, s"graft catalog: $name must be positive, got $v")
-        v
-      }
-    val bloom = Option(properties.get("spillBloomFilterColumns"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    (pos("spillRowGroupBytes"), pos("spillPageRows").map(_.toInt), bloom)
-  }
-
-  /** Registers (or clears) a table's declared spill write layout — the
-    * shared tail of the create and staged-commit paths, so both stay in
-    * property parity (the r14 extendedPushdown lesson). The bloom
-    * columns are validated against the schema by the callers (both have
-    * it in hand). */
-  private[sources] def registerSpillLayout(
-      k: String, layout: (Option[Long], Option[Int], Seq[String])): Unit = {
-    layout._1 match {
-      case Some(v) => DurableSpill.spillRowGroupBytesFor.put(k, v)
-      case None    => DurableSpill.spillRowGroupBytesFor.remove(k)
-    }
-    layout._2 match {
-      case Some(v) => DurableSpill.spillPageRowsFor.put(k, v)
-      case None    => DurableSpill.spillPageRowsFor.remove(k)
-    }
-    if (layout._3.nonEmpty) DurableSpill.spillBloomColsFor.put(k, layout._3)
-    else DurableSpill.spillBloomColsFor.remove(k)
-  }
-
-  /** Does a stored expression SQL (generation expression, CHECK
-    * predicate) reference column `col`? Parsed, not substring-matched —
-    * `okey` in an expression must not pin down a column named `k` — and
-    * CASE-INSENSITIVE, matching Spark's default resolver (ADVICE r13:
-    * `CHECK (Cents >= 0)` must block a rename of `cents`). An
-    * unparseable expression falls back to the conservative substring
-    * check (refusing a rename is recoverable; silently detaching a
-    * contract is not). */
-  private[sources] def exprReferences(sql: String, col: String): Boolean =
-    try {
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseExpression(sql).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.nameParts.last
-        }.exists(_.equalsIgnoreCase(col))
-    } catch {
-      case scala.util.control.NonFatal(_) =>
-        sql.toLowerCase(java.util.Locale.ROOT)
-          .contains(col.toLowerCase(java.util.Locale.ROOT))
-    }
 }

@@ -149,8 +149,9 @@ object MemTable {
     * table, so TIMESTAMP AS OF resolution is unambiguous even for
     * same-millisecond commits) and spills durably when the owning
     * catalog declared a warehouse ([[DurableSpill]]). Callers hold
-    * `store.synchronized`. */
-  def publish(runId: String, snap: Snapshot): Unit = {
+    * `store.synchronized`. `presorted` skips the sort for parts already
+    * ordered by this table's `sortedBy` (a staged commit's). */
+  def publish(runId: String, snap: Snapshot, presorted: Boolean = false): Unit = {
     val prevTs = store.get(runId).map(_.tsMicros).getOrElse(0L)
     // SORTED DATA LAYOUT: a table created with TBLPROPERTIES('sortedBy'=…)
     // keeps every partition's rows ordered by that column across ALL
@@ -158,7 +159,7 @@ object MemTable {
     // scan's SupportsReportOrdering report truthful, and the harness
     // analog of sort-on-write data files (Iceberg SORTED BY / Hive
     // SORTED BY buckets). Cost rides the commit, never the read.
-    val sorted = GraftSparkCatalog.sortCols.get(runId)
+    val sorted = TableMeta.of(runId).sortedBy.filter(_ => !presorted)
       .flatMap(c => Option(snap.schema.fieldNames.indexOf(c)).filter(_ >= 0))
       .map { idx =>
         // decorate-sort-undecorate: one UTF8String per value per sort,
@@ -186,7 +187,7 @@ object MemTable {
     DurableSpill.onPublish(runId, stamped, dropped)
   }
 
-  /** IDENTITY value assignment ([[GraftSparkCatalog.identityCols]]) at
+  /** IDENTITY value assignment ([[TableMeta.identity]]) at
     * the single commit point — the only place cross-task sequence
     * allocation needs no coordination (the Delta identity-high-watermark
     * discipline at harness granularity): NULL arrivals in the identity
@@ -197,9 +198,9 @@ object MemTable {
   def fillIdentity(runId: String, schema: StructType,
       base: Map[String, Vector[Array[Any]]],
       incoming: Map[String, Vector[Array[Any]]]): Map[String, Vector[Array[Any]]] =
-    GraftSparkCatalog.identityCols.get(runId) match {
+    TableMeta.of(runId).identity match {
       case None => incoming
-      case Some((colName, start, step, allowExplicit)) =>
+      case Some(IdentitySpec(colName, start, step, allowExplicit)) =>
         val idx = schema.fieldNames.indexOf(colName)
         if (idx < 0) incoming
         else {
@@ -226,7 +227,7 @@ object MemTable {
     }
 
   /** `GENERATED ALWAYS AS (expr)` synthesis at the single commit point
-    * ([[GraftSparkCatalog.generatedCols]] via [[GeneratedColumnEval]]) —
+    * ([[TableMeta.generated]] via [[GeneratedColumnEval]]) —
     * the Delta generated-columns contract: a NULL arrival in a generated
     * column takes the expression's value computed FROM ITS OWN ROW; an
     * explicit arrival is VALIDATED against that value and a mismatch
@@ -235,9 +236,9 @@ object MemTable {
     * `store.synchronized`. */
   def fillGenerated(runId: String, schema: StructType,
       incoming: Map[String, Vector[Array[Any]]]): Map[String, Vector[Array[Any]]] =
-    GraftSparkCatalog.generatedCols.get(runId) match {
-      case None => incoming
-      case Some(gens) =>
+    TableMeta.of(runId).generated match {
+      case Nil => incoming
+      case gens =>
         val compiled = gens.flatMap { case (c, sql) =>
           val idx = schema.fieldNames.indexOf(c)
           if (idx < 0) None
@@ -274,13 +275,8 @@ object MemTable {
     store.keys.filter(_.startsWith(s"$runId!@v")).toSeq.foreach(store.remove)
     history.keys.filter(_._1 == runId).toSeq.foreach(history.remove)
     declaredParts.keys.filter(_._1 == runId).toSeq.foreach(declaredParts.remove)
-    GraftSparkCatalog.partCols.remove(runId)
-    GraftSparkCatalog.deltaIdCols.remove(runId)
-    GraftSparkCatalog.identityCols.remove(runId)
-    GraftSparkCatalog.checkConstraints.remove(runId)
-    GraftSparkCatalog.generatedCols.remove(runId)
-    GraftSparkCatalog.sortCols.remove(runId)
-    GraftSparkCatalog.extendedPushdown.remove(runId)
+    lastCommitShape.remove(runId)
+    TableMeta.forget(runId)
   }
 
   /** Optimistic-concurrency rejection: the writer's base snapshot is no
@@ -513,22 +509,17 @@ private[sources] class MemTableImpl(schema: StructType, runId: String, partCol: 
     * opted into — the introspection a user reads before relying on them. */
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
-    GraftSparkCatalog.sortCols.get(runId).foreach(m.put("sortedBy", _))
-    if (GraftSparkCatalog.extendedPushdown.getOrElse(runId, false))
-      m.put("extendedPushdown", "true")
-    if (GraftSparkCatalog.writeDistributions.getOrElse(runId, false))
-      m.put("writeDistribution", "clustered")
-    if (deltaIdCol.nonEmpty) m.put("deltaIdCol", deltaIdCol)
+    TableMeta.of(runId).properties.foreach { case (k, v) => m.put(k, v) }
     m
   }
 
-  /** Enforced CHECK constraints ([[GraftSparkCatalog.checkConstraints]]):
+  /** Enforced CHECK constraints ([[TableMeta.checks]]):
     * Spark's analyzer reads these back on every write plan and compiles a
     * CheckInvariant guard from the predicate SQL — a violating row fails
     * the write job in the tasks, before any commit reaches this table. */
   override def constraints()
       : Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    GraftSparkCatalog.checkConstraints.getOrElse(runId, Nil).map { case (n, sql) =>
+    TableMeta.of(runId).checks.map { case (n, sql) =>
       org.apache.spark.sql.connector.catalog.constraints.Constraint
         .check(n).predicateSql(sql).enforced(true)
         .build(): org.apache.spark.sql.connector.catalog.constraints.Constraint
@@ -744,11 +735,8 @@ private[sources] class MemTableImpl(schema: StructType, runId: String, partCol: 
           // write-side custom metric (declared here, reported per task by
           // the DataWriter): rows committed through this write
           override def supportedCustomMetrics()
-              : Array[org.apache.spark.sql.connector.metric.CustomMetric] = Array(
-            new org.apache.spark.sql.connector.metric.CustomSumMetric {
-              override def name(): String = "graft_rows_written"
-              override def description(): String = "rows buffered for the atomic commit"
-            })
+              : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+            Array(new RowsWrittenMetric)
           override def toBatch: BatchWrite =
             new MemBatchWrite(runId, writeSchema, pc, expected, pk, truncated,
               overwriteFns, dynamicOverwrite)
@@ -766,8 +754,8 @@ private[sources] class MemTableImpl(schema: StructType, runId: String, partCol: 
         // distribution-mode contract that turns the every-task-writes-
         // every-partition small-file explosion into one file per
         // partition per commit (q308 audits it from the commit messages).
-        if (GraftSparkCatalog.writeDistributions.getOrElse(runId, false) &&
-            pc.nonEmpty)
+        val meta = TableMeta.of(runId)
+        if (meta.clustered && pc.nonEmpty)
           new BaseWrite
               with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
             override def requiredDistribution()
@@ -775,8 +763,7 @@ private[sources] class MemTableImpl(schema: StructType, runId: String, partCol: 
               org.apache.spark.sql.connector.distributions.Distributions
                 .clustered(Array(Expressions.identity(pc)))
             override def requiredOrdering(): Array[V2SortOrder] = {
-              val sortCol = GraftSparkCatalog.sortCols.get(runId)
-                .filter(writeSchema.fieldNames.contains)
+              val sortCol = meta.sortedBy.filter(writeSchema.fieldNames.contains)
               (Array(Expressions.sort(Expressions.identity(pc),
                 SortDirection.ASCENDING)) ++
                 sortCol.map(c => Expressions.sort(Expressions.identity(c),
@@ -1724,8 +1711,7 @@ private[sources] class MemScanBuilder(runId: String, partCol: String,
   private def compileV1Top(f: Filter): Option[Array[Any] => Boolean] =
     compileV1(f).map(g => (row: Array[Any]) => g(row).contains(true))
 
-  private def extendedPushdown: Boolean =
-    GraftSparkCatalog.extendedPushdown.getOrElse(runId, false)
+  private def extendedPushdown: Boolean = TableMeta.of(runId).extendedPushdown
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (partAccepted, rest) = filters.partition {
@@ -1968,7 +1954,7 @@ private[sources] class MemScan(snap: MemTable.Snapshot, keep0: Option[Set[String
       // a declared sortedBy column extends the trivial per-split ordering
       // (one partition value per split) into (partCol, sortCol) — enough
       // for a sort-merge join on exactly those keys to drop BOTH sorts
-      val sorted = GraftSparkCatalog.sortCols.get(runId)
+      val sorted = TableMeta.of(runId).sortedBy
         .filter(readSchema().fieldNames.contains)
         .map(c => Expressions.sort(Expressions.identity(c),
           SortDirection.ASCENDING))
@@ -1987,15 +1973,8 @@ private[sources] class MemScan(snap: MemTable.Snapshot, keep0: Option[Set[String
     * survived pruning — the number an operator watches to confirm
     * partition pruning engaged at 100 TB (q304 hash-audits both). */
   override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] = Array(
-    new org.apache.spark.sql.connector.metric.CustomSumMetric {
-      override def name(): String = "graft_rows_served"
-      override def description(): String = "rows served by the scan (post-pushdown)"
-    },
-    new org.apache.spark.sql.connector.metric.CustomSumMetric {
-      override def name(): String = "graft_planned_partitions"
-      override def description(): String = "partition groups planned after pruning"
-    })
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new RowsServedMetric, new PlannedPartitionsMetric)
 
   override def reportDriverMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = Array(
@@ -2292,6 +2271,26 @@ private[sources] class MemScan(snap: MemTable.Snapshot, keep0: Option[Set[String
             .mkString("{", ",", "}") }.mkString("[", ",", "]")) + ")"
 }
 
+/** The connector's custom SQL metrics, top-level with a 0-arg
+  * constructor: Spark's SQLAppStatusListener re-creates each metric
+  * class by reflection to aggregate the task values, and an anonymous
+  * class cannot be re-created (the execution would lose the metric). */
+final class RowsWrittenMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "graft_rows_written"
+  override def description(): String = "rows buffered for the atomic commit"
+}
+final class RowsServedMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "graft_rows_served"
+  override def description(): String = "rows served by the scan (post-pushdown)"
+}
+final class PlannedPartitionsMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "graft_planned_partitions"
+  override def description(): String = "partition groups planned after pruning"
+}
+
 /** A STAGED table (atomic CTAS / RTAS / CREATE OR REPLACE through
   * [[org.apache.spark.sql.connector.catalog.StagingTableCatalog]]): the
   * CTAS write lands on a hidden STAGING key — invisible to every reader
@@ -2304,9 +2303,7 @@ private[sources] class MemScan(snap: MemTable.Snapshot, keep0: Option[Set[String
   * version still serves the old rows — the Delta REPLACE semantics,
   * composing with q281/q289 time travel. */
 private[sources] class MemStagedTable(realKey: String, stagingKey: String,
-    schema0: StructType, pc: String, deltaIdCol: String = "",
-    sortedBy: String = "", extendedPushdown: Boolean = false,
-    spillLayout: (Option[Long], Option[Int], Seq[String]) = (None, None, Nil))
+    schema0: StructType, pc: String)
     extends org.apache.spark.sql.connector.catalog.StagedTable
     with SupportsWrite {
   private val delegate = new MemTableImpl(schema0, stagingKey, pc)
@@ -2322,46 +2319,36 @@ private[sources] class MemStagedTable(realKey: String, stagingKey: String,
       .getOrElse(MemTable.Snapshot(schema0, Map.empty, 0L))
     MemTable.history.keys.filter(_._1 == stagingKey).toSeq
       .foreach(MemTable.history.remove)
-    // REPLACE is a full table redefinition: purge EVERY per-table
-    // contract the old incarnation declared (as dropTable does), then
-    // register only what THIS staged definition carries — else a
-    // replaced table keeps enforcing the old table's CHECK constraints
-    // and generation expressions against the new schema.
-    GraftSparkCatalog.deltaIdCols.remove(realKey)
-    GraftSparkCatalog.identityCols.remove(realKey)
-    GraftSparkCatalog.checkConstraints.remove(realKey)
-    GraftSparkCatalog.generatedCols.remove(realKey)
-    GraftSparkCatalog.sortCols.remove(realKey)
-    GraftSparkCatalog.extendedPushdown.remove(realKey)
-    GraftSparkCatalog.writeDistributions.remove(realKey)
-    GraftSparkCatalog.partCols.put(realKey, pc)
-    if (deltaIdCol.nonEmpty)
-      GraftSparkCatalog.deltaIdCols.put(realKey, deltaIdCol)
-    if (sortedBy.nonEmpty)
-      GraftSparkCatalog.sortCols.put(realKey, sortedBy)
-    if (extendedPushdown)
-      GraftSparkCatalog.extendedPushdown.put(realKey, true)
-    // the declared spill write layout must land BEFORE the publishes
-    // below spill the staged rows — and a REPLACE without the properties
-    // clears the old incarnation's layout (the purge discipline above)
-    GraftSparkCatalog.registerSpillLayout(realKey, spillLayout)
+    MemTable.lastCommitShape.remove(stagingKey)
+      .foreach(MemTable.lastCommitShape.put(realKey, _))
+    // REPLACE is a full table redefinition: the staged record replaces
+    // the old incarnation's WHOLE (else a replaced table keeps enforcing
+    // the old CHECK constraints and generation expressions against the
+    // new schema) — and it lands BEFORE the publishes below, which sort
+    // and spill the rows by it
+    TableMeta.move(stagingKey, realKey)
     // a staged CREATE records the table birth the way the non-staged
     // two-step path does (createTable's empty v0, then the data commit):
     // the history ledger stays uniform across both creation paths (q290)
     if (!MemTable.store.contains(realKey))
       MemTable.publish(realKey, MemTable.Snapshot(
         if (staged.schema.nonEmpty) staged.schema else schema0, Map.empty, 0L))
+    // the staged write's publish already sorted the parts by this record
     val curVer = MemTable.store(realKey).version
     MemTable.publish(realKey, MemTable.Snapshot(
       if (staged.schema.nonEmpty) staged.schema else schema0,
-      staged.parts, curVer + 1))
+      staged.parts, curVer + 1), presorted = true)
   }
 
-  override def abortStagedChanges(): Unit = MemTable.store.synchronized {
-    MemTable.store.remove(stagingKey)
-    MemTable.history.keys.filter(_._1 == stagingKey).toSeq
-      .foreach(MemTable.history.remove)
-  }
+  override def abortStagedChanges(): Unit = MemTable.evict(stagingKey)
+}
+
+private[sources] object MemStagedTable {
+  /** A fresh hidden key for one staged write of `realKey`. It starts
+    * with `staging!`, never `cat!`, so it lies outside every catalog's
+    * key space: no listing or namespace sees it and [[DurableSpill]]
+    * finds no warehouse root for it (staged rows stay memory-only). */
+  def keyFor(realKey: String): String = s"staging!$realKey!${System.nanoTime()}"
 }
 
 /** Composite streaming offset: `version` commits fully consumed, plus

@@ -108,7 +108,7 @@ class DurableCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("k", org.apache.spark.sql.types.LongType)
       .add("p", org.apache.spark.sql.types.StringType)
-    GraftSparkCatalog.partCols.put(key, "p")
+    TableMeta.put(key, TableMeta(partCol = "p"))
     val total = MemTable.historyDepth + 6
     MemTable.store.synchronized {
       (1 to total).foreach { v =>
@@ -529,26 +529,157 @@ class DurableCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CTAS keeps extendedPushdown and it survives the restart (staged-create property parity)") {
+    // every declared table contract, one table each: the record a CTAS or
+    // CREATE registers comes back WHOLE from the manifest after a restart
+    // (evict + ensureLoaded), and RENAME carries it whole to the new key
     val s2 = catSession()
     import s2.implicits._
-    val name = s"dur_ctasep_${System.nanoTime()}"
-    val tbl = s"graft_dur.spec.$name"
-    val key = s"cat!graft_dur!spec!$name"
-    Seq((1L, "a", 100L), (2L, "a", 200L), (3L, "b", 300L)).toDF("k", "p", "cents")
-      .writeTo(tbl).partitionedBy(col("p"))
-      .tableProperty("extendedPushdown", "true").create()
-    // the staged-CTAS path used to drop the property silently (r14)
-    assert(GraftSparkCatalog.extendedPushdown.get(key).contains(true),
-      "CTAS dropped extendedPushdown")
-    MemTable.evict(key) // restart — acceptance must come back from the manifest
-    DurableSpill.ensureLoaded(key)
-    assert(GraftSparkCatalog.extendedPushdown.get(key).contains(true),
-      "restore dropped extendedPushdown")
-    // and the accepted filter actually runs: NULL-free differential
-    val got = s2.sql(s"SELECT k FROM $tbl WHERE cents > 150")
+    val rows = Seq((1L, "a", 100L), (2L, "a", 200L), (3L, "b", 300L))
+    val ctas: Seq[(String, Map[String, String], TableMeta => Boolean)] = Seq(
+      ("sortedBy", Map("sortedBy" -> "cents"), _.sortedBy.contains("cents")),
+      ("extendedPushdown", Map("extendedPushdown" -> "true"), _.extendedPushdown),
+      ("writeDistribution", Map("writeDistribution" -> "clustered"), _.clustered),
+      ("deltaIdCol", Map("deltaIdCol" -> "k"), _.deltaIdCol == "k"),
+      ("spill layout", Map("spillRowGroupBytes" -> "4096", "spillPageRows" -> "2",
+        "spillBloomFilterColumns" -> "cents"),
+        _.spill == SpillLayout(Some(4096L), Some(2), Seq("cents"))))
+    val ddl: Seq[(String, String, TableMeta => Boolean)] = Seq(
+      ("identity", "k BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 10 INCREMENT BY 5), " +
+        "p STRING, cents BIGINT", _.identity.contains(IdentitySpec("k", 10L, 5L, false))),
+      ("CHECK", "k BIGINT, p STRING, cents BIGINT, CONSTRAINT pos CHECK (cents > 0)",
+        _.checks.map(_._1) == Seq("pos")),
+      ("generated", "k BIGINT, p STRING, cents BIGINT, " +
+        "dollars BIGINT GENERATED ALWAYS AS (cents DIV 100)",
+        _.generated.map(_._1) == Seq("dollars")))
+    def roundTrip(contract: String, create: String => Unit,
+        declared: TableMeta => Boolean): String = {
+      val name = s"dur_ctr_${System.nanoTime()}"
+      val key = s"cat!graft_dur!spec!$name"
+      create(s"graft_dur.spec.$name")
+      val before = TableMeta.of(key)
+      assert(declared(before) && before.partCol == "p", s"$contract not registered: $before")
+      MemTable.evict(key) // restart — the record must come back from the manifest
+      assert(TableMeta.of(key) == TableMeta(), s"evict kept $contract")
+      DurableSpill.ensureLoaded(key)
+      assert(TableMeta.of(key) == before, s"restore changed $contract")
+      s2.sql(s"ALTER TABLE graft_dur.spec.$name RENAME TO spec.${name}_r")
+      assert(TableMeta.of(key) == TableMeta() && TableMeta.of(s"${key}_r") == before,
+        s"RENAME did not move $contract")
+      s"graft_dur.spec.${name}_r"
+    }
+    val tables = ctas.map { case (c, props, declared) =>
+      c -> roundTrip(c, tbl => props.foldLeft(
+        rows.toDF("k", "p", "cents").writeTo(tbl).partitionedBy(col("p")))(
+        (w, kv) => w.tableProperty(kv._1, kv._2)).create(), declared)
+    } ++ ddl.map { case (c, cols, declared) =>
+      c -> roundTrip(c, tbl =>
+        s2.sql(s"CREATE TABLE $tbl ($cols) PARTITIONED BY (p)"), declared)
+    }
+    // and the restored extendedPushdown acceptance actually runs:
+    // NULL-free differential
+    val got = s2.sql(s"SELECT k FROM ${tables.toMap.apply("extendedPushdown")} WHERE cents > 150")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == Seq(2L, 3L))
+    tables.foreach { case (_, tbl) => s2.sql(s"DROP TABLE $tbl") }
+  }
+
+  test("staged creates never spill: a committed and an aborted CTAS leave no staging dir, tally or entry") {
+    val s2 = catSession()
+    import s2.implicits._
+    import scala.jdk.CollectionConverters._
+    def leftovers(key: String): Seq[String] = {
+      val staging = s"staging!$key!"
+      val dirPrefix = staging.replaceAll("[^A-Za-z0-9_.-]", "_")
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(warehouse))
+      val dirs = try ls.iterator().asScala.map(_.getFileName.toString).toSeq finally ls.close()
+      (dirs ++ DurableSpill.groupTallies.keys ++ DurableSpill.pageTallies.keys ++
+        DurableSpill.bloomTallies.keys).filter(_.startsWith(dirPrefix)) ++
+        (MemTable.store.keys ++ MemTable.lastCommitShape.keys ++
+          MemTable.history.keys.map(_._1)).filter(_.startsWith(staging))
+    }
+    val name = s"dur_stg_${System.nanoTime()}"
+    val key = s"cat!graft_dur!spec!$name"
+    Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "p", "v")
+      .writeTo(s"graft_dur.spec.$name").partitionedBy(col("p")).create()
+    assert(s2.sql(s"SELECT count(*) FROM graft_dur.spec.$name").head().getLong(0) == 2L)
+    assert(leftovers(key).isEmpty, s"committed CTAS left: ${leftovers(key)}")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(warehouse,
+      key.replaceAll("[^A-Za-z0-9_.-]", "_"), "_manifest.json")))
+    // aborted: the staged write commits its batch, then the stage aborts
+    val cat = s2.sessionState.catalogManager.catalog("graft_dur")
+      .asInstanceOf[GraftSparkCatalog]
+    val ident = org.apache.spark.sql.connector.catalog.Identifier
+      .of(Array("spec"), s"${name}_ab")
+    val stagedSchema = new org.apache.spark.sql.types.StructType()
+      .add("k", org.apache.spark.sql.types.LongType)
+      .add("p", org.apache.spark.sql.types.StringType)
+    val staged = cat.stageCreate(ident, stagedSchema,
+      Array(org.apache.spark.sql.connector.expressions.Expressions.identity("p")),
+      new java.util.HashMap[String, String]())
+    staged.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
+      .newWriteBuilder(new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+        override def queryId(): String = "spec"
+        override def schema(): org.apache.spark.sql.types.StructType = stagedSchema
+        override def options(): org.apache.spark.sql.util.CaseInsensitiveStringMap =
+          org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()
+      }).build().toBatch
+      .commit(Array(MemPartMessage(Map("a" -> Vector(Array[Any](1L, "a"))))))
+    staged.abortStagedChanges()
+    assert(leftovers(s"${key}_ab").isEmpty, s"aborted CTAS left: ${leftovers(s"${key}_ab")}")
+    assert(!cat.tableExists(ident))
+    s2.sql(s"DROP TABLE graft_dur.spec.$name")
+  }
+
+  test("a table in a namespace named staging is durable: it spills, restores and is listed") {
+    val s2 = catSession()
+    import s2.implicits._
+    val name = s"dur_stgns_${System.nanoTime()}"
+    val tbl = s"graft_dur.staging.$name"
+    val key = s"cat!graft_dur!staging!$name"
+    Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "p", "v")
+      .writeTo(tbl).partitionedBy(col("p")).create()        // v1, staged
+    s2.sql(s"INSERT INTO $tbl VALUES (3, 'a', 30)")         // v2
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(warehouse,
+      key.replaceAll("[^A-Za-z0-9_.-]", "_"), "_manifest.json")))
+    MemTable.evict(key) // restart
+    assert(!MemTable.store.contains(key))
+    val rows = s2.sql(s"SELECT k, v FROM $tbl ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows == Seq((1L, 10L), (2L, 20L), (3L, 30L)), rows)
+    assert(s2.sql(s"SELECT count(*) FROM $tbl VERSION AS OF 1").head().getLong(0) == 2L)
+    assert(s2.sql("SHOW NAMESPACES IN graft_dur").collect().map(_.getString(0))
+      .contains("staging"))
     s2.sql(s"DROP TABLE $tbl")
+  }
+
+  test("a manifest in the earlier JSON format (no writeDistribution field) restores every contract") {
+    catSession() // ensures the graft_dur root is registered
+    val name = s"dur_oldmf_${System.nanoTime()}"
+    val key = s"cat!graft_dur!spec!$name"
+    val dir = java.nio.file.Paths.get(warehouse, key.replaceAll("[^A-Za-z0-9_.-]", "_"))
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("k", org.apache.spark.sql.types.LongType, nullable = false)
+      .add("p", org.apache.spark.sql.types.StringType)
+      .add("cents", org.apache.spark.sql.types.LongType)
+      .add("id", org.apache.spark.sql.types.LongType)
+    java.nio.file.Files.createDirectories(dir.resolve("v1"))
+    java.nio.file.Files.writeString(dir.resolve("v1/meta.json"),
+      s"""{"version":1,"tsMicros":1,"schemaJson":${
+        org.json4s.jackson.JsonMethods.compact(org.json4s.JString(schema.json))},"parts":[]}""")
+    java.nio.file.Files.writeString(dir.resolve("_manifest.json"),
+      s"""{"key":"$key","current":1,"versions":[1],"partCol":"p","deltaIdCol":"k",""" +
+        """"declaredParts":{},"identityCol":"id:10:5:false",""" +
+        """"checkConstraints":[["pos","cents > 0"]],"generatedCols":[],""" +
+        """"sortedBy":"cents","extendedPushdown":true,"spillRowGroupBytes":4096,""" +
+        """"spillPageRows":2,"spillBloomCols":["cents"]}""")
+    DurableSpill.ensureLoaded(key)
+    assert(TableMeta.of(key) == TableMeta("p", "k",
+      Some(IdentitySpec("id", 10L, 5L, false)), Seq(("pos", "cents > 0")), Nil,
+      Some("cents"), extendedPushdown = true, clustered = false,
+      SpillLayout(Some(4096L), Some(2), Seq("cents"))))
+    assert(MemTable.store(key).schema == schema)
+    DurableSpill.onDrop(key)
+    MemTable.evict(key)
   }
 
   test("a filtered streaming read of an extendedPushdown table filters exactly (NULL excluded)") {
@@ -950,7 +1081,7 @@ class DurableCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       .tableProperty("spillBloomFilterColumns", "uk,sv").create()
     MemTable.evict(key)
     DurableSpill.ensureLoaded(key)
-    assert(DurableSpill.spillBloomColsFor.get(key).contains(Seq("uk", "sv")),
+    assert(TableMeta.of(key).spill.bloomCols == Seq("uk", "sv"),
       "bloom columns did not survive the restart (manifest parity)")
     val (path, schema) = MemTable.store(key).parts match {
       case lp: LazyParts =>

@@ -509,4 +509,66 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
       m.contains("not found") && m.contains("expire_history")),
       s"got: ${chain(e)}")
   }
+
+  test("a staged create (CTAS) honors writeDistribution: served back, clustered commit, bad values refused") {
+    val s2 = catSession()
+    import s2.implicits._
+    import org.apache.spark.sql.functions.col
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    val name = freshName("ctascw")
+    val t = s"graft_ddl.ns.$name"
+    // four statuses mixed in every input task: only a clustered write
+    // keeps each status inside one task
+    val src = (1L to 40L).map(i => (i, "ABCD".substring((i % 4).toInt, (i % 4).toInt + 1), i))
+      .toDF("k", "status", "cents").repartition(4)
+    src.writeTo(t).partitionedBy(col("status"))
+      .tableProperty("writeDistribution", "clustered").create()
+    val props = s2.sql(s"SHOW TBLPROPERTIES $t").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(props.get("writeDistribution").contains("clustered"), props)
+    val (_, _, pairs, groups) = MemTable.lastCommitShape(s"cat!graft_ddl!ns!$name")
+    assert(groups == 4 && pairs == groups,
+      s"CTAS commit split partitions across tasks: $pairs group-task pairs, $groups groups")
+    src.createOrReplaceTempView(s"${name}_src")
+    for ((props, refusal) <- Seq(
+        ("PARTITIONED BY (status) TBLPROPERTIES ('writeDistribution'='banana')",
+          "unsupported writeDistribution 'banana'"),
+        ("TBLPROPERTIES ('writeDistribution'='clustered')",
+          "writeDistribution=clustered requires PARTITIONED BY"))) {
+      val bad = s"graft_ddl.ns.${freshName("ctasbad")}"
+      val e = intercept[Exception] {
+        s2.sql(s"CREATE TABLE $bad USING graft $props AS SELECT * FROM ${name}_src")
+      }
+      assert(chain(e).exists(_.contains(refusal)), s"got: ${chain(e)}")
+      assert(!s2.catalog.tableExists(bad), s"refused CTAS left $bad behind")
+    }
+  }
+
+  test("connector custom metrics reach the execution's SQL metrics in the status store") {
+    val s2 = catSession()
+    import s2.implicits._
+    val t = s"graft_ddl.ns.${freshName("metrics")}"
+    s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
+    (1L to 30L).map(i => (i, if (i % 3 == 0) "F" else "O", i))
+      .toDF("k", "status", "cents").writeTo(t).append()
+    val store = s2.sharedState.statusStore
+    val before = store.executionsList().map(_.executionId).maxOption.getOrElse(-1L)
+    // partition-pruned to 'F'; sum(k + cents) is not a pushable aggregate,
+    // so the scan serves every F row
+    s2.sql(s"SELECT sum(k + cents) FROM $t WHERE status = 'F'").collect()
+    def metric(cls: Class[_]): Option[String] =
+      store.executionsList().filter(_.executionId > before).flatMap { e =>
+        val values = store.executionMetrics(e.executionId)
+        e.metrics.filter(_.metricType.endsWith(cls.getName))
+          .flatMap(m => values.get(m.accumulatorId))
+      }.headOption
+    // the status listener aggregates on its own thread, after the query
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert(metric(classOf[RowsServedMetric]).contains("10"))
+      assert(metric(classOf[PlannedPartitionsMetric]).contains("1"))
+    }
+  }
 }
