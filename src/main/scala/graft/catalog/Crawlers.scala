@@ -1,9 +1,8 @@
 package graft.catalog
 
 import java.util.concurrent.atomic.AtomicReference
-import scala.concurrent.{ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, Promise, TimeoutException}
 import scala.concurrent.duration._
-import scala.util.{Failure, Success}
 import org.apache.spark.sql.SparkSession
 import graft._
 
@@ -15,8 +14,8 @@ import graft._
   * partitions from the directory layout (Spark's FileIndex does the
   * reference's S3-listing work). The observable contract is preserved:
   * READY/RUNNING states, start silently skipped when already RUNNING
-  * (gluettalax.py:216-217), async returns immediately, sync polls with a
-  * timeout → CrawlerTimeout, unknown name → CrawlerNotFound.
+  * (gluettalax.py:216-217), async returns immediately, sync awaits the
+  * crawl with a timeout → CrawlerTimeout, unknown name → CrawlerNotFound.
   */
 final class Crawlers(spark: SparkSession) {
 
@@ -35,8 +34,10 @@ final class Crawlers(spark: SparkSession) {
   case object Ready extends State
   case object Running extends State
 
+  /** `crawl` is the latest crawl: RUNNING until it completes, which it
+    * does only after `lastError` is recorded. */
   private final case class Entry(spec: CrawlerSpec,
-      state: AtomicReference[State], lastStartedMs: AtomicReference[Option[Long]],
+      crawl: AtomicReference[Future[Unit]], lastStartedMs: AtomicReference[Option[Long]],
       lastError: AtomicReference[Option[Throwable]])
 
   private val registry = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
@@ -52,7 +53,7 @@ final class Crawlers(spark: SparkSession) {
   def register(spec: CrawlerSpec): Unit =
     registry.compute(spec.name, (_, old) =>
       if (old == null)
-        Entry(spec, new AtomicReference(Ready), new AtomicReference(None),
+        Entry(spec, new AtomicReference(Future.unit), new AtomicReference(None),
           new AtomicReference(None))
       else old.copy(spec = spec))
 
@@ -72,14 +73,15 @@ final class Crawlers(spark: SparkSession) {
     e
   }
 
-  def state(name: String): State = entry(name).state.get()
+  def state(name: String): State =
+    if (entry(name).crawl.get().isCompleted) Ready else Running
   def isReady(name: String): Boolean = state(name) == Ready
 
   /** Elapsed ms of the current crawl, 0 when READY — the reference's
     * CrawlElapsedTime display input (gluettalax.py:656). */
   def crawlElapsedMs(name: String): Long = {
     val e = entry(name)
-    if (e.state.get() == Running)
+    if (!e.crawl.get().isCompleted)
       e.lastStartedMs.get().map(t => System.currentTimeMillis() - t).getOrElse(0L)
     else 0L
   }
@@ -131,26 +133,29 @@ final class Crawlers(spark: SparkSession) {
   }
 
   /** A15: run semantics (gluettalax.py:205-224). Returns true if a crawl was
-    * started (false when skipped because already RUNNING). */
+    * started (false when skipped because already RUNNING). A sync caller
+    * awaits the crawl it started, or the one in flight when it skipped, and
+    * gets that crawl's failure. */
   def run(name: String, async: Boolean = false,
       timeoutSec: Int = DefaultTimeoutSec, rerun: Boolean = false): Boolean = {
     val e = entry(name)
-    if (rerun) waitReady(name, timeoutSec)
-    val started =
-      if (e.state.compareAndSet(Ready, Running)) {
-        e.lastStartedMs.set(Some(System.currentTimeMillis()))
-        e.lastError.set(None)
-        Future(crawl(e.spec)).onComplete {
-          case Success(_) => e.state.set(Ready)
-          case Failure(t) => e.lastError.set(Some(t)); e.state.set(Ready)
-        }
-        true
-      } else false // silently skip start when already RUNNING
+    if (rerun) await(name, e.crawl.get(), timeoutSec)
+    val prev = e.crawl.get()
+    val next = Promise[Unit]()
+    val started = prev.isCompleted && e.crawl.compareAndSet(prev, next.future)
+    if (started) {
+      e.lastStartedMs.set(Some(System.currentTimeMillis()))
+      e.lastError.set(None)
+      next.completeWith(Future(crawl(e.spec)).andThen { case r =>
+        r.failed.foreach(t => e.lastError.set(Some(t)))
+      })
+    } // else silently skip start when already RUNNING
     if (!async) {
-      waitReady(name, timeoutSec)
+      val awaited = if (started) next.future else e.crawl.get()
+      await(name, awaited, timeoutSec)
       // surface crawl failure to the synchronous caller (the reference's
       // boto errors unwind to the CLI's exit-1 ladder; ours do too)
-      e.lastError.get().foreach(t => throw t)
+      awaited.value.foreach(_.get)
     }
     started
   }
@@ -159,12 +164,9 @@ final class Crawlers(spark: SparkSession) {
     * poll this alongside isReady). */
   def lastError(name: String): Option[Throwable] = entry(name).lastError.get()
 
-  private def waitReady(name: String, timeoutSec: Int): Unit = {
-    val deadline = System.nanoTime() + timeoutSec.seconds.toNanos
-    while (!isReady(name)) {
-      if (System.nanoTime() > deadline)
-        throw CrawlerTimeout(s"Crawler $name timeout")
-      Thread.sleep(50) // poll interval; reference uses 10 s against a remote API
+  private def await(name: String, crawl: Future[Unit], timeoutSec: Int): Unit =
+    try Await.ready(crawl, timeoutSec.seconds)
+    catch {
+      case _: TimeoutException => throw CrawlerTimeout(s"Crawler $name timeout")
     }
-  }
 }

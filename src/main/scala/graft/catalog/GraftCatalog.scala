@@ -1,12 +1,19 @@
 package graft.catalog
 
+import java.io.FileNotFoundException
+import scala.collection.mutable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftCatalogBridge, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.{NoSuchPartitionException, NoSuchPartitionsException, NoSuchTableException, PartitionsAlreadyExistException}
+import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogTable, CatalogTablePartition, CatalogUtils}
+import org.apache.spark.sql.catalyst.catalog.CatalogTypes.TablePartitionSpec
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.command.{CommandUtils, DDLUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft._
-import graft.functions.Functions.{globMatch, sqlLit}
+import graft.functions.Functions.{globMatch, utf8Order}
 
 /** Partition listing result — the reference's `Partitions` namedtuple
   * (gluettalax.py:371): key names, per-column display widths (max value
@@ -18,12 +25,17 @@ final case class PartitionListing(
     data: Seq[Seq[String]])
 
 /** The engine's catalog & partition-metadata surface — the reference's
-  * Layer A core (SURVEY.md §2 A1/A2, A9-A14) restated on `spark.catalog` +
-  * Spark SQL DDL instead of the Glue API.
+  * Layer A core (SURVEY.md §2 A1/A2, A9-A14) restated on Spark's session
+  * catalog instead of the Glue API.
   *
-  * Scale note: everything here is metadata-plane — catalog RPCs and
-  * directory listings, never row data. The only DataFrame work is the A9
-  * width aggregation, which runs on the (small) partition list.
+  * Scale note: everything here is metadata-plane — catalog calls and
+  * directory listings, never row data, and no command goes through SQL
+  * text or starts a Spark job. A partition write is the session-catalog
+  * calls `ALTER TABLE … ADD|DROP PARTITION` makes; bulk discovery lists the
+  * stored partitions once and creates the new ones in chunks of
+  * `spark.sql.addPartitionInBatch.size`, one metastore call each (the
+  * reference's BatchCreatePartition). `list_partitions` still fetches
+  * every partition and glob-filters on the client.
   */
 final class GraftCatalog(spark: SparkSession) {
 
@@ -56,7 +68,11 @@ final class GraftCatalog(spark: SparkSession) {
     * gluettalax.py:654,678,742,799). The catalog dialect matches a
     * superset (it is case-insensitive), so the exact case-sensitive
     * fnmatch predicate always remains as a residual DataFrame filter —
-    * pushdown prunes, the contract stays fnmatch. */
+    * pushdown prunes, the contract stays fnmatch.
+    *
+    * The rows are sorted on the driver, in Spark's string order, before
+    * they become a local relation: the filter folds into it, so `collect()`
+    * starts no Spark job. */
   def listTables(pattern: Option[String] = None): DataFrame = {
     import spark.implicits._
     val pat = pattern.filter(_.nonEmpty)
@@ -68,10 +84,9 @@ final class GraftCatalog(spark: SparkSession) {
       }
       listed.map(ti => (ti.database.getOrElse(db), ti.table))
     }
-    val df = rows.toDF("database_name", "table_name")
-    pat.map(p => df.filter(globMatch(col("table_name"), p)))
-      .getOrElse(df)
-      .orderBy("database_name", "table_name")
+    val df = rows.sorted(Ordering.Tuple2(utf8Order, utf8Order))
+      .toDF("database_name", "table_name")
+    pat.map(p => df.filter(globMatch(col("table_name"), p))).getOrElse(df)
   }
 
   /** Table metadata or the reference's typed error
@@ -122,6 +137,55 @@ final class GraftCatalog(spark: SparkSession) {
       kargs.getOrElse(k, throw InvalidOption(s"missing --$k argument")))
   }
 
+  /** Metadata of a table that partition writes can target: a table
+    * without partition keys (a view included) is an InvalidOption naming
+    * it. */
+  private def partitionedTable(db: String, table: String): CatalogTable = {
+    val meta = getTable(db, table)
+    if (meta.partitionColumnNames.isEmpty)
+      throw InvalidOption(s"Table $db.$table is not partitioned")
+    meta
+  }
+
+  /** A spec as `ALTER TABLE … PARTITION (…)` resolves it: key names to the
+    * table's own, each value cast to its key's type and back to a string
+    * (`01` for an INT key is stored as `1`). */
+  private def normalized(meta: CatalogTable, spec: TablePartitionSpec): TablePartitionSpec =
+    GraftCatalogBridge.normalizePartitionSpec(spark, meta, spec)
+
+  /** A new partition inheriting the table's storage format, at `location`. */
+  private def partition(meta: CatalogTable, spec: TablePartitionSpec, location: String) =
+    CatalogTablePartition(spec,
+      meta.storage.copy(locationUri = Some(CatalogUtils.stringToURI(location))))
+
+  /** One partition write, with the steps `ALTER TABLE … ADD|DROP PARTITION`
+    * runs (Spark's AlterTableAddPartitionCommand and
+    * AlterTableDropPartitionCommand) but made on the session catalog
+    * directly, with no SQL text to build, parse and analyze: verify the
+    * table, write, refresh its cached relation, update its size stats.
+    * `write` returns the partitions it created (none for a drop); an add
+    * that created none stops there, as a failed ALTER TABLE does. */
+  private def alterPartitions(meta: CatalogTable, add: Boolean)(
+      write: => Seq[CatalogTablePartition]): Unit = {
+    DDLUtils.verifyAlterTableType(sessionCatalog, meta, isView = false)
+    DDLUtils.verifyPartitionProviderIsHive(spark, meta,
+      s"ALTER TABLE ${if (add) "ADD" else "DROP"} PARTITION")
+    val added = write
+    if (add && added.isEmpty) return
+    spark.catalog.refreshTable(meta.identifier.quotedString)
+    val session = castToImpl(spark)
+    if (add && meta.stats.nonEmpty && session.sessionState.conf.autoSizeUpdateEnabled) {
+      // an add grows the stored size by the new partitions' files only
+      val addedSize = CommandUtils.calculateMultipleLocationSizes(session, meta.identifier,
+        added.map(_.storage.locationUri)).sum
+      if (addedSize > 0) {
+        sessionCatalog.alterTableStats(meta.identifier,
+          Some(CatalogStatistics(sizeInBytes = meta.stats.get.sizeInBytes + addedSize)))
+        sessionCatalog.alterPartitions(meta.identifier, added)
+      }
+    } else CommandUtils.updateTableStats(session, meta)
+  }
+
   /** A12: add one partition. Location defaults to the table location plus
     * either the Hive-style `k1=v1/k2=v2/` path or — when every key is named
     * `partition_*` — the positional `v1/v2/` dialect (gluettalax.py:460-469,
@@ -129,7 +193,7 @@ final class GraftCatalog(spark: SparkSession) {
     * surfaces as the exit-0 warning. */
   def addPartition(db: String, table: String, kargs: Map[String, String],
       location: Option[String] = None): Unit = {
-    val meta = getTable(db, table)
+    val meta = partitionedTable(db, table)
     val keys = meta.partitionColumnNames
     val values = getPartitionValues(kargs, keys)
     val loc = location.getOrElse {
@@ -143,11 +207,11 @@ final class GraftCatalog(spark: SparkSession) {
           keys.map(k => s"$k=${kargs(k)}").mkString("/") + "/"
       tableLocation + path
     }
-    val spec = keys.zip(values)
-      .map { case (k, v) => s"`$k`='${sqlLit(v)}'" }.mkString(", ")
-    try spark.sql(
-      s"ALTER TABLE `$db`.`$table` ADD PARTITION ($spec) LOCATION '${sqlLit(loc)}'")
-    catch {
+    try alterPartitions(meta, add = true) {
+      val part = partition(meta, normalized(meta, keys.zip(values).toMap), loc)
+      sessionCatalog.createPartitions(meta.identifier, Seq(part), ignoreIfExists = false)
+      Seq(part)
+    } catch {
       case _: PartitionsAlreadyExistException =>
         throw PartitionAlreadyExists(s"Partition [${values.mkString(", ")}] already exists")
     }
@@ -155,13 +219,14 @@ final class GraftCatalog(spark: SparkSession) {
 
   /** A14: drop one partition; missing → typed error (gluettalax.py:485-497). */
   def deletePartition(db: String, table: String, kargs: Map[String, String]): Unit = {
-    val meta = getTable(db, table)
-    val keys = meta.partitionColumnNames
-    val values = getPartitionValues(kargs, keys)
-    val spec = keys.zip(values)
-      .map { case (k, v) => s"`$k`='${sqlLit(v)}'" }.mkString(", ")
-    try spark.sql(s"ALTER TABLE `$db`.`$table` DROP PARTITION ($spec)")
-    catch {
+    val meta = partitionedTable(db, table)
+    val values = getPartitionValues(kargs, meta.partitionColumnNames)
+    try alterPartitions(meta, add = false) {
+      sessionCatalog.dropPartitions(meta.identifier,
+        Seq(normalized(meta, meta.partitionColumnNames.zip(values).toMap)),
+        ignoreIfNotExists = false, purge = false, retainData = false)
+      Nil
+    } catch {
       case _: NoSuchPartitionException | _: NoSuchPartitionsException =>
         throw PartitionNotFound(s"Partition [${values.mkString(", ")}] not found")
     }
@@ -183,36 +248,65 @@ final class GraftCatalog(spark: SparkSession) {
     * ≈ `MSCK REPAIR TABLE`, but with the reference's exact semantics and a
     * per-directory outcome report. */
   def addPartitionsByLocation(db: String, table: String, location: String)
-      : Seq[(String, DiscoveryOutcome)] = {
-    val meta = getTable(db, table)
+      : Seq[(String, DiscoveryOutcome)] =
+    discoverPartitions(db, table, location, sessionCatalog.listPartitions(_))
+
+  /** Discovery with the stored-partition listing as a parameter, so a test
+    * can hand it a stale one. One listing classifies every parsed dir: a
+    * spec already stored, or met in an earlier dir of this run, exists. The
+    * rest are created in chunks of `spark.sql.addPartitionInBatch.size`,
+    * one atomic metastore call each. A chunk that meets a partition the
+    * listing missed (a concurrent add) is redone one partition at a time,
+    * so each dir still gets its own outcome. */
+  private[graft] def discoverPartitions(db: String, table: String, location: String,
+      stored: TableIdentifier => Seq[CatalogTablePartition]): Seq[(String, DiscoveryOutcome)] = {
+    val meta = partitionedTable(db, table)
     val keys = meta.partitionColumnNames
     val hadoopPath = new Path(location)
     val fs = hadoopPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(hadoopPath, true)
-    while (it.hasNext) files += it.next().getPath.toString
-    val dirs = files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.sorted
-    dirs.toSeq.map { dir =>
+    val files = mutable.ArrayBuffer.empty[String]
+    try {
+      val it = fs.listFiles(hadoopPath, true)
+      while (it.hasNext) files += it.next().getPath.toString
+    } catch {
+      case _: FileNotFoundException => throw InvalidOption(s"Path $location not found")
+    }
+    val dirs = files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.sorted.toSeq
+    val specs = dirs.map { dir =>
       val parts = dir.split('/')
       val anchored = parts.indexWhere(_.startsWith(keys.head + "="))
-      if (anchored < 0) dir -> Skipped
-      else {
-        val segs = parts.drop(anchored)
-        val values = keys.zipWithIndex.flatMap { case (k, i) =>
-          if (i < segs.length && segs(i).startsWith(k + "="))
-            Some(k -> segs(i).split("=", 2)(1))
-          else None
-        }
-        if (values.size != keys.size) dir -> Skipped
-        else {
-          try {
-            addPartition(db, table, values.toMap, Some(dir + "/"))
-            dir -> Added
-          } catch {
-            case _: PartitionAlreadyExists => dir -> AlreadyExists
-          }
+      val segs = if (anchored < 0) Array.empty[String] else parts.drop(anchored)
+      val values = keys.zipWithIndex.flatMap { case (k, i) =>
+        if (i < segs.length && segs(i).startsWith(k + "="))
+          Some(k -> segs(i).split("=", 2)(1))
+        else None
+      }
+      dir -> Option.when(values.size == keys.size)(normalized(meta, values.toMap))
+    }
+    val seen = mutable.Set(stored(meta.identifier).map(_.spec): _*)
+    val fresh = specs.collect {
+      case (dir, Some(spec)) if seen.add(spec) => dir -> partition(meta, spec, dir + "/")
+    }
+    val added = mutable.Map.empty[String, CatalogTablePartition]
+    def create(batch: Seq[(String, CatalogTablePartition)]): Unit = {
+      sessionCatalog.createPartitions(meta.identifier, batch.map(_._2), ignoreIfExists = false)
+      added ++= batch
+    }
+    alterPartitions(meta, add = true) {
+      fresh.grouped(spark.sessionState.conf.getConf(SQLConf.ADD_PARTITION_BATCH_SIZE)).foreach { chunk =>
+        try create(chunk)
+        catch {
+          case _: PartitionsAlreadyExistException =>
+            chunk.foreach { p =>
+              try create(Seq(p)) catch { case _: PartitionsAlreadyExistException => () }
+            }
         }
       }
+      added.values.toSeq
+    }
+    specs.map {
+      case (dir, None) => dir -> Skipped
+      case (dir, Some(_)) => dir -> (if (added.contains(dir)) Added else AlreadyExists)
     }
   }
 }

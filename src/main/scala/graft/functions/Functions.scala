@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar-function surface of the engine: the reference's two pure scalar
   * behaviors (duration formatting, shell-glob matching) plus vector helpers
@@ -72,6 +73,12 @@ object Functions {
 
   /** Column form of the fnmatch filter: `c` matches shell glob `pattern`. */
   def globMatch(c: Column, pattern: String): Column = c.rlike("^" + globToRegex(pattern) + "$")
+
+  /** Spark's order on strings: UTF-8 bytes, unsigned. `String.compareTo`
+    * compares UTF-16 units instead and puts a supplementary-plane character
+    * (a surrogate pair, 0xD800-0xDFFF) before U+E000-U+FFFF; Spark puts it
+    * after. For sorting rows on the driver exactly as `orderBy` would. */
+  val utf8Order: Ordering[String] = Ordering.by(UTF8String.fromString)
 
   /** Escape a string for inclusion in a single-quoted Spark SQL literal —
     * shared by every DDL builder that interpolates user-supplied values

@@ -6,8 +6,8 @@ import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
 import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft._
+import graft.functions.Functions.{format_time, utf8Order}
 
 /** Job registry, runner and run ledger — the reference's Job lifecycle
   * (A5-A8, A16; gluettalax.py:227-354) with the remote Glue cluster replaced
@@ -69,7 +69,9 @@ final class JobRunner(spark: SparkSession) {
     registry.getOrElse(name, throw JobNotFound(s"Job $name not found"))
   }
 
-  private def record(run: JobRun): Unit = synchronized {
+  /** Insert or replace a ledger row (by run id). Package-visible so a test
+    * can record runs with chosen start times. */
+  private[graft] def record(run: JobRun): Unit = synchronized {
     ledger.indexWhere(_.runId == run.runId) match {
       case -1 => ledger += run
       case i  => ledger(i) = run
@@ -127,9 +129,13 @@ final class JobRunner(spark: SparkSession) {
 
   /** The run ledger as a DataFrame (schema-stable, for list_runs and
     * observability joins). */
-  def runsDF(): DataFrame = {
+  def runsDF(): DataFrame = toDF(synchronized(ledger.toList))
+
+  /** Runs as a local relation: a projection or filter on it folds into it,
+    * so `collect()` starts no Spark job. */
+  private def toDF(runs: Seq[JobRun]): DataFrame = {
     import spark.implicits._
-    val rows = synchronized(ledger.toList).map { r =>
+    val rows = runs.map { r =>
       (r.runId, r.jobName, r.state, r.startedOn, r.completedOn.orNull,
         r.executionTimeSec,
         r.arguments.toSeq.sorted.map { case (k, v) => s"--$k $v" }.mkString(" "),
@@ -139,38 +145,57 @@ final class JobRunner(spark: SparkSession) {
       "execution_time_sec", "arguments", "allocated_capacity")
   }
 
-  /** A7: runs of one job, optionally excluding SUCCEEDED, newest first,
-    * limited — the filter and limit are Catalyst ops (the reference's
-    * hand-rolled early pagination break becomes CollectLimitExec). */
-  def listRuns(name: String, lines: Option[Int] = None,
-      includeSucceeded: Boolean = true): DataFrame = {
-    getJob(name)
-    var df = runsDF().filter(col("job_name") === name)
-    if (!includeSucceeded) df = df.filter(col("state") =!= Succeeded)
-    df = df.orderBy(desc("started_on"), desc("run_id"))
-    lines.map(df.limit).getOrElse(df)
+  /** `started_on` descending, then `run_id` descending. */
+  private val newestFirst: Ordering[JobRun] =
+    Ordering.by((r: JobRun) => (r.startedOn.getTime, r.runId)).reverse
+
+  /** The newest `lines` of `runs`, all when unset. */
+  private def newest(runs: Seq[JobRun], lines: Option[Int]): Seq[JobRun] = {
+    val sorted = runs.sorted(newestFirst)
+    lines.fold(sorted)(sorted.take)
   }
 
+  /** A negative line count is an InvalidOption, whether or not any run
+    * exists. */
+  private def checked(lines: Option[Int]): Option[Int] = {
+    lines.filter(_ < 0).foreach(n => throw InvalidOption(s"invalid value for --lines: $n"))
+    lines
+  }
+
+  private def runsOf(name: String, includeSucceeded: Boolean): Seq[JobRun] = {
+    getJob(name)
+    synchronized(ledger.toList)
+      .filter(r => r.jobName == name && (includeSucceeded || r.state != Succeeded))
+  }
+
+  /** A7: runs of one job, optionally excluding SUCCEEDED, newest first,
+    * limited (the reference's early pagination break). The ledger is on
+    * the driver, so the filter, sort and limit run there. */
+  def listRuns(name: String, lines: Option[Int] = None,
+      includeSucceeded: Boolean = true): DataFrame =
+    toDF(newest(runsOf(name, includeSucceeded), checked(lines)))
+
   /** A8: when no job name is given — the most recent `lines` runs of EVERY
-    * job (window top-k per group), with the reference's derived display
-    * columns: human execution time, ISO-truncated start, flattened args. */
+    * job (top-k per group, default 1), with the reference's derived display
+    * columns: human execution time, ISO-truncated start, flattened args.
+    * Rows come by job name in Spark's string order, then newest first. The
+    * Catalyst form of this (a row_number window) is q17. */
   def printJobRuns(name: Option[String], lines: Option[Int] = None): DataFrame = {
-    val base = name match {
-      case Some(n) => listRuns(n, lines)
+    val k = checked(lines)
+    val runs = name match {
+      case Some(n) => newest(runsOf(n, includeSucceeded = true), k)
       case None =>
-        val w = Window.partitionBy("job_name").orderBy(desc("started_on"), desc("run_id"))
-        runsDF().withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= lines.getOrElse(1))
-          .drop("rn")
+        synchronized(ledger.toList).groupBy(_.jobName).values
+          .flatMap(newest(_, k.orElse(Some(1)))).toSeq
     }
     // column order mirrors the reference display row (gluettalax.py:330):
     // Status, Cap (AllocatedCapacity), Exec time, Start time, Name, Arguments
-    base.select(
+    val byName = Ordering.by((r: JobRun) => r.jobName)(utf8Order)
+    toDF(runs.sorted(byName.orElse(newestFirst))).select(
       col("state"),
       col("allocated_capacity").as("cap"),
-      graft.functions.Functions.format_time(col("execution_time_sec")).as("execution_time"),
+      format_time(col("execution_time_sec")).as("execution_time"),
       date_format(col("started_on"), "yyyy-MM-dd'T'HH:mm:ss").as("started_on"),
       col("job_name"), col("arguments"))
-      .orderBy(col("job_name"), desc("started_on"))
   }
 }

@@ -44,6 +44,41 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     (code, out.toSeq)
   }
 
+  /** Run `body`, then give `key` back its old value, or unset it again. */
+  private def restoring(key: String)(body: => Unit): Unit = {
+    val prev = spark.conf.getAll.get(key)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. The listener
+    * counts this thread's jobs only (async runs from other tests may still
+    * be going); a sentinel job drains the bus, whose events arrive in
+    * order. */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobCount"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("sentinel") => drained.countDown()
+          case Some(_) => jobs.incrementAndGet()
+          case None => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      val out = try body finally sc.setLocalProperty(tag, null)
+      sc.setLocalProperty(tag, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("WARN")
@@ -154,6 +189,156 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // ---- partition writes: the catalog calls give what ALTER TABLE gave ----
+
+  /** One empty file in each of `dirs` under `root` (discovery reads names
+    * only); returns the root. */
+  private def layout(root: String, dirs: String*): String = {
+    dirs.foreach { d =>
+      val dir = java.nio.file.Paths.get(root, d)
+      Files.createDirectories(dir)
+      Files.write(dir.resolve("part-0"), Array.emptyByteArray)
+    }
+    root
+  }
+
+  /** A table's partition rows, the temp dir shown as `<tmp>`. */
+  private def partitionRows(table: String): Seq[Seq[String]] =
+    engine.catalog.listPartitions("datalake", table).data.map(_.map(_.replace(tmp, "<tmp>")))
+
+  test("A13 discovery parity: stored, duplicate, malformed and quoted dirs keep their report lines") {
+    spark.sql(s"CREATE TABLE datalake.disc_t (v BIGINT, year STRING, month STRING) " +
+      s"USING parquet PARTITIONED BY (year, month) LOCATION '$tmp/disc_table'")
+    val root = layout(s"$tmp/disc_layout", "", "_staging", "x/year=2020/month=02",
+      "year=20'30/month=0\\1", "year=2020/month=01", "year=2020/month=02", "year=2021",
+      "year=2021/day=3/month=4")
+    engine.catalog.addPartition("datalake", "disc_t", Map("year" -> "2020", "month" -> "01"),
+      Some(s"$root/year=2020/month=01/"))
+    val (code, out) = run("add_partitions", "datalake", "disc_t", root)
+    assert(code == 0, out)
+    assert(out.map(_.replace(tmp, "<tmp>")) == Seq(
+      "Skip file:<tmp>/disc_layout",
+      "Skip file:<tmp>/disc_layout/_staging",
+      "Partition [file:<tmp>/disc_layout/x/year=2020/month=02] added",
+      "Partition [file:<tmp>/disc_layout/year=20'30/month=0\\1] added",
+      "Partition [file:<tmp>/disc_layout/year=2020/month=01] already exists",
+      "Partition [file:<tmp>/disc_layout/year=2020/month=02] already exists",
+      "Skip file:<tmp>/disc_layout/year=2021",
+      "Skip file:<tmp>/disc_layout/year=2021/day=3/month=4"))
+    assert(partitionRows("disc_t") == Seq(
+      Seq("2020", "02", "file:<tmp>/disc_layout/x/year=2020/month=02"),
+      Seq("20'30", "0\\1", "file:<tmp>/disc_layout/year=20'30/month=0%5C1"),
+      Seq("2020", "01", "file:<tmp>/disc_layout/year=2020/month=01")))
+    // an INT key: dir `01` is the stored `1`, and `02` then `2` is one partition
+    spark.sql(s"CREATE TABLE datalake.disc_int_t (v BIGINT, k INT) " +
+      s"USING parquet PARTITIONED BY (k) LOCATION '$tmp/disc_int_table'")
+    engine.catalog.addPartition("datalake", "disc_int_t", Map("k" -> "1"))
+    val intRoot = layout(s"$tmp/disc_int_layout", "k=01", "k=1", "k=02", "k=2")
+    val (intCode, intOut) = run("add_partitions", "datalake", "disc_int_t", intRoot)
+    assert(intCode == 0, intOut)
+    assert(intOut.map(_.replace(tmp, "<tmp>")) == Seq(
+      "Partition [file:<tmp>/disc_int_layout/k=01] already exists",
+      "Partition [file:<tmp>/disc_int_layout/k=02] added",
+      "Partition [file:<tmp>/disc_int_layout/k=1] already exists",
+      "Partition [file:<tmp>/disc_int_layout/k=2] already exists"))
+    assert(partitionRows("disc_int_t") == Seq(
+      Seq("1", "file://<tmp>/disc_int_table/k=1"),
+      Seq("2", "file:<tmp>/disc_int_layout/k=02")))
+  }
+
+  test("A13 discovery fallback: a chunk that meets stored partitions is redone one at a time") {
+    spark.sql(s"CREATE TABLE datalake.disc_stale_t (v BIGINT, year STRING, month STRING) " +
+      s"USING parquet PARTITIONED BY (year, month) LOCATION '$tmp/disc_stale_table'")
+    val root = layout(s"$tmp/disc_stale", "year=2020/month=01", "year=2020/month=02", "_staging")
+    assert(run("add_partitions", "datalake", "disc_stale_t", root)._1 == 0)
+    layout(root, "year=2020/month=03", "x/year=2020/month=03")
+    // a stale listing (no partition stored): the one chunk holds the two
+    // stored specs and a new one, so the catalog refuses it whole
+    val report = engine.catalog.discoverPartitions("datalake", "disc_stale_t", root, _ => Nil)
+    assert(report.map { case (dir, o) => dir.replace(tmp, "<tmp>") -> o.toString } == Seq(
+      "file:<tmp>/disc_stale/_staging" -> "Skipped",
+      "file:<tmp>/disc_stale/x/year=2020/month=03" -> "Added",
+      "file:<tmp>/disc_stale/year=2020/month=01" -> "AlreadyExists",
+      "file:<tmp>/disc_stale/year=2020/month=02" -> "AlreadyExists",
+      "file:<tmp>/disc_stale/year=2020/month=03" -> "AlreadyExists"))
+    assert(partitionRows("disc_stale_t") == Seq(
+      Seq("2020", "03", "file:<tmp>/disc_stale/x/year=2020/month=03"),
+      Seq("2020", "01", "file:<tmp>/disc_stale/year=2020/month=01"),
+      Seq("2020", "02", "file:<tmp>/disc_stale/year=2020/month=02")))
+  }
+
+  test("A12/A14 partition writes leave table stats as ALTER TABLE did") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val dir = s"$tmp/stats_table"
+    spark.range(5).write.parquet(s"$dir/year=2020")
+    spark.range(7).write.parquet(s"$tmp/stats_extra/year=2022")
+    spark.sql(s"CREATE TABLE datalake.stats_t (id BIGINT, year STRING) " +
+      s"USING parquet PARTITIONED BY (year) LOCATION '$dir'")
+    engine.catalog.addPartition("datalake", "stats_t", Map("year" -> "2020"))
+    def stats() = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier("stats_t", Some("datalake"))).stats
+      .map(s => (s.sizeInBytes.toLong, s.rowCount.map(_.toLong)))
+    def analyze() = { spark.sql("ANALYZE TABLE datalake.stats_t COMPUTE STATISTICS"); stats() }
+    val analyzed = analyze()
+    assert(analyzed.exists(_._2.contains(5L)), analyzed)
+    val size = analyzed.get._1
+    val extra = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/stats_extra/year=2022"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum
+    // without size auto-update, a write drops the stats
+    engine.catalog.addPartition("datalake", "stats_t", Map("year" -> "2021"))
+    val added = stats()
+    analyze()
+    engine.catalog.deletePartition("datalake", "stats_t", Map("year" -> "2021"))
+    val dropped = stats()
+    // with it: an empty new partition changes nothing, a non-empty one adds
+    // its files' size, and a drop recomputes the size
+    var auto = Seq.empty[Option[(Long, Option[Long])]]
+    restoring("spark.sql.statistics.size.autoUpdate.enabled") {
+      spark.conf.set("spark.sql.statistics.size.autoUpdate.enabled", "true")
+      analyze()
+      engine.catalog.addPartition("datalake", "stats_t", Map("year" -> "2021"))
+      auto :+= stats()
+      engine.catalog.addPartition("datalake", "stats_t", Map("year" -> "2022"),
+        Some(s"$tmp/stats_extra/year=2022"))
+      auto :+= stats()
+      engine.catalog.deletePartition("datalake", "stats_t", Map("year" -> "2022"))
+      auto :+= stats()
+    }
+    assert((added, dropped, auto) == ((None, None, Seq(
+      Some((size, Some(5L))), Some((size + extra, None)), Some((size, None))))), (size, extra))
+  }
+
+  test("A12/A14 a cached spark.table sees the added and the dropped partition") {
+    val dir = s"$tmp/cache_table"
+    spark.range(3).write.parquet(s"$dir/year=2020")
+    spark.range(4).write.parquet(s"$dir/year=2021")
+    spark.sql(s"CREATE TABLE datalake.cache_t (id BIGINT, year STRING) " +
+      s"USING parquet PARTITIONED BY (year) LOCATION '$dir'")
+    engine.catalog.addPartition("datalake", "cache_t", Map("year" -> "2020"))
+    spark.table("datalake.cache_t").cache()
+    assert(spark.table("datalake.cache_t").count() == 3)
+    engine.catalog.addPartition("datalake", "cache_t", Map("year" -> "2021"))
+    assert(spark.table("datalake.cache_t").count() == 7)
+    engine.catalog.deletePartition("datalake", "cache_t", Map("year" -> "2020"))
+    assert(spark.table("datalake.cache_t").count() == 4)
+    assert(spark.catalog.isCached("datalake.cache_t"))
+    spark.catalog.uncacheTable("datalake.cache_t")
+  }
+
+  test("A12-A14 partition writes on a view exit 1") {
+    spark.sql("CREATE VIEW datalake.usage_v AS SELECT year, month FROM datalake.usage")
+    for (argv <- Seq(
+        Seq("add_partition", "datalake", "usage_v", "--year=2030", "--month=01"),
+        Seq("add_partition", "datalake", "usage_v"),
+        Seq("del_partition", "datalake", "usage_v", "--year=2030", "--month=01"),
+        Seq("del_partition", "datalake", "usage_v"),
+        Seq("add_partitions", "datalake", "usage_v", partedDir))) {
+      val (code, out) = run(argv: _*)
+      assert(code == 1, argv.mkString(" ") + ": " + out.mkString(" | "))
+    }
+  }
+
   // ---- crawler (A15) ----
 
   test("A15 crawler: sync run infers schema, registers table, recovers partitions") {
@@ -178,6 +363,24 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertThrows[Throwable] { engine.crawlers.run("broken_crawler", timeoutSec = 60) }
     assert(engine.crawlers.lastError("broken_crawler").isDefined)
     assert(engine.crawlers.isReady("broken_crawler")) // state machine recovered
+  }
+
+  test("A15 crawler: a sync run awaits the crawl itself, its failure every time, its timeout typed") {
+    engine.crawlers.register(engine.crawlers.CrawlerSpec(
+      "broken_crawler_20", s"$tmp/does_not_exist", "parquet", "datalake", "broken_t20"))
+    for (i <- 1 to 20) {
+      val e = intercept[Throwable] { engine.crawlers.run("broken_crawler_20", timeoutSec = 60) }
+      assert(e.getMessage.contains("does_not_exist"), s"run $i: $e")
+      assert(engine.crawlers.isReady("broken_crawler_20"), s"run $i")
+    }
+    engine.crawlers.register(engine.crawlers.CrawlerSpec(
+      "timeout_crawler", partedDir, "parquet", "datalake", "timeout_crawled"))
+    assertThrows[CrawlerTimeout] { engine.crawlers.run("timeout_crawler", timeoutSec = 0) }
+    // the crawl goes on; a sync run skips its start and awaits it (or,
+    // when it is over already, crawls again)
+    engine.crawlers.run("timeout_crawler", timeoutSec = 120)
+    assert(engine.crawlers.isReady("timeout_crawler"))
+    assert(spark.table("datalake.timeout_crawled").count() == 1000)
   }
 
   test("source formats: crawler infers CSV and JSON-lines layouts too") {
@@ -375,6 +578,56 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dataRow.contains("quick_job --n 4"))
   }
 
+  test("A1/A7/A8 listings are answered on the driver: collecting them starts no Spark job") {
+    engine.jobs.runJob("quick_job")
+    for ((what, df) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "listTables" -> (() => engine.catalog.listTables()),
+        "listTables pushed" -> (() => engine.catalog.listTables(Some("hive*"))),
+        "listTables residual" -> (() => engine.catalog.listTables(Some("?os_t"))),
+        "listRuns" -> (() => engine.jobs.listRuns("quick_job", Some(2))),
+        "printJobRuns named" -> (() => engine.jobs.printJobRuns(Some("quick_job"), Some(2))),
+        "printJobRuns all" -> (() => engine.jobs.printJobRuns(None, Some(2))))) {
+      val (rows, jobs) = jobsStartedBy(df().collect())
+      assert(rows.nonEmpty && jobs == 0, s"$what: ${rows.length} rows, $jobs jobs")
+    }
+  }
+
+  test("A1/A7/A8 listing order equals Spark's: started_on ties, names beyond the BMP") {
+    // runs recorded with chosen start times into a runner of their own
+    val jr = new graft.jobs.JobRunner(spark)
+    val (yen, smile) = ("j￥", "j😀") // U+FFE5, U+1F600
+    Seq("tie_b", "tie_a", yen, smile).foreach(n =>
+      jr.register(jr.JobSpec(n, (s, _) => s.range(1).toDF())))
+    val t0 = 1700000000000L
+    Seq("tie_a" -> 0, "tie_a" -> 0, "tie_b" -> 0, "tie_a" -> -1000, "tie_b" -> 0, "tie_a" -> 0,
+        smile -> 5, yen -> 5, "tie_b" -> 500, "tie_a" -> 0).zipWithIndex.foreach {
+      case ((n, dt), i) =>
+        jr.record(jr.JobRun(i + 1L, n, jr.Succeeded, new java.sql.Timestamp(t0 + dt), None,
+          0, Map("r" -> (i + 1).toString), 2, None))
+    }
+    def runIds(df: org.apache.spark.sql.DataFrame) =
+      df.select("run_id").collect().map(_.getLong(0)).toSeq
+    def display(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => s"${r.getString(4)} ${r.getString(3)} ${r.getString(5)}").toSeq
+    // names: U+FFE5 is 3 UTF-8 bytes (EF BF A5) and sorts before the 4-byte
+    // U+1F600 (F0 …), though its UTF-16 unit 0xFFE5 is above 0xD83D
+    Seq("zz_￥", "zz_😀", "zz_a").foreach(t =>
+      spark.sql(s"CREATE OR REPLACE TEMP VIEW `$t` AS SELECT 1 AS v"))
+    val names = engine.catalog.listTables(Some("zz_*")).collect()
+      .map(r => s"${r.getString(0)}.${r.getString(1)}").toSeq
+    val at = "2023-11-14T22:13:20"
+    assert(runIds(jr.listRuns("tie_a")) == Seq(10, 6, 2, 1, 4))
+    assert(runIds(jr.listRuns("tie_a", Some(2))) == Seq(10, 6))
+    assert(display(jr.printJobRuns(None)) ==
+      Seq(s"$yen $at --r 8", s"$smile $at --r 7", s"tie_a $at --r 10", s"tie_b $at --r 9"))
+    assert(display(jr.printJobRuns(None, Some(2))) == Seq(s"$yen $at --r 8", s"$smile $at --r 7",
+      s"tie_a $at --r 10", s"tie_a $at --r 6", s"tie_b $at --r 9", s"tie_b $at --r 5"))
+    assert(display(jr.printJobRuns(Some("tie_b"), Some(2))) ==
+      Seq(s"tie_b $at --r 9", s"tie_b $at --r 5"))
+    assert(names == Seq("datalake.zz_a", "datalake.zz_￥", "datalake.zz_😀",
+      "default.zz_a", "default.zz_￥", "default.zz_😀"))
+  }
+
   test("A16 run_job CLI: --timeout is a reserved poll param, not a job arg") {
     // sync run with --timeout=1 on a slow job exits via JobTimeout (exit 1)…
     val (code, _) = run("run_job", "slow_job", "--timeout=1", "--delay=1")
@@ -513,28 +766,28 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("invalid option → exit 1") {
     assert(run("list_partitions")._1 == 1) // missing required positionals
-    // malformed numeric values name the flag instead of escaping main
-    for ((argv, flag) <- Seq(
+    spark.sql(s"CREATE TABLE datalake.flat_t (v BIGINT) USING parquet LOCATION '$tmp/flat_table'")
+    val missing = s"$tmp/no_such_layout"
+    // malformed values name the flag, table or path instead of escaping main
+    for ((argv, named) <- Seq(
         Seq("run_crawler", "any_crawler", "--timeout=abc") -> "--timeout",
         Seq("run_job", "any_job", "--timeout=abc") -> "--timeout",
-        Seq("list_runs", "--lines=abc") -> "--lines")) {
+        Seq("list_runs", "--lines=abc") -> "--lines",
+        Seq("list_runs", "--lines=-1") -> "--lines",
+        Seq("list_runs", "quick_job", "--lines=-1") -> "--lines",
+        Seq("add_partitions", "datalake", "flat_t", partedDir) -> "datalake.flat_t",
+        Seq("add_partitions", "datalake", "usage", missing) -> missing)) {
       val (code, out) = run(argv: _*)
       assert(code == 1, argv.mkString(" "))
-      assert(out.exists(_.contains(flag)), out.mkString("\n"))
+      assert(out.exists(_.contains(named)), out.mkString("\n"))
     }
   }
 
   test("fixture schema memo: inferred once, keyed by file status and parquet confs, fresh frames") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     import graft.operators.table
-    val sc = spark.sparkContext
     val nanos = "spark.sql.legacy.parquet.nanosAsLong"
     val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    def restoring(key: String)(body: => Unit): Unit = {
-      val prev = spark.conf.getAll.get(key)
-      try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
     // (a) every fixture, both with and without events()'s nanosAsLong
     val fixtures = new java.io.File(sfDir).list().filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).sorted.toSeq
@@ -546,42 +799,16 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
           spark.read.parquet(s"$sfDir/$t.parquet").schema, s"$t (nanosAsLong=$nanosAsLong)")
       }
     }
-    // (b) a warm read starts no Spark job; a bare read does (the listener
-    // sees this thread's jobs only: async runs from other tests may still
-    // be going). A sentinel job drains the bus: events arrive in order.
-    val tag = "graft.test.schemaMemo"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    var drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
-          case Some("sentinel") => drained.countDown()
-          case Some(_) => jobs.incrementAndGet()
-          case None => ()
-        }
-    }
-    def jobsStartedBy[T](body: => T): (T, Int) = {
-      jobs.set(0)
-      sc.setLocalProperty(tag, "read")
-      val out = try body finally sc.setLocalProperty(tag, null)
-      drained = new java.util.concurrent.CountDownLatch(1)
-      sc.setLocalProperty(tag, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
-      (out, jobs.get)
-    }
+    // (b) a warm read starts no Spark job; a bare read does
     val first = table(spark, sfDir, "orders")
-    sc.addSparkListener(listener)
-    try {
-      assert(jobsStartedBy(spark.read.parquet(s"$sfDir/orders.parquet"))._2 >= 1)
-      val (second, warmJobs) = jobsStartedBy(table(spark, sfDir, "orders"))
-      assert(warmJobs == 0)
-      // a fresh frame per call: a self-join of two reads resolves
-      assert(first.queryExecution.analyzed.output.map(_.exprId).toSet
-        .intersect(second.queryExecution.analyzed.output.map(_.exprId).toSet).isEmpty)
-      assert(first.as("a").join(second.as("b"), col("a.o_orderkey") === col("b.o_orderkey"))
-        .count() == first.count())
-    } finally sc.removeSparkListener(listener)
+    assert(jobsStartedBy(spark.read.parquet(s"$sfDir/orders.parquet"))._2 >= 1)
+    val (second, warmJobs) = jobsStartedBy(table(spark, sfDir, "orders"))
+    assert(warmJobs == 0)
+    // a fresh frame per call: a self-join of two reads resolves
+    assert(first.queryExecution.analyzed.output.map(_.exprId).toSet
+      .intersect(second.queryExecution.analyzed.output.map(_.exprId).toSet).isEmpty)
+    assert(first.as("a").join(second.as("b"), col("a.o_orderkey") === col("b.o_orderkey"))
+      .count() == first.count())
     // (c) an inferTimestampNTZ flip infers afresh, and back
     assert(table(spark, sfDir, "orders").schema("o_orderdate").dataType == TimestampNTZType)
     restoring(ntz) {
