@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // Host-load sentinel (VERDICT r8 item 3): r8's driver bench read 329 s
@@ -31,14 +30,7 @@ object Bench {
     }
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cores)
     // JVM/codegen warmup so the first measured query isn't charged for it
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // exercise the core execution machinery (shuffle, window, join, agg

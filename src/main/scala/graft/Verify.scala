@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +8,11 @@ object Verify {
     // optional trailing query names → dump only those (local iteration with
     // tools/self_check.py, which takes the same trailing filter)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // micros parquet output: the driver's DuckDB oracle produces us-precision
-      // timestamps; INT96 (the default) round-trips as ns and can skew a
-      // dtype-sensitive compare
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // micros parquet output: the driver's DuckDB oracle produces us-precision
+    // timestamps; INT96 (the default) round-trips as ns and can skew a
+    // dtype-sensitive compare
+    val spark = Sessions.local(Sessions.cores,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -77,13 +77,13 @@ final class GraftCatalog(spark: SparkSession) {
     import spark.implicits._
     val pat = pattern.filter(_.nonEmpty)
     val pushed = pat.filter(catalogPushable)
+    val glob = pushed.getOrElse("*")
+    // a local temp view belongs to no database: listed once, with an empty
+    // database name, as SHOW TABLES reports it
     val rows = sessionCatalog.listDatabases().flatMap { db =>
-      val listed = pushed match {
-        case Some(p) => sessionCatalog.listTables(db, p)
-        case None => sessionCatalog.listTables(db)
-      }
-      listed.map(ti => (ti.database.getOrElse(db), ti.table))
-    }
+      sessionCatalog.listTables(db, glob, includeLocalTempViews = false)
+        .map(ti => (ti.database.getOrElse(db), ti.table))
+    } ++ sessionCatalog.listLocalTempViews(glob).map(ti => ("", ti.table))
     val df = rows.sorted(Ordering.Tuple2(utf8Order, utf8Order))
       .toDF("database_name", "table_name")
     pat.map(p => df.filter(globMatch(col("table_name"), p))).getOrElse(df)

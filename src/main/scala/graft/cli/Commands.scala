@@ -322,8 +322,7 @@ object Commands {
     } catch {
       case w: GraftWarning   => out(w.getMessage); 0
       case x: GraftException => out(x.getMessage); 1
-      case x: org.apache.spark.sql.AnalysisException => out(x.getMessage); 1
-      case x: org.apache.spark.SparkException => out(x.getMessage); 1
+      case x: Exception with org.apache.spark.SparkThrowable => out(x.getMessage); 1
     }
   }
 }
@@ -333,37 +332,26 @@ object Commands {
   * reference's code contract. */
 object Main {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // GRAFT_WAREHOUSE=<dir> → Hive metastore (embedded Derby) under the
     // dir, so tables/partitions registered by one CLI invocation are
     // visible to the next — the durable-catalog behavior of the reference's
     // Glue backend. Unset → session-scoped in-memory catalog.
-    val spark = sys.env.get("GRAFT_WAREHOUSE") match {
-      case Some(dir) =>
-        builder
-          .config("spark.sql.warehouse.dir", s"$dir/warehouse")
-          .config("javax.jdo.option.ConnectionURL",
-            s"jdbc:derby:;databaseName=$dir/metastore_db;create=true")
-          .config("spark.sql.catalogImplementation", "hive")
-          .getOrCreate()
-      case None => builder.getOrCreate()
-    }
-    spark.sparkContext.setLogLevel("WARN")
-    val engine = new GraftEngine(spark,
-      sys.env.get("GRAFT_WAREHOUSE").map(d => java.nio.file.Paths.get(d, "crawlers.tsv")))
-    val defaultDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    graft.SparkEntry.registry.foreach { q =>
-      engine.jobs.register(engine.jobs.JobSpec(q.name,
-        (s, params) => q.build(s, params.getOrElse("dir", defaultDir))))
-    }
-    val code = Commands.main(engine, args.toSeq)
-    spark.stop()
+    val warehouse = sys.env.get("GRAFT_WAREHOUSE")
+    val spark = Sessions.local(Sessions.cores, warehouse.toSeq.flatMap(dir => Seq(
+      "spark.sql.warehouse.dir" -> s"$dir/warehouse",
+      "javax.jdo.option.ConnectionURL" -> s"jdbc:derby:;databaseName=$dir/metastore_db;create=true",
+      "spark.sql.catalogImplementation" -> "hive")): _*)
+    val code =
+      try {
+        val engine =
+          new GraftEngine(spark, warehouse.map(d => java.nio.file.Paths.get(d, "crawlers.tsv")))
+        val defaultDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+        graft.SparkEntry.registry.foreach { q =>
+          engine.jobs.register(engine.jobs.JobSpec(q.name,
+            (s, params) => q.build(s, params.getOrElse("dir", defaultDir))))
+        }
+        Commands.main(engine, args.toSeq)
+      } finally spark.stop()
     sys.exit(code)
   }
 }

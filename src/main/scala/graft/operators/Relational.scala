@@ -3691,15 +3691,14 @@ object Relational {
     "q245_sql_scripting",
     "Procedural SQL: WHILE/IF binary search for the half-revenue price threshold == closed form",
     (s, dir) => {
-      table(s, dir, "orders")
+      val s2 = scoped(s, "spark.sql.scripting.enabled" -> "true")
+      table(s2, dir, "orders")
         .selectExpr("CAST(round(o_totalprice * 100) AS BIGINT) AS cents")
         .selectExpr("(cents + 99) div 100 AS d", "cents")
         .groupBy("d").agg(sum("cents").as("cents"))
         .cache() // bucket-cardinality; probed ~20x by the script's loop
         .createOrReplaceTempView("q245_rollup")
-      val saved = s.conf.getOption("spark.sql.scripting.enabled").getOrElse("false")
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      try s.sql(
+      s2.sql(
         """BEGIN
           |  DECLARE total BIGINT DEFAULT 0;
           |  DECLARE lo BIGINT DEFAULT 0;
@@ -3722,7 +3721,6 @@ object Relational {
           |  SELECT lo AS threshold_dollars,
           |         covered * 10000 DIV total AS covered_bp;
           |END""".stripMargin)
-      finally s.conf.set("spark.sql.scripting.enabled", saved)
     },
     Some("""
       WITH o AS (

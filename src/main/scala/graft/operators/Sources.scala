@@ -559,8 +559,6 @@ object Sources {
       GROUP BY 1
       ORDER BY m"""))
 
-  private val occSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** OPTIMISTIC CONCURRENCY on the DSv2 snapshot store — the
     * Iceberg/Delta commit-conflict contract q143's round trip left
     * unexercised: every writer runs the read-modify-write loop (read the
@@ -582,7 +580,7 @@ object Sources {
     (s, dir) => {
       import org.apache.spark.sql.functions._
       import graft.sources.MemTable
-      val key = s"q189_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val key = s"q189_${runTag()}"
       val fmt = "graft.sources.MemTable"
       def slice(t: String) = events(s, dir)
         .filter(col("event_type") === t)
@@ -663,16 +661,14 @@ object Sources {
     "Three-part-identifier SQL through a registered TableCatalog, partition pruning intact",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tbl =
-        s"graft_cat.corpus.ev_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
-      events(s, dir)
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tbl = s"graft_cat.corpus.ev_${runTag()}"
+      events(s2, dir)
         .select(col("event_id"), col("user_id"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
           expr("CAST(user_id % 4 AS STRING)").as("bucket"))
         .writeTo(tbl).partitionedBy(col("bucket")).create()
-      s.sql(
+      s2.sql(
         s"""SELECT bucket, count(*) AS n, sum(cents) AS total_cents,
                    count(DISTINCT user_id) AS n_users
             FROM $tbl
@@ -709,16 +705,14 @@ object Sources {
     "Two co-partitioned DSv2 tables join with zero exchanges (storage-partitioned join)",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      // join keys (bucket, user) are a SUPERSET of the partition keys
-      // (bucket); co-partitioning on the subset is exactly SPJ's case,
-      // gated by this conf (default true = exact match only)
-      s2.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      s2.conf.set("spark.sql.shuffle.partitions", "4")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat") ++ Seq(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        // join keys (bucket, user) are a SUPERSET of the partition keys
+        // (bucket); co-partitioning on the subset is exactly SPJ's case,
+        // gated by this conf (default true = exact match only)
+        "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+        "spark.sql.shuffle.partitions" -> "4"): _*)
+      val tag = runTag()
       def sideTable(t: String): String = {
         val tbl = s"graft_cat.spj.${t}_$tag"
         events(s2, dir).filter(col("event_type") === t)
@@ -823,7 +817,7 @@ object Sources {
     (s, dir) => {
       import org.apache.spark.sql.functions._
       import graft.sources.MemTable
-      val key = s"q200_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val key = s"q200_${runTag()}"
       val fmt = "graft.sources.MemTable"
       def write(df: org.apache.spark.sql.DataFrame): Unit =
         df.write.format(fmt)
@@ -895,7 +889,7 @@ object Sources {
     "DSv2 top-N pushdown serves the cut source-side; reported stats broadcast the join hint-free",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val key = s"q212_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val key = s"q212_${runTag()}"
       events(s, dir)
         .groupBy(col("user_id"))
         .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"),
@@ -951,7 +945,7 @@ object Sources {
     "COUNT/SUM/MIN/MAX per partition answered inside the connector: no Aggregate node planned",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val key = s"q216_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val key = s"q216_${runTag()}"
       events(s, dir)
         .select(col("event_id"), col("user_id"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
@@ -994,7 +988,7 @@ object Sources {
     "Join-driven runtime partition pruning inside the connector: 5 committed -> 2 scanned",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val key = s"q217_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val key = s"q217_${runTag()}"
       events(s, dir)
         .select(col("event_id"), col("user_id"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
@@ -1050,7 +1044,7 @@ object Sources {
     "_partition/_commit_version metadata columns: provenance rollup from split-level state",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val key = s"q220_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val key = s"q220_${runTag()}"
       def write(): Unit = events(s, dir)
         .select(col("event_id"), col("user_id"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
@@ -1099,7 +1093,7 @@ object Sources {
     "DSv2 vectorized read: ColumnarBatch-serving reader under pruned partitions, oracle-checked",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val key = s"q226_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val key = s"q226_${runTag()}"
       events(s, dir)
         .select(col("event_id"), col("user_id"),
           expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
@@ -1283,15 +1277,11 @@ object Sources {
     "DELETE FROM / TRUNCATE TABLE through SupportsDeleteV2: source-side predicate, no rewrite job",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val sfx = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val sfx = runTag()
       val tbl = s"graft_cat.corpus.del_$sfx"
       val tbl2 = s"graft_cat.corpus.trunc_$sfx"
-      val src = table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val src = ordersCents(s2, dir)
       src.writeTo(tbl).partitionedBy(col("status")).create()
       src.writeTo(tbl2).partitionedBy(col("status")).create()
       s2.sql(s"DELETE FROM $tbl WHERE status = 'F' OR cents < 10000000")
@@ -1339,14 +1329,9 @@ object Sources {
     "SQL UPDATE via SupportsRowLevelOperations: group-based rewrite, pruned + full paths",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tbl =
-        s"graft_cat.corpus.upd_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tbl = s"graft_cat.corpus.upd_${runTag()}"
+      ordersCents(s2, dir)
         .writeTo(tbl).partitionedBy(col("status")).create()
       // pruned rewrite: only partition F is scanned; qualifying rows MOVE
       // to partition R (the written group lands outside the scanned set)
@@ -1397,14 +1382,10 @@ object Sources {
     "SQL MERGE INTO via SupportsRowLevelOperations: UPDATE + INSERT + NOT-MATCHED-BY-SOURCE DELETE",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.mrg_$tag"
-      val base = table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val base = ordersCents(s2, dir)
       base.filter(col("okey") % 3 =!= 0)
         .writeTo(tbl).partitionedBy(col("status")).create()
       base.filter(col("okey") % 2 === 0)
@@ -1458,14 +1439,9 @@ object Sources {
     "SQL VERSION AS OF: initial snapshot and post-mutation head read in one query",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tbl =
-        s"graft_cat.corpus.tt_${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tbl = s"graft_cat.corpus.tt_${runTag()}"
+      ordersCents(s2, dir)
         .writeTo(tbl).partitionedBy(col("status")).create() // publishes v1
       s2.sql(s"DELETE FROM $tbl WHERE status = 'F'")          // v2
       s2.sql(s"UPDATE $tbl SET cents = cents + 9 WHERE okey % 5 = 0") // v3
@@ -1511,15 +1487,11 @@ object Sources {
     "ALTER TABLE ADD COLUMNS + RENAME TO: NULL-padded history, 2nd-gen insert, UPDATE backfill",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tmp = s"graft_cat.corpus.evotmp_$tag"
       val tbl = s"graft_cat.corpus.evo_$tag"
-      val base = table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val base = ordersCents(s2, dir)
       base.filter(col("okey") % 2 === 0)
         .writeTo(tmp).partitionedBy(col("status")).create()
       // RENAME target resolves within the source table's catalog
@@ -1579,14 +1551,10 @@ object Sources {
     "SupportsDelta merge-on-read: partition-moving UPDATE + delta DELETE + 3-branch MERGE by row id",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.dlt_$tag"
-      val base = table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val base = ordersCents(s2, dir)
       base.filter(col("okey") % 3 =!= 0)
         .writeTo(tbl).partitionedBy(col("status"))
         .tableProperty("deltaIdCol", "okey").create()
@@ -1658,14 +1626,10 @@ object Sources {
     "ADD/DROP/RENAME/TRUNCATE PARTITION + SHOW PARTITIONS: catalog-object lifecycle, hash-fused with data",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.pdl_$tag"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .writeTo(tbl).partitionedBy(col("status")).create()
       s2.sql(s"ALTER TABLE $tbl ADD PARTITION (status = 'Z')")
       s2.sql(s"ALTER TABLE $tbl PARTITION (status = 'P') RENAME TO PARTITION (status = 'P2')")
@@ -1719,17 +1683,11 @@ object Sources {
     "Durable V2 catalog: parquet+manifest spill, restart-surviving head, VERSION AS OF, declared partitions",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_dur",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.catalog.graft_dur.warehouse",
-        "spark-warehouse/graft_catalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_dur", Some("spark-warehouse/graft_catalog")): _*)
+      val tag = runTag()
       val tbl = s"graft_dur.corpus.dur_$tag"
       val key = s"cat!graft_dur!corpus!dur_$tag"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .writeTo(tbl).partitionedBy(col("status")).create()     // v1
       s2.sql(s"DELETE FROM $tbl WHERE status = 'F'")              // v2
       s2.sql(s"UPDATE $tbl SET cents = cents + 9 WHERE okey % 5 = 0") // v3
@@ -1793,16 +1751,11 @@ object Sources {
     "SQL TIMESTAMP AS OF: latest-commit-≤-instant resolution, composed with VERSION AS OF in one statement",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.session.timeZone", "UTC")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat") :+ ("spark.sql.session.timeZone" -> "UTC"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.tsof_$tag"
       val key = s"cat!graft_cat!corpus!tsof_$tag"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .writeTo(tbl).partitionedBy(col("status")).create()     // v1
       s2.sql(s"DELETE FROM $tbl WHERE status = 'F'")              // v2
       s2.sql(s"UPDATE $tbl SET cents = cents + 9 WHERE okey % 5 = 0") // v3
@@ -1859,15 +1812,11 @@ object Sources {
     "DESCRIBE HISTORY analog: per-version row/partition counts + monotone commit-ts audit",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.hist_$tag"
       val key = s"cat!graft_cat!corpus!hist_$tag"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .writeTo(tbl).partitionedBy(col("status")).create() // v0 create, v1 rows
       s2.sql(s"DELETE FROM $tbl WHERE status = 'F'")          // v2
       s2.sql(s"UPDATE $tbl SET cents = cents + 9 WHERE okey % 5 = 0") // v3
@@ -1914,15 +1863,11 @@ object Sources {
     "CREATE TABLE AS SELECT ... VERSION AS OF: snapshot clone independent of later base commits",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.ctb_$tag"
       val clone = s"graft_cat.corpus.ctc_$tag"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .writeTo(tbl).partitionedBy(col("status")).create()     // v1
       s2.sql(s"UPDATE $tbl SET cents = cents + 9 WHERE okey % 5 = 0") // v2
       s2.sql(s"CREATE TABLE $clone PARTITIONED BY (status) AS " +
@@ -1971,10 +1916,8 @@ object Sources {
     "CREATE/ALTER/SHOW/DESCRIBE/DROP NAMESPACE: declared-or-implied namespaces, CASCADE purge, fused with data",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val ns = s"nsd_$tag"
       val tbl = s"graft_cat.$ns.orders_t"
       s2.sql(s"CREATE NAMESPACE graft_cat.$ns")
@@ -2048,18 +1991,13 @@ object Sources {
     "q293_column_defaults",
     "CREATE TABLE … DEFAULT: omitted-column, DEFAULT-keyword, and explicit inserts, analyzer-filled",
     (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.dflt_$tag"
       s2.sql(
         s"""CREATE TABLE $tbl (okey BIGINT, status STRING, cents BIGINT,
             flag BIGINT DEFAULT 5) PARTITIONED BY (status)""")
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .createOrReplaceTempView(s"dflt_src_$tag")
       // (a) column-list insert omitting the defaulted column
       s2.sql(s"""INSERT INTO $tbl (okey, status, cents)
@@ -2112,15 +2050,11 @@ object Sources {
     "REPLACE TABLE AS SELECT via StagingTableCatalog: staged swap, pre-replace time travel, failed-write no-op",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.rpl_$tag"
       val key = s"cat!graft_cat!corpus!rpl_$tag"
-      val base = table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val base = ordersCents(s2, dir)
       base.filter(col("okey") % 2 === 0)
         .writeTo(tbl).partitionedBy(col("status")).create()   // v1: even half
       base.createOrReplaceTempView(s"rpl_src_$tag")
@@ -2190,19 +2124,14 @@ object Sources {
     "q295_identity_columns",
     "GENERATED ALWAYS AS IDENTITY: commit-time watermark assignment across two inserts, explicit-insert refusal",
     (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.idn_$tag"
       s2.sql(
         s"""CREATE TABLE $tbl (
               doc_id BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 100 INCREMENT BY 2),
               status STRING, cents BIGINT) PARTITIONED BY (status)""")
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .createOrReplaceTempView(s"idn_src_$tag")
       s2.sql(s"""INSERT INTO $tbl (status, cents)
                  SELECT status, cents FROM idn_src_$tag WHERE okey % 2 = 0""")
@@ -2259,19 +2188,14 @@ object Sources {
     "q296_check_constraints",
     "CHECK constraints: write-guard enforcement, ALTER ADD existing-row validation, DROP lifts the guard",
     (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.chk_$tag"
       s2.sql(
         s"""CREATE TABLE $tbl (okey BIGINT, status STRING, cents BIGINT,
             CONSTRAINT non_negative CHECK (cents >= 0))
             PARTITIONED BY (status)""")
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .createOrReplaceTempView(s"chk_src_$tag")
       s2.sql(s"INSERT INTO $tbl SELECT okey, status, cents FROM chk_src_$tag")
       // write-guard: the violating row fails the job; nothing commits
@@ -2338,11 +2262,8 @@ object Sources {
     "q297_generated_columns",
     "GENERATED ALWAYS AS (expr): commit-time synthesis, explicit-mismatch rejection, rollup by generated tag",
     (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.gen_$tag"
       s2.sql(
         s"""CREATE TABLE $tbl (
@@ -2351,9 +2272,7 @@ object Sources {
               gtag STRING GENERATED ALWAYS AS (
                 CONCAT(status, '#', CAST(cents DIV 10000000 AS STRING))))
             PARTITIONED BY (status)""")
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .createOrReplaceTempView(s"gen_src_$tag")
       // omitted generated columns: synthesized at commit, row by row
       s2.sql(s"""INSERT INTO $tbl (okey, status, cents)
@@ -2408,17 +2327,12 @@ object Sources {
     "q298_call_procedures",
     "CALL procedures: restore to a version (new commit) + expire_history pruning retention, results hashed",
     (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.prc_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, status STRING, cents BIGINT)
                  PARTITIONED BY (status)""")
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .createOrReplaceTempView(s"prc_src_$tag")
       // v1..v3: three tranches
       (0 to 2).foreach(i =>
@@ -2488,10 +2402,8 @@ object Sources {
     "q299_catalog_functions",
     "FunctionCatalog: magic-method scalar + two-phase V2 aggregate over documents, DuckDB-replayed",
     (s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       table(s2, dir, "documents").createOrReplaceTempView(s"fn_docs_$tag")
       s2.sql(
         s"""SELECT lang, count(*) AS n,
@@ -2534,17 +2446,12 @@ object Sources {
     "MERGE WITH SCHEMA EVOLUTION: source column auto-added via ALTER, matched/unmatched/inserted semantics hashed",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.mse_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, status STRING, cents BIGINT)
                  PARTITIONED BY (status)""")
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
-          col("o_orderpriority").as("prio"))
+      ordersCents(s2, dir, col("o_orderpriority").as("prio"))
         .createOrReplaceTempView(s"mse_src_$tag")
       // target: thirds 0 and 1 (no prio column exists yet)
       s2.sql(s"""INSERT INTO $tbl
@@ -2611,17 +2518,12 @@ object Sources {
     "q301_alter_column_default",
     "ALTER COLUMN SET/DROP DEFAULT: three default regimes, metadata-only commits, no row rewrites",
     (s, dir) => {
-      import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.adf_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, status STRING, cents BIGINT,
                  flag BIGINT DEFAULT 5) PARTITIONED BY (status)""")
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .createOrReplaceTempView(s"adf_src_$tag")
       def wave(third: Int): Unit =
         s2.sql(s"""INSERT INTO $tbl (okey, status, cents)
@@ -2681,10 +2583,8 @@ object Sources {
     "INSERT OVERWRITE: static PARTITION spec + dynamic partition overwrite, untouched partition audited",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.ovw_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, cents BIGINT, status STRING)
                  PARTITIONED BY (status)""")
@@ -2741,13 +2641,11 @@ object Sources {
     "sortedBy tables + reported ordering: SPJ merge join with zero exchanges and zero input sorts",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s2.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      s2.conf.set("spark.sql.shuffle.partitions", "4")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat") ++ Seq(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+        "spark.sql.shuffle.partitions" -> "4"): _*)
+      val tag = runTag()
       def sideTable(t: String, aggCols: Seq[org.apache.spark.sql.Column]): String = {
         val tbl = s"graft_cat.spj.srt_${t}_$tag"
         events(s2, dir).filter(col("event_type") === t)
@@ -2803,10 +2701,8 @@ object Sources {
     "connector custom metrics: rows-served and planned-partitions read from the executed scan, oracle-matched",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.met_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, cents BIGINT, status STRING)
                  PARTITIONED BY (status)""")
@@ -2877,17 +2773,12 @@ object Sources {
     "DSv2 join pushdown: 3-way equi-join + filter served by ONE scan, audited and oracle-matched",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat") ++ Seq(
+        "spark.sql.optimizer.datasourceV2JoinPushdown" -> "true"): _*)
+      val tag = runTag()
       val (ta, tb, tc) = (s"graft_cat.corpus.jpa_$tag",
         s"graft_cat.corpus.jpb_$tag", s"graft_cat.corpus.jpc_$tag")
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
-          col("o_orderpriority").as("prio"))
+      ordersCents(s2, dir, col("o_orderpriority").as("prio"))
         .createOrReplaceTempView(s"jp_src_$tag")
       s2.sql(s"""CREATE TABLE $ta (okey BIGINT, status STRING, cents BIGINT)
                  PARTITIONED BY (status) TBLPROPERTIES ('extendedPushdown'='true')""")
@@ -2951,10 +2842,8 @@ object Sources {
     "ORDER BY + LIMIT + OFFSET all pushed: exact page served source-side, pushdown audited",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.pag_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, cents BIGINT, status STRING)
                  PARTITIONED BY (status)""")
@@ -3001,10 +2890,8 @@ object Sources {
     "TABLESAMPLE REPEATABLE pushed into the scan: systematic sample, exact oracle replay, no Sample node",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.smp_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, cents BIGINT, status STRING)
                  PARTITIONED BY (status)""")
@@ -3063,10 +2950,8 @@ object Sources {
     "RequiresDistributionAndOrdering: clustered write keeps partitions task-whole (commit-message audit + control)",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val clustered = s"graft_cat.corpus.cw_$tag"
       val control = s"graft_cat.corpus.cwc_$tag"
       s2.sql(s"""CREATE TABLE $clustered (okey BIGINT, cents BIGINT, status STRING)
@@ -3126,10 +3011,8 @@ object Sources {
     "q309_catalog_introspection",
     "DESCRIBE EXTENDED + SHOW TBLPROPERTIES + SHOW CREATE TABLE: declared contracts read back, fact-pinned",
     (s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.intr_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, cents BIGINT DEFAULT 7,
                  status STRING) PARTITIONED BY (status)
@@ -3190,10 +3073,8 @@ object Sources {
     "RENAME/DROP COLUMN + comment: schema-per-snapshot evolution, dropped data readable via time travel",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
+      val tag = runTag()
       val tbl = s"graft_cat.corpus.clc_$tag"
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, cents BIGINT, extra BIGINT,
                  status STRING) PARTITIONED BY (status)""")
@@ -3274,17 +3155,11 @@ object Sources {
     "Durable catalog restore serves batch scans from spilled parquet through executors (no driver rehydration)",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_fbr",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.catalog.graft_fbr.warehouse",
-        "spark-warehouse/graft_catalog_fbr")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_fbr", Some("spark-warehouse/graft_catalog_fbr")): _*)
+      val tag = runTag()
       val tbl = s"graft_fbr.corpus.fbr_$tag"
       val key = s"cat!graft_fbr!corpus!fbr_$tag"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .writeTo(tbl).partitionedBy(col("status")).create()
       // ---- process restart: all in-memory state dies; the next read
       // restores a manifest-only snapshot over the spilled files
@@ -3376,11 +3251,9 @@ object Sources {
     "VARIANT columns + SupportsPushDownVariantExtractions: source-served typed paths, plan-asserted",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_varc",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.variant.pushVariantIntoScan", "true")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_varc") ++ Seq(
+        "spark.sql.variant.pushVariantIntoScan" -> "true"): _*)
+      val tag = runTag()
       val tbl = s"graft_varc.corpus.vx_$tag"
       s2.sql(s"CREATE TABLE $tbl (k BIGINT, status STRING, v VARIANT) PARTITIONED BY (status)")
       table(s2, dir, "orders").createOrReplaceTempView(s"vx_src_$tag")
@@ -3459,12 +3332,8 @@ object Sources {
     "File-backed restore scans skip row groups by chunk statistics and decode only referenced columns",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_rgp",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.catalog.graft_rgp.warehouse",
-        "spark-warehouse/graft_catalog_rgp")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_rgp", Some("spark-warehouse/graft_catalog_rgp")): _*)
+      val tag = runTag()
       val tbl = s"graft_rgp.corpus.rgp_$tag"
       val key = s"cat!graft_rgp!corpus!rgp_$tag"
       // small row groups DECLARED PER TABLE (ADVICE r14: the global knob
@@ -3554,12 +3423,8 @@ object Sources {
     "Pushed COUNT/MIN/MAX over a restored table answer from manifest + footers; SUM refuses and runs engine-side, file-backed",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_mag",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.catalog.graft_mag.warehouse",
-        "spark-warehouse/graft_catalog_mag")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_mag", Some("spark-warehouse/graft_catalog_mag")): _*)
+      val tag = runTag()
       val tbl = s"graft_mag.corpus.mag_$tag"
       val key = s"cat!graft_mag!corpus!mag_$tag"
       table(s2, dir, "orders")
@@ -3658,12 +3523,8 @@ object Sources {
     "File-backed scans skip data pages by column-index bounds and whole groups by dictionary probes",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_pgp",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.catalog.graft_pgp.warehouse",
-        "spark-warehouse/graft_catalog_pgp")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_pgp", Some("spark-warehouse/graft_catalog_pgp")): _*)
+      val tag = runTag()
       val tbl = s"graft_pgp.corpus.pgp_$tag"
       val key = s"cat!graft_pgp!corpus!pgp_$tag"
       table(s2, dir, "orders")
@@ -3770,12 +3631,8 @@ object Sources {
     "Pushed string MIN/MAX over a restored table serve exact footer bounds; engine and oracle replays agree",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_smm",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.catalog.graft_smm.warehouse",
-        "spark-warehouse/graft_catalog_smm")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_smm", Some("spark-warehouse/graft_catalog_smm")): _*)
+      val tag = runTag()
       val tbl = s"graft_smm.corpus.smm_$tag"
       val key = s"cat!graft_smm!corpus!smm_$tag"
       val svExpr = """CASE WHEN o_orderstatus = 'P' THEN NULL
@@ -3880,12 +3737,8 @@ object Sources {
     "Parquet bloom filters on spill columns: an in-bounds absent needle skips every group from the filter alone",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_blm",
-        "graft.sources.GraftSparkCatalog")
-      s2.conf.set("spark.sql.catalog.graft_blm.warehouse",
-        "spark-warehouse/graft_catalog_blm")
-      val tag = s"${ProcessHandle.current().pid()}_${occSeq.incrementAndGet()}"
+      val s2 = scoped(s, graftCatalog("graft_blm", Some("spark-warehouse/graft_catalog_blm")): _*)
+      val tag = runTag()
       val tbl = s"graft_blm.corpus.blm_$tag"
       val key = s"cat!graft_blm!corpus!blm_$tag"
       table(s2, dir, "orders")

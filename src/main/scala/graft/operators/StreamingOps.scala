@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
@@ -22,17 +21,6 @@ import org.apache.spark.sql.types.StructType
   * its Spark-native form.
   */
 object StreamingOps {
-
-  private val runSeq = new AtomicInteger(0)
-
-  /** Scratch-dir suffix unique ACROSS JVMs, not just within one: two
-    * concurrent Verify/Bench processes share the spool root (tmpfs), and a
-    * bare per-JVM counter made both claim `ckpt_1` — the second then died
-    * on "does not support recovering from checkpoint location". Streaming
-    * checkpoints are never meant to be shared between runs here (each
-    * replay is a fresh query), so pid+counter is the correct key. */
-  private def runTag(): String =
-    s"${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
 
   /** Fixed far-future sentinel timestamp (fixture events live in 2024).
     * A LITERAL, not max(ts)+1y: deriving the sentinel from max(ts) cost a
@@ -2471,15 +2459,11 @@ object StreamingOps {
     "st38_stream_v2_table",
     "readStream.table on the V2 catalog: snapshot versions as offsets, checkpointed incremental tranches",
     (s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
       val id = runTag()
       val tbl = s"graft_cat.corpus.stv_$id"
       val ckpt = spoolDir(s"stv2_ckpt_$id")
-      val base = table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val base = ordersCents(s2, dir)
       // both tranche sizes from ONE parity-grouped scan (guide §1.2) —
       // the two filtered count() jobs each re-scanned orders
       val parCounts = base.groupBy((col("okey") % 2).cast("long").as("par"))
@@ -2541,16 +2525,12 @@ object StreamingOps {
     "st39_stream_table_pipe",
     "readStream.table -> writeStream.toTable: checkpointed incremental table-to-table pipe, epoch-idempotent sink",
     (s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
       val id = runTag()
       val src = s"graft_cat.corpus.pipe_src_$id"
       val dst = s"graft_cat.corpus.pipe_dst_$id"
       val ckpt = spoolDir(s"pipe_ckpt_$id")
-      val base = table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val base = ordersCents(s2, dir)
       // one parity-grouped scan instead of two filtered counts (guide §1.2)
       val parCounts = base.groupBy((col("okey") % 2).cast("long").as("par"))
         .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -2604,14 +2584,10 @@ object StreamingOps {
     "st40_stream_rate_limit",
     "maxVersionsPerTrigger on the V2 table source: backlog drained one commit per micro-batch",
     (s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
       val id = runTag()
       val tbl = s"graft_cat.corpus.rl_$id"
-      val base = table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      val base = ordersCents(s2, dir)
       // all three tranche sizes from ONE mod-grouped scan (guide §1.2) —
       // the three filtered count() jobs each re-scanned orders
       val modCounts = base.groupBy((col("okey") % 3).cast("long").as("m"))
@@ -2667,14 +2643,10 @@ object StreamingOps {
     "st41_stream_row_rate_limit",
     "maxRowsPerTrigger with composite offsets: an oversized commit drains in bounded bites, mid-commit splits replayable",
     (s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.graft_cat",
-        "graft.sources.GraftSparkCatalog")
+      val s2 = scoped(s, graftCatalog("graft_cat"): _*)
       val id = runTag()
       val tbl = s"graft_cat.corpus.rrl_$id"
-      table(s2, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_orderstatus").as("status"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+      ordersCents(s2, dir)
         .createOrReplaceTempView(s"rrl_src_$id")
       s2.sql(s"""CREATE TABLE $tbl (okey BIGINT, status STRING, cents BIGINT)
                  PARTITIONED BY (status)""")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 package object operators {
@@ -49,6 +49,41 @@ package object operators {
     memoized("schema", (path +: (files ++ confs)).mkString("|"))(
       spark.read.parquet(path).schema)
   }
+
+  /** `orders` as (okey, status, cents), plus any `extra` columns: the
+    * frame the lakehouse entries load into their catalog tables. */
+  def ordersCents(s: SparkSession, dir: String, extra: Column*): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    table(s, dir, "orders").select(Seq(col("o_orderkey").as("okey"),
+      col("o_orderstatus").as("status"),
+      expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents")) ++ extra: _*)
+  }
+
+  /** `s.newSession()` with `conf` set: the one way a builder runs under
+    * conf of its own. The caller's session, which JobRunner's async jobs
+    * share, is left as it was. The new session starts from the
+    * SparkContext's conf, not from conf set on `s` at runtime. */
+  def scoped(s: SparkSession, conf: (String, String)*): SparkSession = {
+    val s2 = s.newSession()
+    conf.foreach { case (k, v) => s2.conf.set(k, v) }
+    s2
+  }
+
+  /** The conf pairs that register [[graft.sources.GraftSparkCatalog]] as
+    * catalog `name`, spilling to `warehouse` when one is given. */
+  def graftCatalog(name: String, warehouse: Option[String] = None): Seq[(String, String)] =
+    (s"spark.sql.catalog.$name" -> "graft.sources.GraftSparkCatalog") +:
+      warehouse.map(s"spark.sql.catalog.$name.warehouse" -> _).toSeq
+
+  private val runSeq = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** A name suffix unique ACROSS JVMs, not just within one: pid + counter.
+    * Two concurrent Verify/Bench processes share the spool root (tmpfs),
+    * and a bare per-JVM counter made both claim `ckpt_1` — the second then
+    * died on "does not support recovering from checkpoint location". Run
+    * checkpoints, spools and catalog tables are never meant to be shared
+    * between runs (each replay is a fresh query). */
+  def runTag(): String = s"${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
 
   def deleteRecursively(root: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._

@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Direct pins for d37 build components the fixture corpus never
   * exercises end-to-end: the 31-word synthetic vocabulary makes the
   * adaptive packer finish with pack+tuple rounds only, so the
   * giant-vocabulary fallback (contiguous distributed rank) needs its own
   * contract test. */
-class DedupUnitSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-dedup-unit")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = { spark.stop(); super.afterAll() }
+class DedupUnitSpec extends AnyFunSuite with LocalSpark {
 
   test("d37Parts: a malformed or non-positive value fails at once, naming key and value") {
     import graft.operators.Dedup.d37Parts

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.cli.{Commands, GraftEngine}
 
 /** E2E engine tests: catalog/partition surface (A9-A14), crawler lifecycle
@@ -12,18 +10,11 @@ import graft.cli.{Commands, GraftEngine}
   * mirroring the reference's test_crawler.py exit-code assertions with a
   * temp local-fs warehouse standing in for the mocked Glue backend.
   */
-class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EngineSpec extends AnyFunSuite with LocalSpark {
 
   private val tmp = Files.createTempDirectory("graft_test").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", s"$tmp/warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def sessionConf = Seq("spark.sql.warehouse.dir" -> s"$tmp/warehouse")
 
   lazy val engine = new GraftEngine(spark)
 
@@ -81,7 +72,6 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
     // external partitioned table over the layout, no partitions registered yet
     spark.sql("CREATE DATABASE IF NOT EXISTS datalake")
     val ev = spark.read.parquet(partedDir)
@@ -624,8 +614,18 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"tie_a $at --r 10", s"tie_a $at --r 6", s"tie_b $at --r 9", s"tie_b $at --r 5"))
     assert(display(jr.printJobRuns(Some("tie_b"), Some(2))) ==
       Seq(s"tie_b $at --r 9", s"tie_b $at --r 5"))
-    assert(names == Seq("datalake.zz_a", "datalake.zz_￥", "datalake.zz_😀",
-      "default.zz_a", "default.zz_￥", "default.zz_😀"))
+    assert(names == Seq(".zz_a", ".zz_￥", ".zz_😀")) // temp views: no database, listed once
+  }
+
+  test("q190 and q245 leave the caller's conf and temp views as they found them") {
+    val s = spark.newSession()
+    def state() = (s.conf.getAll,
+      s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet)
+    for (q <- Seq(operators.Sources.q190, operators.Relational.q245)) {
+      val before = state()
+      q.build(s, sfDir).collect()
+      assert(state() == before, q.name)
+    }
   }
 
   test("A16 run_job CLI: --timeout is a reserved poll param, not a job arg") {
@@ -767,7 +767,10 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("invalid option → exit 1") {
     assert(run("list_partitions")._1 == 1) // missing required positionals
     spark.sql(s"CREATE TABLE datalake.flat_t (v BIGINT) USING parquet LOCATION '$tmp/flat_table'")
+    spark.sql(s"CREATE TABLE datalake.bad_int_t (v BIGINT, k INT) " +
+      s"USING parquet PARTITIONED BY (k) LOCATION '$tmp/bad_int_table'")
     val missing = s"$tmp/no_such_layout"
+    val badInt = layout(s"$tmp/bad_int_layout", "k=5", "k=abc")
     // malformed values name the flag, table or path instead of escaping main
     for ((argv, named) <- Seq(
         Seq("run_crawler", "any_crawler", "--timeout=abc") -> "--timeout",
@@ -776,11 +779,15 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq("list_runs", "--lines=-1") -> "--lines",
         Seq("list_runs", "quick_job", "--lines=-1") -> "--lines",
         Seq("add_partitions", "datalake", "flat_t", partedDir) -> "datalake.flat_t",
-        Seq("add_partitions", "datalake", "usage", missing) -> missing)) {
+        Seq("add_partitions", "datalake", "usage", missing) -> missing,
+        // a value that does not cast to its INT key
+        Seq("add_partition", "datalake", "bad_int_t", "--k=abc") -> "CAST_INVALID_INPUT",
+        Seq("add_partitions", "datalake", "bad_int_t", badInt) -> "CAST_INVALID_INPUT")) {
       val (code, out) = run(argv: _*)
       assert(code == 1, argv.mkString(" "))
       assert(out.exists(_.contains(named)), out.mkString("\n"))
     }
+    assert(partitionRows("bad_int_t") == Nil)
   }
 
   test("fixture schema memo: inferred once, keyed by file status and parquet confs, fresh frames") {
@@ -838,8 +845,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SupportsDeleteV2: supported predicates delete source-side; unsupported ones REFUSE") {
     import org.apache.spark.sql.functions._
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftSparkCatalog")
+    val s2 = operators.scoped(spark, operators.graftCatalog("graft_cat"): _*)
     val tbl = s"graft_cat.spec.del_${System.nanoTime()}"
     s2.range(10)
       .select(col("id").as("k"), (col("id") % 2).cast("string").as("p"),
@@ -898,8 +904,5 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // matches it. Both symptoms (scope hoist + dropped sort) must vanish
     // together for the fix signal above to fire.
     assert(got == Seq((1L, 10L)), s"unexpected bug shape: $got")
-  }
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

@@ -5,9 +5,7 @@ import java.util.concurrent.{CountDownLatch, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Pins Bench's flagged-artifact re-measure machinery (VERDICT r13 item
   * 1a): [[SparkEntry.evictArtifact]] must drop exactly the memo its
@@ -18,15 +16,7 @@ import org.scalatest.BeforeAndAfterAll
   * and lose it on evict; a trained model (x_ann_*_train) must be memoized
   * under its own name and come back as a FRESH instance after evict, so
   * an evictor that does nothing fails. */
-class EvictorSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-evictor-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EvictorSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -82,9 +72,5 @@ class EvictorSpec extends AnyFunSuite with BeforeAndAfterAll {
       builders.foreach(b => assert(Await.result(b, 5.minutes) == expected))
     } finally pool.shutdown()
     assert(writes.get == 1, "both builders wrote the spool")
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

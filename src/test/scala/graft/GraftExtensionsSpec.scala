@@ -1,26 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The SQL surface of the native expressions: a session built with
   * `spark.sql.extensions=graft.GraftExtensions` must expose them to pure
   * SQL with the same semantics as the DataFrame wrappers. */
-class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraftExtensionsSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-ext-test")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
+  override protected def sessionConf = Seq("spark.sql.extensions" -> "graft.GraftExtensions")
 
   test("dot_product is callable from SQL and matches the DataFrame wrapper") {
     val r = spark.sql(
@@ -56,9 +43,5 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect()
     assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq ==
       Seq((0, "p q"), (1, "q r")))
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Structural invariants of the deterministic pipeline operators — the
   * properties the row-hash oracle implies but does not STATE. The oracle
@@ -13,22 +11,9 @@ import org.scalatest.BeforeAndAfterAll
   * edit that breaks a contract while staying cross-engine-consistent (e.g.
   * both sides drifting to a wrong threshold) fails here, not in CI's diff.
   */
-class InvariantSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-invariant-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class InvariantSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
 
   test("q10/q24/q43: the rows DuckDB returns at a scale where they are non-empty") {
     // all three are empty at sf0.01, where the oracle compares two empty sets
@@ -1655,9 +1640,5 @@ class InvariantSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"doc $d pos $i: lrs=$l NOT maximal — its ${l + 1}-extension repeats")
       }
     }
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

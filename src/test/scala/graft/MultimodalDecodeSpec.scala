@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Pins the REAL half of the m2 codec seam: payloads that are decodable
   * images go through javax.imageio and report true pixel dimensions;
@@ -10,19 +8,7 @@ import org.scalatest.BeforeAndAfterAll
   * replays in SQL. The fixture tables contain only text payloads, so this
   * is the one place the image path is exercised — on a PNG synthesized in
   * memory, through the same mapPartitions pipeline m2 runs. */
-class MultimodalDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-multimodal-decode-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
+class MultimodalDecodeSpec extends AnyFunSuite with LocalSpark {
 
   private def png(w: Int, h: Int): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(
@@ -213,9 +199,5 @@ class MultimodalDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"emoji tiling: ${et.map(_.tile_len)}")
     // all 16 tiles are the identical 2-emoji slice → one distinct digest
     assert(et.map(_.digest).distinct.length == 1)
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

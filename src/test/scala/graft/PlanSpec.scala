@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Physical-plan assertions: the scale claims in the operator docs
   * (pushdown, pruning, broadcast, top-k operator, whole-stage codegen) are
@@ -13,25 +12,12 @@ import org.scalatest.BeforeAndAfterAll
   * in query construction (or a Spark upgrade changing defaults) surfaces
   * as a test failure, not a production incident.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-plan-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
 
   test("q1: ship-date filter is pushed to the parquet scan") {
     val p = plan(operators.Relational.q1.build(spark, sfDir))
@@ -1256,19 +1242,18 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q190 catalog: listTables / tableExists / dropTable round-trip") {
-    import spark.implicits._
-    spark.conf.set("spark.sql.catalog.graft_cat",
-      "graft.sources.GraftSparkCatalog")
+    val s2 = operators.scoped(spark, operators.graftCatalog("graft_cat"): _*)
+    import s2.implicits._
     val name = s"ct_${System.nanoTime()}"
     val tbl = s"graft_cat.spec_ns.$name"
     Seq((1L, "a"), (2L, "b")).toDF("id", "bucket")
       .writeTo(tbl).partitionedBy($"bucket").create()
-    val listed = spark.sql("SHOW TABLES IN graft_cat.spec_ns")
+    val listed = s2.sql("SHOW TABLES IN graft_cat.spec_ns")
       .select("tableName").as[String].collect()
     assert(listed.contains(name), s"SHOW TABLES missed $name: ${listed.toSeq}")
-    assert(spark.sql(s"SELECT count(*) FROM $tbl").as[Long].head() == 2L)
-    spark.sql(s"DROP TABLE $tbl")
-    assert(spark.sql("SHOW TABLES IN graft_cat.spec_ns")
+    assert(s2.sql(s"SELECT count(*) FROM $tbl").as[Long].head() == 2L)
+    s2.sql(s"DROP TABLE $tbl")
+    assert(s2.sql("SHOW TABLES IN graft_cat.spec_ns")
       .select("tableName").as[String].collect().forall(_ != name),
       "DROP TABLE left the table listed")
   }
@@ -1937,9 +1922,5 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("Generate"), "HRW argmax must stay a row-local array op")
     val joins = p.linesIterator.count(l => l.trim.matches("""\(\d+\) \w*Join\w*( .*)?"""))
     assert(joins == 0, s"$joins Join nodes in a row-local assignment\n$p")
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Quality contracts for the approximate operators — the properties the
   * DuckDB oracle cannot check (those queries are rows-only by design):
@@ -10,22 +8,9 @@ import org.scalatest.BeforeAndAfterAll
   * inputs and hash seeds are fixed, so these are deterministic assertions,
   * not flaky statistical tests.
   */
-class QualitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-quality-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualitySpec extends AnyFunSuite with LocalSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
 
   test("q14: HLL count-distinct within 5% of the exact answer per group") {
     // q14 folds the bound in-engine (est_ok); this pins that every group
@@ -256,9 +241,5 @@ class QualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // eigenvector for the 5-eigenvalue must align with the rotated e0
     val dot = math.abs(vecs(0)(0) * c + vecs(0)(1) * s)
     assert(math.abs(dot - 1.0) < 1e-9, s"top eigenvector misaligned: $dot")
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

@@ -1,25 +1,13 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import graft.functions.Functions._
 
 /** Boundary contracts for the hand-rolled wire codecs (Avro binary via the
   * core Avro library; proto3 wire format from the published spec). */
-class CodecExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-codec-test")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
+class CodecExpressionsSpec extends AnyFunSuite with LocalSpark {
 
   private val writer = """{"type":"record","name":"r","fields":[
     {"name":"id","type":"long"},{"name":"name","type":"string"},
@@ -124,9 +112,5 @@ class CodecExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         avroField(col("b"), writer, reader, "extra", "long").as("extra"))
       .collect()(0)
     assert(r.getString(0) == "n" && r.getLong(1) == -5L)
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

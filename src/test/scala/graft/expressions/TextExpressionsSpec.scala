@@ -1,20 +1,14 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import graft.functions.Functions.{minhashSignature, shingleJaccard, simhash64, dotProduct, l2Sq}
 
 /** Edge cases for the native text/vector expressions (the oracle checks
   * cover the happy path at corpus scale).
   */
-class TextExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextExpressionsSpec extends AnyFunSuite with LocalSpark {
 
   test("minhash: identical texts yield identical signatures") {
     import spark.implicits._
@@ -163,9 +157,5 @@ class TextExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val emoji = Seq("😀").toDF("t")
       .select(charCodeSum(col("t"))).head().getLong(0)
     assert(emoji == 128512L)
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

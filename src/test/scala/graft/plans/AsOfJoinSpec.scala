@@ -1,10 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Unit contract of the custom AsOfMergeJoin physical operator: backward-
   * inclusive match selection, equal-time tiebreaks, inner semantics for
@@ -13,19 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * under arbitrary partitioning — every edge pinned on hand-written rows
   * (q213 hash-checks the same operator against DuckDB at scale).
   */
-class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-asof-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
+class AsOfJoinSpec extends AnyFunSuite with LocalSpark {
 
   // left: (key, time, id); right: (key, time, rid)
   private def L(rows: (java.lang.Long, java.lang.Long, Long)*): DataFrame = {
@@ -166,9 +154,5 @@ class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("t"), col("rt"), Seq(col("rid")))
     }
     assert(e.getMessage.contains("time types differ"), e.getMessage)
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

@@ -1,28 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Unit contract of the custom GroupedTopK physical operator: exact row
   * set under ties, short groups, k=1, and arbitrary partitioning — the
   * properties the oracle query (q114) exercises at scale, pinned here on
   * hand-written rows where every edge is visible.
   */
-class GroupedTopKSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-grouped-topk-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
+class GroupedTopKSpec extends AnyFunSuite with LocalSpark {
 
   private def df = {
     import spark.implicits._
@@ -149,9 +136,5 @@ class GroupedTopKSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
     assert(res.passed, res.status.toString)
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

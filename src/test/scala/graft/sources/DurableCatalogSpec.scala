@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
+import graft.operators.{graftCatalog, scoped}
 
 /** Contract pins for durable catalog persistence ([[DurableSpill]]) and
   * TIMESTAMP AS OF resolution:
@@ -18,26 +19,13 @@ import org.scalatest.BeforeAndAfterAll
   *  - TIMESTAMP AS OF resolves the latest commit ≤ the instant; an
   *    instant before the earliest retained commit errors cleanly.
   */
-class DurableCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-durable-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DurableCatalogSpec extends AnyFunSuite with LocalSpark {
 
   private lazy val warehouse =
     java.nio.file.Files.createTempDirectory("graft_dur_spec").toString
 
-  private def catSession(): SparkSession = {
-    spark // force init so SparkSession.active works inside restores
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graft_dur", "graft.sources.GraftSparkCatalog")
-    s2.conf.set("spark.sql.catalog.graft_dur.warehouse", warehouse)
-    s2
-  }
+  private def catSession(): SparkSession =
+    scoped(spark, graftCatalog("graft_dur", Some(warehouse)): _*)
 
   private def tsOf(key: String, version: Long): String = {
     val micros = MemTable.history((key, version)).tsMicros
@@ -153,8 +141,7 @@ class DurableCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming read refuses non-append commits in the consumed range") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftSparkCatalog")
+    val s2 = scoped(spark, graftCatalog("graft_cat"): _*)
     import s2.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -1158,9 +1145,5 @@ class DurableCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(s2.sql(s"SELECT k FROM $tbl LIMIT 3").collect().length == 3)
     }
     s2.sql(s"DROP TABLE $tbl")
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
+import graft.operators.{graftCatalog, runTag, scoped}
 
 /** Contract pins for the round-12 catalog surfaces that Spark delegates
   * to the connector:
@@ -22,35 +23,13 @@ import org.scalatest.BeforeAndAfterAll
   *    version then refuses), SHOW PROCEDURES / DESCRIBE PROCEDURE ride
   *    the same catalog methods.
   */
-class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LakehouseDdlSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-lakehouse-ddl-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def catSession(): SparkSession = {
-    spark
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graft_ddl", "graft.sources.GraftSparkCatalog")
-    s2
-  }
-
-  private val seq = new java.util.concurrent.atomic.AtomicInteger()
-  private def freshName(prefix: String): String =
-    s"${prefix}_${ProcessHandle.current().pid()}_${seq.incrementAndGet()}"
-
-  override def afterAll(): Unit = {
-    spark.stop()
-    super.afterAll()
-  }
+  private def catSession(): SparkSession = scoped(spark, graftCatalog("graft_ddl"): _*)
 
   test("CHECK constraint declared at CREATE rejects violating inserts and admits valid ones") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("chk")}"
+    val t = s"graft_ddl.ns.chk_${runTag()}"
     s2.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT,
                CONSTRAINT non_negative CHECK (cents >= 0))
                PARTITIONED BY (status)""")
@@ -68,7 +47,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ALTER TABLE ADD CONSTRAINT validates existing rows; DROP CONSTRAINT lifts the guard") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("chkalt")}"
+    val t = s"graft_ddl.ns.chkalt_${runTag()}"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
     s2.sql(s"INSERT INTO $t VALUES (1, 'A', 100), (2, 'B', 250)")
     // a constraint the existing rows violate must refuse at ALTER time
@@ -89,7 +68,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("never-enforced constraint kinds refuse at CREATE") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("chkpk")}"
+    val t = s"graft_ddl.ns.chkpk_${runTag()}"
     val e = intercept[Exception] {
       s2.sql(s"""CREATE TABLE $t (k BIGINT, status STRING,
                  CONSTRAINT pk PRIMARY KEY (k)) PARTITIONED BY (status)""")
@@ -100,7 +79,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("GENERATED ALWAYS AS: omitted values synthesized at commit from the row") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("gen")}"
+    val t = s"graft_ddl.ns.gen_${runTag()}"
     s2.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT,
                bucket BIGINT GENERATED ALWAYS AS (cents DIV 100),
                tag STRING GENERATED ALWAYS AS (CONCAT(status, '-', CAST(cents DIV 100 AS STRING))))
@@ -113,7 +92,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("GENERATED ALWAYS AS: explicit value contradicting the expression rejects the commit") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("genx")}"
+    val t = s"graft_ddl.ns.genx_${runTag()}"
     s2.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT,
                bucket BIGINT GENERATED ALWAYS AS (cents DIV 100))
                PARTITIONED BY (status)""")
@@ -131,7 +110,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("GENERATED ALWAYS AS: type mismatch between expression and column refuses at CREATE") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("gent")}"
+    val t = s"graft_ddl.ns.gent_${runTag()}"
     val e = intercept[Exception] {
       s2.sql(s"""CREATE TABLE $t (k BIGINT, status STRING,
                  bad BIGINT GENERATED ALWAYS AS (CONCAT(status, '!')))
@@ -145,7 +124,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CALL system.restore republishes a retained version as a new commit") {
     val s2 = catSession()
-    val name = freshName("rst")
+    val name = s"rst_${runTag()}"
     val t = s"graft_ddl.ns.$name"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
     s2.sql(s"INSERT INTO $t VALUES (1, 'A', 100)")                 // v1
@@ -162,7 +141,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CALL system.expire_history prunes retention and expired versions refuse") {
     val s2 = catSession()
-    val name = freshName("exp")
+    val name = s"exp_${runTag()}"
     val t = s"graft_ddl.ns.$name"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
     (1 to 4).foreach(i => s2.sql(s"INSERT INTO $t VALUES ($i, 'A', ${i * 100})")) // v1..v4
@@ -235,7 +214,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("MERGE WITH SCHEMA EVOLUTION adds the source column; pre-evolution versions keep the old schema") {
     val s2 = catSession()
     import s2.implicits._
-    val name = freshName("mse")
+    val name = s"mse_${runTag()}"
     val t = s"graft_ddl.ns.$name"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
     s2.sql(s"INSERT INTO $t VALUES (1, 'A', 100), (2, 'B', 200)")
@@ -258,7 +237,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("DSv2 join pushdown: inner equi-join collapses to one scan; LEFT JOIN falls back") {
     val s2 = catSession()
     s2.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
-    val (na, nb) = (freshName("jpl"), freshName("jpr"))
+    val (na, nb) = (s"jpl_${runTag()}", s"jpr_${runTag()}")
     s2.sql(s"""CREATE TABLE graft_ddl.ns.$na (k BIGINT, status STRING, cents BIGINT)
                PARTITIONED BY (status) TBLPROPERTIES ('extendedPushdown'='true')""")
     s2.sql(s"""CREATE TABLE graft_ddl.ns.$nb (k BIGINT, status STRING, bonus BIGINT)
@@ -283,7 +262,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("differential: extended filter pushdown matches engine-side filtering on 24 random predicates") {
     val s2 = catSession()
-    val (np, ne) = (freshName("dfp"), freshName("dfe"))
+    val (np, ne) = (s"dfp_${runTag()}", s"dfe_${runTag()}")
     // same data, one table filters source-side (extendedPushdown), the
     // other engine-side — every WHERE must agree, NULLs included
     for ((n, props) <- Seq((np, ""), (ne, "TBLPROPERTIES ('extendedPushdown'='true')"))) {
@@ -324,7 +303,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
     for ((expr, i) <- Seq(
         "cents DIV 100", "cents % 7 + k", "greatest(cents - k, 0)",
         "CAST(least(cents, 250) AS BIGINT)").zipWithIndex) {
-      val n = freshName(s"dgen$i")
+      val n = s"dgen${i}_${runTag()}"
       val t = s"graft_ddl.ns.$n"
       s2.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT,
                  g BIGINT GENERATED ALWAYS AS ($expr)) PARTITIONED BY (status)""")
@@ -337,7 +316,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("three-valued pushed filters: NOT/OR over NULL cells match engine-side semantics") {
     val s2 = catSession()
-    val (np, ne) = (freshName("tvlp"), freshName("tvle"))
+    val (np, ne) = (s"tvlp_${runTag()}", s"tvle_${runTag()}")
     for ((n, props) <- Seq((np, ""), (ne, "TBLPROPERTIES ('extendedPushdown'='true')"))) {
       s2.sql(s"CREATE TABLE graft_ddl.ns.$n (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status) $props")
       s2.sql(s"""INSERT INTO graft_ddl.ns.$n VALUES
@@ -366,7 +345,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pushed string comparisons follow Spark's UTF-8 binary order, not UTF-16 (non-BMP differential)") {
     val s2 = catSession()
     import s2.implicits._
-    val (np, ne) = (freshName("u8p"), freshName("u8e"))
+    val (np, ne) = (s"u8p_${runTag()}", s"u8e_${runTag()}")
     // U+FFFF vs U+10000: UTF-16 code-unit order puts U+FFFF ABOVE the
     // surrogate pair; UTF-8 byte order (= code-point order, what Spark
     // compares) puts it BELOW — a Java String.compareTo in the pushed
@@ -390,7 +369,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DELETE/overwrite predicates are three-valued: NOT/NOT-IN over NULL cells keep the rows") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("del3vl")}"
+    val t = s"graft_ddl.ns.del3vl_${runTag()}"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
     s2.sql(s"INSERT INTO $t VALUES (1,'A',100),(2,'A',NULL),(3,'B',300),(4,'B',NULL)")
     // NULL <> 100 is UNKNOWN: the engine keeps rows 2 and 4; a
@@ -411,7 +390,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pushed aggregates skip NULL cells and serve NULL for all-NULL groups") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("aggnull")}"
+    val t = s"graft_ddl.ns.aggnull_${runTag()}"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
     s2.sql(s"""INSERT INTO $t VALUES
       (1,'A',100),(2,'A',NULL),(3,'A',-5),(4,'B',NULL),(5,'B',NULL)""")
@@ -433,7 +412,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pushed top-N honors the pushed null ordering over nullable sort keys") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("topnull")}"
+    val t = s"graft_ddl.ns.topnull_${runTag()}"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
     s2.sql(s"INSERT INTO $t VALUES (1,'A',100),(2,'A',NULL),(3,'B',300),(4,'B',NULL),(5,'B',50)")
     def topK(order: String): Seq[Long] = {
@@ -451,7 +430,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("RENAME/DROP COLUMN refuse under CHECK-constraint and identity anchors; substring near-misses allowed") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("colguard")}"
+    val t = s"graft_ddl.ns.colguard_${runTag()}"
     s2.sql(s"""CREATE TABLE $t (id BIGINT GENERATED ALWAYS AS IDENTITY,
                k BIGINT, okey BIGINT, status STRING, cents BIGINT,
                CONSTRAINT pos_cents CHECK (cents >= 0))
@@ -479,7 +458,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("REPLACE TABLE purges the old incarnation's CHECK/generated contracts") {
     val s2 = catSession()
-    val t = s"graft_ddl.ns.${freshName("replmeta")}"
+    val t = s"graft_ddl.ns.replmeta_${runTag()}"
     s2.sql(s"""CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT,
                g BIGINT GENERATED ALWAYS AS (cents DIV 100),
                CONSTRAINT pos_cents CHECK (cents >= 0))
@@ -516,7 +495,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions.col
     def chain(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
-    val name = freshName("ctascw")
+    val name = s"ctascw_${runTag()}"
     val t = s"graft_ddl.ns.$name"
     // four statuses mixed in every input task: only a clustered write
     // keeps each status inside one task
@@ -536,7 +515,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
           "unsupported writeDistribution 'banana'"),
         ("TBLPROPERTIES ('writeDistribution'='clustered')",
           "writeDistribution=clustered requires PARTITIONED BY"))) {
-      val bad = s"graft_ddl.ns.${freshName("ctasbad")}"
+      val bad = s"graft_ddl.ns.ctasbad_${runTag()}"
       val e = intercept[Exception] {
         s2.sql(s"CREATE TABLE $bad USING graft $props AS SELECT * FROM ${name}_src")
       }
@@ -548,7 +527,7 @@ class LakehouseDdlSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("connector custom metrics reach the execution's SQL metrics in the status store") {
     val s2 = catSession()
     import s2.implicits._
-    val t = s"graft_ddl.ns.${freshName("metrics")}"
+    val t = s"graft_ddl.ns.metrics_${runTag()}"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, cents BIGINT) PARTITIONED BY (status)")
     (1L to 30L).map(i => (i, if (i % 3 == 0) "F" else "O", i))
       .toDF("k", "status", "cents").writeTo(t).append()

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
+import graft.operators.{graftCatalog, scoped}
 
 /** Contract pins for the group-based row-level operation surface
   * (SupportsRowLevelOperations on MemTable, q279/q280):
@@ -19,21 +20,9 @@ import org.scalatest.BeforeAndAfterAll
   *  - SQL surfaces work end to end (UPDATE / MERGE INTO on tiny frames,
   *    value-checked here; the registry entries hash the sf-scale runs).
   */
-class RowLevelOpSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RowLevelOpSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-rlo-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def catSession(): SparkSession = {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graft_cat", "graft.sources.GraftSparkCatalog")
-    s2
-  }
+  private def catSession(): SparkSession = scoped(spark, graftCatalog("graft_cat"): _*)
 
   test("pruned UPDATE rewrites only the matching partition; others carry by reference") {
     val s2 = catSession()
@@ -371,9 +360,5 @@ class RowLevelOpSpec extends AnyFunSuite with BeforeAndAfterAll {
       causes(e2).map(_.toString).mkString(" | "))
     assert(s2.sql(s"SELECT p FROM $tbl WHERE k = 1").collect()(0).getString(0) == "a")
     s2.sql(s"DROP TABLE $tbl")
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }

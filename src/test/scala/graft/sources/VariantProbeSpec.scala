@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
+import graft.operators.{graftCatalog, runTag, scoped}
 
 /** Exploration probe for the DSv2 variant-extraction pushdown contract
   * (SupportsPushDownVariantExtractions, Spark 4.1): what extractions the
@@ -10,23 +10,13 @@ import org.scalatest.BeforeAndAfterAll
   * the reader must serve. Keep: it documents the measured contract the
   * MemTable implementation relies on, and fails loudly on a Spark
   * upgrade that changes it. */
-class VariantProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class VariantProbeSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-variant-probe")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = { spark.stop(); super.afterAll() }
+  private val variantPushdown = "spark.sql.variant.pushVariantIntoScan" -> "true"
 
   test("probe: variant column round-trips through MemTable and extraction pushes to the scan") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graft_var", "graft.sources.GraftSparkCatalog")
-    s2.conf.set("spark.sql.variant.pushVariantIntoScan", "true")
-    val t = s"graft_var.ns.vprobe_${ProcessHandle.current().pid()}"
+    val s2 = scoped(spark, graftCatalog("graft_var") :+ variantPushdown: _*)
+    val t = s"graft_var.ns.vprobe_${runTag()}"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, v VARIANT) PARTITIONED BY (status)")
     s2.sql(s"""INSERT INTO $t SELECT 1L, 'A',
       parse_json('{"a": 7, "b": {"c": "x"}}')""")
@@ -59,12 +49,9 @@ class VariantProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("variant survives the durable spill: evict, restore, file-backed read, task-side extraction") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graft_vdur", "graft.sources.GraftSparkCatalog")
-    s2.conf.set("spark.sql.catalog.graft_vdur.warehouse",
-      java.nio.file.Files.createTempDirectory("graft_vdur").toString)
-    s2.conf.set("spark.sql.variant.pushVariantIntoScan", "true")
-    val name = s"vdur_${ProcessHandle.current().pid()}"
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_vdur").toString
+    val s2 = scoped(spark, graftCatalog("graft_vdur", Some(warehouse)) :+ variantPushdown: _*)
+    val name = s"vdur_${runTag()}"
     val t = s"graft_vdur.ns.$name"
     val key = s"cat!graft_vdur!ns!$name"
     s2.sql(s"CREATE TABLE $t (k BIGINT, status STRING, v VARIANT) PARTITIONED BY (status)")

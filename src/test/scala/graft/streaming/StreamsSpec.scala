@@ -1,36 +1,22 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import Streams._
 
 /** Streaming semantics tests per SURVEY.md §5.4: MemoryStream input →
   * processAllAvailable → assert sink contents (windows, watermark-dropped
   * late rows, stateful dedup, custom session state).
   */
-class StreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-streaming-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamsSpec extends AnyFunSuite with LocalSpark {
 
   private def ts(minute: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
 
   private def ev(id: Long, minute: Int, user: Long = 1, typ: String = "view", v: Double = 1.0) =
     Event(id, ts(minute), user, typ, v)
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.setLogLevel("WARN")
-  }
 
   test("tumbling windows aggregate incrementally across batches") {
     import spark.implicits._
@@ -243,9 +229,5 @@ class StreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
         OutputMode.Append(), ckpt2)
     }
     assert(views() == before)
-  }
-
-  override def afterAll(): Unit = {
-    try spark.stop() finally super.afterAll()
   }
 }
