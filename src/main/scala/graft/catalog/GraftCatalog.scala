@@ -1,19 +1,22 @@
 package graft.catalog
 
 import java.io.FileNotFoundException
+import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftCatalogBridge, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.analysis.{NoSuchPartitionException, NoSuchPartitionsException, NoSuchTableException, PartitionsAlreadyExistException}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchPartitionException, NoSuchPartitionsException, NoSuchTableException, PartitionsAlreadyExistException}
 import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogTable, CatalogTablePartition, CatalogUtils}
 import org.apache.spark.sql.catalyst.catalog.CatalogTypes.TablePartitionSpec
+import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.command.{CommandUtils, DDLUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import graft._
 import graft.functions.Functions.{globMatch, utf8Order}
+import graft.operators.{deleteRecursively, leafFiles}
 
 /** Partition listing result — the reference's `Partitions` namedtuple
   * (gluettalax.py:371): key names, per-column display widths (max value
@@ -30,9 +33,13 @@ final case class PartitionListing(
   *
   * Scale note: everything here is metadata-plane — catalog calls and
   * directory listings, never row data, and no command goes through SQL
-  * text or starts a Spark job. A partition write is the session-catalog
-  * calls `ALTER TABLE … ADD|DROP PARTITION` makes; bulk discovery lists the
-  * stored partitions once and creates the new ones in chunks of
+  * text or starts a Spark job. A partition command reads the table once
+  * and then calls the external catalog (the metastore) directly, running
+  * the session catalog's spec checks itself: the session catalog would
+  * re-read the table, and ask whether its database and the table exist,
+  * before each call. A partition write otherwise makes the steps of
+  * `ALTER TABLE … ADD|DROP PARTITION`; bulk discovery lists the stored
+  * partitions once and creates the new ones in chunks of
   * `spark.sql.addPartitionInBatch.size`, one metastore call each (the
   * reference's BatchCreatePartition). `list_partitions` still fetches
   * every partition and glob-filters on the client.
@@ -42,6 +49,8 @@ final class GraftCatalog(spark: SparkSession) {
   private def tableId(db: String, table: String) = TableIdentifier(table, Some(db))
 
   private def sessionCatalog = spark.sessionState.catalog
+
+  private def external = sessionCatalog.externalCatalog
 
   /** A pattern is handed to the session catalog's own listing ONLY when
     * every non-`*` character is a regex-safe literal. The catalog dialect
@@ -89,13 +98,27 @@ final class GraftCatalog(spark: SparkSession) {
     pat.map(p => df.filter(globMatch(col("table_name"), p))).getOrElse(df)
   }
 
-  /** Table metadata or the reference's typed error
-    * (gluettalax.py:379-381 → TableNotFound). */
-  private def getTable(db: String, table: String) =
-    try sessionCatalog.getTableMetadata(tableId(db, table))
-    catch {
-      case _: NoSuchTableException => throw TableNotFound(s"Table $table not found")
+  /** Table metadata or the reference's typed error (gluettalax.py:379-381
+    * → TableNotFound). It is `getTableMetadata`'s result (catalog name
+    * attached, char/varchar read as string) in one metastore call: the
+    * session catalog first asks whether the database and the table exist.
+    * A failed read is redone through the session catalog, so a missing
+    * database keeps the session catalog's own error. */
+  private def getTable(db: String, table: String): CatalogTable =
+    try {
+      val id = sessionCatalog.qualifyIdentifier(tableId(db, table))
+      val t = external.getTable(id.database.get, id.table)
+      t.copy(identifier = t.identifier.copy(catalog = t.identifier.catalog.orElse(id.catalog)),
+        schema = CharVarcharUtils.replaceCharVarcharWithStringInSchema(t.schema))
+    } catch {
+      case _: NoSuchTableException | _: NoSuchNamespaceException =>
+        try sessionCatalog.getTableMetadata(tableId(db, table))
+        catch { case _: NoSuchTableException => throw TableNotFound(s"Table $table not found") }
     }
+
+  /** Every stored partition of a table read with [[getTable]]. */
+  private def storedPartitions(meta: CatalogTable): Seq[CatalogTablePartition] =
+    external.listPartitions(meta.database, meta.identifier.table)
 
   /** A9: list partitions with the width aggregate and sort-by-location
     * (gluettalax.py:374-395). */
@@ -103,8 +126,7 @@ final class GraftCatalog(spark: SparkSession) {
     val meta = getTable(db, table)
     val keys = meta.partitionColumnNames
     if (keys.isEmpty) return PartitionListing(Nil, Nil, Nil)
-    val parts = sessionCatalog.listPartitions(tableId(db, table))
-    val rows = parts.map { p =>
+    val rows = storedPartitions(meta).map { p =>
       keys.map(k => p.spec.getOrElse(k, "")) :+
         p.storage.locationUri.map(_.toString).getOrElse("-")
     }
@@ -153,10 +175,50 @@ final class GraftCatalog(spark: SparkSession) {
   private def normalized(meta: CatalogTable, spec: TablePartitionSpec): TablePartitionSpec =
     GraftCatalogBridge.normalizePartitionSpec(spark, meta, spec)
 
-  /** A new partition inheriting the table's storage format, at `location`. */
-  private def partition(meta: CatalogTable, spec: TablePartitionSpec, location: String) =
-    CatalogTablePartition(spec,
-      meta.storage.copy(locationUri = Some(CatalogUtils.stringToURI(location))))
+  /** A new partition inheriting the table's storage format, at `location`.
+    * A location with no scheme is resolved against the table's location
+    * and qualified, as the session catalog's `createPartitions` does
+    * (`/data/x` is stored as `file:/data/x`). */
+  private def partition(meta: CatalogTable, spec: TablePartitionSpec, location: String) = {
+    val uri = CatalogUtils.stringToURI(location)
+    val qualified = if (uri.isAbsolute) uri else CatalogUtils.makeQualifiedPath(
+      CatalogUtils.stringToURI(new Path(new Path(meta.location), new Path(uri)).toString),
+      spark.sessionState.newHadoopConf())
+    CatalogTablePartition(spec, meta.storage.copy(locationUri = Some(qualified)))
+  }
+
+  /** Store `parts` in one metastore call, after the session catalog's spec
+    * checks. Each missing `file:` directory is made first ([[makeLocalDir]]);
+    * if the call fails, the topmost level made here is removed again. */
+  private def createPartitions(meta: CatalogTable, parts: Seq[CatalogTablePartition]): Unit = {
+    GraftCatalogBridge.requireValidPartitionSpecs(meta, parts.map(_.spec), exact = true)
+    val made = parts.flatMap(_.storage.locationUri).flatMap(makeLocalDir)
+    try external.createPartitions(meta.database, meta.identifier.table, parts, ignoreIfExists = false)
+    catch { case e: Throwable => made.foreach(deleteRecursively); throw e }
+  }
+
+  /** Make a missing `file:` partition directory with java.nio, each new
+    * level given the permissions of the level above it, as the metastore's
+    * inherit-perms step gives them. The metastore then finds the directory
+    * and skips its own mkdir, which on the local file system without the
+    * native Hadoop library forks `chmod`, `chgrp` and `ls -ld`. Returns the
+    * topmost level made: none when nothing was missing, or when java.nio
+    * could not make it (the metastore then tries, and reports its own
+    * error). */
+  private def makeLocalDir(uri: java.net.URI): Option[java.nio.file.Path] =
+    if (uri.getScheme != "file") None
+    else {
+      val dir = Paths.get(uri.getPath)
+      val missing = Iterator.iterate(dir)(_.getParent).takeWhile(Files.notExists(_)).toSeq
+      missing.lastOption.flatMap { top =>
+        try {
+          Files.createDirectories(dir)
+          val perms = Files.getPosixFilePermissions(top.getParent)
+          missing.foreach(Files.setPosixFilePermissions(_, perms))
+          Some(top)
+        } catch { case _: java.io.IOException => deleteRecursively(top); None }
+      }
+    }
 
   /** One partition write, with the steps `ALTER TABLE … ADD|DROP PARTITION`
     * runs (Spark's AlterTableAddPartitionCommand and
@@ -172,7 +234,10 @@ final class GraftCatalog(spark: SparkSession) {
       s"ALTER TABLE ${if (add) "ADD" else "DROP"} PARTITION")
     val added = write
     if (add && added.isEmpty) return
-    spark.catalog.refreshTable(meta.identifier.quotedString)
+    // with no cached data, dropping the table's cached relation is enough:
+    // the next read builds a new one, whose file index lists afresh
+    if (spark.sharedState.cacheManager.isEmpty) sessionCatalog.refreshTable(meta.identifier)
+    else spark.catalog.refreshTable(meta.identifier.quotedString)
     val session = castToImpl(spark)
     if (add && meta.stats.nonEmpty && session.sessionState.conf.autoSizeUpdateEnabled) {
       // an add grows the stored size by the new partitions' files only
@@ -209,7 +274,7 @@ final class GraftCatalog(spark: SparkSession) {
     }
     try alterPartitions(meta, add = true) {
       val part = partition(meta, normalized(meta, keys.zip(values).toMap), loc)
-      sessionCatalog.createPartitions(meta.identifier, Seq(part), ignoreIfExists = false)
+      createPartitions(meta, Seq(part))
       Seq(part)
     } catch {
       case _: PartitionsAlreadyExistException =>
@@ -222,8 +287,9 @@ final class GraftCatalog(spark: SparkSession) {
     val meta = partitionedTable(db, table)
     val values = getPartitionValues(kargs, meta.partitionColumnNames)
     try alterPartitions(meta, add = false) {
-      sessionCatalog.dropPartitions(meta.identifier,
-        Seq(normalized(meta, meta.partitionColumnNames.zip(values).toMap)),
+      val spec = normalized(meta, meta.partitionColumnNames.zip(values).toMap)
+      GraftCatalogBridge.requireValidPartitionSpecs(meta, Seq(spec), exact = false)
+      external.dropPartitions(meta.database, meta.identifier.table, Seq(spec),
         ignoreIfNotExists = false, purge = false, retainData = false)
       Nil
     } catch {
@@ -249,7 +315,7 @@ final class GraftCatalog(spark: SparkSession) {
     * per-directory outcome report. */
   def addPartitionsByLocation(db: String, table: String, location: String)
       : Seq[(String, DiscoveryOutcome)] =
-    discoverPartitions(db, table, location, sessionCatalog.listPartitions(_))
+    discoverPartitions(db, table, location, storedPartitions)
 
   /** Discovery with the stored-partition listing as a parameter, so a test
     * can hand it a stale one. One listing classifies every parsed dir: a
@@ -259,19 +325,15 @@ final class GraftCatalog(spark: SparkSession) {
     * listing missed (a concurrent add) is redone one partition at a time,
     * so each dir still gets its own outcome. */
   private[graft] def discoverPartitions(db: String, table: String, location: String,
-      stored: TableIdentifier => Seq[CatalogTablePartition]): Seq[(String, DiscoveryOutcome)] = {
+      stored: CatalogTable => Seq[CatalogTablePartition]): Seq[(String, DiscoveryOutcome)] = {
     val meta = partitionedTable(db, table)
     val keys = meta.partitionColumnNames
     val hadoopPath = new Path(location)
     val fs = hadoopPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = mutable.ArrayBuffer.empty[String]
-    try {
-      val it = fs.listFiles(hadoopPath, true)
-      while (it.hasNext) files += it.next().getPath.toString
-    } catch {
-      case _: FileNotFoundException => throw InvalidOption(s"Path $location not found")
-    }
-    val dirs = files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.sorted.toSeq
+    val files =
+      try leafFiles(fs, hadoopPath).map(_.getPath.toString)
+      catch { case _: FileNotFoundException => throw InvalidOption(s"Path $location not found") }
+    val dirs = files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.sorted
     val specs = dirs.map { dir =>
       val parts = dir.split('/')
       val anchored = parts.indexWhere(_.startsWith(keys.head + "="))
@@ -283,13 +345,13 @@ final class GraftCatalog(spark: SparkSession) {
       }
       dir -> Option.when(values.size == keys.size)(normalized(meta, values.toMap))
     }
-    val seen = mutable.Set(stored(meta.identifier).map(_.spec): _*)
+    val seen = mutable.Set(stored(meta).map(_.spec): _*)
     val fresh = specs.collect {
       case (dir, Some(spec)) if seen.add(spec) => dir -> partition(meta, spec, dir + "/")
     }
     val added = mutable.Map.empty[String, CatalogTablePartition]
     def create(batch: Seq[(String, CatalogTablePartition)]): Unit = {
-      sessionCatalog.createPartitions(meta.identifier, batch.map(_._2), ignoreIfExists = false)
+      createPartitions(meta, batch.map(_._2))
       added ++= batch
     }
     alterPartitions(meta, add = true) {

@@ -69,6 +69,16 @@ object StreamingOps {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** Checkpoint files written through `FileSystem` rather than Spark's
+    * default `FileContext` manager. That manager renames each offset,
+    * commit and state file (and its checksum sidecar) through `FileContext`,
+    * whose local rename first reads the link status, and without the native
+    * Hadoop library that read forks `readlink` per file. A local
+    * `FileSystem` rename is an atomic POSIX rename. */
+  private val fileSystemCheckpoints =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
   /** A fresh checkpoint dir on the spool medium (tmpfs when available): the
     * offset/commit/state logs fsync every micro-batch, and that fsync is
     * pure fixed cost for a same-JVM replay. */
@@ -78,8 +88,8 @@ object StreamingOps {
     * process all available input, reach a terminal state". `start` picks
     * the sink and starts the writer (`_.start()`, `_.toTable(t)`); the drain
     * pre-creates `ckpt` (so the engine's resolve-and-mkdir path finds it),
-    * sets the checkpoint and the trigger, and awaits termination, rethrowing
-    * the stream's failure.
+    * sets the checkpoint, the trigger and [[fileSystemCheckpoints]], and
+    * awaits termination, rethrowing the stream's failure.
     *
     * `conf` applies to this query only. A stream's conf is fixed inside
     * `start()` (StreamExecution clones the session there), so the caller's
@@ -95,8 +105,9 @@ object StreamingOps {
       .trigger(Trigger.AvailableNow())
     val rc = df.sparkSession.conf
     val explicit = rc.getAll // set keys only, no defaults
-    val saved = conf.map { case (k, _) => k -> explicit.get(k) }
-    conf.foreach { case (k, v) => rc.set(k, v) }
+    val perQuery = fileSystemCheckpoints +: conf
+    val saved = perQuery.map { case (k, _) => k -> explicit.get(k) }
+    perQuery.foreach { case (k, v) => rc.set(k, v) }
     val q = try start(writer) finally saved.foreach {
       case (k, Some(v)) => rc.set(k, v)
       case (k, None)    => rc.unset(k)

@@ -37,11 +37,9 @@ package object operators {
   private def fixtureSchema(spark: SparkSession, path: String): StructType = {
     val p = new org.apache.hadoop.fs.Path(path)
     val files =
-      try {
-        val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-          .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").toSeq.sorted
-      } catch { case _: java.io.FileNotFoundException => Nil }
+      try leafFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+        .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").sorted
+      catch { case _: java.io.FileNotFoundException => Nil }
     val confs = spark.conf.getAll.toSeq.sorted.collect {
       case (k, v) if k.startsWith("spark.sql.parquet.") ||
           k.startsWith("spark.sql.legacy.parquet.") => s"$k=$v"
@@ -84,6 +82,17 @@ package object operators {
     * checkpoints, spools and catalog tables are never meant to be shared
     * between runs (each replay is a fresh query). */
   def runTag(): String = s"${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
+
+  /** Every file under `root`, or `root` itself when it is a file, found by
+    * walking `listStatus`; a missing root throws FileNotFoundException.
+    * The statuses are the plain ones `listStatus` returns. Hadoop's
+    * recursive file iterator instead builds a located status per entry,
+    * which reads the entry's permission, owner and group, and on the local
+    * file system without the native Hadoop library each such read forks
+    * `ls -ld`. */
+  def leafFiles(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(root).toSeq.flatMap(s => if (s.isDirectory) leafFiles(fs, s.getPath) else Seq(s))
 
   def deleteRecursively(root: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
