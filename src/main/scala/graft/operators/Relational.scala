@@ -1491,10 +1491,10 @@ object Relational {
       // gets the rule (and the temp view), the parent session stays
       // untouched. Extension-configured sessions get the rule globally
       // by explicit choice (spark.sql.extensions=graft.GraftExtensions).
-      val scoped = s.newSession()
-      graft.plans.GroupedTopK.ensureInjected(scoped)
-      table(scoped, dir, "lineitem").createOrReplaceTempView("lineitem_ttk")
-      scoped.sql("""
+      val s2 = scoped(s)
+      graft.plans.GroupedTopK.ensureInjected(s2)
+      table(s2, dir, "lineitem").createOrReplaceTempView("lineitem_ttk")
+      s2.sql("""
         SELECT l_orderkey, l_linenumber, l_quantity
         FROM (SELECT l_orderkey, l_linenumber, l_quantity,
                      row_number() OVER (PARTITION BY l_orderkey
@@ -1688,11 +1688,11 @@ object Relational {
     "q144_lateral_topk_rewrite",
     "LATERAL ORDER BY+LIMIT per group planned through GroupedTopKExec by the injected rules",
     (s, dir) => {
-      val scoped = s.newSession()
-      graft.plans.GroupedTopK.ensureInjected(scoped)
-      table(scoped, dir, "orders").createOrReplaceTempView("orders_ltk")
-      table(scoped, dir, "lineitem").createOrReplaceTempView("lineitem_ltk")
-      scoped.sql("""
+      val s2 = scoped(s)
+      graft.plans.GroupedTopK.ensureInjected(s2)
+      table(s2, dir, "orders").createOrReplaceTempView("orders_ltk")
+      table(s2, dir, "lineitem").createOrReplaceTempView("lineitem_ltk")
+      s2.sql("""
         SELECT o.o_orderkey, l.l_linenumber, l.l_quantity
         FROM orders_ltk o, LATERAL (
           SELECT l_linenumber, l_quantity
@@ -3967,7 +3967,7 @@ object Relational {
     "q276_sql_udf",
     "SQL-defined scalar functions (CREATE FUNCTION ... RETURN): analyzer-inlined, codegen-safe",
     (s, dir) => {
-      val s2 = s.newSession()
+      val s2 = scoped(s)
       table(s2, dir, "orders").createOrReplaceTempView("orders_v")
       s2.sql("""CREATE OR REPLACE TEMPORARY FUNCTION cents(p DOUBLE)
         RETURNS BIGINT RETURN CAST(round(p * 100) AS BIGINT)""")
@@ -4008,7 +4008,7 @@ object Relational {
     "q277_session_vars_params",
     "DECLARE/SET VARIABLE + named-parameter spark.sql: injection-safe parameterization",
     (s, dir) => {
-      val s2 = s.newSession()
+      val s2 = scoped(s)
       table(s2, dir, "orders").createOrReplaceTempView("orders_v")
       s2.sql("DECLARE OR REPLACE VARIABLE cutoff DOUBLE DEFAULT 50000.0")
       s2.sql("SET VARIABLE cutoff = 150000.0")
@@ -4044,7 +4044,7 @@ object Relational {
     "q282_sql_pipe_syntax",
     "Pipe SQL |>: filter |> join |> aggregate |> having |> order, desugaring hash-proven",
     (s, dir) => {
-      val s2 = s.newSession()
+      val s2 = scoped(s)
       table(s2, dir, "lineitem").createOrReplaceTempView("li_v")
       table(s2, dir, "orders").createOrReplaceTempView("ord_v")
       s2.sql(
@@ -4081,7 +4081,7 @@ object Relational {
     "q283_execute_immediate",
     "EXECUTE IMMEDIATE over a session-variable statement, rebound twice via USING",
     (s, dir) => {
-      val s2 = s.newSession()
+      val s2 = scoped(s)
       table(s2, dir, "orders").createOrReplaceTempView("ord_v")
       s2.sql("DECLARE OR REPLACE VARIABLE stmt STRING")
       s2.sql(
@@ -4131,7 +4131,7 @@ object Relational {
     "q284_sql_table_function",
     "CREATE FUNCTION … RETURNS TABLE + LATERAL: correlated per-nation aggregate, group-by-oracle-proven",
     (s, dir) => {
-      val s2 = s.newSession()
+      val s2 = scoped(s)
       table(s2, dir, "supplier").createOrReplaceTempView("supp_v")
       table(s2, dir, "nation").createOrReplaceTempView("nat_v")
       s2.sql(
@@ -4176,7 +4176,7 @@ object Relational {
     "q311_modern_sql_ergonomics",
     "GROUP BY ALL + ORDER BY ALL + SELECT * EXCEPT + IDENTIFIER(): shorthand desugars to the classic forms",
     (s, dir) => {
-      val s2 = s.newSession()
+      val s2 = scoped(s)
       table(s2, dir, "orders").createOrReplaceTempView("erg_ord_v")
       // the narrow projection by exclusion, through a parameterized
       // identifier — the table name is a bound parameter, never text glue

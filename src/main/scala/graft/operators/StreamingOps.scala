@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming queries in the graded registry: each replays the
@@ -69,15 +70,17 @@ object StreamingOps {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Checkpoint files written through `FileSystem` rather than Spark's
-    * default `FileContext` manager. That manager renames each offset,
-    * commit and state file (and its checksum sidecar) through `FileContext`,
-    * whose local rename first reads the link status, and without the native
-    * Hadoop library that read forks `readlink` per file. A local
-    * `FileSystem` rename is an atomic POSIX rename. */
-  private val fileSystemCheckpoints =
+  /** Checkpoint files written through [[graft.streaming.LocalCheckpointFileManager]]
+    * rather than Spark's default `FileContext` manager. That manager
+    * renames each offset, commit and state file (and its checksum sidecar)
+    * through `FileContext`, whose local rename first reads the link status,
+    * and without the native Hadoop library that read forks `readlink` per
+    * file; Hadoop's local `FileSystem` in turn forks `chmod` for each file
+    * and directory it creates. On a local path the manager makes, writes
+    * and renames with java.nio instead. */
+  private val localCheckpoints =
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+      classOf[graft.streaming.LocalCheckpointFileManager].getName
 
   /** A fresh checkpoint dir on the spool medium (tmpfs when available): the
     * offset/commit/state logs fsync every micro-batch, and that fsync is
@@ -88,15 +91,20 @@ object StreamingOps {
     * process all available input, reach a terminal state". `start` picks
     * the sink and starts the writer (`_.start()`, `_.toTable(t)`); the drain
     * pre-creates `ckpt` (so the engine's resolve-and-mkdir path finds it),
-    * sets the checkpoint, the trigger and [[fileSystemCheckpoints]], and
-    * awaits termination, rethrowing the stream's failure.
+    * sets the checkpoint, the trigger, [[localCheckpoints]] and
+    * [[graft.Sessions.sharedClassloader]] (so the clone of a session built
+    * elsewhere does not get a classloader of its own), and awaits
+    * termination, rethrowing the stream's failure.
     *
     * `conf` applies to this query only. A stream's conf is fixed inside
-    * `start()` (StreamExecution clones the session there), so the caller's
-    * values are restored as soon as `start` returns, not after the replay:
-    * set keys go back to their old value, unset keys are unset again. A
-    * concurrent job on the same session sees the per-query conf for that
-    * one call only. */
+    * `start()` (StreamExecution clones the session there), but its sources
+    * are built after `start()` returns, in the stream's thread, from the
+    * session that read them: the caller's. A file source's log takes its
+    * checkpoint manager from that session's conf then. So the caller's
+    * values are restored once the query has built its sources (Spark's
+    * initialization latch), not after the replay: set keys go back to
+    * their old value, unset keys are unset again. A concurrent job on the
+    * same session sees the per-query conf for that window only. */
   private[graft] def drain(df: DataFrame, ckpt: String, conf: (String, String)*)(
       start: DataStreamWriter[Row] => StreamingQuery): StreamingQuery = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt))
@@ -105,10 +113,17 @@ object StreamingOps {
       .trigger(Trigger.AvailableNow())
     val rc = df.sparkSession.conf
     val explicit = rc.getAll // set keys only, no defaults
-    val perQuery = fileSystemCheckpoints +: conf
+    val perQuery = Seq(localCheckpoints, graft.Sessions.sharedClassloader) ++ conf
     val saved = perQuery.map { case (k, _) => k -> explicit.get(k) }
     perQuery.foreach { case (k, v) => rc.set(k, v) }
-    val q = try start(writer) finally saved.foreach {
+    val q = try {
+      val q = start(writer)
+      q match {
+        case w: StreamingQueryWrapper => w.streamingQuery.awaitInitialization(Long.MaxValue)
+        case _ =>
+      }
+      q
+    } finally saved.foreach {
       case (k, Some(v)) => rc.set(k, v)
       case (k, None)    => rc.unset(k)
     }
@@ -2137,7 +2152,7 @@ object StreamingOps {
         }.start())
       val mvPath = spoolDir(s"st32_mv_${runTag()}")
       mv.coalesce(1).write.mode("overwrite").parquet(mvPath)
-      val s2 = s.newSession()
+      val s2 = scoped(s)
       s2.experimental.extraOptimizations = Seq(MaterializedViewRewrite)
       MaterializedViewRewrite.registry.put("orders.parquet",
         s2.read.parquet(mvPath).queryExecution.analyzed)

@@ -2556,6 +2556,33 @@ object Warehouse {
       GROUP BY nationkey
       ORDER BY nationkey"""))
 
+  /** q181's per-order lineitem charge Σ extprice·(1−disc)·(1+tax), rounded
+    * half-up to cents: the oracle's DECIMAL arithmetic, in integers. The
+    * three casts are the oracle's (a double's decimal cast is where the two
+    * engines must agree); after them each factor is an exact integer, cents
+    * and whole percents, so the line charge is cents × (100 − disc%) ×
+    * (100 + tax%) in millionths, its sum S per order is exact, and
+    * round(S / 10⁴) half-up (away from zero) is the cents figure. Decimal
+    * products above 18 digits are BigDecimal-backed in Spark, and that
+    * arithmetic filled the task time of q181's lineitem stage. A line
+    * charge fits a BIGINT for any price the DECIMAL(14,2) cast admits
+    * (under 10¹⁴ cents, each factor under 200); an order's sum would
+    * overflow, and fail under ANSI, only past 9·10¹² dollars. Per-order
+    * results equal the DECIMAL form's at sf0.001, sf0.01 and sf0.1
+    * (InvariantSpec). */
+  private[graft] def q181DerivedCents(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    table(s, dir, "lineitem")
+      .select(col("l_orderkey"), expr(
+        """CAST(CAST(l_extendedprice AS DECIMAL(14,2)) * 100BD AS BIGINT)
+           * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100BD AS BIGINT))
+           * (100 + CAST(CAST(l_tax AS DECIMAL(4,2)) * 100BD AS BIGINT))""").as("charge_e6"))
+      .groupBy(col("l_orderkey"))
+      .agg(sum(col("charge_e6")).as("s"))
+      .select(col("l_orderkey"), expr(
+        "CASE WHEN s >= 0 THEN (s + 5000) div 10000 ELSE -((5000 - s) div 10000) END")
+        .as("derived_cents"))
+
   /** Cross-table MEASURE reconciliation — the audit q81's single-table
     * constraints can't do: does the order header's o_totalprice equal the
     * lineitem-derived charge Σ extprice·(1−disc)·(1+tax)? Header-vs-detail
@@ -2563,9 +2590,10 @@ object Warehouse {
     * sign-off asks, and on this synthetic data it FAILS informatively —
     * the report buckets orders into exact / ≤1% / ≤5% / >5% relative
     * error plus a no-lineitems bucket, with order counts and the absolute
-    * cent drift per bucket. Exactness: the charge is computed in DECIMAL
-    * (14,2 × 4,2 × 4,2 — scale-6 products summed exactly, then rounded
-    * to cents half-up on both engines); relative error in bp by integral
+    * cent drift per bucket. Exactness: the oracle computes the charge in
+    * DECIMAL (14,2 × 4,2 × 4,2 — scale-6 products summed exactly, then
+    * rounded to cents half-up), and [[q181DerivedCents]] the same figure
+    * in exact integers; relative error in bp by integral
     * division on cents. Scale shape: ONE lineitem scan pre-aggregates
     * per order (partial agg before the shuffle), then ONE equi-join to
     * the header — at 100 TB this is the textbook large-large sort-merge
@@ -2576,14 +2604,7 @@ object Warehouse {
     "q181_order_total_reconciliation",
     "Header-vs-detail audit: o_totalprice vs lineitem charge, bucketed relative drift",
     (s, dir) => {
-      val derived = table(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(expr(
-          """CAST(l_extendedprice AS DECIMAL(14,2))
-             * (1 - CAST(l_discount AS DECIMAL(4,2)))
-             * (1 + CAST(l_tax AS DECIMAL(4,2)))""")).as("charge"))
-        .select(col("l_orderkey"),
-          expr("CAST(round(charge * 100) AS BIGINT)").as("derived_cents"))
+      val derived = q181DerivedCents(s, dir)
       table(s, dir, "orders")
         .select(col("o_orderkey"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("header_cents"))
@@ -2804,7 +2825,7 @@ object Warehouse {
           .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
             .as("cents"))
           .coalesce(1).write.mode("overwrite").parquet(p))
-      val s2 = s.newSession()
+      val s2 = scoped(s)
       s2.experimental.extraOptimizations = Seq(MaterializedViewRewrite)
       MaterializedViewRewrite.registry.put("orders.parquet",
         s2.read.parquet(mvPath).queryExecution.analyzed)

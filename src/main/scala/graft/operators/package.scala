@@ -57,13 +57,16 @@ package object operators {
       expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents")) ++ extra: _*)
   }
 
-  /** `s.newSession()` with `conf` set: the one way a builder runs under
-    * conf of its own. The caller's session, which JobRunner's async jobs
-    * share, is left as it was. The new session starts from the
-    * SparkContext's conf, not from conf set on `s` at runtime. */
+  /** `s.newSession()` with `conf` set: the one way a builder gets a
+    * session of its own, for conf, temp views, functions or optimizer
+    * rules. The caller's session, which JobRunner's async jobs share, is
+    * left as it was. The new session starts from the SparkContext's conf,
+    * not from conf set on `s` at runtime, and shares the executor's
+    * classloader ([[graft.Sessions.sharedClassloader]]) even when `s` was
+    * built elsewhere. */
   def scoped(s: SparkSession, conf: (String, String)*): SparkSession = {
     val s2 = s.newSession()
-    conf.foreach { case (k, v) => s2.conf.set(k, v) }
+    (graft.Sessions.sharedClassloader +: conf).foreach { case (k, v) => s2.conf.set(k, v) }
     s2
   }
 

@@ -27,6 +27,23 @@ class InvariantSpec extends AnyFunSuite with LocalSpark {
     assert(q10 == Seq((5000L, "Customer#000005000", "BUILDING")))
   }
 
+  test("q181: the integer lineitem charge equals the DECIMAL charge rounded half-up, per order, at three scales") {
+    val root = new java.io.File(sfDir).getParent
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = s"$root/$sf"
+      val decimal = operators.table(spark, dir, "lineitem")
+        .groupBy(col("l_orderkey"))
+        .agg(sum(expr("""CAST(l_extendedprice AS DECIMAL(14,2))
+          * (1 - CAST(l_discount AS DECIMAL(4,2)))
+          * (1 + CAST(l_tax AS DECIMAL(4,2)))""")).as("charge"))
+        .select(col("l_orderkey"), expr("CAST(round(charge * 100) AS BIGINT)").as("derived_cents"))
+      val integer = operators.Warehouse.q181DerivedCents(spark, dir)
+      assert(integer.schema == decimal.schema, sf)
+      assert(integer.count() == decimal.count() && integer.count() > 0, sf)
+      assert(integer.exceptAll(decimal).isEmpty && decimal.exceptAll(integer).isEmpty, sf)
+    }
+  }
+
   test("t12: every chunk except a source's last holds exactly 512 tokens, and fills partition the stream") {
     val rows = operators.TextAnalysis.t12.build(spark, sfDir).collect()
     val bySource = rows.groupBy(_.getString(0))

@@ -11,6 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * forgotten conf, a registration left on the caller's session, which
   * JobRunner's async jobs share). This scan fails on a new copy outside
   * the allowlists below, each entry with its reason.
+  *
+  * Every engine session shares the executor's classloader
+  * ([[Sessions.sharedClassloader]]): `Sessions.local` builds with artifact
+  * isolation off and `scoped` sets it off, so a bare `newSession()` would
+  * again recompile every task class it runs. With isolation off, an
+  * artifact added to one session is visible to every session, so the
+  * engine adds none.
   */
 class SessionGuardSpec extends AnyFunSuite {
   private val builderAllowed = Map(
@@ -22,6 +29,11 @@ class SessionGuardSpec extends AnyFunSuite {
       "eager save/restore blocks whose frames are built on the caller's session",
     "src/main/scala/graft/operators/package.scala" ->
       "events(): nanosAsLong is read at scan planning, on the session that executes")
+
+  private val newSessionAllowed = Map(
+    "src/main/scala/graft/operators/package.scala" ->
+      "scoped: the one new session, with the shared classloader set")
+  private val artifactAllowed = Map.empty[String, String]
 
   private def scan(roots: Seq[String], pattern: scala.util.matching.Regex): Set[String] = {
     import scala.jdk.CollectionConverters._
@@ -56,5 +68,15 @@ class SessionGuardSpec extends AnyFunSuite {
   test("operators set conf on the caller's session only in the allowlisted files") {
     check(scan(Seq("src/main/scala/graft/operators"), """\b(s|spark)\.conf\.set\(""".r),
       callerConfAllowed, "conf.set on the caller's session")
+  }
+
+  test("src/main starts a new session only in scoped") {
+    check(scan(Seq("src/main/scala"), """\.newSession\(\)""".r),
+      newSessionAllowed, "a bare newSession()")
+  }
+
+  test("src/main adds no artifact: no addArtifact, ADD JAR or addJar") {
+    check(scan(Seq("src/main/scala"), """(?i)addArtifacts?\(|\bADD\s+JARS?\b|addJars?\(""".r),
+      artifactAllowed, "an added artifact")
   }
 }

@@ -20,4 +20,21 @@ class SessionsSpec extends AnyFunSuite with LocalSpark {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
+
+  test("sessions share the executor's classloader: a query on a second fresh scoped session compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val isolation = Sessions.sharedClassloader._1
+    assert(spark.conf.get(isolation) == "false")
+    def compiled(): Long = {
+      val s2 = operators.scoped(spark)
+      assert(s2.conf.get(isolation) == "false")
+      val c0 = METRIC_COMPILATION_TIME.getCount
+      val rows = s2.range(0, 2000, 1, 4).selectExpr("id % 7 AS k", "id * 3 AS v")
+        .groupBy("k").sum("v").collect()
+      assert(rows.length == 7)
+      METRIC_COMPILATION_TIME.getCount - c0
+    }
+    compiled()
+    assert(compiled() == 0)
+  }
 }

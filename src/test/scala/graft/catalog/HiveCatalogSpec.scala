@@ -2,7 +2,6 @@ package graft.catalog
 
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.PosixFilePermissions
-import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException
@@ -53,20 +52,11 @@ class HiveCatalogSpec extends AnyFunSuite with LocalSpark {
   }
 
   /** `body`'s result, the metastore client calls it made and the OS
-    * processes the JVM started meanwhile (JFR `jdk.ProcessStart` events). */
+    * processes the JVM started meanwhile ([[graft.Forks]]). */
   private def measured[T](body: => T): (T, Long, Int) = {
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
     val calls0 = HiveCatalogMetrics.METRIC_HIVE_CLIENT_CALLS.getCount
-    val out = try body finally rec.stop()
-    val calls = HiveCatalogMetrics.METRIC_HIVE_CLIENT_CALLS.getCount - calls0
-    val dump = tmp.resolve(s"forks_${System.nanoTime()}.jfr")
-    try {
-      rec.dump(dump)
-      (out, calls, jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
-        .count(_.getEventType.getName == "jdk.ProcessStart"))
-    } finally { rec.close(); Files.deleteIfExists(dump) }
+    val (out, forks) = graft.Forks.counted(body)
+    (out, HiveCatalogMetrics.METRIC_HIVE_CLIENT_CALLS.getCount - calls0, forks)
   }
 
   test("partition commands: metastore calls per command, no forked process") {

@@ -230,4 +230,86 @@ class StreamsSpec extends AnyFunSuite with LocalSpark {
     }
     assert(views() == before)
   }
+
+  // --- the fixed cost a replay pays besides its work: compiles and forks ---
+
+  /** perfbench's in-repo copy of the sf0.01 fixture tables. */
+  private val sfDir = "perfbench/fixtures/sf0.01"
+  private val st9 = graft.operators.StreamingOps.st9
+
+  /** `body`'s result and the classes Spark's code generator compiled meanwhile. */
+  private def compiles[T](body: => T): (T, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, METRIC_COMPILATION_TIME.getCount - c0)
+  }
+
+  /** Every file under `dir`, as paths relative to it. */
+  private def filesUnder(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).map(root.relativize(_).toString).toSeq.sorted
+  }
+
+  test("a replay run twice compiles no class the second time, on a caller session with artifact isolation on") {
+    // a session the engine did not build, with Spark 4.1's default: the
+    // stream's clone of it must still share the executor's classloader
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.artifact.isolation.enabled", "true")
+    val (first, _) = compiles(st9.build(caller, sfDir).collect().toSeq)
+    val (second, n) = compiles(st9.build(caller, sfDir).collect().toSeq)
+    assert(second == first)
+    assert(n == 0, s"the second st9 replay compiled $n classes")
+  }
+
+  test("a replay forks no process") {
+    st9.build(spark, sfDir).collect() // the first run builds the spool, whose parquet committer forks
+    val (_, forks) = graft.Forks.counted(st9.build(spark, sfDir).collect())
+    assert(forks == 0)
+  }
+
+  test("a replay's checkpoint holds no checksum sidecar and no temp file") {
+    import graft.operators.StreamingOps.{drainToLocal, shufflePartitions}
+    val (src, ckpt) = fileStream()
+    drainToLocal(src.groupBy("event_type").count(), OutputMode.Complete(), ckpt, shufflePartitions(2))
+    val files = filesUnder(ckpt)
+    assert(files.exists(_.startsWith("state/")) && files.contains("commits/0"), files)
+    val stray = files.filter { f =>
+      val name = f.split('/').last
+      (name.startsWith(".") && name.endsWith(".crc")) || name.endsWith(".tmp")
+    }
+    assert(stray.isEmpty, files)
+  }
+
+  test("a checkpoint written through Hadoop's checksum file system restarts under the local manager") {
+    import graft.operators.StreamingOps.{drainToLocal, shufflePartitions}
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-restart")
+    val src = root.resolve("src").toString
+    val ckpt = root.resolve("ckpt").toString
+    Seq(ev(1, 0), ev(2, 5, typ = "click")).toDF().write.parquet(src)
+    val schema = spark.read.parquet(src).schema
+    def counts() = spark.readStream.schema(schema).parquet(src).groupBy("event_type").count()
+    val hadoopManager = "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    drainToLocal(counts(), OutputMode.Complete(), ckpt, shufflePartitions(2), hadoopManager)
+    assert(filesUnder(ckpt).contains("commits/.0.crc"))
+    // Without its commit, batch 0 runs again on restart: its state deltas
+    // and its commit are rewritten over the sidecars the first run left.
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "0"))
+    Seq(ev(3, 12), ev(4, 20)).toDF().write.mode("append").parquet(src)
+    val (q, out) = drainToLocal(counts(), OutputMode.Complete(), ckpt, shufflePartitions(2))
+    assert(q.recentProgress.map(_.batchId).toSeq == Seq(0L, 1L))
+    assert(out.collect().map(r => r.getString(0) -> r.getLong(1)).toSet ==
+      Set("view" -> 3L, "click" -> 1L))
+    // every file reads back through Hadoop's checksum verification
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    filesUnder(ckpt).filterNot(_.split('/').last.endsWith(".crc")).foreach { f =>
+      val in = fs.open(new org.apache.hadoop.fs.Path(s"$ckpt/$f"))
+      try in.readAllBytes() finally in.close()
+    }
+    graft.operators.deleteRecursively(root)
+  }
 }
