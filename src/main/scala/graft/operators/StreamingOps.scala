@@ -118,10 +118,7 @@ object StreamingOps {
     perQuery.foreach { case (k, v) => rc.set(k, v) }
     val q = try {
       val q = start(writer)
-      q match {
-        case w: StreamingQueryWrapper => w.streamingQuery.awaitInitialization(Long.MaxValue)
-        case _ =>
-      }
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.awaitInitialization(Long.MaxValue)
       q
     } finally saved.foreach {
       case (k, Some(v)) => rc.set(k, v)

@@ -2564,10 +2564,14 @@ object Warehouse {
     * (100 + tax%) in millionths, its sum S per order is exact, and
     * round(S / 10⁴) half-up (away from zero) is the cents figure. Decimal
     * products above 18 digits are BigDecimal-backed in Spark, and that
-    * arithmetic filled the task time of q181's lineitem stage. A line
-    * charge fits a BIGINT for any price the DECIMAL(14,2) cast admits
-    * (under 10¹⁴ cents, each factor under 200); an order's sum would
-    * overflow, and fail under ANSI, only past 9·10¹² dollars. Per-order
+    * arithmetic filled the task time of q181's lineitem stage. With
+    * discount and tax in [0,1), which TPC-H data guarantees, each percent
+    * factor is under 200 and a line charge fits a BIGINT for any price the
+    * DECIMAL(14,2) cast admits (under 10¹⁴ cents); an order's sum would
+    * overflow only past 9·10¹² dollars. Outside that range the
+    * DECIMAL(4,2) casts admit factors up to about 10⁴, and a charge
+    * overflows past about 9·10⁸ dollars: under ANSI that fails where the
+    * DECIMAL form returns a value. Per-order
     * results equal the DECIMAL form's at sf0.001, sf0.01 and sf0.1
     * (InvariantSpec). */
   private[graft] def q181DerivedCents(s: org.apache.spark.sql.SparkSession,

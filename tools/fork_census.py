@@ -5,7 +5,7 @@ or Spark frame that started each, and by the directory each one touched.
     python3 tools/fork_census.py --workload warehouse_sql --seed 2
     python3 tools/fork_census.py --workload catalog_ops --seed 2 --checkout PARENT_DIR
 
-It runs `python3 perfbench/run.py --workload W --seed S --seconds N --trace 0`
+It runs `python3 perfbench/run.py --workload W --seed S --seconds 20 --trace 0`
 in the checkout (default: the one this script is in) with JAVA_TOOL_OPTIONS
 asking every JVM for a JFR recording, written at exit into a fresh temp dir,
 so perfbench itself is unchanged. The benchmark JVM's recording is the one
@@ -81,9 +81,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--checkout", default=ROOT)
-    ap.add_argument("--top", type=int, default=25, help="rows per table")
     ap.add_argument("--examples", type=int, default=0, metavar="N",
                     help="also print one fork's command and top N frames per command and frame")
     a = ap.parse_args()
@@ -96,7 +94,7 @@ def main():
                                     f" -XX:StartFlightRecording=filename={rec_dir},dumponexit=true"
                                     " -XX:FlightRecorderOptions=stackdepth=128").strip()
         cmd = [sys.executable, "perfbench/run.py", "--workload", a.workload, "--seed", str(a.seed),
-               "--seconds", str(a.seconds), "--trace", "0"]
+               "--seconds", "20", "--trace", "0"]
         proc = subprocess.run(cmd, cwd=a.checkout, env=env, stdout=subprocess.PIPE,
                               stderr=subprocess.PIPE, text=True)
         lines = proc.stdout.strip().splitlines()
@@ -131,13 +129,13 @@ def main():
     for word, n in by_cmd.most_common():
         print(f"{n:7d}  {word}")
     print("# by command and first engine or Spark frame")
-    for (word, frame), n in by_frame.most_common(a.top):
+    for (word, frame), n in by_frame.most_common():
         print(f"{n:7d}  {word:10s} {frame}")
     print("# by command and path")
-    for (word, where), n in by_place.most_common(a.top):
+    for (word, where), n in by_place.most_common():
         print(f"{n:7d}  {word:10s} {where}")
     if a.examples:
-        for (word, frame), _ in by_frame.most_common(a.top):
+        for (word, frame), _ in by_frame.most_common():
             command, stack = example[(word, frame)]
             print(f"# example: {word} at {frame}\n  command = {command}")
             for line in stack[:a.examples]:
