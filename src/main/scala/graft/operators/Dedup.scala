@@ -42,6 +42,76 @@ object Dedup {
       i => concat_ws(" ", element_at(w, i + 1), element_at(w, i + 2), element_at(w, i + 3))))
   }
 
+  /** (doc_id, s): the distinct 3-word shingles of each document with
+    * doc_id < bound. */
+  private def shingleRows(s: SparkSession, dir: String, bound: Int): DataFrame =
+    table(s, dir, "documents")
+      .filter(col("doc_id") < bound)
+      .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
+
+  /** (doc_id, n): shingles per document of a [[shingleRows]] frame. */
+  private def shingleCounts(sh: DataFrame): DataFrame =
+    sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+
+  /** Every pair doc1 < doc2 of `sh` that shares a shingle, with the shared
+    * count `inter` and both shingle counts `n1`, `n2` from `sizes`
+    * ([[shingleCounts]], hinted as the caller chooses). The exact
+    * shingle equi-join: bounded slices only. */
+  private def overlapPairs(sh: DataFrame, sizes: DataFrame): DataFrame =
+    sh.as("a").join(sh.as("b"),
+        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
+      .agg(count(lit(1)).as("inter"))
+      .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
+      .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
+
+  // Oracle fragments. Each oracle stays a complete DuckDB query; these
+  // only spell its shared CTEs once.
+
+  /** CTE `sh`: the distinct 3-word shingles `s` of each doc_id's word
+    * list `ws` in CTE `words`. */
+  private def shSql(words: String): String =
+    s"""sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
+             FROM $words, UNNEST(range(1, len(ws) - 1)) AS t(i))"""
+
+  /** CTEs `w` (the lowercased words `ws` of each document with doc_id <
+    * bound) and `sh` over it: [[shingleRows]]. */
+  private def shinglesSql(bound: Int): String =
+    s"""w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
+            FROM documents WHERE doc_id < $bound),
+      ${shSql("w")}"""
+
+  /** CTEs `sizes` (shingles per doc) and `pairs` (every doc1 < doc2
+    * sharing a shingle, with the shared count `inter`) over `sh`:
+    * [[overlapPairs]]. */
+  private def overlapSql(pairs: String): String =
+    s"""sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      $pairs AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
+                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                GROUP BY 1, 2)"""
+
+  /** CTEs `good` (the [[overlapSql]] `pairs` with Jaccard ≥ 0.3), `edges`
+    * (both directions) and the recursive `reach`: every (id, label) where
+    * node label reaches node id. min(label) per id is d6's cluster id. */
+  private def reachSql(pairs: String): String =
+    s"""good AS (SELECT doc1, doc2 FROM $pairs
+               JOIN sizes na ON na.doc_id = doc1
+               JOIN sizes nb ON nb.doc_id = doc2
+               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
+      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
+                UNION ALL SELECT doc2, doc1 FROM good),
+      reach AS (SELECT src AS id, src AS label FROM edges
+                UNION
+                SELECT e.dst AS id, r.label FROM reach r
+                JOIN edges e ON e.src = r.id)"""
+
+  /** The d6 closure over doc_id < 300, from the words to `reach`, for a
+    * `WITH RECURSIVE` oracle. */
+  private def closureSql(pairs: String): String =
+    s"""${shinglesSql(300)},
+      ${overlapSql(pairs)},
+      ${reachSql(pairs)}"""
+
   /** Exact (canonicalized) dedup: hash-groupBy, keep the smallest doc_id.
     * Reference hook: the distinct() dirname dedup of A13 generalized to
     * content identity. */
@@ -172,15 +242,9 @@ object Dedup {
           (col("n_high_found") === col("n_high")).as("high_recall_ok"),
           (col("n_found") * 10 >= col("n_truth") * 7).as("recall50_ok"))
     },
-    Some("""
-      WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                 FROM documents WHERE doc_id < 3000),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
+    Some(s"""
+      WITH ${shinglesSql(3000)},
+      ${overlapSql("inter")},
       truth AS (SELECT doc1, doc2, inter,
                        (na.n + nb.n - inter) AS un
                 FROM inter
@@ -209,15 +273,9 @@ object Dedup {
       .withColumn("jaccard", round(col("inter").cast("double") / col("un"), 4))
       .select("doc1", "doc2", "inter", "un", "jaccard")
       .orderBy("doc1", "doc2"),
-    Some("""
-      WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                 FROM documents WHERE doc_id < 3000),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
+    Some(s"""
+      WITH ${shinglesSql(3000)},
+      ${overlapSql("inter")}
       SELECT doc1, doc2, CAST(inter AS BIGINT) AS inter,
              CAST(na.n + nb.n - inter AS BIGINT) AS un,
              round(CAST(inter AS DOUBLE) / (na.n + nb.n - inter), 4) AS jaccard
@@ -236,32 +294,17 @@ object Dedup {
     "d3_ngram_jaccard",
     "Exact 3-gram Jaccard pairs ≥ 0.5 over doc_id < 300 (LSH ground truth)",
     (s, dir) => {
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inter = sh.as("a").join(sh.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("inter"))
-      inter
-        .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
-        .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
+      val sh = shingleRows(s, dir, 300)
+      overlapPairs(sh, shingleCounts(sh))
         .withColumn("un", (col("n1") + col("n2") - col("inter")).cast("long"))
         .filter(col("inter").cast("double") / col("un") >= 0.5)
         .select(col("doc1"), col("doc2"), col("inter"), col("un"),
           round(col("inter").cast("double") / col("un"), 4).as("jaccard"))
         .orderBy("doc1", "doc2")
     },
-    Some("""
-      WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                 FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
+    Some(s"""
+      WITH ${shinglesSql(300)},
+      ${overlapSql("inter")}
       SELECT doc1, doc2, inter, (na.n + nb.n - inter) AS un,
              round(CAST(inter AS DOUBLE) / (na.n + nb.n - inter), 4) AS jaccard
       FROM inter
@@ -372,14 +415,25 @@ object Dedup {
              TRUE AS guarantee_ok, TRUE AS recall_ok
       FROM documents WHERE doc_id < 300"""))
 
-  /** Embedding-cosine near-dup — the semantic-dedup variant: candidates are
-    * confined to a coarse cell (here the `label` column, standing in for the
-    * IVF coarse-quantizer cell of s4/s5), then confirmed by exact cosine ≥
-    * 0.35; keeper = smallest id among confirmed neighbors. Search cost is
-    * O(Σ cell²) instead of O(n²): at 100 TB the quantizer's cell count grows
-    * with the corpus so cells stay bounded, and the equi-join on cell id is
-    * a plain shuffle join (each side carries the 256-byte vector + id, no
-    * text). Fully deterministic → oracle-checked. */
+  /** (doc_id, sig): the portable 60-bit md5-simhash of each document with
+    * doc_id < 300. Each word hashes to the first 15 md5 hex chars as a
+    * BIGINT (fits signed 64, no sign games in either engine); each bit
+    * position takes a +1/-1 vote per word occurrence. The explode(0..59)
+    * runs before the aggregate with map-side combine, so the shuffle
+    * carries ≤ 60 rows per doc, not 60 rows per token. */
+  private def md5Simhash(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "documents")
+      .filter(col("doc_id") < 300)
+      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("word"))
+      .select(col("doc_id"),
+        expr("CAST(conv(substring(md5(word), 1, 15), 16, 10) AS BIGINT)").as("h"))
+      .select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(59))).as("j"))
+      .groupBy("doc_id", "j")
+      .agg(sum(when(expr("((h >> j) & 1) = 1"), 1).otherwise(-1)).as("vote"))
+      .groupBy("doc_id")
+      .agg(sum(when(col("vote") > 0,
+        expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(0L)).as("sig"))
+
   /** Exact SimHash ground truth — d4's oracle-checked twin (the d3↔d2
     * relationship, replayed for SimHash). d4's signature comes from a
     * native Scala expression no second engine can reproduce, so the twin
@@ -392,23 +446,7 @@ object Dedup {
     "d7_simhash_exact",
     "Exact md5-simhash(60-bit) all-pairs Hamming ≤ 12 over doc_id < 300 (d4 ground truth)",
     (s, dir) => {
-      val words = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("word"))
-      // 60-bit word hash: first 15 md5 hex chars → BIGINT (fits signed 64,
-      // no sign games in either engine)
-      val hashed = words.select(col("doc_id"),
-        expr("CAST(conv(substring(md5(word), 1, 15), 16, 10) AS BIGINT)").as("h"))
-      // classic simhash: per bit position, +1/-1 vote per word occurrence;
-      // the explode(0..59) runs pre-aggregation with map-side combine, so
-      // the shuffle carries ≤ 60 rows per doc, not 60 rows per token
-      val sig = hashed
-        .select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(59))).as("j"))
-        .groupBy("doc_id", "j")
-        .agg(sum(when(expr("((h >> j) & 1) = 1"), 1).otherwise(-1)).as("vote"))
-        .groupBy("doc_id")
-        .agg(sum(when(col("vote") > 0,
-          expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(0L)).as("sig"))
+      val sig = md5Simhash(s, dir)
       val a = sig.select(col("doc_id").as("doc1"), col("sig").as("s1"))
       val b = sig.select(col("doc_id").as("doc2"), col("sig").as("s2"))
       a.join(b, col("doc1") < col("doc2"))
@@ -436,6 +474,14 @@ object Dedup {
       WHERE bit_count(xor(a.sig, b.sig)) <= 12
       ORDER BY doc1, doc2"""))
 
+  /** Embedding-cosine near-dup — the semantic-dedup variant: candidates are
+    * confined to a coarse cell (here the `label` column, standing in for the
+    * IVF coarse-quantizer cell of s4/s5), then confirmed by exact cosine ≥
+    * 0.35; keeper = smallest id among confirmed neighbors. Search cost is
+    * O(Σ cell²) instead of O(n²): at 100 TB the quantizer's cell count grows
+    * with the corpus so cells stay bounded, and the equi-join on cell id is
+    * a plain shuffle join (each side carries the 256-byte vector + id, no
+    * text). Fully deterministic → oracle-checked. */
   val d5 = GraftQuery(
     "d5_embedding_neardup",
     "Embedding-cosine near-dup: cell-local candidates + cosine ≥ 0.35 confirm, keeper = min id",
@@ -459,14 +505,12 @@ object Dedup {
           round(max(col("sim")), 4).as("max_sim"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, label, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       p AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-                   list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-                     q -> CAST(q[1] AS DOUBLE) * CAST(q[2] AS DOUBLE)), 'sum')
+                   ${sqlDot("a.embedding", "b.embedding", "q")}
                      / (a.nrm * b.nrm) AS sim
             FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id)
       SELECT id2 AS doc_id, min(id1) AS keep_id, count(*) AS n_neighbors,
@@ -474,6 +518,15 @@ object Dedup {
       FROM p WHERE sim >= 0.35
       GROUP BY id2
       ORDER BY doc_id"""))
+
+  /** (doc1, doc2): the pairs of documents with doc_id < 300 whose
+    * shingle Jaccard is ≥ 0.3, the edges of d6's duplicate graph. */
+  private def d6Edges(s: SparkSession, dir: String): DataFrame = {
+    val sh = shingleRows(s, dir, 300)
+    overlapPairs(sh, shingleCounts(sh))
+      .filter(col("inter").cast("double") / (col("n1") + col("n2") - col("inter")) >= 0.3)
+      .select(col("doc1"), col("doc2"))
+  }
 
   /** Near-dup CLUSTERS: connected components over the d3-style Jaccard
     * pair graph (looser 0.3 threshold for richer components), so "keep one
@@ -496,18 +549,16 @@ object Dedup {
     "d6_neardup_clusters",
     "Connected-component duplicate clusters over Jaccard ≥ 0.3 pairs (large-star/small-star)",
     (s, dir) => {
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val pairs = sh.as("a").join(sh.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("inter"))
-        .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
-        .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
-        .filter(col("inter").cast("double") / (col("n1") + col("n2") - col("inter")) >= 0.3)
-        .select(col("doc1"), col("doc2"))
+      // the contraction loop runs on the CONFIRMED-duplicate edge set —
+      // orders of magnitude smaller than the corpus (here ≤300 nodes by
+      // construction; at scale, proportional to true duplicate density).
+      // Narrow the loop's shuffles to match: 6 shuffles/round × 32 near-empty
+      // tasks is pure scheduler overhead (this is what AQE would pick for
+      // these sizes; set explicitly because localCheckpoint materialization
+      // pins each round's partitioning). The session is the build's own, so
+      // the caller's conf is never touched.
+      val s2 = scoped(s, "spark.sql.shuffle.partitions" -> "4")
+      val pairs = d6Edges(s2, dir)
       val nodes = pairs.select(col("doc1").as("id"))
         .union(pairs.select(col("doc2").as("id"))).distinct().cache()
       // one star round: hang the selected (pred) neighbors of every node u
@@ -529,19 +580,6 @@ object Dedup {
             greatest(col("u"), col("v")).as("v"))
           .distinct()
       }
-      def t0 = System.nanoTime()
-      def dbg(msg: String, start: Long): Unit =
-        if (sys.props.contains("graft.d6.debug"))
-          println(s"[d6] $msg ${(System.nanoTime() - start) / 1e9}s")
-      // the contraction loop runs on the CONFIRMED-duplicate edge set —
-      // orders of magnitude smaller than the corpus (here ≤300 nodes by
-      // construction; at scale, proportional to true duplicate density).
-      // Narrow the loop's shuffles to match: 6 shuffles/round × 32 near-empty
-      // tasks is pure scheduler overhead (this is what AQE would pick for
-      // these sizes; set explicitly because localCheckpoint materialization
-      // pins each round's partitioning). Restored after the loop.
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       var es = pairs.select(col("doc1").as("u"), col("doc2").as("v")).cache()
       def fingerprint(e: org.apache.spark.sql.DataFrame): (Long, Long) = {
         // bit_xor: order-independent and overflow-free under ANSI (a long
@@ -550,21 +588,18 @@ object Dedup {
         val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       }
-      val tFp = t0
       var fp = fingerprint(es)
-      dbg("initial pairs+fingerprint", tFp)
       // Adapt the loop's parallelism to the MEASURED edge count (VERDICT r8
       // item 4): the contraction runs 6 shuffles/round, and on a tiny
       // confirmed-duplicate set every extra task is pure scheduler latency —
       // the suite's most load-sensitive entry under a noisy host. ~50k edges
       // per task keeps fixture-scale graphs on ONE task while a 100 TB
       // dup graph still fans out to the full executor count.
-      s.conf.set("spark.sql.shuffle.partitions",
+      s2.conf.set("spark.sql.shuffle.partitions",
         math.max(1L, math.min(32L, fp._1 / 50000L + 1L)).toString)
       var converged = false
       var rounds = 0
       while (!converged && rounds < 12) {
-        val tR = t0
         // localCheckpoint TRUNCATES the logical plan (cache alone does
         // not): without it each round doubles the plan tree and every
         // subsequent action re-pays catalyst analysis on the whole
@@ -586,15 +621,11 @@ object Dedup {
         val m = obs.get
         val nfp = (m("n").asInstanceOf[Long],
           Option(m("h")).map(_.asInstanceOf[Long]).getOrElse(0L))
-        dbg(s"round ${rounds + 1} compute", tR)
         converged = nfp == fp
         fp = nfp
         es = next
         rounds += 1
-        if (sys.props.contains("graft.d6.debug"))
-          println(s"[d6] round $rounds fp=$nfp converged=$converged")
       }
-      s.conf.set("spark.sql.shuffle.partitions", savedParts)
       // ADVICE r2: a non-converged edge set is NOT star-form — the label
       // extraction below would silently emit duplicate doc_ids with
       // fractured cluster ids. Fail loudly instead; 12 alternating rounds
@@ -603,11 +634,9 @@ object Dedup {
         throw new IllegalStateException(
           s"d6: star contraction did not converge within $rounds rounds (fp=$fp)")
       // at the star fixpoint every non-root points at its component root
-      val tL = t0
       val labels = nodes
         .join(es.select(col("v").as("id"), col("u").as("root")), Seq("id"), "left_outer")
         .select(col("id"), coalesce(col("root"), col("id")).as("label"))
-      dbg("labels built", tL)
       nodes.unpersist(false)
       val sizesByCluster = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
       labels.join(sizesByCluster, "label")
@@ -615,26 +644,9 @@ object Dedup {
           col("cluster_size"))
         .orderBy("cluster_id", "doc_id")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairs AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      good AS (SELECT doc1, doc2 FROM pairs
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${closureSql("pairs")},
       labeled AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id)
       SELECT l.id AS doc_id, l.cluster_id, c.cluster_size
       FROM labeled l
@@ -687,26 +699,9 @@ object Dedup {
         .select(col("doc_id"), col("cluster_id"), col("keep"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairs AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      good AS (SELECT doc1, doc2 FROM pairs
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${closureSql("pairs")},
       labeled AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id),
       docs AS (SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id,
                       d.n_chars
@@ -733,10 +728,8 @@ object Dedup {
     "d9_containment",
     "Asymmetric containment c(A,B)=|S(A)∩S(B)|/|S(A)| ≥ 0.8 on bounded range (excerpt detection)",
     (s, dir) => {
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val sh = shingleRows(s, dir, 300)
+      val sizes = shingleCounts(sh)
       sh.as("a").join(sh.as("b"),
           col("a.s") === col("b.s") && col("a.doc_id") =!= col("b.doc_id"))
         .groupBy(col("a.doc_id").as("contained"), col("b.doc_id").as("container"))
@@ -750,11 +743,8 @@ object Dedup {
           round(col("c_raw"), 4).as("containment"))
         .orderBy("contained", "container")
     },
-    Some("""
-      WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                 FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
+    Some(s"""
+      WITH ${shinglesSql(300)},
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       pairs AS (SELECT a.doc_id AS contained, b.doc_id AS container,
                        count(*) AS inter
@@ -838,26 +828,9 @@ object Dedup {
         .select(col("doc_id"), col("cluster_id"), col("split"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairs AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      good AS (SELECT doc1, doc2 FROM pairs
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${closureSql("pairs")},
       labeled AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id),
       docs AS (SELECT d.doc_id, coalesce(l.cluster_id, d.doc_id) AS cluster_id
                FROM documents d LEFT JOIN labeled l ON l.id = d.doc_id
@@ -895,9 +868,7 @@ object Dedup {
     * Bench charges the build as `x_minhash_sig_spool`. */
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame = {
     val spool = spooled("x_minhash_sig_spool", dir) { p =>
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 2000)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
+      val sh = shingleRows(s, dir, 2000)
       val h = sh.select(col("doc_id"),
         expr(s"CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT) % $MhP").as("h32"))
       // 16 min-aggregates in ONE grouped pass instead of exploding every
@@ -945,58 +916,64 @@ object Dedup {
         explode(slice(col("ids"), col("i") + lit(2), size(col("ids")))).as("doc2"))
       .distinct()
 
-  val d12 = {
-    val P = MhP
-    val A = MhA
-    GraftQuery(
-      "d12_minhash_exact",
-      "Exact md5-MinHash(16) + 4×4 LSH banding + estimate over doc_id < 2000 (d2's cross-engine twin)",
-      (s, dir) => {
-        val m = minhashSigs(s, dir)
-        val sig = m.withColumn("band", (col("j") / 4).cast("int"))
-          .groupBy("doc_id", "band")
-          .agg(array_join(transform(array_sort(collect_list(struct(col("j"), col("m")))),
-            x => x("m").cast("string")), ":").as("bucket"))
-        val cand = bandingCandidates(sig)
-        cand
-          .join(m.select(col("doc_id").as("doc1"), col("j"), col("m").as("ma")), Seq("doc1"))
-          .join(m.select(col("doc_id").as("doc2"), col("j"), col("m").as("mb")), Seq("doc2", "j"))
-          .groupBy("doc1", "doc2")
-          .agg(sum(when(col("ma") === col("mb"), 1).otherwise(0)).as("n_equal"))
-          .select(col("doc1"), col("doc2"), col("n_equal"),
-            round(col("n_equal").cast("double") / 16, 4).as("est_jaccard"))
-          .orderBy("doc1", "doc2")
-      },
-      Some(s"""
-        WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                   FROM documents WHERE doc_id < 2000),
-        sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-               FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-        h AS (SELECT doc_id,
-                     CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % $P AS h32
+  /** (doc_id, band, bucket): the [[minhashSigs]] minima in 4 bands of 4,
+    * each band's bucket its minima joined in j order. */
+  private def bandSigs(m: DataFrame): DataFrame =
+    m.withColumn("band", (col("j") / 4).cast("int"))
+      .groupBy("doc_id", "band")
+      .agg(array_join(transform(array_sort(collect_list(struct(col("j"), col("m")))),
+        x => x("m").cast("string")), ":").as("bucket"))
+
+  /** Oracle CTEs over `sh`: `h` and `m`, the [[minhashSigs]] minima, and
+    * `sig`, their [[bandSigs]] buckets. */
+  private val minhashSql = s"""h AS (SELECT doc_id,
+                     CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % $MhP AS h32
               FROM sh),
         m AS (SELECT doc_id, j,
-                     min((((1103515245 * (j + 1) + 12345) % $A) * h32
-                          + ((12345 * (j + 7) + 6789) % $A)) % $P) AS m
+                     min((((1103515245 * (j + 1) + 12345) % $MhA) * h32
+                          + ((12345 * (j + 7) + 6789) % $MhA)) % $MhP) AS m
               FROM h, UNNEST(range(16)) AS t(j)
               GROUP BY doc_id, j),
         sig AS (SELECT doc_id, j // 4 AS band,
                        string_agg(CAST(m AS VARCHAR), ':' ORDER BY j) AS bucket
-                FROM m GROUP BY doc_id, j // 4),
-        cand AS (SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
+                FROM m GROUP BY doc_id, j // 4)"""
+
+  /** Oracle CTE `cand`: the distinct pairs doc1 < doc2 sharing a `sig`
+    * band bucket, [[bandingCandidates]]. */
+  private val bandPairsSql = """cand AS (SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
                  FROM sig a JOIN sig b
                    ON a.band = b.band AND a.bucket = b.bucket
-                      AND a.doc_id < b.doc_id)
-        SELECT c.doc1, c.doc2,
-               CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS BIGINT) AS n_equal,
-               round(CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS DOUBLE) / 16,
-                     4) AS est_jaccard
-        FROM cand c
-        JOIN m ma ON ma.doc_id = c.doc1
-        JOIN m mb ON mb.doc_id = c.doc2 AND mb.j = ma.j
-        GROUP BY c.doc1, c.doc2
-        ORDER BY doc1, doc2"""))
-  }
+                      AND a.doc_id < b.doc_id)"""
+
+  val d12 = GraftQuery(
+    "d12_minhash_exact",
+    "Exact md5-MinHash(16) + 4×4 LSH banding + estimate over doc_id < 2000 (d2's cross-engine twin)",
+    (s, dir) => {
+      val m = minhashSigs(s, dir)
+      val sig = bandSigs(m)
+      val cand = bandingCandidates(sig)
+      cand
+        .join(m.select(col("doc_id").as("doc1"), col("j"), col("m").as("ma")), Seq("doc1"))
+        .join(m.select(col("doc_id").as("doc2"), col("j"), col("m").as("mb")), Seq("doc2", "j"))
+        .groupBy("doc1", "doc2")
+        .agg(sum(when(col("ma") === col("mb"), 1).otherwise(0)).as("n_equal"))
+        .select(col("doc1"), col("doc2"), col("n_equal"),
+          round(col("n_equal").cast("double") / 16, 4).as("est_jaccard"))
+        .orderBy("doc1", "doc2")
+    },
+    Some(s"""
+      WITH ${shinglesSql(2000)},
+      ${minhashSql},
+      ${bandPairsSql}
+      SELECT c.doc1, c.doc2,
+             CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS BIGINT) AS n_equal,
+             round(CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS DOUBLE) / 16,
+                   4) AS est_jaccard
+      FROM cand c
+      JOIN m ma ON ma.doc_id = c.doc1
+      JOIN m mb ON mb.doc_id = c.doc2 AND mb.j = ma.j
+      GROUP BY c.doc1, c.doc2
+      ORDER BY doc1, doc2"""))
 
   /** Transitivity audit of the near-dup graph — triangle count vs open
     * wedges (2-paths that DON'T close): the structural signal for whether
@@ -1014,26 +991,18 @@ object Dedup {
     "d13_dup_graph_triangles",
     "Near-dup graph transitivity: triangles, open wedges, global closure ×10000",
     (s, dir) => {
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 2000)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val edges = sh.as("a").join(sh.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("u"), col("b.doc_id").as("v"))
-        .agg(count(lit(1)).as("inter"))
-        .join(sizes.select(col("doc_id").as("u"), col("n").as("nu")), "u")
-        .join(sizes.select(col("doc_id").as("v"), col("n").as("nv")), "v")
+      val sh = shingleRows(s, dir, 2000)
+      val edges = overlapPairs(sh, shingleCounts(sh))
         .filter(col("inter").cast("double") /
-          (col("nu") + col("nv") - col("inter")) >= 0.3)
-        .select("u", "v")
+          (col("n1") + col("n2") - col("inter")) >= 0.3)
+        .select("doc1", "doc2")
         .cache() // tiny (true-duplicate pairs); scanned by triangles + degrees
       val tri = edges.as("e1")
-        .join(edges.as("e2"), col("e1.v") === col("e2.u"))
+        .join(edges.as("e2"), col("e1.doc2") === col("e2.doc1"))
         .join(edges.as("e3"),
-          col("e3.u") === col("e1.u") && col("e3.v") === col("e2.v"))
+          col("e3.doc1") === col("e1.doc1") && col("e3.doc2") === col("e2.doc2"))
         .agg(count(lit(1)).as("triangles"))
-      val deg = edges.select(col("u").as("id")).unionAll(edges.select(col("v").as("id")))
+      val deg = edges.select(col("doc1").as("id")).unionAll(edges.select(col("doc2").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
       val wedges = deg.agg(sum(col("d") * (col("d") - 1) / 2).cast("long").as("wedges"))
       tri.crossJoin(wedges)
@@ -1042,11 +1011,8 @@ object Dedup {
             (col("triangles") * 3 * 10000 / col("wedges")).cast("long"))
             .otherwise(0L).as("closure_x10000"))
     },
-    Some("""
-      WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                 FROM documents WHERE doc_id < 2000),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
+    Some(s"""
+      WITH ${shinglesSql(2000)},
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       pairs AS (SELECT a.doc_id AS u, b.doc_id AS v, count(*) AS inter
                 FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -1131,7 +1097,7 @@ object Dedup {
           col("n_dominators"), col("kept_by"), col("m").as("keeper_csim"))
         .orderBy("vec_id")
     },
-    Some("""
+    Some(s"""
       WITH ex AS (SELECT label, i, CAST(embedding[i] AS DOUBLE) AS v
                   FROM embeddings, UNNEST(range(1, 65)) AS t(i)),
       sums AS (SELECT label, i, sum(v) AS sv, count(*) AS n
@@ -1139,21 +1105,18 @@ object Dedup {
       centroids AS (SELECT label, list(round(sv / n, 6) ORDER BY i) AS centroid
                     FROM sums GROUP BY label),
       scored AS (SELECT e.vec_id, e.label, e.embedding,
-                        sqrt(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm,
+                        ${sqlNorm("e.embedding")} AS nrm,
                         round(
                           list_aggregate(list_transform(list_zip(e.embedding, c.centroid),
                             p -> CAST(p[1] AS DOUBLE) * p[2]), 'sum')
-                          / (sqrt(list_aggregate(list_transform(e.embedding,
-                               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
+                          / (${sqlNorm("e.embedding")}
                              * sqrt(list_aggregate(list_transform(c.centroid,
                                  x -> x * x), 'sum'))), 6) AS c_sim
                  FROM embeddings e JOIN centroids c ON e.label = c.label),
       dom AS (SELECT a.label, a.vec_id AS id_i, b.vec_id AS id_j, b.c_sim AS cs_j
               FROM scored a JOIN scored b
                 ON a.label = b.label AND a.vec_id <> b.vec_id
-              WHERE list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-                      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+              WHERE ${sqlDot("a.embedding", "b.embedding", "p")}
                     / (a.nrm * b.nrm) >= 0.35
                 AND (b.c_sim < a.c_sim OR (b.c_sim = a.c_sim AND b.vec_id < a.vec_id))),
       agg1 AS (SELECT label, id_i, count(*) AS n_dominators, min(cs_j) AS m
@@ -1180,73 +1143,53 @@ object Dedup {
     * scan. Verdict per incoming doc: the existing doc with the highest
     * signature agreement (ties → lowest id), reported when the MinHash
     * estimate clears 8/16 ≈ Jaccard 0.5. */
-  val d15 = {
-    val P = 4294967291L
-    val A = 1073741789L
-    GraftQuery(
-      "d15_incremental_lsh",
-      "Incremental LSH ingest: new slice (doc_id%4=0) probes the existing corpus band index",
-      (s, dir) => {
-        val m = minhashSigs(s, dir)
-        val sig = m.withColumn("band", (col("j") / 4).cast("int"))
-          .groupBy("doc_id", "band")
-          .agg(array_join(transform(array_sort(collect_list(struct(col("j"), col("m")))),
-            x => x("m").cast("string")), ":").as("bucket"))
-        val newSig = sig.filter(col("doc_id") % 4 === 0)
-        val oldSig = sig.filter(col("doc_id") % 4 =!= 0)
-        val cand = newSig.as("a").join(oldSig.as("b"),
-            col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-          .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("old_id"))
-          .distinct()
-        val scored = cand
-          .join(m.select(col("doc_id").as("new_id"), col("j"), col("m").as("ma")), Seq("new_id"))
-          .join(m.select(col("doc_id").as("old_id"), col("j"), col("m").as("mb")), Seq("old_id", "j"))
-          .groupBy("new_id", "old_id")
-          .agg(sum(when(col("ma") === col("mb"), 1).otherwise(0)).as("n_equal"))
-          .filter(col("n_equal") >= 8)
-        val best = scored.groupBy("new_id").agg(max(col("n_equal")).as("best"))
-        scored.join(best, "new_id")
-          .filter(col("n_equal") === col("best"))
-          .groupBy("new_id")
-          .agg(min(col("old_id")).as("dup_of"), max(col("n_equal")).as("n_equal"))
-          .select(col("new_id"), col("dup_of"), col("n_equal"),
-            round(col("n_equal").cast("double") / 16, 4).as("est_jaccard"))
-          .orderBy("new_id")
-      },
-      Some(s"""
-        WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                   FROM documents WHERE doc_id < 2000),
-        sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-               FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-        h AS (SELECT doc_id,
-                     CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % $P AS h32
-              FROM sh),
-        m AS (SELECT doc_id, j,
-                     min((((1103515245 * (j + 1) + 12345) % $A) * h32
-                          + ((12345 * (j + 7) + 6789) % $A)) % $P) AS m
-              FROM h, UNNEST(range(16)) AS t(j)
-              GROUP BY doc_id, j),
-        sig AS (SELECT doc_id, j // 4 AS band,
-                       string_agg(CAST(m AS VARCHAR), ':' ORDER BY j) AS bucket
-                FROM m GROUP BY doc_id, j // 4),
-        cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
-                 FROM sig a JOIN sig b
-                   ON a.band = b.band AND a.bucket = b.bucket
-                 WHERE a.doc_id % 4 = 0 AND b.doc_id % 4 <> 0),
-        scored AS (SELECT c.new_id, c.old_id,
-                          CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS BIGINT) AS n_equal
-                   FROM cand c
-                   JOIN m ma ON ma.doc_id = c.new_id
-                   JOIN m mb ON mb.doc_id = c.old_id AND mb.j = ma.j
-                   GROUP BY c.new_id, c.old_id
-                   HAVING sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) >= 8),
-        best AS (SELECT new_id, max(n_equal) AS best FROM scored GROUP BY new_id)
-        SELECT s.new_id, min(s.old_id) AS dup_of, max(s.n_equal) AS n_equal,
-               round(CAST(max(s.n_equal) AS DOUBLE) / 16, 4) AS est_jaccard
-        FROM scored s JOIN best b ON s.new_id = b.new_id AND s.n_equal = b.best
-        GROUP BY s.new_id
-        ORDER BY s.new_id"""))
-  }
+  val d15 = GraftQuery(
+    "d15_incremental_lsh",
+    "Incremental LSH ingest: new slice (doc_id%4=0) probes the existing corpus band index",
+    (s, dir) => {
+      val m = minhashSigs(s, dir)
+      val sig = bandSigs(m)
+      val newSig = sig.filter(col("doc_id") % 4 === 0)
+      val oldSig = sig.filter(col("doc_id") % 4 =!= 0)
+      val cand = newSig.as("a").join(oldSig.as("b"),
+          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
+        .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("old_id"))
+        .distinct()
+      val scored = cand
+        .join(m.select(col("doc_id").as("new_id"), col("j"), col("m").as("ma")), Seq("new_id"))
+        .join(m.select(col("doc_id").as("old_id"), col("j"), col("m").as("mb")), Seq("old_id", "j"))
+        .groupBy("new_id", "old_id")
+        .agg(sum(when(col("ma") === col("mb"), 1).otherwise(0)).as("n_equal"))
+        .filter(col("n_equal") >= 8)
+      val best = scored.groupBy("new_id").agg(max(col("n_equal")).as("best"))
+      scored.join(best, "new_id")
+        .filter(col("n_equal") === col("best"))
+        .groupBy("new_id")
+        .agg(min(col("old_id")).as("dup_of"), max(col("n_equal")).as("n_equal"))
+        .select(col("new_id"), col("dup_of"), col("n_equal"),
+          round(col("n_equal").cast("double") / 16, 4).as("est_jaccard"))
+        .orderBy("new_id")
+    },
+    Some(s"""
+      WITH ${shinglesSql(2000)},
+      ${minhashSql},
+      cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
+               FROM sig a JOIN sig b
+                 ON a.band = b.band AND a.bucket = b.bucket
+               WHERE a.doc_id % 4 = 0 AND b.doc_id % 4 <> 0),
+      scored AS (SELECT c.new_id, c.old_id,
+                        CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS BIGINT) AS n_equal
+                 FROM cand c
+                 JOIN m ma ON ma.doc_id = c.new_id
+                 JOIN m mb ON mb.doc_id = c.old_id AND mb.j = ma.j
+                 GROUP BY c.new_id, c.old_id
+                 HAVING sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) >= 8),
+      best AS (SELECT new_id, max(n_equal) AS best FROM scored GROUP BY new_id)
+      SELECT s.new_id, min(s.old_id) AS dup_of, max(s.n_equal) AS n_equal,
+             round(CAST(max(s.n_equal) AS DOUBLE) / 16, 4) AS est_jaccard
+      FROM scored s JOIN best b ON s.new_id = b.new_id AND s.n_equal = b.best
+      GROUP BY s.new_id
+      ORDER BY s.new_id"""))
 
   /** The dedup funnel end to end — the composition a corpus build actually
     * runs, with per-stage attrition the way t18 attributes quality
@@ -1287,29 +1230,16 @@ object Dedup {
         .toDF("stage", "docs_in", "docs_removed", "docs_out")
         .orderBy("stage")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
       d0 AS (SELECT doc_id, n_chars, string_split(lower(text), ' ') AS ws
              FROM documents WHERE doc_id < 300),
       k AS (SELECT min(d.doc_id) AS doc_id
             FROM documents d WHERE d.doc_id < 300
             GROUP BY lower(d.text)),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM d0, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairs AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      good AS (SELECT doc1, doc2 FROM pairs
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${shSql("d0")},
+      ${overlapSql("pairs")},
+      ${reachSql("pairs")},
       labeled AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id),
       s1 AS (SELECT d0.doc_id, d0.n_chars,
                     coalesce(l.cluster_id, d0.doc_id) AS cluster_id
@@ -1446,80 +1376,48 @@ object Dedup {
     * is integer-exact (J ≥ 0.5 ⇔ 3·inter ≥ n₁+n₂), all outputs integer
     * counts/bp. Reuses the x_minhash_sig_spool signature table; the truth
     * side is d13's bounded shingle self-join. One row out. */
-  val d18 = {
-    val P = MhP
-    val A = MhA
-    GraftQuery(
-      "d18_lsh_eval",
-      "Banding P/R scorecard: d12 candidates vs exact Jaccard ≥ 0.5 truth, precision/recall bp",
-      (s, dir) => {
-        val m = minhashSigs(s, dir)
-        val sig = m.withColumn("band", (col("j") / 4).cast("int"))
-          .groupBy("doc_id", "band")
-          .agg(array_join(transform(array_sort(collect_list(struct(col("j"), col("m")))),
-            x => x("m").cast("string")), ":").as("bucket"))
-        val cand = bandingCandidates(sig)
-        // persisted: the shingle explode feeds sizes + BOTH truth-join
-        // sides (d17's 4-subtree argument on the bounded slice)
-        val sh = table(s, dir, "documents")
-          .filter(col("doc_id") < 2000)
-          .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-          .persist()
-        val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-        val truth = sh.as("a").join(sh.as("b"),
-            col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-          .agg(count(lit(1)).as("inter"))
-          .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
-          .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
-          .filter(col("inter") * 3 >= col("n1") + col("n2"))
-          .select("doc1", "doc2")
-        val tp = cand.join(truth, Seq("doc1", "doc2"))
-        cand.agg(count(lit(1)).as("n_candidates"))
-          .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
-          .crossJoin(tp.agg(count(lit(1)).as("n_tp")))
-          .select(col("n_candidates"), col("n_truth"), col("n_tp"),
-            expr("n_tp * 10000 div n_candidates").as("precision_bp"),
-            expr("n_tp * 10000 div n_truth").as("recall_bp"))
-      },
-      Some(s"""
-        WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                   FROM documents WHERE doc_id < 2000),
-        sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-               FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-        h AS (SELECT doc_id,
-                     CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % $P AS h32
-              FROM sh),
-        m AS (SELECT doc_id, j,
-                     min((((1103515245 * (j + 1) + 12345) % $A) * h32
-                          + ((12345 * (j + 7) + 6789) % $A)) % $P) AS m
-              FROM h, UNNEST(range(16)) AS t(j)
-              GROUP BY doc_id, j),
-        sig AS (SELECT doc_id, j // 4 AS band,
-                       string_agg(CAST(m AS VARCHAR), ':' ORDER BY j) AS bucket
-                FROM m GROUP BY doc_id, j // 4),
-        cand AS (SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-                 FROM sig a JOIN sig b
-                   ON a.band = b.band AND a.bucket = b.bucket
-                      AND a.doc_id < b.doc_id),
-        sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        truth AS (SELECT p.doc1, p.doc2 FROM (
-                    SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                    FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2) p
-                  JOIN sizes s1 ON s1.doc_id = p.doc1
-                  JOIN sizes s2 ON s2.doc_id = p.doc2
-                  WHERE p.inter * 3 >= s1.n + s2.n),
-        tp AS (SELECT count(*) AS n_tp FROM cand JOIN truth USING (doc1, doc2)),
-        nc AS (SELECT count(*) AS n_candidates FROM cand),
-        nt AS (SELECT count(*) AS n_truth FROM truth)
-        SELECT CAST(n_candidates AS BIGINT) AS n_candidates,
-               CAST(n_truth AS BIGINT) AS n_truth,
-               CAST(n_tp AS BIGINT) AS n_tp,
-               CAST(n_tp * 10000 // n_candidates AS BIGINT) AS precision_bp,
-               CAST(n_tp * 10000 // n_truth AS BIGINT) AS recall_bp
-        FROM nc, nt, tp"""))
-  }
+  val d18 = GraftQuery(
+    "d18_lsh_eval",
+    "Banding P/R scorecard: d12 candidates vs exact Jaccard ≥ 0.5 truth, precision/recall bp",
+    (s, dir) => {
+      val m = minhashSigs(s, dir)
+      val sig = bandSigs(m)
+      val cand = bandingCandidates(sig)
+      // persisted: the shingle explode feeds sizes + BOTH truth-join
+      // sides (d17's 4-subtree argument on the bounded slice)
+      val sh = shingleRows(s, dir, 2000).persist()
+      val truth = overlapPairs(sh, shingleCounts(sh))
+        .filter(col("inter") * 3 >= col("n1") + col("n2"))
+        .select("doc1", "doc2")
+      val tp = cand.join(truth, Seq("doc1", "doc2"))
+      cand.agg(count(lit(1)).as("n_candidates"))
+        .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
+        .crossJoin(tp.agg(count(lit(1)).as("n_tp")))
+        .select(col("n_candidates"), col("n_truth"), col("n_tp"),
+          expr("n_tp * 10000 div n_candidates").as("precision_bp"),
+          expr("n_tp * 10000 div n_truth").as("recall_bp"))
+    },
+    Some(s"""
+      WITH ${shinglesSql(2000)},
+      ${minhashSql},
+      ${bandPairsSql},
+      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      truth AS (SELECT p.doc1, p.doc2 FROM (
+                  SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
+                  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                  GROUP BY 1, 2) p
+                JOIN sizes s1 ON s1.doc_id = p.doc1
+                JOIN sizes s2 ON s2.doc_id = p.doc2
+                WHERE p.inter * 3 >= s1.n + s2.n),
+      tp AS (SELECT count(*) AS n_tp FROM cand JOIN truth USING (doc1, doc2)),
+      nc AS (SELECT count(*) AS n_candidates FROM cand),
+      nt AS (SELECT count(*) AS n_truth FROM truth)
+      SELECT CAST(n_candidates AS BIGINT) AS n_candidates,
+             CAST(n_truth AS BIGINT) AS n_truth,
+             CAST(n_tp AS BIGINT) AS n_tp,
+             CAST(n_tp * 10000 // n_candidates AS BIGINT) AS precision_bp,
+             CAST(n_tp * 10000 // n_truth AS BIGINT) AS recall_bp
+      FROM nc, nt, tp"""))
 
   /** Normalization-tier exact dedup (the CCNet/RefinedWeb discipline:
     * hash the CANONICALIZED text, not the raw bytes): lowercase, strip
@@ -1624,15 +1522,14 @@ object Dedup {
           col("sj.un").as("un"), round(col("sj.jaccard"), 4).as("jaccard"))
         .orderBy("doc1", "doc2")
     },
-    Some("""
+    Some(s"""
       WITH k AS (SELECT doc_id, substr(lower(text), 1, 12) AS key FROM documents),
       r AS (SELECT doc_id, row_number() OVER (ORDER BY key, doc_id) AS rn FROM k),
       cand AS (SELECT least(a.doc_id, b.doc_id) AS doc1,
                       greatest(a.doc_id, b.doc_id) AS doc2
                FROM r a JOIN r b ON b.rn BETWEEN a.rn + 1 AND a.rn + 3),
       w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
+      ${shSql("w")},
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       inter AS (SELECT c.doc1, c.doc2, count(*) AS inter
                 FROM cand c
@@ -1884,26 +1781,9 @@ object Dedup {
             .as("n_blocked"))
         .orderBy("source")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairs AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      good AS (SELECT doc1, doc2 FROM pairs
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${closureSql("pairs")},
       lab AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id),
       docs AS (SELECT d.doc_id, d.source,
                       CAST(substring(d.source, 4) AS BIGINT) % 4 AS own,
@@ -1951,9 +1831,7 @@ object Dedup {
       dir: String, idBound: Int, tauPct: Int)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
       import org.apache.spark.sql.expressions.Window
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < idBound)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
+      val sh = shingleRows(s, dir, idBound)
         .persist()
       // candidate generation on 8-byte digests (lean shuffle); the exact
       // verify below re-joins on the STRING shingle, so a digest collision
@@ -2033,11 +1911,8 @@ object Dedup {
         .select("tau_bp", "n_pairs", "n_docs", "mean_jac_bp")
         .orderBy("tau_bp")
     },
-    Some("""
-      WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                 FROM documents WHERE doc_id < 1000),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
+    Some(s"""
+      WITH ${shinglesSql(1000)},
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       pairs AS (
         SELECT doc1, doc2,
@@ -2077,67 +1952,46 @@ object Dedup {
     * stored minimum mod 2, no new corpus pass (the persisted signature
     * artifact serves its third consumer). At 100 TB the b-bit variant
     * is what makes billion-doc signature tables RAM-resident. */
-  val d26 = {
-    GraftQuery(
-      "d26_bbit_minwise",
-      "1-bit minwise vs full MinHash over d12's candidates: agreements + debiased estimate",
-      (s, dir) => {
-        val m = minhashSigs(s, dir)
-        val sig = m.withColumn("band", (col("j") / 4).cast("int"))
-          .groupBy("doc_id", "band")
-          .agg(array_join(transform(array_sort(collect_list(struct(col("j"), col("m")))),
-            x => x("m").cast("string")), ":").as("bucket"))
-        val cand = bandingCandidates(sig)
-        cand
-          .join(m.select(col("doc_id").as("doc1"), col("j"), col("m").as("ma")), Seq("doc1"))
-          .join(m.select(col("doc_id").as("doc2"), col("j"), col("m").as("mb")), Seq("doc2", "j"))
-          .groupBy("doc1", "doc2")
-          .agg(sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).as("n_equal"),
-            sum(when(col("ma") % 2 === col("mb") % 2, 1L).otherwise(0L))
-              .as("n_bit_agree"))
-          .withColumn("est_full_bp", expr("n_equal * 10000 div 16"))
-          .withColumn("est_1bit_bp", expr(
-            "greatest((2 * n_bit_agree - 16) * 10000 div 16, 0L)"))
-          .select("doc1", "doc2", "n_equal", "n_bit_agree",
-            "est_full_bp", "est_1bit_bp")
-          .orderBy("doc1", "doc2")
-      },
-      Some(s"""
-        WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                   FROM documents WHERE doc_id < 2000),
-        sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-               FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-        h AS (SELECT doc_id,
-                     CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % $MhP AS h32
-              FROM sh),
-        m AS (SELECT doc_id, j,
-                     min((((1103515245 * (j + 1) + 12345) % $MhA) * h32
-                          + ((12345 * (j + 7) + 6789) % $MhA)) % $MhP) AS m
-              FROM h, UNNEST(range(16)) AS t(j)
-              GROUP BY doc_id, j),
-        sig AS (SELECT doc_id, j // 4 AS band,
-                       string_agg(CAST(m AS VARCHAR), ':' ORDER BY j) AS bucket
-                FROM m GROUP BY doc_id, j // 4),
-        cand AS (SELECT DISTINCT a.doc_id AS doc1, b.doc_id AS doc2
-                 FROM sig a JOIN sig b
-                   ON a.band = b.band AND a.bucket = b.bucket
-                      AND a.doc_id < b.doc_id),
-        agg AS (
-          SELECT c.doc1, c.doc2,
-                 CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_equal,
-                 CAST(sum(CASE WHEN ma.m % 2 = mb.m % 2 THEN 1 ELSE 0 END)
-                   AS BIGINT) AS n_bit_agree
-          FROM cand c
-          JOIN m ma ON ma.doc_id = c.doc1
-          JOIN m mb ON mb.doc_id = c.doc2 AND mb.j = ma.j
-          GROUP BY c.doc1, c.doc2)
-        SELECT doc1, doc2, n_equal, n_bit_agree,
-               n_equal * 10000 // 16 AS est_full_bp,
-               greatest((2 * n_bit_agree - 16) * 10000 // 16, 0) AS est_1bit_bp
-        FROM agg
-        ORDER BY doc1, doc2"""))
-  }
+  val d26 = GraftQuery(
+    "d26_bbit_minwise",
+    "1-bit minwise vs full MinHash over d12's candidates: agreements + debiased estimate",
+    (s, dir) => {
+      val m = minhashSigs(s, dir)
+      val sig = bandSigs(m)
+      val cand = bandingCandidates(sig)
+      cand
+        .join(m.select(col("doc_id").as("doc1"), col("j"), col("m").as("ma")), Seq("doc1"))
+        .join(m.select(col("doc_id").as("doc2"), col("j"), col("m").as("mb")), Seq("doc2", "j"))
+        .groupBy("doc1", "doc2")
+        .agg(sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).as("n_equal"),
+          sum(when(col("ma") % 2 === col("mb") % 2, 1L).otherwise(0L))
+            .as("n_bit_agree"))
+        .withColumn("est_full_bp", expr("n_equal * 10000 div 16"))
+        .withColumn("est_1bit_bp", expr(
+          "greatest((2 * n_bit_agree - 16) * 10000 div 16, 0L)"))
+        .select("doc1", "doc2", "n_equal", "n_bit_agree",
+          "est_full_bp", "est_1bit_bp")
+        .orderBy("doc1", "doc2")
+    },
+    Some(s"""
+      WITH ${shinglesSql(2000)},
+      ${minhashSql},
+      ${bandPairsSql},
+      agg AS (
+        SELECT c.doc1, c.doc2,
+               CAST(sum(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_equal,
+               CAST(sum(CASE WHEN ma.m % 2 = mb.m % 2 THEN 1 ELSE 0 END)
+                 AS BIGINT) AS n_bit_agree
+        FROM cand c
+        JOIN m ma ON ma.doc_id = c.doc1
+        JOIN m mb ON mb.doc_id = c.doc2 AND mb.j = ma.j
+        GROUP BY c.doc1, c.doc2)
+      SELECT doc1, doc2, n_equal, n_bit_agree,
+             n_equal * 10000 // 16 AS est_full_bp,
+             greatest((2 * n_bit_agree - 16) * 10000 // 16, 0) AS est_1bit_bp
+      FROM agg
+      ORDER BY doc1, doc2"""))
 
   /** CLUSTER-QUALITY margins — the acceptance test for d6's components:
     * a healthy duplicate clustering separates (weakest INTRA-cluster
@@ -2156,18 +2010,8 @@ object Dedup {
     "d27_cluster_quality_margins",
     "Per-cluster min intra vs max escaping Jaccard bp + margin over the d6 closure",
     (s, dir) => {
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val pairs = sh.as("a").join(sh.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("inter"))
-        .join(broadcast(sizes.select(col("doc_id").as("doc1"),
-          col("n").as("n1"))), "doc1")
-        .join(broadcast(sizes.select(col("doc_id").as("doc2"),
-          col("n").as("n2"))), "doc2")
+      val sh = shingleRows(s, dir, 300)
+      val pairs = overlapPairs(sh, broadcast(shingleCounts(sh)))
         .select(col("doc1"), col("doc2"),
           expr("inter * 10000 div (n1 + n2 - inter)").as("jac_bp"))
         .localCheckpoint(true)
@@ -2197,31 +2041,16 @@ object Dedup {
         .withColumn("margin_bp", col("min_intra_bp") - col("max_escape_bp"))
         .orderBy("cluster_id")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairsraw AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                   FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
+      ${shinglesSql(300)},
+      ${overlapSql("pairsraw")},
       pairs AS (SELECT doc1, doc2,
                        inter * 10000 // (na.n + nb.n - inter) AS jac_bp
                 FROM pairsraw
                 JOIN sizes na ON na.doc_id = doc1
                 JOIN sizes nb ON nb.doc_id = doc2),
-      good AS (SELECT doc1, doc2 FROM pairsraw
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${reachSql("pairsraw")},
       lab AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id),
       labeled AS (
         SELECT p.doc1, p.doc2, p.jac_bp,
@@ -2265,19 +2094,9 @@ object Dedup {
     "d28_pair_evidence",
     "Top-3 rarest shared shingles per near-dup pair: the human-readable dedup evidence",
     (s, dir) => {
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val sh = shingleRows(s, dir, 300)
       val df = sh.groupBy("s").agg(countDistinct("doc_id").as("df"))
-      val goodPairs = sh.as("a").join(sh.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("inter"))
-        .join(broadcast(sizes.select(col("doc_id").as("doc1"),
-          col("n").as("n1"))), "doc1")
-        .join(broadcast(sizes.select(col("doc_id").as("doc2"),
-          col("n").as("n2"))), "doc2")
+      val goodPairs = overlapPairs(sh, broadcast(shingleCounts(sh)))
         .filter(expr("inter * 10000 div (n1 + n2 - inter) >= 5000"))
         .select("doc1", "doc2")
       val shared = goodPairs
@@ -2293,11 +2112,8 @@ object Dedup {
           col("s").as("shingle"), col("df"))
         .orderBy("doc1", "doc2", "rank")
     },
-    Some("""
-      WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-                 FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
+    Some(s"""
+      WITH ${shinglesSql(300)},
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       dfreq AS (SELECT s, count(DISTINCT doc_id) AS df FROM sh GROUP BY s),
       pairs AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
@@ -2354,26 +2170,9 @@ object Dedup {
           array_join(array_sort(collect_set("lang")), ",").as("langs"))
         .orderBy("cluster_id")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairs AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
-      good AS (SELECT doc1, doc2 FROM pairs
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${closureSql("pairs")},
       lab AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id),
       members AS (
         SELECT coalesce(l.cluster_id, d.doc_id) AS cluster_id,
@@ -2413,19 +2212,7 @@ object Dedup {
     "d30_bcubed_eval",
     "B-cubed contingency: simhash-prefix clusters scored against the exact Jaccard closure, integer bp",
     (s, dir) => {
-      val words = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("word"))
-      val hashed = words.select(col("doc_id"),
-        expr("CAST(conv(substring(md5(word), 1, 15), 16, 10) AS BIGINT)").as("h"))
-      val sig = hashed
-        .select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(59))).as("j"))
-        .groupBy("doc_id", "j")
-        .agg(sum(when(expr("((h >> j) & 1) = 1"), 1).otherwise(-1)).as("vote"))
-        .groupBy("doc_id")
-        .agg(sum(when(col("vote") > 0,
-          expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(0L)).as("sig"))
-      val cLab = sig.select(col("doc_id"), expr("sig >> 40").as("c"))
+      val cLab = md5Simhash(s, dir).select(col("doc_id"), expr("sig >> 40").as("c"))
       val tLab = clusterLabels(s, dir)
         .select(col("doc_id"), col("cluster_id"))
       val lab = cLab.join(broadcast(tLab), Seq("doc_id"), "left_outer")
@@ -2441,26 +2228,9 @@ object Dedup {
           expr("n_overlap * 10000 div n_t").as("rec_bp"))
         .orderBy("t_cluster", "c_cluster")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairsraw AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                   FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-      good AS (SELECT doc1, doc2 FROM pairsraw
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${closureSql("pairsraw")},
       lab AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id),
       wt AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
              FROM documents WHERE doc_id < 300),
@@ -2504,76 +2274,43 @@ object Dedup {
     "d31_cluster_hop_radius",
     "BFS from each cluster rep over dup edges: radius + unreached audit per cluster",
     (s, dir) => {
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val pairs = sh.as("a").join(sh.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("inter"))
-        .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), "doc1")
-        .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), "doc2")
-        .filter(col("inter").cast("double") / (col("n1") + col("n2") - col("inter")) >= 0.3)
-        .select(col("doc1"), col("doc2"))
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4") // tiny confirmed-dup graph
-      try {
-        val sym = pairs.select(col("doc1").as("u"), col("doc2").as("v"))
-          .union(pairs.select(col("doc2").as("u"), col("doc1").as("v")))
+      val s2 = scoped(s, "spark.sql.shuffle.partitions" -> "4") // tiny confirmed-dup graph
+      val pairs = d6Edges(s2, dir)
+      val sym = pairs.select(col("doc1").as("u"), col("doc2").as("v"))
+        .union(pairs.select(col("doc2").as("u"), col("doc1").as("v")))
+        .localCheckpoint(true)
+      val labels = clusterLabels(s2, dir)
+        .select(col("doc_id"), col("cluster_id"))
+      var dist = labels.select("cluster_id").distinct()
+        .select(col("cluster_id"), col("cluster_id").as("doc_id"),
+          lit(0L).as("hop"))
+        .localCheckpoint(true)
+      var frontier = dist
+      var k = 1
+      while (k <= 6 && frontier.limit(1).count() > 0) {
+        val next = frontier.join(sym, frontier("doc_id") === sym("u"))
+          .select(frontier("cluster_id"), sym("v").as("doc_id"),
+            lit(k.toLong).as("hop"))
+          .distinct()
+          .join(dist.select("cluster_id", "doc_id"),
+            Seq("cluster_id", "doc_id"), "left_anti")
           .localCheckpoint(true)
-        val labels = clusterLabels(s, dir)
-          .select(col("doc_id"), col("cluster_id"))
-        var dist = labels.select("cluster_id").distinct()
-          .select(col("cluster_id"), col("cluster_id").as("doc_id"),
-            lit(0L).as("hop"))
-          .localCheckpoint(true)
-        var frontier = dist
-        var k = 1
-        while (k <= 6 && frontier.limit(1).count() > 0) {
-          val next = frontier.join(sym, frontier("doc_id") === sym("u"))
-            .select(frontier("cluster_id"), sym("v").as("doc_id"),
-              lit(k.toLong).as("hop"))
-            .distinct()
-            .join(dist.select("cluster_id", "doc_id"),
-              Seq("cluster_id", "doc_id"), "left_anti")
-            .localCheckpoint(true)
-          dist = dist.unionByName(next).localCheckpoint(true)
-          frontier = next
-          k += 1
-        }
-        labels
-          .join(dist, Seq("cluster_id", "doc_id"), "left_outer")
-          .groupBy("cluster_id")
-          .agg(count(lit(1)).as("n_members"),
-            max(coalesce(col("hop"), lit(-1L))).as("radius"),
-            sum(when(col("hop").isNull, 1L).otherwise(0L)).as("n_unreached"))
-          .filter(col("n_members") >= 2)
-          .orderBy("cluster_id")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", saved)
+        dist = dist.unionByName(next).localCheckpoint(true)
+        frontier = next
+        k += 1
       }
+      labels
+        .join(dist, Seq("cluster_id", "doc_id"), "left_outer")
+        .groupBy("cluster_id")
+        .agg(count(lit(1)).as("n_members"),
+          max(coalesce(col("hop"), lit(-1L))).as("radius"),
+          sum(when(col("hop").isNull, 1L).otherwise(0L)).as("n_unreached"))
+        .filter(col("n_members") >= 2)
+        .orderBy("cluster_id")
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pairsraw AS (SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS inter
-                   FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-      good AS (SELECT doc1, doc2 FROM pairsraw
-               JOIN sizes na ON na.doc_id = doc1
-               JOIN sizes nb ON nb.doc_id = doc2
-               WHERE CAST(inter AS DOUBLE) / (na.n + nb.n - inter) >= 0.3),
-      edges AS (SELECT doc1 AS src, doc2 AS dst FROM good
-                UNION ALL SELECT doc2, doc1 FROM good),
-      reach AS (SELECT src AS id, src AS label FROM edges
-                UNION
-                SELECT e.dst AS id, r.label FROM reach r
-                JOIN edges e ON e.src = r.id),
+      ${closureSql("pairsraw")},
       lab AS (SELECT id AS doc_id, min(label) AS cluster_id FROM reach GROUP BY id),
       walk AS (SELECT cluster_id, cluster_id AS id, 0 AS hop
                FROM (SELECT DISTINCT cluster_id FROM lab)
@@ -2610,30 +2347,11 @@ object Dedup {
     "d32_simhash_confusion",
     "Exact-Jaccard bands x simhash-hamming bands over the candidate universe: the d4 threshold license",
     (s, dir) => {
-      val sh = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val pairs = sh.as("a").join(sh.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("inter"))
-        .join(broadcast(sizes.select(col("doc_id").as("doc1"), col("n").as("n1"))), "doc1")
-        .join(broadcast(sizes.select(col("doc_id").as("doc2"), col("n").as("n2"))), "doc2")
+      val sh = shingleRows(s, dir, 300)
+      val pairs = overlapPairs(sh, broadcast(shingleCounts(sh)))
         .select(col("doc1"), col("doc2"),
           expr("inter * 10000 div (n1 + n2 - inter)").as("jac_bp"))
-      val words = table(s, dir, "documents")
-        .filter(col("doc_id") < 300)
-        .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("word"))
-      val sig = words
-        .select(col("doc_id"),
-          expr("CAST(conv(substring(md5(word), 1, 15), 16, 10) AS BIGINT)").as("h"))
-        .select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(59))).as("j"))
-        .groupBy("doc_id", "j")
-        .agg(sum(when(expr("((h >> j) & 1) = 1"), 1).otherwise(-1)).as("vote"))
-        .groupBy("doc_id")
-        .agg(sum(when(col("vote") > 0,
-          expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(0L)).as("sig"))
+      val sig = md5Simhash(s, dir)
       pairs
         .join(broadcast(sig.select(col("doc_id").as("doc1"), col("sig").as("s1"))), "doc1")
         .join(broadcast(sig.select(col("doc_id").as("doc2"), col("sig").as("s2"))), "doc2")
@@ -2648,11 +2366,8 @@ object Dedup {
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy("exact_band", "ham_band")
     },
-    Some("""
-      WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws
-            FROM documents WHERE doc_id < 300),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, UNNEST(range(1, len(ws) - 1)) AS t(i)),
+    Some(s"""
+      WITH ${shinglesSql(300)},
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       pairs AS (
         SELECT a.doc_id AS doc1, b.doc_id AS doc2,
@@ -2687,6 +2402,66 @@ object Dedup {
       GROUP BY 1, 2
       ORDER BY exact_band, ham_band"""))
 
+  /** (k, nation, seg, bal, name): customers with c_custkey < 400, the one
+    * source the linkage entries (d33–d35) perturb into two; bal in cents. */
+  private def linkageBase(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "customer")
+      .filter(col("c_custkey") < 400)
+      .select(col("c_custkey").cast("long").as("k"),
+        col("c_nationkey").cast("long").as("nation"),
+        col("c_mktsegment").as("seg"),
+        expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal"),
+        col("c_name").as("name"))
+
+  /** Oracle CTE `base`: [[linkageBase]]. */
+  private val linkageBaseSql = """base AS (
+        SELECT CAST(c_custkey AS BIGINT) AS k,
+               CAST(c_nationkey AS BIGINT) AS nation,
+               c_mktsegment AS seg,
+               CAST(round(c_acctbal * 100) AS BIGINT) AS bal,
+               c_name AS name
+        FROM customer WHERE c_custkey < 400)"""
+
+  /** Oracle CTEs `base` and its two sources: `a` as is, `b` with the
+    * segment rotated at k%3, the balance nudged at k%4 and the name
+    * suffixed at k%5. */
+  private val linkageSql = s"""$linkageBaseSql,
+      a AS (SELECT k AS ka, nation, seg AS seg_a, bal AS bal_a,
+                   name AS name_a FROM base),
+      b AS (SELECT k AS kb, nation,
+                   CASE WHEN k % 3 = 0 THEN 'OTHER' ELSE seg END AS seg_b,
+                   CASE WHEN k % 4 = 0 THEN bal + 5 ELSE bal END AS bal_b,
+                   CASE WHEN k % 5 = 0 THEN name || '~X' ELSE name END AS name_b
+            FROM base)"""
+
+  /** Oracle CTE `params`: the add-1-smoothed m and u of each field, from
+    * the labeled candidate `pairs` (is_true, agree_seg, agree_bal,
+    * agree_name). */
+  private val linkageParamsSql = """params AS (
+        SELECT CAST(sum(is_true * agree_seg) + 1 AS DOUBLE)
+                 / (sum(is_true) + 2) AS m_seg,
+               CAST(sum(is_true * agree_bal) + 1 AS DOUBLE)
+                 / (sum(is_true) + 2) AS m_bal,
+               CAST(sum(is_true * agree_name) + 1 AS DOUBLE)
+                 / (sum(is_true) + 2) AS m_name,
+               CAST(sum((1 - is_true) * agree_seg) + 1 AS DOUBLE)
+                 / (sum(1 - is_true) + 2) AS u_seg,
+               CAST(sum((1 - is_true) * agree_bal) + 1 AS DOUBLE)
+                 / (sum(1 - is_true) + 2) AS u_bal,
+               CAST(sum((1 - is_true) * agree_name) + 1 AS DOUBLE)
+                 / (sum(1 - is_true) + 2) AS u_name
+        FROM pairs)"""
+
+  /** Oracle expression: pair `p`'s Fellegi–Sunter score under `params`,
+    * Σ ln(m/u) over agreeing fields + ln((1−m)/(1−u)) over the others. */
+  private val linkageScoreSql = """round(
+                 CASE WHEN p.agree_seg = 1 THEN ln(m_seg / u_seg)
+                      ELSE ln((1 - m_seg) / (1 - u_seg)) END
+               + CASE WHEN p.agree_bal = 1 THEN ln(m_bal / u_bal)
+                      ELSE ln((1 - m_bal) / (1 - u_bal)) END
+               + CASE WHEN p.agree_name = 1 THEN ln(m_name / u_name)
+                      ELSE ln((1 - m_name) / (1 - u_name)) END, 4)"""
+
   /** FELLEGI–SUNTER PROBABILISTIC LINKAGE — the statistical layer the
     * rule-based matchers (q98 fuzzy join, d29 survivorship) lack: per-
     * field agreement is weighted by ln(m/u) evidence, where m = P(agree |
@@ -2712,13 +2487,7 @@ object Dedup {
     "d33_fellegi_sunter",
     "Probabilistic record linkage: m/u estimation + ln-odds field weights + link/possible/nonlink",
     (s, dir) => {
-      val base = table(s, dir, "customer")
-        .filter(col("c_custkey") < 400)
-        .select(col("c_custkey").cast("long").as("k"),
-          col("c_nationkey").cast("long").as("nation"),
-          col("c_mktsegment").as("seg"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal"),
-          col("c_name").as("name"))
+      val base = linkageBase(s, dir)
       val srcA = base.select(col("k").as("ka"), col("nation"),
         col("seg").as("seg_a"), col("bal").as("bal_a"),
         col("name").as("name_a"))
@@ -2765,21 +2534,8 @@ object Dedup {
           "agree_seg", "agree_bal", "agree_name", "score", "verdict")
         .orderBy("ka", "kb")
     },
-    Some("""
-      WITH base AS (
-        SELECT CAST(c_custkey AS BIGINT) AS k,
-               CAST(c_nationkey AS BIGINT) AS nation,
-               c_mktsegment AS seg,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal,
-               c_name AS name
-        FROM customer WHERE c_custkey < 400),
-      a AS (SELECT k AS ka, nation, seg AS seg_a, bal AS bal_a,
-                   name AS name_a FROM base),
-      b AS (SELECT k AS kb, nation,
-                   CASE WHEN k % 3 = 0 THEN 'OTHER' ELSE seg END AS seg_b,
-                   CASE WHEN k % 4 = 0 THEN bal + 5 ELSE bal END AS bal_b,
-                   CASE WHEN k % 5 = 0 THEN name || '~X' ELSE name END AS name_b
-            FROM base),
+    Some(s"""
+      WITH ${linkageSql},
       pairs AS (
         SELECT a.nation, a.ka, b.kb,
                CAST(a.ka = b.kb AS BIGINT) AS is_true,
@@ -2787,30 +2543,11 @@ object Dedup {
                CAST(a.bal_a = b.bal_b AS BIGINT) AS agree_bal,
                CAST(a.name_a = b.name_b AS BIGINT) AS agree_name
         FROM a JOIN b ON a.nation = b.nation),
-      params AS (
-        SELECT CAST(sum(is_true * agree_seg) + 1 AS DOUBLE)
-                 / (sum(is_true) + 2) AS m_seg,
-               CAST(sum(is_true * agree_bal) + 1 AS DOUBLE)
-                 / (sum(is_true) + 2) AS m_bal,
-               CAST(sum(is_true * agree_name) + 1 AS DOUBLE)
-                 / (sum(is_true) + 2) AS m_name,
-               CAST(sum((1 - is_true) * agree_seg) + 1 AS DOUBLE)
-                 / (sum(1 - is_true) + 2) AS u_seg,
-               CAST(sum((1 - is_true) * agree_bal) + 1 AS DOUBLE)
-                 / (sum(1 - is_true) + 2) AS u_bal,
-               CAST(sum((1 - is_true) * agree_name) + 1 AS DOUBLE)
-                 / (sum(1 - is_true) + 2) AS u_name
-        FROM pairs),
+      ${linkageParamsSql},
       scored AS (
         SELECT p.nation, p.ka, p.kb, p.is_true,
                p.agree_seg, p.agree_bal, p.agree_name,
-               round(
-                 CASE WHEN p.agree_seg = 1 THEN ln(m_seg / u_seg)
-                      ELSE ln((1 - m_seg) / (1 - u_seg)) END
-               + CASE WHEN p.agree_bal = 1 THEN ln(m_bal / u_bal)
-                      ELSE ln((1 - m_bal) / (1 - u_bal)) END
-               + CASE WHEN p.agree_name = 1 THEN ln(m_name / u_name)
-                      ELSE ln((1 - m_name) / (1 - u_name)) END, 4) AS score
+               ${linkageScoreSql} AS score
         FROM pairs p CROSS JOIN params)
       SELECT nation, ka, kb, is_true, agree_seg, agree_bal, agree_name,
              score,
@@ -2844,13 +2581,7 @@ object Dedup {
     "d34_blocking_quality",
     "Reduction ratio vs pair completeness per blocking scheme, candidate counts from block sizes only",
     (s, dir) => {
-      val base = table(s, dir, "customer")
-        .filter(col("c_custkey") < 400)
-        .select(col("c_custkey").cast("long").as("k"),
-          col("c_nationkey").cast("long").as("nation"),
-          col("c_mktsegment").as("seg"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("bal"),
-          col("c_name").as("name"))
+      val base = linkageBase(s, dir)
       // two sources, d33's perturbation convention; truth = same k
       val recs = base.select(col("k"), lit("A").as("src"), col("nation"),
           col("seg"), col("bal"), col("name"))
@@ -2897,14 +2628,8 @@ object Dedup {
           expr("true_captured * 10000 div n_true").as("completeness_bp"))
         .orderBy("scheme")
     },
-    Some("""
-      WITH base AS (
-        SELECT CAST(c_custkey AS BIGINT) AS k,
-               CAST(c_nationkey AS BIGINT) AS nation,
-               c_mktsegment AS seg,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal,
-               c_name AS name
-        FROM customer WHERE c_custkey < 400),
+    Some(s"""
+      WITH ${linkageBaseSql},
       recs AS (
         SELECT k, 'A' AS src, nation, seg, bal, name FROM base
         UNION ALL
@@ -2985,50 +2710,18 @@ object Dedup {
         .select(col("n_true"), col("n_false"), col("conc"), col("tied"),
           expr("(2 * conc + tied) * 10000 div (2 * total)").as("auc_bp"))
     },
-    Some("""
-      WITH base AS (
-        SELECT CAST(c_custkey AS BIGINT) AS k,
-               CAST(c_nationkey AS BIGINT) AS nation,
-               c_mktsegment AS seg,
-               CAST(round(c_acctbal * 100) AS BIGINT) AS bal,
-               c_name AS name
-        FROM customer WHERE c_custkey < 400),
-      a AS (SELECT k AS ka, nation, seg AS seg_a, bal AS bal_a,
-                   name AS name_a FROM base),
-      b AS (SELECT k AS kb, nation,
-                   CASE WHEN k % 3 = 0 THEN 'OTHER' ELSE seg END AS seg_b,
-                   CASE WHEN k % 4 = 0 THEN bal + 5 ELSE bal END AS bal_b,
-                   CASE WHEN k % 5 = 0 THEN name || '~X' ELSE name END AS name_b
-            FROM base),
+    Some(s"""
+      WITH ${linkageSql},
       pairs AS (
         SELECT CAST(a.ka = b.kb AS BIGINT) AS is_true,
                CAST(a.seg_a = b.seg_b AS BIGINT) AS agree_seg,
                CAST(a.bal_a = b.bal_b AS BIGINT) AS agree_bal,
                CAST(a.name_a = b.name_b AS BIGINT) AS agree_name
         FROM a JOIN b ON a.nation = b.nation),
-      params AS (
-        SELECT CAST(sum(is_true * agree_seg) + 1 AS DOUBLE)
-                 / (sum(is_true) + 2) AS m_seg,
-               CAST(sum(is_true * agree_bal) + 1 AS DOUBLE)
-                 / (sum(is_true) + 2) AS m_bal,
-               CAST(sum(is_true * agree_name) + 1 AS DOUBLE)
-                 / (sum(is_true) + 2) AS m_name,
-               CAST(sum((1 - is_true) * agree_seg) + 1 AS DOUBLE)
-                 / (sum(1 - is_true) + 2) AS u_seg,
-               CAST(sum((1 - is_true) * agree_bal) + 1 AS DOUBLE)
-                 / (sum(1 - is_true) + 2) AS u_bal,
-               CAST(sum((1 - is_true) * agree_name) + 1 AS DOUBLE)
-                 / (sum(1 - is_true) + 2) AS u_name
-        FROM pairs),
+      ${linkageParamsSql},
       scored AS (
         SELECT p.is_true,
-               round(
-                 CASE WHEN p.agree_seg = 1 THEN ln(m_seg / u_seg)
-                      ELSE ln((1 - m_seg) / (1 - u_seg)) END
-               + CASE WHEN p.agree_bal = 1 THEN ln(m_bal / u_bal)
-                      ELSE ln((1 - m_bal) / (1 - u_bal)) END
-               + CASE WHEN p.agree_name = 1 THEN ln(m_name / u_name)
-                      ELSE ln((1 - m_name) / (1 - u_name)) END, 4) AS score
+               ${linkageScoreSql} AS score
         FROM pairs p CROSS JOIN params),
       grp AS (
         SELECT is_true, score, CAST(count(*) AS BIGINT) AS c
@@ -3186,18 +2879,18 @@ object Dedup {
     * lengths — same construction, independent machinery. */
   /** Build parallelism for the d37 suffix-array pipeline. The spool content
     * is partition-count-invariant (r15 audit), so the count is a deployment
-    * knob, not a semantic one: production sets spark.graft.d37.parts (or
-    * GRAFT_D37_PARTS) to its shard's core count; the local default (8)
-    * keeps the build's ~30 tiny sequential jobs below the per-job
-    * planning/codegen floor that dominates at 32 shuffle partitions. A
-    * malformed or non-positive value fails here, naming its source. */
-  private[graft] def d37Parts(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("spark.graft.d37.parts").map("spark.graft.d37.parts" -> _)
-      .orElse(sys.env.get("GRAFT_D37_PARTS").map("GRAFT_D37_PARTS" -> _))
-      .fold(8) { case (key, v) =>
-        v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-          s"$key must be a positive integer, got '$v'"))
-      }
+    * knob, not a semantic one: production sets spark.graft.d37.parts to
+    * its shard's core count; the local default (8) keeps the build's ~30
+    * tiny sequential jobs below the per-job planning/codegen floor that
+    * dominates at 32 shuffle partitions. A malformed or non-positive
+    * value fails here, naming the key. */
+  private[graft] def d37Parts(s: org.apache.spark.sql.SparkSession): Int = {
+    val key = "spark.graft.d37.parts"
+    s.conf.getOption(key).fold(8) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$v'"))
+    }
+  }
 
   private[graft] def d37Lrs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -3205,22 +2898,14 @@ object Dedup {
     // the build is ~15 SMALL sequential jobs (5 doubling rounds + the
     // 2-join LCP + checkpoints) over ≤540k compact rows — per-job
     // planning/codegen latency dominates at the session's 32 shuffle
-    // partitions, so scope them down for the build. Safe because every
-    // intermediate stage localCheckpoints EAGERLY before the conf is
-    // restored; only the final shallow join (over two checkpointed
-    // frames) executes lazily under session confs.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", d37Parts(s).toString)
-    // AQE re-plans every exchange at runtime — the right call on real
-    // data volumes, pure per-stage latency on this build's ~30 tiny
-    // sequential jobs whose partition counts are already pinned to 8
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try d37LrsBuild(s, dir, CAP)
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+    // partitions, so the build runs on a session of its own scoped down
+    // to d37Parts (read from the caller's conf). AQE re-plans every
+    // exchange at runtime — the right call on real data volumes, pure
+    // per-stage latency on this build's ~30 tiny sequential jobs whose
+    // partition counts are already pinned.
+    val parts = d37Parts(s)
+    d37LrsBuild(scoped(s, "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.adaptive.enabled" -> "false"), dir, CAP, parts)
   }
 
   /** Contiguous order-preserving rank (0..#distinct−1) over arbitrary
@@ -3255,8 +2940,7 @@ object Dedup {
   }
 
   private def d37LrsBuild(s: org.apache.spark.sql.SparkSession,
-      dir: String, CAP: Int): org.apache.spark.sql.DataFrame = {
-    val parts = d37Parts(s)
+      dir: String, CAP: Int, parts: Int): org.apache.spark.sql.DataFrame = {
     // checkpointed once: consumed 4× (vocab, initial ranks, sizes, final
     // position join) — without it each consumer re-runs scan + explode
     val toks = table(s, dir, "documents")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Functions.{cosine, dotProduct, l2Norm, l2Sq}
@@ -16,6 +17,62 @@ import graft.functions.Functions.{cosine, dotProduct, l2Norm, l2Sq}
   */
 object Similarity {
 
+  /** The rows of `sim` ranked per query_id by `sim` descending, ties to
+    * the lower vec_id, as column `rank`; the first k kept. */
+  private def ranked(sim: DataFrame, k: Int): DataFrame =
+    sim.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))))
+      .filter(col("rank") <= k)
+
+  /** The cosine top-k result: [[ranked]] as (query_id, rank, vec_id, sim
+    * rounded to 4 places), ordered by query and rank. */
+  private def topK(sim: DataFrame, k: Int): DataFrame =
+    ranked(sim, k)
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("vec_id"), round(col("sim"), 4).as("sim"))
+      .orderBy("query_id", "rank")
+
+  /** (query_id, vec_id, sim): the cosine of each query vector (vec_id <
+    * 20, broadcast) to every other vector of the corpus. */
+  private def exactSims(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    val emb = table(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"), l2Norm(col("embedding")).as("nrm"))
+    val q = emb.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
+    broadcast(q).crossJoin(emb)
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id"),
+        (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("sim"))
+  }
+
+  /** (vec_id, label, embedding, nrm) of every vector. */
+  private def labeledNorms(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    table(s, dir, "embeddings")
+      .select(col("vec_id"), col("label"), col("embedding"),
+        l2Norm(col("embedding")).as("nrm"))
+
+  /** (id1, id2, sim): each vector's 3 nearest by cosine (ties → lower id2)
+    * among the other vectors of its label cell in `emb`
+    * ([[labeledNorms]]). Grouped top-3 through the bounded-heap operator
+    * (q114's GroupedTopK) instead of Window(row_number)+filter: the
+    * window form fully SORTS every id1 partition of the cell-local
+    * all-pairs frame; the heap keeps ≤3 rows per (id1, input partition)
+    * BEFORE the exchange, so the shuffle carries O(k·partitions) rows per
+    * node, never the cell fan-out. Identical row set — the heap
+    * comparator is exactly the (sim DESC, id2) row_number order. */
+  private def cellTop3(emb: DataFrame): DataFrame = {
+    val a = emb.select(col("label"), col("vec_id").as("id1"),
+      col("embedding").as("e1"), col("nrm").as("n1"))
+    val b = emb.select(col("label"), col("vec_id").as("id2"),
+      col("embedding").as("e2"), col("nrm").as("n2"))
+    val sims = a.join(b, Seq("label"))
+      .filter(col("id1") =!= col("id2"))
+      .select(col("id1"), col("id2"),
+        (dotProduct(col("e1"), col("e2")) / (col("n1") * col("n2"))).as("sim"))
+    graft.plans.GroupedTopK.topKPerGroup(sims,
+      Seq(col("id1")), Seq(col("sim").desc, col("id2")), 3)
+  }
+
   /** Brute-force cosine top-k: queries (vec_id < 20, broadcast) × corpus.
     * Norms computed once per side before the join; dot/norm stay in
     * codegen'd higher-order functions. */
@@ -23,29 +80,14 @@ object Similarity {
     "s1_cosine_topk",
     "Brute-force cosine top-5 neighbors for 20 query vectors (broadcast × corpus)",
     (s, dir) => {
-      val emb = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), l2Norm(col("embedding")).as("nrm"))
-      val q = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-      val sim = broadcast(q).crossJoin(emb)
-        .filter(col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id"),
-          (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("sim"))
-      val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      sim.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("vec_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      topK(exactSims(s, dir), 5)
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       sims AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                      list_aggregate(list_transform(list_zip(q.embedding, c.embedding),
-                        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                      ${sqlDot("q.embedding", "c.embedding", "p")}
                         / (q.nrm * c.nrm) AS sim
                FROM n q JOIN n c ON q.vec_id < 20 AND q.vec_id <> c.vec_id),
       ranked AS (SELECT query_id, vec_id, sim,
@@ -78,9 +120,7 @@ object Similarity {
       // the classic LSH memory/recall trade; bits scale with corpus size
       // so per-bucket occupancy (and thus candidate count) stays bounded.
       val L = 4
-      val n = table(s, dir, "embeddings").count()
-      val bits = math.max(2, math.min(16,
-        math.round(math.log(math.max(1.0, n / 32.0)) / math.log(2)).toInt))
+      val bits = lshBits(s, dir)
       val rnd = new scala.util.Random(42)
       val planes = Seq.fill(L * bits, 64)(rnd.nextGaussian())
       val planesCol = array(planes.map(p => array(p.map(v => lit(v)): _*)): _*)
@@ -95,52 +135,65 @@ object Similarity {
           struct(lit(t).as("t"), bucket(t).as("b"))): _*))
         .drop("planes")
         .withColumn("nrm", l2Norm(col("embedding")))
-      // corpus index: one row per (table, exact bucket) — L× the corpus,
-      // ids only on the shuffle (vectors rejoined for the rare candidates)
-      val corpusIdx = emb
-        .select(col("vec_id"), explode(col("tb")).as("e"))
-        .select(col("vec_id"), col("e.t").as("t"), col("e.b").as("bucket"))
-      // query probes: per table, the exact bucket + every Hamming-1 bucket
-      val probes = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), explode(col("tb")).as("e"))
-        .select(col("query_id"), col("e.t").as("t"),
-          explode(array(col("e.b") +: (0 until bits).map(j =>
-            col("e.b").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-      val pairs = probes.join(corpusIdx, Seq("t", "bucket"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .select("query_id", "vec_id").distinct()
-      val qv = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-      val sim = broadcast(pairs)
-        .join(broadcast(qv), "query_id")
-        .join(emb.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
-        .select(col("query_id"), col("vec_id"),
-          (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("sim"))
-      val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      sim.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("vec_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      topK(probeSims(emb, bits)._2, 3)
   }
+
+  /** Hash bits per LSH table for the corpus size (log2 of n/32, within
+    * [2, 16]), so per-bucket occupancy, and thus candidate count, stays
+    * bounded as the corpus grows. */
+  private def lshBits(s: org.apache.spark.sql.SparkSession, dir: String): Int = {
+    val n = table(s, dir, "embeddings").count()
+    math.max(2, math.min(16,
+      math.round(math.log(math.max(1.0, n / 32.0)) / math.log(2)).toInt))
+  }
+
+  /** Multi-probe LSH search over `emb` (vec_id, embedding, nrm, and tb:
+    * one `bits`-wide bucket b per table t): per table, each query (vec_id
+    * < 20) probes its exact bucket and every Hamming-1 neighbor. Returns
+    * the distinct (query_id, vec_id) candidates and their exact cosine
+    * `sim`. The corpus index is one row per (table, exact bucket) — L×
+    * the corpus, ids only on the shuffle; vectors are rejoined for the
+    * candidates only. */
+  private def probeSims(emb: DataFrame, bits: Int): (DataFrame, DataFrame) = {
+    val corpusIdx = emb
+      .select(col("vec_id"), explode(col("tb")).as("e"))
+      .select(col("vec_id"), col("e.t").as("t"), col("e.b").as("bucket"))
+    val probes = emb.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("query_id"), explode(col("tb")).as("e"))
+      .select(col("query_id"), col("e.t").as("t"),
+        explode(array(col("e.b") +: (0 until bits).map(j =>
+          col("e.b").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
+    val pairs = probes.join(corpusIdx, Seq("t", "bucket"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select("query_id", "vec_id").distinct()
+    val qv = emb.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
+    (pairs, broadcast(pairs)
+      .join(broadcast(qv), "query_id")
+      .join(emb.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
+      .select(col("query_id"), col("vec_id"),
+        (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("sim")))
+  }
+
+  /** (c_label, centroid, cnrm): the mean vector of each label cell of
+    * `emb`, its components rounded to 6 places (double sums depend on the
+    * partial-aggregation order at the ulp level, and the oracle's sum
+    * order differs), and its norm. */
+  private def labelCentroids(emb: DataFrame): DataFrame =
+    emb.groupBy("label").agg(
+        count(lit(1)).as("cnt"),
+        array((0 until 64).map(i =>
+          sum(element_at(col("embedding"), i + 1).cast("double"))): _*).as("sumvec"))
+      .select(col("label").as("c_label"),
+        transform(col("sumvec"), x => round(x / col("cnt"), 6)).as("centroid"))
+      .withColumn("cnrm", l2Norm(col("centroid")))
 
   /** Exact cosine top-3 per query vector (vec_id < 20) — the in-engine
     * ground truth the ANN folds score against (s1's pipeline at k = 3;
     * a bounded broadcast-queries × corpus scan, the offline-eval role). */
   private def exactTop3(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val emb = table(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"), l2Norm(col("embedding")).as("nrm"))
-    val q = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val sim = broadcast(q).crossJoin(emb)
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-    sim.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select("query_id", "vec_id")
+    ranked(exactSims(s, dir), 3).select("query_id", "vec_id")
   }
 
   /** The q62 bound-fold shared by the ANN entries: mean recall@3 of `ann`
@@ -189,18 +242,15 @@ object Similarity {
         .select(col("id1"), col("id2"), round(col("sim"), 4).as("sim"))
         .orderBy("id1", "id2")
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings WHERE vec_id < 300)
       SELECT a.vec_id AS id1, b.vec_id AS id2,
-             round(list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-               p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+             round(${sqlDot("a.embedding", "b.embedding", "p")}
                / (a.nrm * b.nrm), 4) AS sim
       FROM n a JOIN n b ON a.vec_id < b.vec_id
-      WHERE list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-              p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+      WHERE ${sqlDot("a.embedding", "b.embedding", "p")}
               / (a.nrm * b.nrm) >= 0.35
       ORDER BY id1, id2"""))
 
@@ -227,7 +277,7 @@ object Similarity {
           round(cosine(col("embedding"), col("centroid")), 4).as("sim_to_centroid"))
         .orderBy("vec_id")
     },
-    Some("""
+    Some(s"""
       WITH ex AS (SELECT label, i, CAST(embedding[i] AS DOUBLE) AS v
                   FROM embeddings, UNNEST(range(1, 65)) AS t(i)),
       sums AS (SELECT label, i, sum(v) AS sv, count(*) AS n
@@ -238,8 +288,7 @@ object Similarity {
              round(
                list_aggregate(list_transform(list_zip(e.embedding, c.centroid),
                  p -> CAST(p[1] AS DOUBLE) * p[2]), 'sum')
-               / (sqrt(list_aggregate(list_transform(e.embedding,
-                    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
+               / (${sqlNorm("e.embedding")}
                   * sqrt(list_aggregate(list_transform(c.centroid,
                       x -> x * x), 'sum'))), 4) AS sim_to_centroid
       FROM embeddings e JOIN centroids c ON e.label = c.label
@@ -267,13 +316,7 @@ object Similarity {
     (s, dir) => {
       val emb = table(s, dir, "embeddings")
         .withColumn("nrm", l2Norm(col("embedding")))
-      val summed = emb.groupBy("label").agg(
-        count(lit(1)).as("cnt"),
-        array((0 until 64).map(i =>
-          sum(element_at(col("embedding"), i + 1).cast("double"))): _*).as("sumvec"))
-      val centroids = summed.select(col("label").as("c_label"),
-        transform(col("sumvec"), x => round(x / col("cnt"), 6)).as("centroid"))
-        .withColumn("cnrm", l2Norm(col("centroid")))
+      val centroids = labelCentroids(emb)
       val q = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
       val q2c = q.crossJoin(broadcast(centroids))
@@ -287,18 +330,12 @@ object Similarity {
         .filter(col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("vec_id"),
           (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("sim"))
-      val wRank = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      sims.withColumn("rank", row_number().over(wRank))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("vec_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      topK(sims, 3)
     },
-    Some("""
+    Some(s"""
       WITH emb AS (
         SELECT vec_id, embedding, label,
-               sqrt(list_aggregate(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+               ${sqlNorm("embedding")} AS nrm
         FROM embeddings),
       ex AS (SELECT label, i, CAST(embedding[i] AS DOUBLE) AS v
              FROM embeddings, UNNEST(range(1, 65)) AS t(i)),
@@ -320,8 +357,7 @@ object Similarity {
                          ORDER BY csim DESC, c_label) AS cr FROM q2c)
                  WHERE cr <= 4),
       sims AS (SELECT p.query_id, e.vec_id,
-                      list_aggregate(list_transform(list_zip(p.qe, e.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), 'sum')
+                      ${sqlDot("p.qe", "e.embedding", "x")}
                         / (p.qn * e.nrm) AS sim
                FROM probed p JOIN emb e ON p.label = e.label
                WHERE p.query_id <> e.vec_id)
@@ -529,12 +565,7 @@ object Similarity {
         .join(unit, "vec_id")
         .select(col("query_id"), col("vec_id"),
           dotProduct(col("qu"), col("u")).as("sim"))
-      val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      sim.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("vec_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      topK(sim, 3)
   }
 
   val s7 = GraftQuery(
@@ -633,12 +664,7 @@ object Similarity {
         .join(unit, "vec_id")
         .select(col("query_id"), col("vec_id"),
           dotProduct(col("qu"), col("u")).as("sim")) // unit vectors: dot = cosine
-      val w2 = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      reranked.withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("vec_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      topK(reranked, 3)
   }
 
   val s8 = GraftQuery(
@@ -764,12 +790,7 @@ object Similarity {
       .join(unit, "vec_id")
       .select(col("query_id"), col("vec_id"),
         dotProduct(col("qu"), col("u")).as("sim"))
-    val w2 = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-    val result = reranked.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("vec_id"), round(col("sim"), 4).as("sim"))
-      .orderBy("query_id", "rank")
+    val result = topK(reranked, 3)
     (scored, result)
   }
 
@@ -902,7 +923,7 @@ object Similarity {
         .limit(10)
         .select(col("doc_id"), col("r_lex"), col("r_vec"), col("rrf"))
     },
-    Some("""
+    Some(s"""
       WITH ws AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
       d AS (SELECT doc_id, len(ws) AS dl, ws FROM ws),
       corpus AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM d),
@@ -922,8 +943,7 @@ object Similarity {
                          AS r_lex
                 FROM bm) WHERE r_lex <= 50),
       n AS (SELECT vec_id, embedding,
-                   sqrt(list_aggregate(list_transform(embedding,
-                     x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                   ${sqlNorm("embedding")} AS nrm
             FROM embeddings),
       sims AS (SELECT c.vec_id AS doc_id,
                       round(list_aggregate(list_transform(
@@ -985,11 +1005,10 @@ object Similarity {
         .select(col("query_id"), col("rank"), col("vec_id"), col("hamming"), col("sim"))
         .orderBy("query_id", "rank")
     },
-    Some("""
+    Some(s"""
       WITH c AS (
         SELECT vec_id, embedding,
-               sqrt(list_aggregate(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm,
+               ${sqlNorm("embedding")} AS nrm,
                CAST(list_aggregate(list_transform(range(1, 65),
                  j -> CASE WHEN CAST(embedding[CAST(j AS INTEGER)] AS DOUBLE) <= 0
                            THEN 0
@@ -1009,8 +1028,7 @@ object Similarity {
         WHERE hrank <= 32),
       rer AS (
         SELECT s.query_id, s.vec_id, s.hamming,
-               round(list_aggregate(list_transform(list_zip(q.embedding, t.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+               round(${sqlDot("q.embedding", "t.embedding", "p")}
                  / (q.nrm * t.nrm), 4) AS sim
         FROM short s
         JOIN c q ON q.vec_id = s.query_id
@@ -1069,28 +1087,24 @@ object Similarity {
         .select(col("query_id"), col("rank"), col("vec_id"), col("psim"), col("sim"))
         .orderBy("query_id", "rank")
     },
-    Some("""
+    Some(s"""
       WITH c AS (
         SELECT vec_id, embedding,
-               sqrt(list_aggregate(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm,
+               ${sqlNorm("embedding")} AS nrm,
                embedding[1:16] AS pre,
-               sqrt(list_aggregate(list_transform(embedding[1:16],
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS pnrm
+               ${sqlNorm("embedding[1:16]")} AS pnrm
         FROM embeddings),
       short AS (
         SELECT * FROM (
           SELECT q.vec_id AS query_id, t.vec_id,
-                 round(list_aggregate(list_transform(list_zip(q.pre, t.pre),
-                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                 round(${sqlDot("q.pre", "t.pre", "p")}
                    / (q.pnrm * t.pnrm), 4) AS psim
           FROM c q JOIN c t ON q.vec_id < 10 AND q.vec_id <> t.vec_id)
         QUALIFY row_number() OVER (PARTITION BY query_id
                   ORDER BY psim DESC, vec_id) <= 32),
       rer AS (
         SELECT s.query_id, s.vec_id, s.psim,
-               round(list_aggregate(list_transform(list_zip(q.embedding, t.embedding),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+               round(${sqlDot("q.embedding", "t.embedding", "p")}
                  / (q.nrm * t.nrm), 4) AS sim
         FROM short s
         JOIN c q ON q.vec_id = s.query_id
@@ -1128,21 +1142,14 @@ object Similarity {
         .filter(col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("vec_id"),
           (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("sim"))
-      val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      sim.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("vec_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      topK(sim, 5)
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, label, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       sims AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                      list_aggregate(list_transform(list_zip(q.embedding, c.embedding),
-                        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                      ${sqlDot("q.embedding", "c.embedding", "p")}
                         / (q.nrm * c.nrm) AS sim
                FROM n q JOIN n c
                  ON q.vec_id < 20 AND q.vec_id <> c.vec_id
@@ -1171,41 +1178,19 @@ object Similarity {
     "s15_knn_graph",
     "Mutual top-3 kNN graph within label cells: directed ranks + reversed-pair self-join",
     (s, dir) => {
-      val emb = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), col("embedding"),
-          l2Norm(col("embedding")).as("nrm"))
-      val a = emb.select(col("label"), col("vec_id").as("id1"),
-        col("embedding").as("e1"), col("nrm").as("n1"))
-      val b = emb.select(col("label"), col("vec_id").as("id2"),
-        col("embedding").as("e2"), col("nrm").as("n2"))
-      // grouped top-3 through the bounded-heap operator (q114's
-      // GroupedTopK) instead of Window(row_number)+filter: the window
-      // form fully SORTS every id1 partition of the cell-local all-pairs
-      // frame; the heap keeps ≤3 rows per (id1, input partition) BEFORE
-      // the exchange, so the shuffle carries O(k·partitions) rows per
-      // node, never the cell fan-out. Identical row set — the heap
-      // comparator is exactly the (sim DESC, id2) row_number order.
-      val sims = a.join(b, Seq("label"))
-        .filter(col("id1") =!= col("id2"))
-        .select(col("id1"), col("id2"),
-          (dotProduct(col("e1"), col("e2")) / (col("n1") * col("n2"))).as("sim"))
-      val directed = graft.plans.GroupedTopK.topKPerGroup(sims,
-          Seq(col("id1")), Seq(col("sim").desc, col("id2")), 3)
-        .select("id1", "id2", "sim")
+      val directed = cellTop3(labeledNorms(s, dir)).select("id1", "id2", "sim")
       val rev = directed.select(col("id2").as("id1"), col("id1").as("id2"))
       directed.join(rev, Seq("id1", "id2"))
         .filter(col("id1") < col("id2"))
         .select(col("id1"), col("id2"), round(col("sim"), 4).as("sim"))
         .orderBy("id1", "id2")
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, label, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       p AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-                   list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-                     q -> CAST(q[1] AS DOUBLE) * CAST(q[2] AS DOUBLE)), 'sum')
+                   ${sqlDot("a.embedding", "b.embedding", "q")}
                      / (a.nrm * b.nrm) AS sim
             FROM n a JOIN n b ON a.label = b.label AND a.vec_id <> b.vec_id),
       d AS (SELECT id1, id2, sim FROM (
@@ -1241,13 +1226,7 @@ object Similarity {
     (s, dir) => {
       import s.implicits._
       val emb = table(s, dir, "embeddings").withColumn("nrm", l2Norm(col("embedding")))
-      val summed = emb.groupBy("label").agg(
-        count(lit(1)).as("cnt"),
-        array((0 until 64).map(i =>
-          sum(element_at(col("embedding"), i + 1).cast("double"))): _*).as("sumvec"))
-      val centroids = summed.select(col("label").as("c_label"),
-        transform(col("sumvec"), x => round(x / col("cnt"), 6)).as("centroid"))
-        .withColumn("cnrm", l2Norm(col("centroid")))
+      val centroids = labelCentroids(emb)
       val q = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
       val sims = emb.crossJoin(broadcast(q))
@@ -1283,11 +1262,10 @@ object Similarity {
           col("cscan").as("candidates_scanned"))
         .orderBy("nprobe")
     },
-    Some("""
+    Some(s"""
       WITH emb AS (
         SELECT vec_id, embedding, label,
-               sqrt(list_aggregate(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+               ${sqlNorm("embedding")} AS nrm
         FROM embeddings),
       ex AS (SELECT label, i, CAST(embedding[i] AS DOUBLE) AS v
              FROM embeddings, UNNEST(range(1, 65)) AS t(i)),
@@ -1301,8 +1279,7 @@ object Similarity {
       q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
             FROM emb WHERE vec_id < 20),
       sims AS (SELECT q.query_id, e.vec_id, e.label,
-                      list_aggregate(list_transform(list_zip(q.qe, e.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), 'sum')
+                      ${sqlDot("q.qe", "e.embedding", "x")}
                         / (q.qn * e.nrm) AS sim
                FROM q CROSS JOIN emb e WHERE e.vec_id <> q.query_id),
       exact AS (SELECT query_id, vec_id
@@ -1362,13 +1339,7 @@ object Similarity {
       val emb = table(s, dir, "embeddings").withColumn("nrm", l2Norm(col("embedding")))
       val old = emb.filter(col("vec_id") % 4 =!= 0)
       val nw = emb.filter(col("vec_id") % 4 === 0)
-      val summed = old.groupBy("label").agg(
-        count(lit(1)).as("cnt"),
-        array((0 until 64).map(i =>
-          sum(element_at(col("embedding"), i + 1).cast("double"))): _*).as("sumvec"))
-      val centroids = summed.select(col("label").as("c_label"),
-        transform(col("sumvec"), x => round(x / col("cnt"), 6)).as("centroid"))
-        .withColumn("cnrm", l2Norm(col("centroid")))
+      val centroids = labelCentroids(old)
       val scoredNew = nw.crossJoin(broadcast(centroids))
         .select(col("vec_id"), col("c_label"),
           (dotProduct(col("embedding"), col("centroid")) / (col("nrm") * col("cnrm"))).as("csim"))
@@ -1389,11 +1360,10 @@ object Similarity {
           col("mean_csim_x1e4"))
         .orderBy("cell")
     },
-    Some("""
+    Some(s"""
       WITH emb AS (
         SELECT vec_id, embedding, label,
-               sqrt(list_aggregate(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+               ${sqlNorm("embedding")} AS nrm
         FROM embeddings),
       exi AS (SELECT e.label, t.i, CAST(e.embedding[t.i] AS DOUBLE) AS v
               FROM embeddings e, UNNEST(range(1, 65)) AS t(i)
@@ -1498,23 +1468,7 @@ object Similarity {
     "s19_pagerank_centrality",
     "PageRank (3 unrolled iterations, d=0.85) over the mutual top-3 kNN graph",
     (s, dir) => {
-      val emb = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), col("embedding"),
-          l2Norm(col("embedding")).as("nrm"))
-      val a = emb.select(col("label"), col("vec_id").as("id1"),
-        col("embedding").as("e1"), col("nrm").as("n1"))
-      val b = emb.select(col("label"), col("vec_id").as("id2"),
-        col("embedding").as("e2"), col("nrm").as("n2"))
-      // bounded-heap grouped top-3 (q114's GroupedTopK) — no per-node
-      // sort of the cell all-pairs frame, ≤3 rows per (node, partition)
-      // cross the exchange; identical row set (the s15 rewrite)
-      val sims = a.join(b, Seq("label"))
-        .filter(col("id1") =!= col("id2"))
-        .select(col("id1"), col("id2"),
-          (dotProduct(col("e1"), col("e2")) / (col("n1") * col("n2"))).as("sim"))
-      val directed = graft.plans.GroupedTopK.topKPerGroup(sims,
-          Seq(col("id1")), Seq(col("sim").desc, col("id2")), 3)
-        .select("id1", "id2")
+      val directed = cellTop3(labeledNorms(s, dir)).select("id1", "id2")
       val rev = directed.select(col("id2").as("id1"), col("id1").as("id2"))
       val mutual = directed.join(rev, Seq("id1", "id2"))
         .filter(col("id1") < col("id2"))
@@ -1556,14 +1510,12 @@ object Similarity {
         round(col("r"), 8).as("pagerank"))
         .orderBy("vec_id")
     },
-    Some("""
+    Some(s"""
       WITH nv AS (SELECT vec_id, label, embedding,
-                         sqrt(list_aggregate(list_transform(embedding,
-                           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                         ${sqlNorm("embedding")} AS nrm
                   FROM embeddings),
       p AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-                   list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-                     q -> CAST(q[1] AS DOUBLE) * CAST(q[2] AS DOUBLE)), 'sum')
+                   ${sqlDot("a.embedding", "b.embedding", "q")}
                      / (a.nrm * b.nrm) AS sim
             FROM nv a JOIN nv b ON a.label = b.label AND a.vec_id <> b.vec_id),
       dd AS (SELECT id1, id2 FROM (
@@ -1736,12 +1688,7 @@ object Similarity {
           h.iterator.map(t => (qs(qi)._1, t._2, t._1))
         }
       }.toDF("query_id", "vec_id", "sim")
-      val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      partTop.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("vec_id"), round(col("sim"), 4).as("sim"))
-        .orderBy("query_id", "rank")
+      topK(partTop, k)
     },
     s1.oracle)
 
@@ -1767,24 +1714,10 @@ object Similarity {
     "s22_graph_beam_search",
     "NSW-style beam search (3 hops, beam 5) over the kNN graph: top-3 + hit@1 + nodes scored",
     (s, dir) => {
-      val emb = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), col("embedding"),
-          l2Norm(col("embedding")).as("nrm"))
-      val a = emb.select(col("label"), col("vec_id").as("id1"),
-        col("embedding").as("e1"), col("nrm").as("n1"))
+      val emb = labeledNorms(s, dir)
+      val edges = cellTop3(emb).select("id1", "id2").persist()
       val b = emb.select(col("label"), col("vec_id").as("id2"),
         col("embedding").as("e2"), col("nrm").as("n2"))
-      // bounded-heap grouped top-3 (q114's GroupedTopK) — no per-node
-      // sort of the cell all-pairs frame, ≤3 rows per (node, partition)
-      // cross the exchange; identical row set (the s15 rewrite)
-      val simsAll = a.join(b, Seq("label"))
-        .filter(col("id1") =!= col("id2"))
-        .select(col("id1"), col("id2"),
-          (dotProduct(col("e1"), col("e2")) / (col("n1") * col("n2"))).as("sim"))
-      val edges = graft.plans.GroupedTopK.topKPerGroup(simsAll,
-          Seq(col("id1")), Seq(col("sim").desc, col("id2")), 3)
-        .select("id1", "id2")
-        .persist()
       val qv = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
           col("embedding").as("qe"), col("nrm").as("qn"))
@@ -1848,14 +1781,12 @@ object Similarity {
           (col("hit") === 1).as("hit1"), col("n_scored"))
         .orderBy("query_id", "rank")
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, label, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       p AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-                   list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-                     q -> CAST(q[1] AS DOUBLE) * CAST(q[2] AS DOUBLE)), 'sum')
+                   ${sqlDot("a.embedding", "b.embedding", "q")}
                      / (a.nrm * b.nrm) AS sim
             FROM n a JOIN n b ON a.label = b.label AND a.vec_id <> b.vec_id),
       d AS (SELECT id1, id2 FROM (
@@ -1873,8 +1804,7 @@ object Similarity {
       s1_ AS (SELECT query_id, node, sim, row_number() OVER
                 (PARTITION BY query_id ORDER BY sim DESC, node) AS r
               FROM (SELECT x.query_id, x.node,
-                           list_aggregate(list_transform(list_zip(q.qe, c.embedding),
-                             z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')
+                           ${sqlDot("q.qe", "c.embedding", "z")}
                              / (q.qn * c.nrm) AS sim
                     FROM x1 x JOIN n c ON c.vec_id = x.node
                               JOIN qv q ON q.query_id = x.query_id)),
@@ -1885,8 +1815,7 @@ object Similarity {
       s2_ AS (SELECT query_id, node, sim, row_number() OVER
                 (PARTITION BY query_id ORDER BY sim DESC, node) AS r
               FROM (SELECT x.query_id, x.node,
-                           list_aggregate(list_transform(list_zip(q.qe, c.embedding),
-                             z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')
+                           ${sqlDot("q.qe", "c.embedding", "z")}
                              / (q.qn * c.nrm) AS sim
                     FROM x2 x JOIN n c ON c.vec_id = x.node
                               JOIN qv q ON q.query_id = x.query_id)),
@@ -1897,8 +1826,7 @@ object Similarity {
       s3_ AS (SELECT query_id, node, sim, row_number() OVER
                 (PARTITION BY query_id ORDER BY sim DESC, node) AS r
               FROM (SELECT x.query_id, x.node,
-                           list_aggregate(list_transform(list_zip(q.qe, c.embedding),
-                             z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')
+                           ${sqlDot("q.qe", "c.embedding", "z")}
                              / (q.qn * c.nrm) AS sim
                     FROM x3 x JOIN n c ON c.vec_id = x.node
                               JOIN qv q ON q.query_id = x.query_id)),
@@ -1911,8 +1839,7 @@ object Similarity {
       tr AS (SELECT query_id, id2 AS t1 FROM (
                SELECT q.query_id, c.vec_id AS id2, row_number() OVER
                  (PARTITION BY q.query_id ORDER BY
-                   list_aggregate(list_transform(list_zip(q.qe, c.embedding),
-                     z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')
+                   ${sqlDot("q.qe", "c.embedding", "z")}
                      / (q.qn * c.nrm) DESC, c.vec_id) AS r
                FROM qv q JOIN n c ON c.label = q.qlabel
                                  AND c.vec_id <> q.query_id)
@@ -1974,16 +1901,14 @@ object Similarity {
           (col("label") === col("own")).as("agree"))
         .orderBy("vec_id")
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, label, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       probes AS (SELECT vec_id AS pid, label AS own, embedding AS pe, nrm AS pn
                  FROM n WHERE vec_id % 5 = 0),
       sims AS (SELECT p.pid, p.own, c.label, c.vec_id,
-                      list_aggregate(list_transform(list_zip(p.pe, c.embedding),
-                        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')
+                      ${sqlDot("p.pe", "c.embedding", "z")}
                         / (p.pn * c.nrm) AS sim
                FROM probes p JOIN n c ON c.vec_id <> p.pid),
       top5 AS (SELECT pid, own, label FROM (
@@ -2081,22 +2006,19 @@ object Similarity {
           round(col("p.rel"), 4).as("rel"), round(col("p.score"), 4).as("mmr_score"))
         .orderBy("query_id", "pick_rank")
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       cand0 AS (SELECT q.vec_id AS query_id, c.vec_id, c.embedding, c.nrm,
-                       list_aggregate(list_transform(list_zip(q.embedding, c.embedding),
-                         p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                       ${sqlDot("q.embedding", "c.embedding", "p")}
                          / (q.nrm * c.nrm) AS rel
                 FROM n q JOIN n c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
       cands AS (SELECT query_id, vec_id, embedding, nrm, rel FROM (
                   SELECT *, row_number() OVER (PARTITION BY query_id
                     ORDER BY rel DESC, vec_id) AS rn FROM cand0) WHERE rn <= 12),
       pair AS (SELECT a.query_id, a.vec_id, b.vec_id AS b,
-                      list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-                        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                      ${sqlDot("a.embedding", "b.embedding", "p")}
                         / (a.nrm * b.nrm) AS sim
                FROM cands a JOIN cands b
                  ON a.query_id = b.query_id AND a.vec_id <> b.vec_id),
@@ -2186,9 +2108,7 @@ object Similarity {
     "Hash-checked multi-probe LSH twin: md5-derived planes, Hamming-1 probes, exact rerank",
     (s, dir) => {
       val L = 4; val dims = 64
-      val n = table(s, dir, "embeddings").count()
-      val bits = math.max(2, math.min(16,
-        math.round(math.log(math.max(1.0, n / 32.0)) / math.log(2)).toInt))
+      val bits = lshBits(s, dir)
       val scale = 1152921504606846976.0 // 2^60
       def u(i: Int, d: Int): Double = {
         val md = java.security.MessageDigest.getInstance("MD5")
@@ -2216,34 +2136,15 @@ object Similarity {
           struct(lit(t).as("t"), bucket(t).as("b"))): _*))
         .withColumn("nrm", l2Norm(col("embedding")))
         .persist()
-      val corpusIdx = emb
-        .select(col("vec_id"), explode(col("tb")).as("e"))
-        .select(col("vec_id"), col("e.t").as("t"), col("e.b").as("bucket"))
-      val probes = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), explode(col("tb")).as("e"))
-        .select(col("query_id"), col("e.t").as("t"),
-          explode(array(col("e.b") +: (0 until bits).map(j =>
-            col("e.b").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
-      val pairs = probes.join(corpusIdx, Seq("t", "bucket"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .select("query_id", "vec_id").distinct()
+      val (pairs, sim) = probeSims(emb, bits)
       val nCands = pairs.groupBy("query_id").agg(count(lit(1)).as("n_cands"))
-      val qv = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-      val sim = broadcast(pairs)
-        .join(broadcast(qv), "query_id")
-        .join(emb.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
-        .select(col("query_id"), col("vec_id"),
-          (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm"))).as("sim"))
-      val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      sim.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
+      ranked(sim, 3)
         .join(broadcast(nCands), "query_id")
         .select(col("query_id"), col("n_cands"), col("rank").cast("long").as("rank"),
           col("vec_id"), round(col("sim"), 4).as("sim"))
         .orderBy("query_id", "rank")
     },
-    Some("""
+    Some(s"""
       WITH prm AS (
         SELECT CAST(greatest(2, least(16,
                  round(log2(greatest(1.0, count(*) / 32.0))))) AS BIGINT) AS bits
@@ -2256,8 +2157,7 @@ object Similarity {
         FROM (SELECT unnest(range(64)) AS i) i
         WHERE i.i < 4 * (SELECT bits FROM prm)),
       n AS (SELECT vec_id, embedding,
-                   sqrt(list_aggregate(list_transform(embedding,
-                     x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                   ${sqlNorm("embedding")} AS nrm
             FROM embeddings),
       bitsv AS (
         SELECT e.vec_id, p.i // prm.bits AS t,
@@ -2285,8 +2185,7 @@ object Similarity {
       nc AS (SELECT query_id, count(*) AS n_cands FROM cands GROUP BY 1),
       scored AS (
         SELECT ca.query_id, ca.vec_id,
-               list_aggregate(list_transform(list_zip(q.embedding, c.embedding),
-                 x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), 'sum')
+               ${sqlDot("q.embedding", "c.embedding", "x")}
                  / (q.nrm * c.nrm) AS sim
         FROM cands ca
         JOIN n q ON q.vec_id = ca.query_id
@@ -2324,14 +2223,11 @@ object Similarity {
       val q = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
           col("embedding").as("qe"), col("nrm").as("qn"))
-      val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))
-      val top = broadcast(q).crossJoin(emb)
+      val top = ranked(broadcast(q).crossJoin(emb)
         .filter(col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("qlabel"), col("vec_id"), col("label"),
           (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm")))
-            .as("sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+            .as("sim")), 10)
       val perQuery = top.groupBy("query_id", "qlabel")
         .agg(sum(when(col("label") === col("qlabel"), 1L).otherwise(0L))
             .as("hits"),
@@ -2351,15 +2247,13 @@ object Similarity {
           col("sum_rr_x2520"))
       byLabel.unionByName(allRow).orderBy("grp")
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, label, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       sims AS (SELECT q.vec_id AS query_id, q.label AS qlabel,
                       c.vec_id AS vec_id, c.label AS label,
-                      list_aggregate(list_transform(list_zip(q.embedding, c.embedding),
-                        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                      ${sqlDot("q.embedding", "c.embedding", "p")}
                         / (q.nrm * c.nrm) AS sim
                FROM n q JOIN n c ON q.vec_id < 20 AND q.vec_id <> c.vec_id),
       ranked AS (SELECT query_id, qlabel, label,
@@ -2403,23 +2297,8 @@ object Similarity {
     "s27_label_propagation",
     "Synchronous 3-round label propagation over the mutual-kNN graph: deterministic communities",
     (s, dir) => {
-      val emb = table(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"), col("embedding"),
-          l2Norm(col("embedding")).as("nrm"))
-      val a = emb.select(col("label"), col("vec_id").as("id1"),
-        col("embedding").as("e1"), col("nrm").as("n1"))
-      val b = emb.select(col("label"), col("vec_id").as("id2"),
-        col("embedding").as("e2"), col("nrm").as("n2"))
-      // bounded-heap grouped top-3 (q114's GroupedTopK) — no per-node
-      // sort of the cell all-pairs frame, ≤3 rows per (node, partition)
-      // cross the exchange; identical row set (the s15 rewrite)
-      val sims = a.join(b, Seq("label"))
-        .filter(col("id1") =!= col("id2"))
-        .select(col("id1"), col("id2"),
-          (dotProduct(col("e1"), col("e2")) / (col("n1") * col("n2"))).as("sim"))
-      val directed = graft.plans.GroupedTopK.topKPerGroup(sims,
-          Seq(col("id1")), Seq(col("sim").desc, col("id2")), 3)
-        .select("id1", "id2")
+      val emb = labeledNorms(s, dir)
+      val directed = cellTop3(emb).select("id1", "id2")
       val mutual = directed.join(
           directed.select(col("id2").as("id1"), col("id1").as("id2")),
           Seq("id1", "id2"))
@@ -2461,14 +2340,12 @@ object Similarity {
           min("node").as("first_node"), max("node").as("last_node"))
         .orderBy("comm")
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, label, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       p AS (SELECT a.vec_id AS id1, b.vec_id AS id2,
-                   list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-                     q -> CAST(q[1] AS DOUBLE) * CAST(q[2] AS DOUBLE)), 'sum')
+                   ${sqlDot("a.embedding", "b.embedding", "q")}
                      / (a.nrm * b.nrm) AS sim
             FROM n a JOIN n b ON a.label = b.label AND a.vec_id <> b.vec_id),
       d AS (SELECT id1, id2 FROM (
@@ -2802,15 +2679,12 @@ object Similarity {
         .filter(col("rank") <= 10)
         .select(col("budget_m"), col("query_id"), col("vec_id"))
       // exact truth: brute-force top-10 per query (s1's shape, k=10)
-      val truth = broadcast(q.select(col("query_id"), col("qe"), col("qn")))
+      val truth = ranked(broadcast(q.select(col("query_id"), col("qe"), col("qn")))
         .crossJoin(emb.select(col("vec_id"), col("embedding"), col("nrm")))
         .filter(col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("vec_id"),
           (dotProduct(col("qe"), col("embedding")) / (col("qn") * col("nrm")))
-            .as("sim"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(desc("sim"), col("vec_id"))))
-        .filter(col("rank") <= 10)
+            .as("sim")), 10)
         .select(col("query_id"), col("vec_id"))
       cascade.join(truth, Seq("query_id", "vec_id"))
         .groupBy("budget_m")
@@ -2820,11 +2694,10 @@ object Similarity {
           expr(s"budget_m * 10000 div ${nCorpus}L").as("scanned_bp"))
         .orderBy("budget_m")
     },
-    Some("""
+    Some(s"""
       WITH c AS (
         SELECT vec_id, embedding,
-               sqrt(list_aggregate(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm,
+               ${sqlNorm("embedding")} AS nrm,
                CAST(list_aggregate(list_transform(range(1, 65),
                  j -> CASE WHEN CAST(embedding[CAST(j AS INTEGER)] AS DOUBLE) <= 0
                            THEN 0
@@ -2838,8 +2711,7 @@ object Similarity {
           SELECT q.vec_id AS query_id, t.vec_id,
                  row_number() OVER (PARTITION BY q.vec_id
                    ORDER BY bit_count(xor(q.code, t.code)), t.vec_id) AS hrank,
-                 list_aggregate(list_transform(list_zip(q.embedding, t.embedding),
-                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                 ${sqlDot("q.embedding", "t.embedding", "p")}
                    / (q.nrm * t.nrm) AS sim
           FROM c q JOIN c t ON q.vec_id < 20 AND q.vec_id <> t.vec_id)
         WHERE hrank <= 128),
@@ -2855,8 +2727,7 @@ object Similarity {
         SELECT query_id, vec_id FROM (
           SELECT q.vec_id AS query_id, t.vec_id,
                  row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                   list_aggregate(list_transform(list_zip(q.embedding, t.embedding),
-                     p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                   ${sqlDot("q.embedding", "t.embedding", "p")}
                      / (q.nrm * t.nrm) DESC, t.vec_id) AS rank
           FROM c q JOIN c t ON q.vec_id < 20 AND q.vec_id <> t.vec_id)
         WHERE rank <= 10)
@@ -3017,11 +2888,10 @@ object Similarity {
           expr("total_hits * 10000 div 200").as("recall_bp"))
         .orderBy("label")
     },
-    Some("""
+    Some(s"""
       WITH c AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label, embedding,
-               sqrt(list_aggregate(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm,
+               ${sqlNorm("embedding")} AS nrm,
                CAST(list_aggregate(list_transform(range(1, 65),
                  j -> CASE WHEN CAST(embedding[CAST(j AS INTEGER)] AS DOUBLE) <= 0
                            THEN 0
@@ -3034,8 +2904,7 @@ object Similarity {
           SELECT q.vec_id AS query_id, t.vec_id, t.label,
                  row_number() OVER (PARTITION BY q.vec_id
                    ORDER BY bit_count(xor(q.code, t.code)), t.vec_id) AS hrank,
-                 list_aggregate(list_transform(list_zip(q.embedding, t.embedding),
-                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                 ${sqlDot("q.embedding", "t.embedding", "p")}
                    / (q.nrm * t.nrm) AS sim
           FROM c q JOIN c t ON q.vec_id < 20 AND q.vec_id <> t.vec_id)
         WHERE hrank <= 128),
@@ -3050,8 +2919,7 @@ object Similarity {
         SELECT label, query_id, vec_id FROM (
           SELECT t.label, q.vec_id AS query_id, t.vec_id,
                  row_number() OVER (PARTITION BY q.vec_id, t.label ORDER BY
-                   list_aggregate(list_transform(list_zip(q.embedding, t.embedding),
-                     p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                   ${sqlDot("q.embedding", "t.embedding", "p")}
                      / (q.nrm * t.nrm) DESC, t.vec_id) AS rank
           FROM c q JOIN c t ON q.vec_id < 20 AND q.vec_id <> t.vec_id)
         WHERE rank <= 10),
@@ -3416,14 +3284,12 @@ object Similarity {
         .select(col("query_id"), col("vec_id"), round(col("sim"), 4).as("sim"))
         .orderBy(col("query_id"), desc("sim"), col("vec_id"))
     },
-    Some("""
+    Some(s"""
       WITH n AS (SELECT vec_id, embedding,
-                        sqrt(list_aggregate(list_transform(embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
+                        ${sqlNorm("embedding")} AS nrm
                  FROM embeddings),
       sims AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                      list_aggregate(list_transform(list_zip(q.embedding, c.embedding),
-                        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), 'sum')
+                      ${sqlDot("q.embedding", "c.embedding", "p")}
                         / (q.nrm * c.nrm) AS sim
                FROM n q JOIN n c ON q.vec_id % 100 = 3 AND q.vec_id <> c.vec_id),
       ranked AS (SELECT query_id, vec_id, sim,

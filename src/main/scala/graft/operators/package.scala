@@ -48,6 +48,15 @@ package object operators {
       spark.read.parquet(path).schema)
   }
 
+  /** DuckDB oracle text: the L2 norm, in DOUBLE, of the float list `v`. */
+  def sqlNorm(v: String): String =
+    s"sqrt(list_aggregate(list_transform($v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))"
+
+  /** DuckDB oracle text: the dot product, in DOUBLE, of the float lists
+    * `a` and `b` (`p` names the zipped pair in the lambda). */
+  def sqlDot(a: String, b: String, p: String): String =
+    s"list_aggregate(list_transform(list_zip($a, $b), $p -> CAST($p[1] AS DOUBLE) * CAST($p[2] AS DOUBLE)), 'sum')"
+
   /** `orders` as (okey, status, cents), plus any `extra` columns: the
     * frame the lakehouse entries load into their catalog tables. */
   def ordersCents(s: SparkSession, dir: String, extra: Column*): DataFrame = {

@@ -617,11 +617,12 @@ class EngineSpec extends AnyFunSuite with LocalSpark {
     assert(names == Seq(".zz_a", ".zz_￥", ".zz_😀")) // temp views: no database, listed once
   }
 
-  test("q190 and q245 leave the caller's conf and temp views as they found them") {
+  test("q190, q245, d6 and d31 leave the caller's conf and temp views as they found them") {
     val s = spark.newSession()
     def state() = (s.conf.getAll,
       s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet)
-    for (q <- Seq(operators.Sources.q190, operators.Relational.q245)) {
+    for (q <- Seq(operators.Sources.q190, operators.Relational.q245,
+        operators.Dedup.d6, operators.Dedup.d31)) {
       val before = state()
       q.build(s, sfDir).collect()
       assert(state() == before, q.name)

@@ -1923,4 +1923,15 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     val joins = p.linesIterator.count(l => l.trim.matches("""\(\d+\) \w*Join\w*( .*)?"""))
     assert(joins == 0, s"$joins Join nodes in a row-local assignment\n$p")
   }
+
+  test("Explain.canonical: two builds of one entry in one JVM dump equal text") {
+    // d6 checkpoints and caches (fresh RDD ids each build), s1 plans a
+    // broadcast and a window: none of it may reach the canonical dump
+    for (q <- Seq(operators.Dedup.d6, operators.Similarity.s1)) {
+      val first = Explain.canonical(q.build(spark, sfDir))
+      spark.catalog.clearCache()
+      assert(Explain.canonical(q.build(spark, sfDir)) == first, q.name)
+      spark.catalog.clearCache()
+    }
+  }
 }

@@ -25,8 +25,6 @@ class SessionGuardSpec extends AnyFunSuite {
   private val catalogConfAllowed = Map(
     "src/main/scala/graft/operators/package.scala" -> "graftCatalog: the one registration")
   private val callerConfAllowed = Map(
-    "src/main/scala/graft/operators/Dedup.scala" ->
-      "eager save/restore blocks whose frames are built on the caller's session",
     "src/main/scala/graft/operators/package.scala" ->
       "events(): nanosAsLong is read at scan planning, on the session that executes")
 
